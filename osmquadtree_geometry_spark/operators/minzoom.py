@@ -39,13 +39,27 @@ def find_minzoom_fused(way_features: DataFrame,
     return _apply(way_features, mz, spec.max_minzoom is not None)
 
 
+def find_minzoom_table(df: DataFrame, spec: MinZoomSpec,
+                       geom: str) -> DataFrame:
+    """G14 over a one-geometry table: ``geom`` is 'point', 'line' or
+    'polygon' (simple or complicated polygons share the area rule)."""
+    if geom == "point":
+        mz = spec.sql_point_minzoom("tags")
+    elif geom == "line":
+        mz = spec.sql_line_minzoom("tags")
+    elif geom == "polygon":
+        mz = spec.sql_polygon_minzoom("tags", "area")
+    else:
+        raise ValueError(f"unknown geometry {geom!r}")
+    return _apply(df, mz, spec.max_minzoom is not None)
+
+
 def find_minzoom(points: DataFrame, lines: DataFrame,
                  simple_polygons: DataFrame, complicated_polygons: DataFrame,
                  spec: MinZoomSpec) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    drop = spec.max_minzoom is not None
     return (
-        _apply(points, spec.sql_point_minzoom("tags"), drop),
-        _apply(lines, spec.sql_line_minzoom("tags"), drop),
-        _apply(simple_polygons, spec.sql_polygon_minzoom("tags", "area"), drop),
-        _apply(complicated_polygons, spec.sql_polygon_minzoom("tags", "area"), drop),
+        find_minzoom_table(points, spec, "point"),
+        find_minzoom_table(lines, spec, "line"),
+        find_minzoom_table(simple_polygons, spec, "polygon"),
+        find_minzoom_table(complicated_polygons, spec, "polygon"),
     )

@@ -55,14 +55,20 @@ def collect_lonlats_expr() -> str:
 
 
 def collect_way_nodes(ways: DataFrame, nodes: DataFrame,
-                      persist_shared: bool = False) -> tuple[DataFrame, DataFrame]:
+                      persist_shared: bool = False,
+                      refs: DataFrame | None = None) -> tuple[DataFrame, DataFrame]:
     """-> (ways_ll, errors).
 
     ways_ll: doc_id, id, refs, tags, lonlats array<struct<lon,lat>>
     errors:  elem_type='way', elem_id, message 'missing node {ref}'
              (first missing ref in order, as the reference reports).
+
+    ``refs`` (id, pos, ref) is the exploded ref list; by default it is
+    posexploded from ``ways``, the bucketed prepass passes its
+    pre-exploded table (see pipeline.collect_way_nodes_bucketed).
     """
-    refs = ways.select("id", F.posexplode("refs").alias("pos", "ref"))
+    if refs is None:
+        refs = ways.select("id", F.posexplode("refs").alias("pos", "ref"))
     # NOTE: node ids are assumed unique (true for OSM and the driver
     # fixtures).  If a deployment can feed duplicate-id node rows,
     # dedupe them upstream (drop_duplicates on id) — a duplicate fans

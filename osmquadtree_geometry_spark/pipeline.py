@@ -1,22 +1,30 @@
-"""End-to-end geometry pipeline: docs -> decode -> enrichment joins ->
-geometry construction -> minzoom -> tile allocation.
-
-Operator order matches the reference chain
-(`process_geometry.rs:418-524`, SURVEY §0):
+"""End-to-end geometry pipeline: the reference chain
+(`process_geometry.rs:418-524`, SURVEY §0) as ONE ordered stage list,
+:data:`STAGES`:
 
   decode -> CollectWayNodes (J1) -> AddParentTag (J3) ->
   AddRelationTags (J4) -> ProcessMultiPolygons (J2) ->
   MakeGeometries (G10) -> FindMinZoom (G14) -> tile alloc (J6)
 
-Optional stages elide exactly like the reference
-(`process_geometry.rs:444-459`): no parent_tags spec -> no J3, no
-relation_tag_spec -> no J4, style.multipolygons=false -> no J2,
-minzoom=None -> no G14.
+Each :class:`Stage` there names its inputs, its outputs, the
+checkpoint table of each output and its skip rule (the reference's
+elisions, `process_geometry.rs:444-459`); it is the only place the
+package writes the chain down.  Three entry points run it and differ
+only in where the decoded tables come from and how a stage is run:
+
+  * :func:`run_pipeline` — lazy DataFrame transforms over raw docs,
+    with the ``persist`` cache points;
+  * ``run_pipeline(bucketed_prefix=...)`` — the same over the
+    :func:`prepare_bucketed` ingest tables;
+  * :func:`run_pipeline_checkpointed` — every stage output goes
+    through ``lineage.run_stage`` and resumes from its checkpoint.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -27,17 +35,21 @@ from pyspark.sql import functions as F
 from . import cache
 from .config.minzoom import MinZoomSpec
 from .config.style import GeometryStyle
-from .decode import decode_all, read_docs
+from .decode import decode_all, decode_node_locations, read_docs
 from .operators.makegeoms import (make_points, make_way_features,
-                                  make_ways, split_way_features)
-from .operators.minzoom import find_minzoom, find_minzoom_fused
-from .operators.multipolygons import process_multipolygons
+                                  split_way_features)
+from .operators.minzoom import find_minzoom_fused, find_minzoom_table
+from .operators.multipolygons import PARTS_TYPE, process_multipolygons
 from .operators.parenttags import add_parent_tags
 from .operators.relationtags import add_relation_tags
 from .operators.tiles import allocate_tiles, tile_dictionary
 from .operators.waynodes import collect_way_nodes
 
 EMPTY_ERRORS = "elem_type string, elem_id long, message string"
+EMPTY_CPOLYS = (f"doc_id string, id long, tags map<string,string>, "
+                f"parts {PARTS_TYPE}, area double, z_order long, "
+                f"layer long, minzoom long, quadtree long, wkb binary")
+DECODED = ("nodes", "ways", "relations", "media")
 
 
 @dataclass
@@ -57,6 +69,163 @@ class PipelineResult:
     spatial_index: dict = field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class _Run:
+    """What the stage builders of one run read besides their inputs."""
+    spark: SparkSession
+    style: GeometryStyle
+    minzoom: MinZoomSpec | None
+    with_tiles: bool
+    tile_group_depth: int
+    # cache the decode tables and J4's output, which several stages read
+    persist: bool
+    # cache J1's refs⋈locations join, which its ok and error outputs
+    # share: the lazy path does when it persists; the checkpointed run
+    # always does, since it writes the two outputs in separate actions
+    persist_shared: bool
+    # raw docs only: the location-only projection of the span stream,
+    # which the tile dictionary reads instead of the decoded nodes (it
+    # skips the tag shuffle a full decode_nodes pays)
+    locations: DataFrame | None = None
+    # bucketed ingest only: the pre-exploded (id, pos, ref) table, so
+    # J1's refs⋈locations join reads both sides bucket-aligned
+    wayrefs: DataFrame | None = None
+
+
+@dataclass(frozen=True)
+class Stage:
+    """One step of the chain.  ``build(run, *inputs)`` returns one
+    DataFrame per name in ``outputs``; ``checkpoints`` names the
+    checkpoint (and lineage) table of each output.  When ``skip(run)``
+    holds the stage is elided and its outputs are ``bypass(run,
+    *inputs)`` — by default its first inputs, unchanged.  An output
+    named like an input replaces it for the later stages."""
+    name: str
+    inputs: tuple[str, ...]
+    outputs: tuple[str, ...]
+    checkpoints: tuple[str, ...]
+    build: Callable[..., Sequence[DataFrame]]
+    skip: Callable[[_Run], bool] = lambda r: False
+    bypass: Callable[..., Sequence[DataFrame]] | None = None
+
+
+def _relation_tags(r: _Run, ways_ll: DataFrame, relations: DataFrame):
+    ways = add_relation_tags(ways_ll, relations, r.style)
+    # enriched ways feed both multipolygon assembly and line/polygon
+    # classification
+    return (cache.persist(ways) if r.persist else ways,)
+
+
+def _no_multipolygons(r: _Run, relations: DataFrame, ways: DataFrame):
+    return (r.spark.createDataFrame([], EMPTY_CPOLYS),
+            r.spark.createDataFrame([], EMPTY_ERRORS))
+
+
+def _minzoom(r: _Run, points: DataFrame, way_features: DataFrame,
+             cpolys: DataFrame):
+    return (find_minzoom_table(points, r.minzoom, "point"),
+            find_minzoom_fused(way_features, r.minzoom),
+            find_minzoom_table(cpolys, r.minzoom, "polygon"))
+
+
+def _tiles(r: _Run, points: DataFrame, way_features: DataFrame,
+           cpolys: DataFrame, nodes: DataFrame):
+    # registered tile set from ALL node locations (the reference's tile
+    # set comes from the input block structure, i.e. the full data
+    # distribution — not just emitted features): a bounded driver
+    # collect (<= 4^depth values) executed at build time
+    tiles = tile_dictionary(nodes if r.locations is None else r.locations,
+                            r.tile_group_depth)
+    return tuple(allocate_tiles(df, tiles)
+                 for df in (points, way_features, cpolys))
+
+
+STAGES = (
+    # the source's decoded tables (raw docs or the bucketed ingest)
+    Stage("decode", DECODED, DECODED,
+          ("decode_nodes", "decode_ways", "decode_relations",
+           "decode_media"),
+          lambda r, *tables: tables),
+    Stage("waynodes", ("ways", "nodes"), ("ways_ll", "way_errors"),
+          ("waynodes", "waynodes_errors"),
+          lambda r, ways, nodes: collect_way_nodes(
+              ways, nodes, persist_shared=r.persist_shared, refs=r.wayrefs)),
+    # J3: no parent_tags spec -> skipped
+    Stage("parenttags", ("nodes", "ways_ll"), ("tagged_nodes",),
+          ("parent_tags",),
+          lambda r, nodes, ways_ll: (
+              add_parent_tags(nodes, ways_ll, r.style),),
+          skip=lambda r: not r.style.parent_tags),
+    # J4: no relation_tag_spec -> skipped
+    Stage("relationtags", ("ways_ll", "relations"), ("tagged_ways",),
+          ("relation_tags",), _relation_tags,
+          skip=lambda r: not r.style.relation_tag_spec),
+    # J2: style.multipolygons=false -> skipped, no complicated polygons
+    Stage("multipolygons", ("relations", "tagged_ways"),
+          ("cpolys", "multipolygon_errors"),
+          ("multipolygons", "multipolygon_errors"),
+          lambda r, relations, ways: process_multipolygons(
+              relations, ways, r.style),
+          skip=lambda r: not r.style.multipolygons,
+          bypass=_no_multipolygons),
+    # G10: points plus ONE fused line+polygon table, so minzoom and
+    # tile allocation run once over it; the per-type linestrings /
+    # simple_polygons are views split at the very end
+    Stage("makegeoms", ("tagged_nodes", "tagged_ways"),
+          ("points", "way_features"), ("points", "way_features"),
+          lambda r, nodes, ways: (make_points(nodes, r.style),
+                                  make_way_features(ways, r.style))),
+    # G14: minzoom=None -> skipped
+    Stage("minzoom", ("points", "way_features", "cpolys"),
+          ("points", "way_features", "cpolys"),
+          ("minzoom_points", "minzoom_way_features",
+           "minzoom_complicated_polygons"), _minzoom,
+          skip=lambda r: r.minzoom is None),
+    # J6: with_tiles=False -> skipped
+    Stage("tiles", ("points", "way_features", "cpolys", "nodes"),
+          ("points", "way_features", "cpolys"),
+          ("tiles_points", "tiles_way_features",
+           "tiles_complicated_polygons"), _tiles,
+          skip=lambda r: not r.with_tiles),
+)
+
+
+def _run_chain(r: _Run, source: dict, execute,
+               end_date: int | None) -> PipelineResult:
+    """Run :data:`STAGES` over the ``source`` tables;
+    ``execute(stage, build)`` returns the outputs of a stage that is
+    not skipped, given the zero-argument ``build`` that makes them."""
+    env = dict(source)
+    for s in STAGES:
+        ins = [env[n] for n in s.inputs]
+        if s.skip(r):
+            outs = (s.bypass(r, *ins) if s.bypass is not None
+                    else ins[:len(s.outputs)])
+        else:
+            outs = execute(s, functools.partial(s.build, r, *ins))
+        env.update(zip(s.outputs, outs))
+
+    feats = [env["points"], env["way_features"], env["cpolys"]]
+    if end_date is not None:
+        # block-level snapshot timestamp carried on every returned
+        # feature (`geometry_block.rs:39,190-193` PrimitiveBlock.end_date
+        # — the reference's historical-extract marker); checkpoints stay
+        # date-free, so a resume with a different -t needn't recompute
+        feats = [df.withColumn("end_date", F.lit(int(end_date)).cast("long"))
+                 for df in feats]
+    points, way_feats, cpolys = feats
+    lines, spolys = split_way_features(way_feats)
+    return PipelineResult(
+        points=points, linestrings=lines, simple_polygons=spolys,
+        complicated_polygons=cpolys,
+        errors=env["way_errors"].unionByName(env["multipolygon_errors"]),
+        decoded={k: env[k] for k in source}, way_features=way_feats)
+
+
+def _bucketed_refs(spark: SparkSession, prefix: str) -> DataFrame:
+    return spark.table(f"{prefix}_wayrefs").withColumnRenamed("way_id", "id")
+
+
 def run_pipeline(spark: SparkSession, docs_path: str | None = None,
                  style: GeometryStyle | None = None,
                  minzoom: MinZoomSpec | None = None,
@@ -65,159 +234,89 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
                  persist: bool = True,
                  end_date: int | None = None,
                  bucketed_prefix: str | None = None) -> PipelineResult:
-    style = style or GeometryStyle()
-    if bucketed_prefix is not None:
-        # consume the prepare_bucketed ingest prepass: the decode
-        # shuffles were paid once at ingest, and the J1 refs⋈locations
-        # join reads both sides bucket-aligned (zero Exchange below
-        # the join) — the 100 TB layout, where raw-docs parsing never
-        # runs inside the query job
-        return _run_pipeline_bucketed(
-            spark, bucketed_prefix, style, minzoom, with_tiles,
-            tile_group_depth, end_date)
-    t = decode_all(read_docs(spark, docs_path))
-    # persist policy: True = everything (the round-1 default), False =
-    # nothing (fastest on a DRAM-bound single box — see
-    # BENCH/BASELINE.md levers), or a comma-set of {"decode",
-    # "ways_ll"} for selective caching (ways_ll alone has FOUR
-    # consumers — way features, multipolygon members, parent tags,
-    # waynode errors — and is far smaller than the span stream)
-    if persist is True:
-        pset = {"decode", "ways_ll"}
-    elif persist is False:
-        pset = set()
-    elif isinstance(persist, str):
-        pset = {p.strip() for p in persist.split(",") if p.strip()}
-        unknown = pset - {"decode", "ways_ll"}
-        if unknown:
-            raise ValueError(
-                f"unknown persist tokens {sorted(unknown)}; "
-                f"expected a comma-set of {{'decode', 'ways_ll'}}")
-    else:
-        # a non-bool/non-str (e.g. persist=1) silently disabling all
-        # caching is a footgun (round-3 ADVICE) — reject it
+    """The chain as lazy DataFrames.  ``persist`` caches the decode
+    tables and the multi-consumer stage outputs (False = nothing,
+    fastest on a DRAM-bound single box — see BENCH/BASELINE.md
+    levers).  With ``bucketed_prefix`` the decode stage reads the
+    :func:`prepare_bucketed` ingest tables instead of ``docs_path``:
+    the decode shuffles were paid once at ingest, and J1's join reads
+    both sides bucket-aligned (zero Exchange below the join)."""
+    if not isinstance(persist, bool):
+        # a non-bool (e.g. persist=1) silently disabling all caching is
+        # a footgun (round-3 ADVICE) — reject it
         raise TypeError(
-            f"persist must be bool or comma-set str, got "
-            f"{type(persist).__name__}")
-    if "decode" in pset:
-        # one parse of the span stream feeds 8+ downstream groupBys
-        t["spans"] = cache.persist(t["spans"])
-        # the fused tag table (ONE shuffle for node/way/rel tags) is
-        # read by three branches — persist so the shuffle runs once
-        # (cache matches by logical plan, so the nodes/ways/relations
-        # built in decode_all hit it)
-        t["tags_all"] = cache.persist(t["tags_all"])
-    nodes, ways, relations = t["nodes"], t["ways"], t["relations"]
-    if "decode" in pset:
-        # the decoded tables feed several downstream branches (points +
-        # way join + relation joins + tile dictionary); persisting here
-        # prevents each output from re-running the decode shuffles
-        nodes = cache.persist(nodes)
-        ways = cache.persist(ways)
-        relations = cache.persist(relations)
-        t["nodes"], t["ways"], t["relations"] = nodes, ways, relations
-
-    # persist the shared J1 branch point (ways_ll + error rows) rather
-    # than ways_ll alone: the errors output then reads the cached
-    # refs⋈locations join instead of re-running it
-    ways_ll, err_w = collect_way_nodes(ways, nodes,
-                                       persist_shared="ways_ll" in pset)
-    return _finish_pipeline(spark, t, nodes, relations, ways_ll, err_w,
-                            style, minzoom, with_tiles, tile_group_depth,
-                            "ways_ll" in pset, end_date)
-
-
-def _run_pipeline_bucketed(spark: SparkSession, prefix: str,
-                           style: GeometryStyle,
-                           minzoom: MinZoomSpec | None,
-                           with_tiles: bool, tile_group_depth: int,
-                           end_date: int | None) -> PipelineResult:
-    """Pipeline body over the prepare_bucketed ingest tables — same
-    operator chain, the decode stage replaced by bucketed scans."""
-    t = {
-        "nodes": spark.table(f"{prefix}_nodes"),
-        "ways": spark.table(f"{prefix}_ways"),
-        "relations": spark.table(f"{prefix}_relations"),
-        "media": spark.table(f"{prefix}_media"),
-    }
-    ways_ll, err_w = collect_way_nodes_bucketed(spark, prefix)
-    return _finish_pipeline(spark, t, t["nodes"], t["relations"], ways_ll,
-                            err_w, style, minzoom, with_tiles,
-                            tile_group_depth, False, end_date)
-
-
-def _finish_pipeline(spark: SparkSession, t: dict, nodes: DataFrame,
-                     relations: DataFrame, ways_ll: DataFrame,
-                     err_w: DataFrame, style: GeometryStyle,
-                     minzoom: MinZoomSpec | None, with_tiles: bool,
-                     tile_group_depth: int, persist: bool,
-                     end_date: int | None) -> PipelineResult:
-    if style.parent_tags:
-        nodes = add_parent_tags(nodes, ways_ll, style)
-    if style.relation_tag_spec:
-        ways_ll = add_relation_tags(ways_ll, relations, style)
-        if persist:
-            # enriched ways feed both multipolygon assembly and
-            # line/polygon classification
-            ways_ll = cache.persist(ways_ll)
-
-    if style.multipolygons:
-        cpolys, err_r = process_multipolygons(relations, ways_ll, style)
+            f"persist must be bool, got {type(persist).__name__}")
+    if bucketed_prefix is not None:
+        t = {k: spark.table(f"{bucketed_prefix}_{k}") for k in DECODED}
+        locations, wayrefs = None, _bucketed_refs(spark, bucketed_prefix)
     else:
-        cpolys = spark.createDataFrame(
-            [], "doc_id string, id long, tags map<string,string>, "
-                "parts array<struct<exterior:array<struct<lon:int,lat:int>>,"
-                "interiors:array<array<struct<lon:int,lat:int>>>,area:double>>, "
-                "area double, z_order long, layer long, minzoom long, "
-                "quadtree long, wkb binary")
-        err_r = spark.createDataFrame([], EMPTY_ERRORS)
+        t = decode_all(read_docs(spark, docs_path))
+        if persist:
+            # one parse of the span stream feeds 8+ downstream groupBys
+            t["spans"] = cache.persist(t["spans"])
+            # the fused tag table (ONE shuffle for node/way/rel tags) is
+            # read by three branches — persist so the shuffle runs once
+            # (cache matches by logical plan, so the nodes/ways/relations
+            # built in decode_all hit it)
+            t["tags_all"] = cache.persist(t["tags_all"])
+            # the decoded tables feed several downstream branches
+            # (points + way join + relation joins + tile dictionary);
+            # persisting here stops each output re-running the decode
+            for k in ("nodes", "ways", "relations"):
+                t[k] = cache.persist(t[k])
+        locations, wayrefs = decode_node_locations(t["spans"]), None
+    r = _Run(spark, style or GeometryStyle(), minzoom, with_tiles,
+             tile_group_depth, persist=persist, persist_shared=persist,
+             locations=locations, wayrefs=wayrefs)
+    return _run_chain(r, t, lambda stage, build: build(), end_date)
 
-    points = make_points(nodes, style)
-    # FUSED line+polygon construction: minzoom + tile allocation run
-    # once over one DataFrame; the per-type linestrings /
-    # simple_polygons results are views split at the very end
-    way_feats = make_way_features(ways_ll, style)
 
-    if minzoom is not None:
-        from .operators.minzoom import _apply as _apply_mz
-        drop = minzoom.max_minzoom is not None
-        points = _apply_mz(points, minzoom.sql_point_minzoom("tags"), drop)
-        cpolys = _apply_mz(cpolys, minzoom.sql_polygon_minzoom("tags", "area"),
-                           drop)
-        way_feats = find_minzoom_fused(way_feats, minzoom)
+def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
+                              workdir: str,
+                              style: GeometryStyle | None = None,
+                              minzoom: MinZoomSpec | None = None,
+                              tile_group_depth: int = 8,
+                              force: bool = False,
+                              end_date: int | None = None) -> tuple[PipelineResult, dict]:
+    """North-rule resumable pipeline: every stage output materializes
+    through the LineageStore with per-partition row metrics; a re-run
+    (same input fingerprint) skips completed outputs and resumes
+    mid-tiling.
 
-    if with_tiles:
-        # registered tile set from ALL node locations (the reference's
-        # tile set comes from the input block structure, i.e. the full
-        # data distribution — not just emitted features).  This is a
-        # bounded driver collect (<= 4^depth values) executed at build
-        # time; it reads the MINIMAL location projection when spans
-        # are available (skips the tag shuffle a full decode_nodes
-        # pays), else the prepared nodes table.
-        from .decode import decode_node_locations
-        dict_src = (decode_node_locations(t["spans"])
-                    if "spans" in t else t["nodes"])
-        tiles = tile_dictionary(dict_src, tile_group_depth)
-        points = allocate_tiles(points, tiles)
-        way_feats = allocate_tiles(way_feats, tiles)
-        cpolys = allocate_tiles(cpolys, tiles)
+    Returns (result, resumed_flags) where resumed_flags[checkpoint] is
+    True when that output was served from its checkpoint."""
+    from .lineage import LineageStore, fingerprint_input, run_stage
 
-    if end_date is not None:
-        # block-level snapshot timestamp carried on every feature
-        # (`geometry_block.rs:39,190-193` PrimitiveBlock.end_date —
-        # the reference's historical-extract marker)
-        def stamp(df: DataFrame) -> DataFrame:
-            return df.withColumn("end_date",
-                                 F.lit(int(end_date)).cast("long"))
-        points, way_feats, cpolys = (
-            stamp(points), stamp(way_feats), stamp(cpolys))
+    store = LineageStore(spark, workdir)
+    fp = fingerprint_input(docs_path)
+    resumed: dict[str, bool] = {}
 
-    lines, spolys = split_way_features(way_feats)
-    return PipelineResult(
-        points=points, linestrings=lines, simple_polygons=spolys,
-        complicated_polygons=cpolys,
-        errors=err_w.unionByName(err_r), decoded=t,
-        way_features=way_feats)
+    def checkpoint(s: Stage, build) -> list[DataFrame]:
+        # the stage is built at most once, on the first output whose
+        # checkpoint is missing; its other missing outputs are written
+        # from that same build
+        once = functools.cache(build)
+        outs = []
+        for i, name in enumerate(s.checkpoints):
+            df, resumed[name] = run_stage(store, name, fp,
+                                          lambda i=i: once()[i],
+                                          force=force)
+            outs.append(df)
+        return outs
+
+    # stages read their inputs back from the checkpoints, so only the
+    # branch points that J1 and J2 share between their two outputs are
+    # cached, and released on return
+    r = _Run(spark, style or GeometryStyle(), minzoom, True,
+             tile_group_depth, persist=False, persist_shared=True)
+    with cache.scope() as handles:
+        try:
+            t = decode_all(read_docs(spark, docs_path))
+            res = _run_chain(r, {k: t[k] for k in DECODED}, checkpoint,
+                             end_date)
+        finally:
+            cache.release(handles)
+    return res, resumed
 
 
 def filter_features_bbox(res: PipelineResult,
@@ -412,25 +511,9 @@ def collect_way_nodes_bucketed(spark: SparkSession,
     """J1 over the bucketed prepass tables: the refs⋈locations join is
     Exchange-free (both sides bucket-aligned on the node id); the only
     remaining shuffle is the inherent per-way collect."""
-    ways = spark.table(f"{prefix}_ways")
-    refs = spark.table(f"{prefix}_wayrefs")
-    locs = (spark.table(f"{prefix}_nodes")
-            .select(F.col("id").alias("ref"), "lon", "lat"))
-    j = refs.join(locs, "ref", "left")
-    from .operators.waynodes import collect_lonlats_expr
-    grouped = (j.groupBy("way_id")
-               .agg(F.expr(collect_lonlats_expr()).alias("lonlats"),
-                    F.min(F.when(F.col("lon").isNull(),
-                                 F.struct("pos", "ref"))).alias("first_missing"))
-               .withColumnRenamed("way_id", "id"))
-    enriched = grouped.join(ways.select("doc_id", "id", "refs", "tags"), ["id"])
-    ok = enriched.where(F.col("first_missing").isNull()).drop("first_missing")
-    errors = (enriched.where(F.col("first_missing").isNotNull())
-              .select(F.lit("way").alias("elem_type"),
-                      F.col("id").alias("elem_id"),
-                      F.concat(F.lit("missing node "),
-                               F.col("first_missing.ref")).alias("message")))
-    return ok.select("doc_id", "id", "refs", "tags", "lonlats"), errors
+    return collect_way_nodes(spark.table(f"{prefix}_ways"),
+                             spark.table(f"{prefix}_nodes"),
+                             refs=_bucketed_refs(spark, prefix))
 
 
 def feature_counts(res: PipelineResult) -> DataFrame:
@@ -458,99 +541,3 @@ def feature_counts(res: PipelineResult) -> DataFrame:
     return (c(res.points, "points")
             .unionByName(wf)
             .unionByName(c(res.complicated_polygons, "complicated_polygons")))
-
-
-def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
-                              workdir: str,
-                              style: GeometryStyle | None = None,
-                              minzoom: MinZoomSpec | None = None,
-                              tile_group_depth: int = 8,
-                              force: bool = False,
-                              end_date: int | None = None) -> tuple[PipelineResult, dict]:
-    """North-rule resumable pipeline: every stage materializes through
-    the LineageStore with per-partition row metrics; a re-run (same
-    input fingerprint) skips completed stages and resumes mid-tiling.
-
-    Returns (result, resumed_flags) where resumed_flags[stage] is True
-    when the stage was served from its checkpoint."""
-    from .lineage import LineageStore, fingerprint_input, run_stage
-
-    style = style or GeometryStyle()
-    store = LineageStore(spark, workdir)
-    fp = fingerprint_input(docs_path)
-    resumed: dict[str, bool] = {}
-
-    def stage(name, build):
-        out, was = run_stage(store, name, fp, build, force=force)
-        resumed[name] = was
-        return out
-
-    docs = read_docs(spark, docs_path)
-    t = decode_all(docs)
-    nodes = stage("decode_nodes", lambda: t["nodes"])
-    ways = stage("decode_ways", lambda: t["ways"])
-    relations = stage("decode_relations", lambda: t["relations"])
-    media = stage("decode_media", lambda: t["media"])
-
-    ways_ll = stage("waynodes", lambda: collect_way_nodes(ways, nodes)[0])
-    err_w = stage("waynodes_errors", lambda: collect_way_nodes(ways, nodes)[1])
-
-    nodes2 = (stage("parent_tags", lambda: add_parent_tags(nodes, ways_ll, style))
-              if style.parent_tags else nodes)
-    ways2 = (stage("relation_tags", lambda: add_relation_tags(ways_ll, relations, style))
-             if style.relation_tag_spec else ways_ll)
-
-    if style.multipolygons:
-        cpolys = stage("multipolygons",
-                       lambda: process_multipolygons(relations, ways2, style)[0])
-        err_r = stage("multipolygon_errors",
-                      lambda: process_multipolygons(relations, ways2, style)[1])
-    else:
-        cpolys = spark.createDataFrame([], "doc_id string, id long")
-        err_r = spark.createDataFrame([], EMPTY_ERRORS)
-
-    points = stage("points", lambda: make_points(nodes2, style))
-    # FUSED way-feature stage (round-3 verdict Next #10, mirroring
-    # run_pipeline): ONE checkpointed traversal builds lines+polygons
-    # with the geom_type discriminator; the per-type frames are cheap
-    # filters over the checkpointed table.  Old per-type stage chains
-    # (lines/simple_polygons x minzoom x tiles) collapse from 6 stages
-    # to 3.
-    way_feats = stage("way_features", lambda: make_way_features(ways2, style))
-
-    if minzoom is not None:
-        from .operators.minzoom import _apply as _apply_mz
-        drop = minzoom.max_minzoom is not None
-        p0, w0, c0 = points, way_feats, cpolys  # snapshot: the lambdas
-        # must see pre-minzoom inputs even after rebinding
-        points = stage("minzoom_points", lambda: _apply_mz(
-            p0, minzoom.sql_point_minzoom("tags"), drop))
-        way_feats = stage("minzoom_way_features",
-                          lambda: find_minzoom_fused(w0, minzoom))
-        cpolys = stage("minzoom_complicated_polygons", lambda: _apply_mz(
-            c0, minzoom.sql_polygon_minzoom("tags", "area"), drop))
-
-    tiles = tile_dictionary(nodes, tile_group_depth)
-    points = stage("tiles_points", lambda: allocate_tiles(points, tiles))
-    way_feats = stage("tiles_way_features",
-                      lambda: allocate_tiles(way_feats, tiles))
-    cpolys = stage("tiles_complicated_polygons", lambda: allocate_tiles(cpolys, tiles))
-
-    if end_date is not None:
-        # stamped on the RETURNED frames (`geometry_block.rs:39`); the
-        # per-stage checkpoints themselves stay date-free so a resume
-        # with a different -t needn't recompute
-        def _stamp(df):
-            return df.withColumn("end_date",
-                                 F.lit(int(end_date)).cast("long"))
-        points, way_feats, cpolys = (
-            _stamp(points), _stamp(way_feats), _stamp(cpolys))
-
-    lines, spolys = split_way_features(way_feats)
-    res = PipelineResult(points=points, linestrings=lines,
-                         simple_polygons=spolys, complicated_polygons=cpolys,
-                         errors=err_w.unionByName(err_r),
-                         decoded={"nodes": nodes, "ways": ways,
-                                  "relations": relations, "media": media},
-                         way_features=way_feats)
-    return res, resumed

@@ -89,10 +89,3 @@ def test_pipeline_persist_validation(spark, docs_path):
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     with pytest.raises(TypeError):
         run_pipeline(spark, docs_path, persist=1)
-    with pytest.raises(ValueError):
-        run_pipeline(spark, docs_path, persist="decoded")
-    # valid comma-set still accepted
-    res = run_pipeline(spark, docs_path, persist="ways_ll",
-                       with_tiles=False)
-    assert res.points is not None
-    cache.release_all()

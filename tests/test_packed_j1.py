@@ -48,15 +48,30 @@ def test_packed_collect_parity(spark, monkeypatch):
     assert base[1] == [(12, "missing node 99")]
 
 
-def test_half_null_location_routes_to_errors(spark, monkeypatch):
+def test_half_null_location_routes_to_errors(spark, monkeypatch, tmp_path):
     """A corrupt node row with exactly one of lon/lat NULL must hit the
     error branch identically in both collect variants (the packed
-    bigint nulls out when either half is null)."""
+    bigint nulls out when either half is null), both over the decoded
+    ways and over the prepare_bucketed tables (pre-exploded refs)."""
+    from osmquadtree_geometry_spark.pipeline import (
+        collect_way_nodes_bucketed)
+    from osmquadtree_geometry_spark.sinks import write_bucketed
     ways = spark.createDataFrame([("d0", 20, [1, 2], {})], WAYS)
     nodes = spark.createDataFrame([(1, 5, 6), (2, 7, None)], NODES)
-    for flag in ("0", "1"):
-        monkeypatch.setenv("SPARK_GRAFT_PACK_J1", flag)
-        ok, err = collect_way_nodes(ways, nodes)
-        assert ok.count() == 0, flag
-        assert [(r.elem_id, r.message) for r in err.collect()] == \
-            [(20, "missing node 2")], flag
+    refs = ways.select(F.col("id").alias("way_id"),
+                       F.posexplode("refs").alias("pos", "ref"))
+    tables = {"ways": (ways, "id"), "nodes": (nodes, "id"),
+              "wayrefs": (refs, "ref")}
+    try:
+        for name, (df, col) in tables.items():
+            write_bucketed(df, f"thn_{name}", col, 2, str(tmp_path / name))
+        for flag in ("0", "1"):
+            monkeypatch.setenv("SPARK_GRAFT_PACK_J1", flag)
+            for ok, err in (collect_way_nodes(ways, nodes),
+                            collect_way_nodes_bucketed(spark, "thn")):
+                assert ok.count() == 0, flag
+                assert [(r.elem_id, r.message) for r in err.collect()] == \
+                    [(20, "missing node 2")], flag
+    finally:
+        for name in tables:
+            spark.sql(f"DROP TABLE IF EXISTS thn_{name}")

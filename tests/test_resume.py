@@ -68,3 +68,56 @@ def test_results_match_uncheckpointed(spark, docs_path, workdir):
         lb = sorted((r.id, r.quadtree, r.tile) for r in
                     b.select("id", "quadtree", "tile").collect())
         assert la == lb
+
+
+CHECKPOINTS = (
+    "decode_nodes", "decode_ways", "decode_relations", "decode_media",
+    "waynodes", "waynodes_errors", "parent_tags", "relation_tags",
+    "multipolygons", "multipolygon_errors", "points", "way_features",
+    "minzoom_points", "minzoom_way_features",
+    "minzoom_complicated_polygons", "tiles_points", "tiles_way_features",
+    "tiles_complicated_polygons")
+
+
+def test_fresh_run_builds_j1_and_j2_once(spark, docs_path, tmp_path,
+                                         monkeypatch):
+    """J1 and J2 each have two checkpointed outputs; a fresh run must
+    write both from one build."""
+    from osmquadtree_geometry_spark import pipeline
+    calls = {"collect_way_nodes": 0, "process_multipolygons": 0}
+
+    def counting(name):
+        fn = getattr(pipeline, name)
+
+        def counted(*a, **k):
+            calls[name] += 1
+            return fn(*a, **k)
+        return counted
+    for name in calls:
+        monkeypatch.setattr(pipeline, name, counting(name))
+    _, resumed = run_pipeline_checkpointed(
+        spark, docs_path, str(tmp_path), minzoom=MinZoomSpec.default())
+    assert calls == {"collect_way_nodes": 1, "process_multipolygons": 1}
+    assert sorted(resumed) == sorted(CHECKPOINTS)
+    assert not any(resumed.values())
+
+
+def test_checkpointed_without_multipolygons(spark, docs_path, tmp_path):
+    """style.multipolygons=False elides J2: the checkpointed run must
+    still tile its (empty) complicated polygons and count like the
+    lazy run."""
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.config.style import GeometryStyle
+    from osmquadtree_geometry_spark.pipeline import (
+        feature_counts, run_pipeline)
+    style, mz = GeometryStyle(multipolygons=False), MinZoomSpec.default()
+    ck, resumed = run_pipeline_checkpointed(
+        spark, docs_path, str(tmp_path), style=style, minzoom=mz)
+    live = run_pipeline(spark, docs_path, style=style, minzoom=mz)
+
+    def counts(res):
+        return sorted((r.geom_type, r.n)
+                      for r in feature_counts(res).collect())
+    assert counts(ck) == counts(live)
+    assert "multipolygons" not in resumed
+    cache.release_all()
