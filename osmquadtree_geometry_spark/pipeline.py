@@ -23,6 +23,7 @@ only in where the decoded tables come from and how a stage is run:
 from __future__ import annotations
 
 import functools
+from concurrent.futures import Future, wait
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
@@ -36,6 +37,7 @@ from . import cache
 from .config.minzoom import MinZoomSpec
 from .config.style import GeometryStyle
 from .decode import decode_all, decode_node_locations, read_docs
+from .jobs import submit
 from .operators.makegeoms import (make_points, make_way_features,
                                   split_way_features)
 from .operators.minzoom import find_minzoom_fused, find_minzoom_table
@@ -83,10 +85,9 @@ class _Run:
     # share: the lazy path does when it persists; the checkpointed run
     # always does, since it writes the two outputs in separate actions
     persist_shared: bool
-    # raw docs only: the location-only projection of the span stream,
-    # which the tile dictionary reads instead of the decoded nodes (it
-    # skips the tag shuffle a full decode_nodes pays)
-    locations: DataFrame | None = None
+    # the tile dictionary, when it is being collected on a background
+    # thread (run_pipeline); None: the tiles stage collects it itself
+    tiles: Future | None = None
     # bucketed ingest only: the pre-exploded (id, pos, ref) table, so
     # J1's refs⋈locations join reads both sides bucket-aligned
     wayrefs: DataFrame | None = None
@@ -134,8 +135,8 @@ def _tiles(r: _Run, points: DataFrame, way_features: DataFrame,
     # set comes from the input block structure, i.e. the full data
     # distribution — not just emitted features): a bounded driver
     # collect (<= 4^depth values) executed at build time
-    tiles = tile_dictionary(nodes if r.locations is None else r.locations,
-                            r.tile_group_depth)
+    tiles = (r.tiles.result() if r.tiles is not None
+             else tile_dictionary(nodes, r.tile_group_depth))
     return tuple(allocate_tiles(df, tiles)
                  for df in (points, way_features, cpolys))
 
@@ -240,7 +241,16 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
     levers).  With ``bucketed_prefix`` the decode stage reads the
     :func:`prepare_bucketed` ingest tables instead of ``docs_path``:
     the decode shuffles were paid once at ingest, and J1's join reads
-    both sides bucket-aligned (zero Exchange below the join)."""
+    both sides bucket-aligned (zero Exchange below the join).
+
+    With ``with_tiles`` the tile dictionary (a driver collect) starts
+    on a background thread as soon as its input exists — the
+    location-only projection of the span stream for raw docs, the
+    bucketed nodes table otherwise — and runs while the rest of the
+    chain is planned; the tiles stage waits for it.  Its jobs keep the
+    caller's job group, description and tags.  If planning fails
+    before the tiles stage, the call waits for the collect to finish
+    before raising, so no dictionary job outlives it."""
     if not isinstance(persist, bool):
         # a non-bool (e.g. persist=1) silently disabling all caching is
         # a footgun (round-3 ADVICE) — reject it
@@ -248,7 +258,8 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
             f"persist must be bool, got {type(persist).__name__}")
     if bucketed_prefix is not None:
         t = {k: spark.table(f"{bucketed_prefix}_{k}") for k in DECODED}
-        locations, wayrefs = None, _bucketed_refs(spark, bucketed_prefix)
+        locations = t["nodes"]
+        wayrefs = _bucketed_refs(spark, bucketed_prefix)
     else:
         t = decode_all(read_docs(spark, docs_path))
         if persist:
@@ -264,11 +275,20 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
             # persisting here stops each output re-running the decode
             for k in ("nodes", "ways", "relations"):
                 t[k] = cache.persist(t[k])
-        locations, wayrefs = decode_node_locations(t["spans"]), None
+        # the dictionary reads only node locations: this projection of
+        # the span stream skips the tag shuffle a full decode_nodes pays
+        locations = decode_node_locations(t["spans"])
+        wayrefs = None
+    tiles = (submit(spark, tile_dictionary, locations, tile_group_depth)
+             if with_tiles else None)
     r = _Run(spark, style or GeometryStyle(), minzoom, with_tiles,
              tile_group_depth, persist=persist, persist_shared=persist,
-             locations=locations, wayrefs=wayrefs)
-    return _run_chain(r, t, lambda stage, build: build(), end_date)
+             tiles=tiles, wayrefs=wayrefs)
+    try:
+        return _run_chain(r, t, lambda stage, build: build(), end_date)
+    finally:
+        if tiles is not None:
+            wait([tiles])
 
 
 def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
@@ -306,7 +326,8 @@ def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
 
     # stages read their inputs back from the checkpoints, so only the
     # branch points that J1 and J2 share between their two outputs are
-    # cached, and released on return
+    # cached, and released on return; the tiles stage collects the tile
+    # dictionary itself, since a resumed run may never build that stage
     r = _Run(spark, style or GeometryStyle(), minzoom, True,
              tile_group_depth, persist=False, persist_shared=True)
     with cache.scope() as handles:

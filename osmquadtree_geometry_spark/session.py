@@ -7,10 +7,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+MAX_DRIVER_MEMORY_GB = 24
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical memory in whole GB (at least 1g, at
+    most 24g): the driver JVM hosts every local-mode executor, and the
+    other half stays free for the Python workers and the OS."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(MAX_DRIVER_MEMORY_GB, phys // 2**31))}g"
+
+
 def get_spark(app: str = "osmquadtree_geometry_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Local session sized to the host: ``local[<cores>]`` and
+    :func:`_default_driver_memory`, unless ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_DRIVER_MEMORY`` say otherwise."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
@@ -41,7 +55,9 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY")
+                or _default_driver_memory())
         # local-mode shuffles go through spark.local.dir; on this host
         # /tmp is disk-backed and serializes concurrent shuffle IO —
         # use tmpfs when available (a real cluster uses local NVMe)

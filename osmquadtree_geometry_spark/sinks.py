@@ -15,6 +15,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -339,10 +341,22 @@ def write_feature_tables(res, out_dir: str, media: DataFrame | None = None,
     :func:`write_sorted_tiles` so tile IN-list queries prune row
     groups via min/max stats.
 
+    The writes do not read each other, so they run concurrently
+    (:func:`jobs.run_all`): one thread per table, plus one for the
+    spatial index, which stays ordered inside (``poly_cover``, then
+    its stats collect and the meta JSON, then ``points_cells``).  Every
+    thread's jobs keep the caller's job group, description and tags.
+    The call returns once every write has finished; if one failed, it
+    still waits for the others, then raises the error of the first
+    failed write in the returned dict's order (spatial index last).
+
     Returns {table name: path}.  Read back with
     :func:`osmquadtree_geometry_spark.sources.read_feature_tables`.
     """
     import os
+
+    from .jobs import run_all
+    from .tableio import write_table
     tables: dict[str, DataFrame] = {
         "points": res.points,
         "complicated_polygons": res.complicated_polygons,
@@ -359,23 +373,26 @@ def write_feature_tables(res, out_dir: str, media: DataFrame | None = None,
             media = media.withColumn("tile_cell",
                                      tile_cell_udf("z", "x", "y"))
         tables["media"] = media
-    out = {}
-    for name, df in tables.items():
-        path = os.path.join(out_dir, name)
+
+    def write(df: DataFrame, path: str) -> None:
         if "tile" in df.columns and "id" in df.columns:
             write_sorted_tiles(df, path)
         elif "tile" in df.columns:
             # tile-keyed but id-less (e.g. media): still range-layout
             # by tile so tile IN-list queries prune row groups
-            from .tableio import write_table
             write_table(df.repartitionByRange("tile")
                         .sortWithinPartitions("tile"), path)
         else:
-            from .tableio import write_table
             write_table(df, path)
-        out[name] = path
+
+    out = {name: os.path.join(out_dir, name) for name in tables}
+    tasks = [functools.partial(write, tables[name], path)
+             for name, path in out.items()]
     if spatial_index:
-        out.update(write_spatial_index(res, out_dir))
+        tasks.append(functools.partial(write_spatial_index, res, out_dir))
+    done = run_all(res.points.sparkSession, tasks)
+    if spatial_index:
+        out.update(done[-1])
     return out
 
 

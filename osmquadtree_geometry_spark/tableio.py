@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 TABLE_FORMAT_ENV = "SPARK_GRAFT_TABLE_FORMAT"
 _FORMATS = ("parquet", "iceberg")
+_MODES = ("overwrite", "append")
 
 
 def table_format(fmt: str | None = None) -> str:
@@ -51,8 +52,11 @@ def write_table(df: DataFrame, target: str, mode: str = "overwrite",
     """Write a table.  ``mode`` is ``overwrite`` or ``append``; on
     Iceberg these map to ``createOrReplace``/``append`` of the v2
     writer (atomic snapshot commits — which is what makes the lineage
-    store's resume marker transactional on a real deployment)."""
+    store's resume marker transactional on a real deployment).  Any
+    other mode raises ``ValueError`` before anything is written."""
     fmt = table_format(fmt)
+    if mode not in _MODES:
+        raise ValueError(f"unknown write mode {mode!r}; one of {_MODES}")
     if fmt == "parquet":
         df.write.mode(mode).parquet(target)
     elif mode == "overwrite":

@@ -18,7 +18,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def _load_entry():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py")
+        "spark_entry", os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "__spark_entry__.py"))
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
     return m

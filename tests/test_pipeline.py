@@ -336,3 +336,37 @@ def test_filter_features_poly_matches_bbox_ground_truth(spark, docs_path,
     exp_ids = sorted(r.id for r, k in zip(rows, keep) if k)
     got_ids = sorted(r.id for r in got_tri.linestrings.select("id").collect())
     assert got_ids == exp_ids
+
+
+def test_failed_planning_waits_for_tile_dictionary(spark, docs_path,
+                                                   monkeypatch):
+    """A stage failing while the tile dictionary is still collecting on
+    its background thread re-raises only after that job has finished."""
+    import time
+
+    from osmquadtree_geometry_spark import pipeline
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    real_dictionary = pipeline.tile_dictionary
+    finished = []
+
+    def slow_dictionary(locations, depth):
+        sc.parallelize([0], 1).map(lambda x: time.sleep(3) or x).collect()
+        tiles = real_dictionary(locations, depth)
+        finished.append(True)
+        return tiles
+
+    def failing_stage(*args):
+        deadline = time.monotonic() + 60
+        while not tracker.getActiveJobsIds():
+            assert time.monotonic() < deadline, "dictionary never started"
+            time.sleep(0.05)
+        raise RuntimeError("stage failed")
+
+    monkeypatch.setattr(pipeline, "tile_dictionary", slow_dictionary)
+    monkeypatch.setattr(pipeline, "process_multipolygons", failing_stage)
+    with pytest.raises(RuntimeError, match="stage failed"):
+        # persist=False: the failed run leaves no cached table behind
+        run_pipeline(spark, docs_path, persist=False)
+    assert tracker.getActiveJobsIds() == []
+    assert finished == [True]

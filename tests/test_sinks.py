@@ -372,3 +372,48 @@ def test_geojson_flat_no_collect_byte_identical(res, tmp_path):
     exp = ('{"type": "FeatureCollection", "features": [\n'
            + ",\n".join(feats) + "\n]}\n")
     assert out.read_text() == exp
+
+
+def _clear_job_group(sc):
+    for k in ("spark.jobGroup.id", "spark.job.description",
+              "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(k, None)
+
+
+def test_write_feature_tables_jobs_keep_job_group(res, spark, tmp_path):
+    """The layout writes run on worker threads; every job they start
+    must still belong to the caller's job group (plain threads would
+    run them ungrouped)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("wft", "write_feature_tables")
+    try:
+        paths = sinks.write_feature_tables(res, str(tmp_path / "layout"),
+                                           media=res.decoded.get("media"))
+    finally:
+        _clear_job_group(sc)
+    assert tracker.getJobIdsForGroup("wft")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert {"points", "way_features", "complicated_polygons", "errors",
+            "media", "poly_cover", "points_cells"} <= set(paths)
+    assert os.path.exists(tmp_path / "layout" / "spatial_index_meta.json")
+
+
+def test_write_feature_tables_failure_waits_for_every_write(res, spark,
+                                                            tmp_path):
+    """One table failing at execution raises its error, but only after
+    every other write has finished: no job is left running and the
+    other tables are complete."""
+    import dataclasses
+    assert res.errors.count() > 0  # the raise below must execute
+    bad = res.errors.withColumn("message", F.raise_error(
+        F.concat(F.lit("errors-leg-failed "), F.col("message"))))
+    out = tmp_path / "layout"
+    with pytest.raises(Exception, match="errors-leg-failed"):
+        sinks.write_feature_tables(dataclasses.replace(res, errors=bad),
+                                   str(out))
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    for name in ("points", "way_features", "complicated_polygons",
+                 "poly_cover", "points_cells"):
+        assert (out / name / "_SUCCESS").exists(), name

@@ -60,3 +60,15 @@ def test_tableio_iceberg_branch_shape():
     cspark.catalog.tableExists.return_value = True
     assert tableio.table_exists(cspark, "cat.db.docs", fmt="iceberg")
     cspark.catalog.tableExists.assert_called_once_with("cat.db.docs")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "iceberg"])
+def test_tableio_rejects_unknown_write_mode(fmt):
+    """Only overwrite and append are supported; iceberg used to treat
+    every other mode as append.  The check runs before any write."""
+    from unittest import mock
+
+    df = mock.MagicMock(name="df")
+    with pytest.raises(ValueError, match="write mode"):
+        tableio.write_table(df, "cat.db.docs", mode="error", fmt=fmt)
+    assert df.mock_calls == []
