@@ -60,22 +60,6 @@ def ring_area_and_bbox(lon: np.ndarray, lat: np.ndarray):
     return -1.0 * s / 2.0, bbox
 
 
-def ring_centroid(lon: np.ndarray, lat: np.ndarray) -> tuple[float, float]:
-    """Polygon centroid in mercator metres (`position.rs:177-209`)."""
-    x, y = forward(np.asarray(lon), np.asarray(lat))
-    if len(x) == 0:
-        return 0.0, 0.0
-    if len(x) == 1:
-        return float(x[0]), float(y[0])
-    if len(x) == 2:
-        return float((x[0] + x[1]) / 2.0), float((y[0] + y[1]) / 2.0)
-    cross = x[:-1] * y[1:] - y[:-1] * x[1:]
-    a = float(np.sum(cross)) * 3.0
-    cx = float(np.sum((x[:-1] + x[1:]) * cross)) / a
-    cy = float(np.sum((y[:-1] + y[1:]) * cross)) / a
-    return cx, cy
-
-
 # ---------------------------------------------------------------------------
 # point-in-polygon  (pnpoly; ring as int arrays, test points vectorized)
 # ---------------------------------------------------------------------------
@@ -138,17 +122,9 @@ def line_intersects(a_lon, a_lat, b_lon, b_lat) -> bool:
     return False
 
 
-def bbox_overlaps(a, b) -> bool:
-    return not (a[2] < b[0] or b[2] < a[0] or a[3] < b[1] or b[3] < a[1])
-
-
 def bbox_contains(a, b) -> bool:
     """bbox a contains bbox b."""
     return a[0] <= b[0] and a[1] <= b[1] and a[2] >= b[2] and a[3] >= b[3]
-
-
-def bbox_contains_point(a, lon: int, lat: int) -> bool:
-    return a[0] <= lon <= a[2] and a[1] <= lat <= a[3]
 
 
 def _segments_hit_box(x0, y0, x1, y1, a, b, c, d) -> np.ndarray:

@@ -45,9 +45,3 @@ def backward(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     lon = coordinate_as_integer(np.asarray(x, np.float64) * 180.0 / EARTH_WIDTH)
     lat = coordinate_as_integer(latitude_un_mercator(y))
     return lon, lat
-
-
-def get_srid(transform: bool, with_srid: bool) -> int | None:
-    if not with_srid:
-        return None
-    return 3857 if transform else 4326

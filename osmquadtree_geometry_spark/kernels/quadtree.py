@@ -20,9 +20,13 @@ left-aligned in a 36-bit field (max depth 18).  ``EMPTY = -1``
 (the reference tests ``quadtree.as_int() < 0`` for "no tile",
 `addparenttag.rs:124`).
 
-All kernels accept numpy arrays (int64) and are fully vectorized —
-they are the backing for Arrow/pandas UDFs, never called per row from
-Spark.
+The numpy kernels are the reference: tests pin every Spark form
+against them, and they serve driver-side helpers and in-group Python
+code (one bbox, a grouped-map batch).  Spark computes cells only with
+the staged SQL codec at the end of this module (``with_point_qt``,
+``with_bbox_qt``, ``explode_tile_rect``): no Python workers.  The
+arithmetic ``sql_*`` generators are the dialect-neutral form the
+DuckDB oracles share.
 """
 
 from __future__ import annotations
@@ -211,7 +215,8 @@ def tile_bounds(qt: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.
 def neighbours(qt: np.ndarray) -> np.ndarray:
     """(n, 9) array: the cell plus its 8 edge/corner neighbours at the
     same depth (clamped at the antimeridian / poles; duplicates of the
-    centre cell where clamped).  Backs kNN cell-neighbour expansion."""
+    centre cell where clamped).  The test reference for the kNN ring
+    window at r=1."""
     tx, ty, d = xyz(qt)
     n = 1 << d
     out = np.empty(qt.shape + (9,), dtype=np.int64)
@@ -232,9 +237,9 @@ def neighbours(qt: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 # SQL expression generators (dialect-neutral: valid Spark SQL AND DuckDB)
 #
-# Pure arithmetic (no bit ops) so the same string runs in both engines;
-# used for JVM-side (whole-stage-codegen) tile assignment in the hot
-# path and for the DuckDB oracle in CORRECTNESS checks.
+# Pure arithmetic (no bit ops) so the same string runs in both engines:
+# the DuckDB oracles use all of them; Spark uses only the depth, round
+# and xyz forms, never these to encode a cell.
 # ---------------------------------------------------------------------------
 
 def sql_point_qt(lon_col: str, lat_col: str, max_depth: int = MAX_DEPTH) -> str:
@@ -309,39 +314,11 @@ def sql_qt_xyz(qt_col: str, d: str | None = None,
 
 
 # ---------------------------------------------------------------------------
-# staged DataFrame builder — JVM-side point-cell encode without the
-# codegen blowup: each intermediate is its own column, and Catalyst's
-# CollapseProject keeps non-cheap aliases un-inlined, so the generated
-# method stays small.  Exactly equivalent to ``calculate_point``
-# (validated in tests against the numpy kernel).
+# staged Spark codec — the one way Spark computes a cell.  Each
+# intermediate is its own column, and Catalyst's CollapseProject keeps
+# non-cheap aliases un-inlined, so the generated method stays small.
+# Exactly equivalent to the numpy kernels above (pinned in tests).
 # ---------------------------------------------------------------------------
-
-_SPREAD_MASKS = (
-    (16, 281470681808895),      # 0x0000FFFF0000FFFF
-    (8, 71777214294589695),     # 0x00FF00FF00FF00FF
-    (4, 1085102592571150095),   # 0x0F0F0F0F0F0F0F0F
-    (2, 3689348814741910323),   # 0x3333333333333333
-    (1, 6148914691236517205),   # 0x5555555555555555
-)
-
-
-def _sql_spread_bits(col: str) -> str:
-    """Spread an 18-bit int so its bits occupy even positions
-    (classic morton bit-twiddle, 64-bit masks).
-
-    TEXTUAL composition: each level's string embeds the previous level
-    TWICE, so the full expression duplicates the input subtree 2^5 =
-    32x.  Fine for the DuckDB oracle dialect; in Spark hot paths use
-    :func:`_stage_spread_bits` instead — after an ``explode`` the
-    whole-stage-codegen consume method cannot be split, and this
-    expression inlined there blows the JVM's 64KB method limit (janino
-    InternalCompilerException -> a multi-second failed compile repaid
-    on EVERY action, then interpreted fallback; round-6 measurement)."""
-    c = f"cast({col} as bigint)"
-    for sh, mask in _SPREAD_MASKS:
-        c = f"(({c} | shiftleft({c}, {sh})) & {mask})"
-    return c
-
 
 def _spread9_values() -> list[int]:
     """spread9[i] = the 9 bits of i moved to even bit positions."""
@@ -354,8 +331,13 @@ def _spread9_values() -> list[int]:
     return out
 
 
-_SPREAD9_SQL = "array(" + ", ".join(
-    f"{v}L" for v in _spread9_values()) + ")"
+# One string split and cast, not ``array(<512 literals>)``: the
+# analyzer walks every node of a plan on each DataFrame op, and 512
+# literal children per lookup made each cell expression cost ~40 ms of
+# driver-side analysis.  ConstantFolding turns both forms into the same
+# literal array, so the executed plan does not change.
+_SPREAD9_SQL = ("cast(split('" + ",".join(map(str, _spread9_values()))
+                + "', ',') as array<bigint>)")
 
 
 def sql_spread_bits_lookup(col: str) -> str:
@@ -363,15 +345,15 @@ def sql_spread_bits_lookup(col: str) -> str:
     512-entry literal array (Spark-side only; the oracle dialect keeps
     the arithmetic form).
 
-    Why a lookup: the bit-twiddle form embeds its input 2^5 = 32x
+    Why a lookup: a bit-twiddle spread embeds its input 2^5 = 32x
     after textual composition, and Catalyst's filter pushdown
     re-substitutes staged columns into predicates — a predicate on the
     quadtree downstream of an explode then inlines the whole
     duplicated tree into the Generate consume method, which cannot be
     split, blowing janino's 64KB method limit (a multi-second FAILED
     compile repaid on every action + interpreted fallback; round-6
-    measurement).  The literal array constant-folds into a single
-    entry in ``references[]``, so this form stays ~10 expression nodes
+    measurement).  The table constant-folds into a single literal
+    array in ``references[]``, so this form stays ~10 expression nodes
     no matter where the optimizer copies it.  ``col`` is referenced
     twice."""
     c = f"cast({col} as bigint)"
@@ -380,74 +362,80 @@ def sql_spread_bits_lookup(col: str) -> str:
             f"cast(({c}) div 512 as int) + 1), 18))")
 
 
+def _sql_tile_xy(lon_col: str, lat_col: str,
+                 depth: int = MAX_DEPTH) -> tuple[str, str]:
+    """SQL tile x, y at ``depth`` of fixed-point 1e-7° lon/lat, as
+    ``calculate_point`` picks them.  The depth-18 tile is shifted down:
+    ``tx18 >> (18 - depth)`` is exact, because scaling by a power of
+    two is exact in float64."""
+    n = 1 << MAX_DEPTH
+    x = f"(({lon_col}) * 1e-7 + 180.0) / 360.0"
+    latc = (f"least(greatest(({lat_col}) * 1e-7, -85.051128779806), "
+            f"85.051128779806)")
+    y = f"(1.0 - ln(tan(pi()/4.0 + radians({latc})/2.0)) / pi()) / 2.0"
+    tx, ty = (f"least(cast(floor(least(greatest({v}, 0.0), 1.0 - 1e-15) "
+              f"* {n}) as bigint), {n - 1})" for v in (x, y))
+    if depth == MAX_DEPTH:
+        return tx, ty
+    return (f"shiftright({tx}, {MAX_DEPTH - depth})",
+            f"shiftright({ty}, {MAX_DEPTH - depth})")
+
+
+def _sql_cell(tx: str, ty: str, z: int | str) -> str:
+    """SQL computing ``from_tile(tx, ty, z)``; ``z`` may be a column.
+    ``tx`` and ``ty`` are each referenced twice (see
+    :func:`sql_spread_bits_lookup`), so pass columns, not expressions."""
+    return (f"(shiftleft((shiftleft({sql_spread_bits_lookup(tx)}, 1) | "
+            f"{sql_spread_bits_lookup(ty)}), "
+            f"cast(2 * ({MAX_DEPTH} - {z}) as int)) * 32) + {z}")
+
+
 def with_point_qt(df, lon_col: str, lat_col: str, out_col: str = "quadtree",
                   max_depth: int = MAX_DEPTH):
     """Add ``out_col`` = calculate_point(lon, lat, max_depth) as pure
     staged Spark SQL (whole-stage-codegen'd, no Python workers)."""
     from pyspark.sql import functions as F
-    n = 1 << max_depth
-    x = f"(({lon_col}) * 1e-7 + 180.0) / 360.0"
-    latc = f"least(greatest(({lat_col}) * 1e-7, -85.051128779806), 85.051128779806)"
-    y = f"(1.0 - ln(tan(pi()/4.0 + radians({latc})/2.0)) / pi()) / 2.0"
-    tx = f"least(cast(floor(least(greatest({x}, 0.0), 1.0 - 1e-15) * {n}) as bigint), {n - 1})"
-    ty = f"least(cast(floor(least(greatest({y}, 0.0), 1.0 - 1e-15) * {n}) as bigint), {n - 1})"
-    shift = 2 * (MAX_DEPTH - max_depth)
-    # batched withColumns: every extra DataFrame op re-analyzes the
-    # whole logical plan driver-side, which adds up in deep pipelines
-    # (round-6 plan-construction profiling)
+    tx, ty = _sql_tile_xy(lon_col, lat_col, max_depth)
     out = (df.withColumns({"__qt_tx": F.expr(tx), "__qt_ty": F.expr(ty)})
-             .withColumns({
-                 "__qt_sx": F.expr(sql_spread_bits_lookup("__qt_tx")),
-                 "__qt_sy": F.expr(sql_spread_bits_lookup("__qt_ty"))})
              .withColumn(out_col, F.expr(
-                 f"(shiftleft((shiftleft(__qt_sx, 1) | __qt_sy), {shift})"
-                 f" * 32) + {max_depth}")))
-    return out.drop("__qt_tx", "__qt_ty", "__qt_sx", "__qt_sy")
+                 _sql_cell("__qt_tx", "__qt_ty", max_depth))))
+    return out.drop("__qt_tx", "__qt_ty")
 
 
 def with_bbox_qt(df, minlon: str, minlat: str, maxlon: str, maxlat: str,
-                 out_col: str = "quadtree", max_depth: int = MAX_DEPTH):
+                 out_col: str = "quadtree"):
     """Add ``out_col`` = calculate_bbox(...) as staged Spark SQL: point
     cells of both corners, then their common ancestor via XOR of the
     aligned mortons (depth = 17 - floor(log2(xor))/2).  100% JVM — no
     Python workers in the tile-assignment hot path."""
     from pyspark.sql import functions as F
-    n = 1 << max_depth
-    shift = 2 * (MAX_DEPTH - max_depth)
-
-    def txy(lon_col, lat_col):
-        x = f"(({lon_col}) * 1e-7 + 180.0) / 360.0"
-        latc = (f"least(greatest(({lat_col}) * 1e-7, -85.051128779806), "
-                f"85.051128779806)")
-        y = f"(1.0 - ln(tan(pi()/4.0 + radians({latc})/2.0)) / pi()) / 2.0"
-        tx = (f"least(cast(floor(least(greatest({x}, 0.0), 1.0 - 1e-15) "
-              f"* {n}) as bigint), {n - 1})")
-        ty = (f"least(cast(floor(least(greatest({y}, 0.0), 1.0 - 1e-15) "
-              f"* {n}) as bigint), {n - 1})")
-        return tx, ty
-
-    # both corners staged side by side, one Project per morton stage
-    # (each extra DataFrame op re-analyzes the whole plan driver-side)
-    txa, tya = txy(minlon, minlat)
-    txb, tyb = txy(maxlon, maxlat)
-    qt = (f"(shiftleft((shiftleft(__qt_sx%s, 1) | __qt_sy%s), {shift})"
-          f" * 32) + {max_depth}")
+    # both corners staged side by side, one Project per stage (each
+    # extra DataFrame op re-analyzes the whole plan driver-side)
+    txa, tya = _sql_tile_xy(minlon, minlat)
+    txb, tyb = _sql_tile_xy(maxlon, maxlat)
     xor = "shiftright(__qt_a, 5) ^ shiftright(__qt_b, 5)"
-    d = (f"(case when ({xor}) = 0 then cast({max_depth} as bigint) "
+    d = (f"(case when ({xor}) = 0 then cast({MAX_DEPTH} as bigint) "
          f"else cast(17 - floor(floor(log2(cast(({xor}) as double))) / 2) as bigint) end)")
     out = (df.withColumns({
                "__qt_txa": F.expr(txa), "__qt_tya": F.expr(tya),
                "__qt_txb": F.expr(txb), "__qt_tyb": F.expr(tyb)})
              .withColumns({
-               "__qt_sxa": F.expr(sql_spread_bits_lookup("__qt_txa")),
-               "__qt_sya": F.expr(sql_spread_bits_lookup("__qt_tya")),
-               "__qt_sxb": F.expr(sql_spread_bits_lookup("__qt_txb")),
-               "__qt_syb": F.expr(sql_spread_bits_lookup("__qt_tyb"))})
-             .withColumns({
-               "__qt_a": F.expr(qt % ("a", "a")),
-               "__qt_b": F.expr(qt % ("b", "b"))})
+               "__qt_a": F.expr(_sql_cell("__qt_txa", "__qt_tya", MAX_DEPTH)),
+               "__qt_b": F.expr(_sql_cell("__qt_txb", "__qt_tyb", MAX_DEPTH))})
              .withColumn("__qt_d", F.expr(d))
              .withColumn(out_col, F.expr(sql_round_qt("__qt_a", "__qt_d"))))
     return out.drop("__qt_txa", "__qt_tya", "__qt_txb", "__qt_tyb",
-                    "__qt_sxa", "__qt_sya", "__qt_sxb", "__qt_syb",
                     "__qt_a", "__qt_b", "__qt_d")
+
+
+def explode_tile_rect(df, keep: list[str], x0: str, x1: str, y0: str,
+                      y1: str, z: int | str, out_col: str = "cell"):
+    """``keep`` columns x every depth-``z`` cell of the tile rectangle
+    [x0, x1] x [y0, y1], one row per cell.  The bounds are SQL over
+    ``df``'s columns, ``z`` an int or a column: two ``sequence``
+    explodes, then one :func:`_sql_cell`."""
+    from pyspark.sql import functions as F
+    out = (df.withColumn("__qt_cx", F.explode(F.expr(f"sequence({x0}, {x1})")))
+             .withColumn("__qt_cy", F.explode(F.expr(f"sequence({y0}, {y1})"))))
+    return out.select(*keep, F.expr(_sql_cell("__qt_cx", "__qt_cy", z))
+                      .alias(out_col))

@@ -36,14 +36,6 @@ HAVE_PIL = _PILImage is not None
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def decode_png(payload: bytes) -> np.ndarray:
     """Stdlib PNG decoder (public spec, RFC 2083): returns an
     (H, W, channels) uint8 array.  Supports 8-bit depth, color types
@@ -277,13 +269,3 @@ def extract_features(media_bin: DataFrame, dim: int = 8,
             yield out
 
     return media_bin.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def frame_sample_plan(video: DataFrame, every_n: int = 10) -> DataFrame:
-    """Plumbing for frame sampling: (doc_id, media_ref, frame_idx)
-    rows for frames 0, n, 2n, ... of a declared frame count column —
-    pure SQL fan-out; the decode itself is the stubbed step."""
-    return video.select(
-        "doc_id", "media_ref",
-        F.explode(F.expr(f"sequence(0, greatest(n_frames - 1, 0), {every_n})"))
-        .alias("frame_idx"))

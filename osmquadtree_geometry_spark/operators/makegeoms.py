@@ -9,36 +9,22 @@ Reference: `/root/reference/src/process_geometry.rs:244-310`.
   * recalc quadtree: points via ``calculate_point(lon,lat,18,0.0)``,
     others via ``calculate(bounds,18,0.0)``.
 
-Classification and measurement are pure Spark SQL (JVM);
-only the bbox->quadtree common-ancestor encode uses an Arrow-batched
-pandas UDF (numpy kernel).
+Classification, measurement and the bbox->quadtree common-ancestor
+encode are pure Spark SQL (JVM).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config.style import GeometryStyle
 from ..kernels import quadtree as qtk
 from . import sqlgeom
 
 
-@F.pandas_udf(T.LongType())
-def qt_bbox_udf(minlon: pd.Series, minlat: pd.Series,
-                maxlon: pd.Series, maxlat: pd.Series) -> pd.Series:
-    import numpy as np
-    out = qtk.calculate_bbox(
-        np.asarray(minlon, dtype=np.int64), np.asarray(minlat, dtype=np.int64),
-        np.asarray(maxlon, dtype=np.int64), np.asarray(maxlat, dtype=np.int64))
-    return pd.Series(out)
-
-
 def with_bbox_quadtree(df: DataFrame, lonlats: str = "lonlats") -> DataFrame:
-    """bbox -> deepest containing cell, pure staged SQL (JVM; the
-    pandas-UDF variant ``qt_bbox_udf`` remains for kernels)."""
+    """bbox -> deepest containing cell, pure staged SQL (JVM)."""
     b = sqlgeom.sql_bbox(lonlats)
     tmp = df.withColumns({f"__b_{k}": F.expr(v) for k, v in b.items()})
     out = qtk.with_bbox_qt(tmp, "__b_minlon", "__b_minlat",

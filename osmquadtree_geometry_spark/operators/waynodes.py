@@ -16,8 +16,6 @@ projects only (id, lon, lat) so the scan prunes tags.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -26,32 +24,22 @@ from .. import cache
 LONLAT = "array<struct<lon:int,lat:int>>"
 
 
-def collect_lonlats_expr() -> str:
-    """SQL aggregate producing the ordered lonlats array from exploded
-    (pos, lon, lat) rows.
-
-    Two shapes, same result (parity pinned by test_packed_j1):
-    - packed (default): collect struct(pos, ll) with lon/lat
-      bit-packed into ONE bigint (2 slots = 24 B/element vs 32 B,
-      25% less traffic on the pipeline's widest shuffle — the
-      inherent per-way regroup).  Unpack uses shift arithmetic only —
-      `shiftright(shiftleft(ll,32),32)` sign-extends the low half
-      without an out-of-range cast, so it is ANSI-mode safe.
-      Measured at 14.08M docs: −12% wall / −10% CPU at 16 cores,
-      −9% wall at 32 (DRAM-bound levels), +7% wall at 4 cores where
-      bandwidth is free and the pack/unpack ALU work shows — the
-      right default for any cluster-scale deployment;
-    - SPARK_GRAFT_PACK_J1=0 opts out (collect struct(pos, lon, lat)).
-    """
-    if os.environ.get("SPARK_GRAFT_PACK_J1", "1") != "0":
-        return (
-            "transform(array_sort(collect_list(struct(pos, "
-            "shiftleft(cast(lon as bigint), 32) | "
-            "(cast(lat as bigint) & 4294967295) as ll))), "
-            "p -> struct(cast(shiftright(p.ll, 32) as int) as lon, "
-            "cast(shiftright(shiftleft(p.ll, 32), 32) as int) as lat))")
-    return ("transform(array_sort(collect_list(struct(pos, lon, lat))),"
-            " p -> struct(p.lon as lon, p.lat as lat))")
+# The ordered lonlats array from exploded (pos, lon, lat) rows: collect
+# struct(pos, ll) with lon/lat bit-packed into ONE bigint (2 slots =
+# 24 B/element vs 32 B, 25% less traffic on the pipeline's widest
+# shuffle — the inherent per-way regroup).  Unpack uses shift
+# arithmetic only — `shiftright(shiftleft(ll,32),32)` sign-extends the
+# low half without an out-of-range cast, so it is ANSI-mode safe.
+# Measured at 14.08M docs against collecting struct(pos, lon, lat):
+# −12% wall / −10% CPU at 16 cores, −9% wall at 32 (DRAM-bound
+# levels), +7% wall at 4 cores where bandwidth is free and the
+# pack/unpack ALU work shows (BENCH/BASELINE.md).
+COLLECT_LONLATS = (
+    "transform(array_sort(collect_list(struct(pos, "
+    "shiftleft(cast(lon as bigint), 32) | "
+    "(cast(lat as bigint) & 4294967295) as ll))), "
+    "p -> struct(cast(shiftright(p.ll, 32) as int) as lon, "
+    "cast(shiftright(shiftleft(p.ll, 32), 32) as int) as lat))")
 
 
 def collect_way_nodes(ways: DataFrame, nodes: DataFrame,
@@ -72,15 +60,15 @@ def collect_way_nodes(ways: DataFrame, nodes: DataFrame,
     # NOTE: node ids are assumed unique (true for OSM and the driver
     # fixtures).  If a deployment can feed duplicate-id node rows,
     # dedupe them upstream (drop_duplicates on id) — a duplicate fans
-    # out the left join AND makes the packed/unpacked array_sort
-    # tie-break diverge for equal-pos elements.
+    # out the left join AND yields equal-pos elements, which array_sort
+    # then orders by their packed coordinates.
     locs = nodes.select(F.col("id").alias("ref"), "lon", "lat")
     j = refs.join(locs, "ref", "left")
     # a half-null location row (corrupt input) must route to the error
-    # branch in BOTH collect variants: the packed bigint nulls out when
-    # EITHER half is null, so test lon OR lat here, not just lon
+    # branch: the packed bigint nulls out when EITHER half is null, so
+    # test lon OR lat here, not just lon
     grouped = (j.groupBy("id")
-               .agg(F.expr(collect_lonlats_expr()).alias("lonlats"),
+               .agg(F.expr(COLLECT_LONLATS).alias("lonlats"),
                     F.min(F.when(F.col("lon").isNull() | F.col("lat").isNull(),
                                  F.struct("pos", "ref"))).alias("first_missing")))
     enriched = grouped.join(ways.select("doc_id", "id", "refs", "tags"), ["id"])

@@ -30,8 +30,7 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
     b = (
         SparkSession.builder.master(master).appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled",
-                os.environ.get("SPARK_GRAFT_AQE", "true"))
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # default 64m advisory size coalesces local-scale shuffles to a
         # single partition, serializing every stage; 8m keeps ~cores
@@ -48,8 +47,7 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
         # the scan side carries the explode+parse work; 128m splits a
         # local single-file fixture into ~3 tasks (tune per deployment:
         # at 100TB with thousands of files the default is fine)
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"))
+        .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -70,10 +68,10 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
         # -12% at 16 on the 14M-doc metric job, a wash at 32 (minima).
         # CAVEAT: internal conf (may be renamed across Spark versions)
         # applied session-wide, so small-group object aggregates lose
-        # ObjectHashAggregate too; SPARK_GRAFT_OBJECT_HASH_AGG=true
-        # restores the stock planner for mixed workloads
-        .config("spark.sql.execution.useObjectHashAggregateExec",
-                os.environ.get("SPARK_GRAFT_OBJECT_HASH_AGG", "false"))
+        # ObjectHashAggregate too; for mixed workloads, restore the
+        # stock planner with SPARK_GRAFT_EXTRA_CONF=
+        # "spark.sql.execution.useObjectHashAggregateExec=true"
+        .config("spark.sql.execution.useObjectHashAggregateExec", "false")
         # G1's concurrent cycles thrash with 32 task threads on this
         # allocation-heavy batch workload (measured 2.3x slower);
         # throughput collector wins for pure batch

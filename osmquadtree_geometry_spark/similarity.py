@@ -16,9 +16,6 @@ from pyspark.sql import Window as W
 
 from . import cache
 
-_DOT = "aggregate(zip_with(qe, embedding, (x, y) -> cast(x as double) * y), 0.0d, (a, v) -> a + v)"
-_NRM = "sqrt(aggregate(%s, 0.0d, (a, v) -> a + cast(v as double) * v))"
-
 # Unroll width for the codegen'd fast path below.  Higher-order-
 # function folds are interpreted expression eval (no whole-stage
 # codegen) and zip_with additionally allocates a struct array per
@@ -71,19 +68,6 @@ def _l2_unrolled(a: str, b: str, dim: int) -> str:
         f"cast(element_at({b}, {i}) as double)) * "
         f"(cast(element_at({a}, {i}) as double) - "
         f"cast(element_at({b}, {i}) as double)))" for i in range(1, dim + 1))
-
-
-def _l2_expr(a: str, b: str, dim: int | None = _UNROLL_DIM) -> str:
-    """squared L2 distance; zip_with-fold semantics preserved."""
-    fold = _L2 % (a, b)
-    if not dim:
-        return fold
-    return (f"(case when size({a}) = {dim} and size({b}) = {dim} "
-            f"then {_l2_unrolled(a, b, dim)} else {fold} end)")
-
-
-def _cosine_col():
-    return F.round(F.expr(_DOT) / (F.expr(_NRM % "qe") * F.expr(_NRM % "embedding")), 6)
 
 
 def _cosine_hoisted():

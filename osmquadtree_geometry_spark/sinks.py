@@ -261,7 +261,8 @@ def write_spatial_index(res, out_dir: str,
       polygons' adaptive covering cells (depth-encoded values,
       <= MAX_COVER per feature), exploded so queries scan it directly;
     - ``points_cells``: (point_id, lon, lat, cell10, cell8) — fixed-
-      depth quadtree cells via PURE SQL (sql_point_qt, JVM codegen) —
+      depth quadtree cells via staged SQL (``with_point_qt`` at the
+      first depth, the others rounded from it) —
       plus one ``n{d}`` count column per depth the cover actually
       used, so the pip join's per-cell point counts (its bucket-size
       bound) are a stored lookup instead of an extra agg + join;
@@ -278,18 +279,12 @@ def write_spatial_index(res, out_dir: str,
 
     from pyspark.sql import Window
 
-    from .kernels.quadtree import sql_point_qt, sql_qt_depth, sql_round_qt
-    from .spatial.joins import _BBOX, adaptive_cover_udf
+    from .kernels.quadtree import sql_round_qt, with_point_qt
+    from .spatial.joins import polygon_cover
     from .tableio import write_table
 
     out = {}
-    cover = (res.simple_polygons
-             .select(F.col("id").alias("polygon_id"), "lonlats",
-                     *[F.expr(v).alias(k) for k, v in _BBOX.items()])
-             .withColumn("cell", F.explode(
-                 adaptive_cover_udf(SPATIAL_COVER_DEPTH)(
-                     "minlon", "minlat", "maxlon", "maxlat")))
-             .select("polygon_id", "lonlats", "cell"))
+    cover = polygon_cover(res.simple_polygons, SPATIAL_COVER_DEPTH)
     p = os.path.join(out_dir, "poly_cover")
     write_table(cover, p)
     out["poly_cover"] = p
@@ -310,10 +305,11 @@ def write_spatial_index(res, out_dir: str,
                    "cover_depth": SPATIAL_COVER_DEPTH}, f)
 
     base = f"cell{SPATIAL_POINT_DEPTHS[0]}"
-    pts = res.points.select(
-        F.col("id").alias("point_id"), "lon", "lat",
-        *[F.expr(sql_point_qt("lon", "lat", d)).alias(f"cell{d}")
-          for d in SPATIAL_POINT_DEPTHS])
+    pts = with_point_qt(
+        res.points.select(F.col("id").alias("point_id"), "lon", "lat"),
+        "lon", "lat", base, SPATIAL_POINT_DEPTHS[0])
+    pts = pts.withColumns({f"cell{d}": F.expr(sql_round_qt(base, str(d)))
+                           for d in SPATIAL_POINT_DEPTHS[1:]})
     for d in used:
         w = Window.partitionBy(F.expr(sql_round_qt(base, str(d))))
         pts = pts.withColumn(f"n{d}", F.count("*").over(w))
@@ -369,9 +365,8 @@ def write_feature_tables(res, out_dir: str, media: DataFrame | None = None,
         tables["simple_polygons"] = res.simple_polygons
     if media is not None:
         if spatial_index and {"z", "x", "y"} <= set(media.columns):
-            from .spatial.joins import tile_cell_udf
-            media = media.withColumn("tile_cell",
-                                     tile_cell_udf("z", "x", "y"))
+            from .spatial.joins import with_tile_cell
+            media = with_tile_cell(media)
         tables["media"] = media
 
     def write(df: DataFrame, path: str) -> None:

@@ -8,8 +8,10 @@ clipping at tile boundaries as DataFrame stages.
 
 Scale design: every join is an EQUI-join on a cell id (quadtree cell
 at a chosen depth) so it hash-partitions without a cross product; the
-exact geometry predicate runs only inside matching cells via
-vectorized numpy kernels.  Cell fan-outs (covering cells, neighbour
+exact geometry predicate runs only inside matching cells.  Cells come
+from the staged SQL codec in ``kernels.quadtree`` (no Python workers);
+only ``line_cover_udf``'s per-segment walk stays in Python, feeding a
+Python clip anyway.  Cell fan-outs (covering cells, neighbour
 rings, ancestor chains) are bounded (<= 19 for ancestors, ring² for
 kNN) so shuffle volume scales linearly with input.
 """
@@ -26,37 +28,7 @@ from .. import cache
 from ..kernels import geomcalc, quadtree as qtk
 from ..kernels.mercator import EARTH_WIDTH
 from ..kernels.quadtree import sql_qt_depth, sql_round_qt
-
-_BBOX = {
-    "minlon": "array_min(transform(lonlats, p -> p.lon))",
-    "minlat": "array_min(transform(lonlats, p -> p.lat))",
-    "maxlon": "array_max(transform(lonlats, p -> p.lon))",
-    "maxlat": "array_max(transform(lonlats, p -> p.lat))",
-}
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def cover_cells_udf(minlon: pd.Series, minlat: pd.Series,
-                    maxlon: pd.Series, maxlat: pd.Series,
-                    depth: pd.Series) -> pd.Series:
-    """All depth-d cells overlapping each bbox (bounded rectangle of
-    tiles; callers pick d so the fan-out stays small).  For a HARD
-    per-feature bound regardless of geometry size use
-    ``adaptive_cover_udf``."""
-    import numpy as np
-    out = []
-    for a, b, c, d, z in zip(minlon, minlat, maxlon, maxlat, depth):
-        z = int(z)
-        qa = qtk.calculate_point(np.asarray([int(a)]), np.asarray([int(b)]), z)
-        qb = qtk.calculate_point(np.asarray([int(c)]), np.asarray([int(d)]), z)
-        ax, ay, _ = qtk.xyz(qa)
-        bx, by, _ = qtk.xyz(qb)
-        x0, x1 = min(ax[0], bx[0]), max(ax[0], bx[0])
-        y0, y1 = min(ay[0], by[0]), max(ay[0], by[0])
-        xs, ys = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
-        out.append(qtk.from_tile(xs.ravel(), ys.ravel(), z).tolist())
-    return pd.Series(out)
-
+from ..operators.sqlgeom import sql_bbox, sql_pnpoly
 
 # Adaptive covering: a feature picks the DEEPEST depth from this menu
 # (relative steps below the requested depth) whose bbox spans <= MAX_COVER
@@ -82,105 +54,67 @@ def cover_menu(depth: int) -> list[int]:
     return menu
 
 
-def adaptive_cover_udf(depth: int):
-    """pandas_udf: bbox -> array<long> of covering cells at the
-    deepest menu depth whose bbox span is <= MAX_COVER.  Each cell
-    value ENCODES its depth (``qt = interleaved<<5 | depth``), so no
-    separate depth column is needed and cells from different menu
-    depths can never collide in an equi-join.
+def polygon_cover(polygons: DataFrame, depth: int) -> DataFrame:
+    """(polygon_id, lonlats, cell): each polygon (``id``, ``lonlats``)
+    with the covering cells of its bbox, one row per cell, at the
+    deepest ``cover_menu(depth)`` depth whose bbox spans <= MAX_COVER
+    tiles (the coarsest entry always fits).  Each cell value ENCODES
+    its depth (``qt = interleaved<<5 | depth``), so no separate depth
+    column is needed and cells from different menu depths can never
+    collide in an equi-join.
 
-    Vectorized (round-4 bench: the old per-row loop cost ~2.7 s of a
-    6 s pip_join at sf0.1): tile spans for ALL rows are computed with
-    one ``calculate_point``/``xyz`` pass per menu depth, the common
-    single-cell case is emitted with one ``from_tile`` pass per chosen
-    depth, and only multi-cell rows (span > 1) fall back to a per-row
-    meshgrid — their count is bounded by the features that genuinely
-    straddle tiles."""
-    import numpy as np
+    Staged SQL: the corner tiles at depth 18, shifted per menu depth
+    to pick the depth, then the tile rectangle exploded
+    (:func:`qtk.explode_tile_rect`)."""
     menu = cover_menu(depth)
+    xa, ya = qtk._sql_tile_xy("minlon", "minlat")
+    xb, yb = qtk._sql_tile_xy("maxlon", "maxlat")
+    bbox = polygons.select(
+        F.col("id").alias("polygon_id"), "lonlats",
+        *[F.expr(v).alias(k) for k, v in sql_bbox("lonlats").items()])
+    corners = bbox.withColumns({"__cv_xa": F.expr(xa), "__cv_ya": F.expr(ya),
+                                "__cv_xb": F.expr(xb), "__cv_yb": F.expr(yb)})
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover(minlon: pd.Series, minlat: pd.Series,
-              maxlon: pd.Series, maxlat: pd.Series) -> pd.Series:
-        n = len(minlon)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        lo0 = minlon.to_numpy(np.int64)
-        la0 = minlat.to_numpy(np.int64)
-        lo1 = maxlon.to_numpy(np.int64)
-        la1 = maxlat.to_numpy(np.int64)
-        chosen = np.full(n, menu[-1], np.int64)
-        X0 = np.zeros(n, np.int64)
-        X1 = np.zeros(n, np.int64)
-        Y0 = np.zeros(n, np.int64)
-        Y1 = np.zeros(n, np.int64)
-        undecided = np.ones(n, bool)
-        for z in menu:
-            if not undecided.any():
-                break
-            ax, ay, _ = qtk.xyz(qtk.calculate_point(lo0, la0, z))
-            bx, by, _ = qtk.xyz(qtk.calculate_point(lo1, la1, z))
-            x0 = np.minimum(ax, bx)
-            x1 = np.maximum(ax, bx)
-            y0 = np.minimum(ay, by)
-            y1 = np.maximum(ay, by)
-            span = (x1 - x0 + 1) * (y1 - y0 + 1)
-            pick = undecided & (span <= MAX_COVER)
-            if z == menu[-1]:
-                pick = undecided  # coarsest full grid fits by design
-            chosen[pick] = z
-            X0[pick] = x0[pick]
-            X1[pick] = x1[pick]
-            Y0[pick] = y0[pick]
-            Y1[pick] = y1[pick]
-            undecided &= ~pick
-        out = np.empty(n, object)
-        single = (X0 == X1) & (Y0 == Y1)
-        if single.any():
-            cell1 = np.zeros(n, np.int64)
-            for z in np.unique(chosen[single]):
-                sel = single & (chosen == z)
-                cell1[sel] = qtk.from_tile(X0[sel], Y0[sel], int(z))
-            for i in np.flatnonzero(single):
-                out[i] = [int(cell1[i])]
-        for i in np.flatnonzero(~single):
-            z = int(chosen[i])
-            xs, ys = np.meshgrid(np.arange(X0[i], X1[i] + 1),
-                                 np.arange(Y0[i], Y1[i] + 1))
-            out[i] = qtk.from_tile(xs.ravel(), ys.ravel(), z).tolist()
-        return pd.Series(out)
+    def side(a: str, b: str, s: int | str) -> tuple[str, str]:
+        a, b = f"shiftright(__cv_{a}, {s})", f"shiftright(__cv_{b}, {s})"
+        return f"least({a}, {b})", f"greatest({a}, {b})"
 
-    return cover
+    def span(z: int) -> str:
+        (x0, x1), (y0, y1) = (side(a, b, qtk.MAX_DEPTH - z)
+                              for a, b in (("xa", "xb"), ("ya", "yb")))
+        return f"({x1} - {x0} + 1) * ({y1} - {y0} + 1)"
+
+    whens = "".join(f"when {span(z)} <= {MAX_COVER} then {z} "
+                    for z in menu[:-1])
+    pick = f"case {whens}else {menu[-1]} end" if whens else str(menu[-1])
+    staged = corners.withColumn("__cv_z", F.expr(pick))
+    s = f"{qtk.MAX_DEPTH} - __cv_z"
+    return qtk.explode_tile_rect(staged, ["polygon_id", "lonlats"],
+                                 *side("xa", "xb", s), *side("ya", "yb", s),
+                                 "__cv_z")
 
 
-def _cell_at(lon_col: str, lat_col: str, depth: int):
-    import numpy as np
+def ring_cells(df: DataFrame, lon_col: str, lat_col: str, depth: int,
+               rings: int) -> DataFrame:
+    """``df`` x the depth-``depth`` cells within ``rings`` tiles of each
+    point's tile (the (2·rings+1)² window, clamped at the antimeridian
+    and the poles), one row per cell in ``cell``."""
+    x, y = qtk._sql_tile_xy(lon_col, lat_col, depth)
+    top = (1 << depth) - 1
+    staged = df.withColumns({"__rg_x": F.expr(x), "__rg_y": F.expr(y)})
+    return qtk.explode_tile_rect(
+        staged, df.columns,
+        f"greatest(__rg_x - {rings}, 0)", f"least(__rg_x + {rings}, {top})",
+        f"greatest(__rg_y - {rings}, 0)", f"least(__rg_y + {rings}, {top})",
+        depth)
 
-    @F.pandas_udf(T.LongType())
-    def cell_of(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(qtk.calculate_point(
-            np.asarray(lon, np.int64), np.asarray(lat, np.int64), depth))
 
-    return cell_of(lon_col, lat_col)
-
-
-def tile_cell_udf(z_col: str, x_col: str, y_col: str):
-    """(z, x, y) raster tile -> quadtree cell value.  Used at query
+def with_tile_cell(media: DataFrame) -> DataFrame:
+    """``media`` plus ``tile_cell``: its (z, x, y) raster tile as a
+    quadtree cell value (``from_tile``), as staged SQL.  Used at query
     time by raster_vector_join and at LAYOUT-WRITE time by
-    sinks.write_feature_tables so the stored media table carries a
-    precomputed ``tile_cell`` column."""
-    import numpy as np
-
-    @F.pandas_udf(T.LongType())
-    def tile_qt(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        out = np.empty(len(z), np.int64)
-        zz, xs, ys = z.to_numpy(), x.to_numpy(), y.to_numpy()
-        for zv in np.unique(zz):
-            sel = zz == zv
-            out[sel] = qtk.from_tile(xs[sel], ys[sel], int(zv))
-        return pd.Series(out)
-
-    return tile_qt(z_col, x_col, y_col)
+    sinks.write_feature_tables, so the stored media table carries it."""
+    return media.withColumn("tile_cell", F.expr(qtk._sql_cell("x", "y", "z")))
 
 
 _MERC_X = f"round((%s) * 1e-7 * {EARTH_WIDTH!r} / 180.0, 2)"
@@ -237,12 +171,7 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     if poly_cover is not None:
         poly = poly_cover.select("polygon_id", "lonlats", "cell")
     else:
-        poly = (polygons.select(
-            F.col("id").alias("polygon_id"), "lonlats",
-            *[F.expr(v).alias(k) for k, v in _BBOX.items()])
-            .withColumn("cell", F.explode(adaptive_cover_udf(cell_depth)(
-                "minlon", "minlat", "maxlon", "maxlat"))))
-        poly = cache.persist(poly)
+        poly = cache.persist(polygon_cover(polygons, cell_depth))
     # used depths: from the stored index metadata when available,
     # else a bounded metadata action (<= len(cover_menu(cell_depth))
     # rows).  In the common all-small-polygons case this collapses the
@@ -255,26 +184,23 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     else:
         used = sorted(r.d for r in poly.select(
             F.expr(sql_qt_depth("cell")).alias("d")).distinct().collect())
+    if point_cells is not None:
+        pts0 = point_cells.select("point_id", "lon", "lat",
+                                  F.col(f"cell{cell_depth}").alias("cell0"))
+    else:
+        pts0 = qtk.with_point_qt(
+            points.select(F.col("id").alias("point_id"), "lon", "lat"),
+            "lon", "lat", "cell0", cell_depth)
+
     def _sql_engine(po: DataFrame) -> DataFrame:
         # DEFAULT engine (round-4 verdict Next #5 follow-through):
         # candidate pairs stream through ONE cell equi-join and the
         # pnpoly ray-cast runs as a JVM SQL fold inside the join stage
         # — no point packing shuffle, no count agg/join, no pandas
         # round-trip.
-        from ..kernels.quadtree import sql_point_qt
-        from ..operators.sqlgeom import sql_pnpoly
-        if point_cells is not None:
-            base = point_cells.select(
-                "point_id", "lon", "lat",
-                F.col(f"cell{cell_depth}").alias("cell0"))
-        else:
-            base = points.select(
-                F.col("id").alias("point_id"), "lon", "lat",
-                F.expr(sql_point_qt("lon", "lat", cell_depth))
-                .alias("cell0"))
         anc = F.array(*[F.expr(sql_round_qt("cell0", str(d))).cast("long")
                         for d in used])
-        pts_e = base.select("point_id", "lon", "lat",
+        pts_e = pts0.select("point_id", "lon", "lat",
                             F.explode(anc).alias("cell"))
         j = po.join(pts_e, "cell")
         return (j.where(F.expr(sql_pnpoly("lonlats", "lon", "lat")))
@@ -303,17 +229,10 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
                  .select("point_id", "lon", "lat", F.explode(anc).alias("a"))
                  .select("point_id", "lon", "lat", "a.cell", "a.n_in_cell"))
     else:
-        if point_cells is not None:
-            pts = point_cells.select(
-                "point_id", "lon", "lat",
-                F.col(f"cell{cell_depth}").alias("cell0"))
-        else:
-            # persist the tiny (id, lon, lat, cell) projection: it
-            # feeds both the per-cell count and the pack agg, and
-            # without it every reference re-runs the upstream plan
-            pts = cache.persist(
-                points.select(F.col("id").alias("point_id"), "lon", "lat")
-                .withColumn("cell0", _cell_at("lon", "lat", cell_depth)))
+        # persist the tiny (id, lon, lat, cell) projection: it feeds
+        # both the per-cell count and the pack agg, and without it
+        # every reference re-runs the upstream plan
+        pts = pts0 if point_cells is not None else cache.persist(pts0)
         anc = F.array(*[F.expr(sql_round_qt("cell0", str(d))).cast("long")
                         for d in used])
         pts_a = (pts.withColumn("cell", F.explode(anc))
@@ -408,25 +327,6 @@ def knn_join(query_points: DataFrame, target_points: DataFrame, k: int = 5,
     cheap; dense regions never leave phase 1.  Round 1's fixed-window
     version silently returned wrong/short results for exactly these
     queries."""
-    import numpy as np
-
-    def ring_cells(r: int):
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def cells(lon: pd.Series, lat: pd.Series) -> pd.Series:
-            q = qtk.calculate_point(np.asarray(lon, np.int64),
-                                    np.asarray(lat, np.int64), cell_depth)
-            tx, ty, _ = qtk.xyz(q)
-            n = 1 << cell_depth
-            out = []
-            for x, y in zip(tx, ty):
-                xs = np.arange(max(0, x - r), min(n - 1, x + r) + 1)
-                ys = np.arange(max(0, y - r), min(n - 1, y + r) + 1)
-                gx, gy = np.meshgrid(xs, ys)
-                out.append(qtk.from_tile(gx.ravel(), gy.ravel(),
-                                         cell_depth).tolist())
-            return pd.Series(out)
-        return cells
-
     q0 = query_points.select(F.col("id").alias("query_id"),
                              F.col("lon").alias("qlon"),
                              F.col("lat").alias("qlat"))
@@ -446,13 +346,12 @@ def knn_join(query_points: DataFrame, target_points: DataFrame, k: int = 5,
     else:
         t0 = cache.persist(
             target_points.select(F.col("id").alias("target_id"), "lon", "lat"))
-        t = t0.withColumn("cell", _cell_at("lon", "lat", cell_depth))
+        t = qtk.with_point_qt(t0, "lon", "lat", "cell", cell_depth)
     cell_w = 2.0 * EARTH_WIDTH / (1 << cell_depth)
 
     def ring_pass(queries: DataFrame, rings: int) -> tuple[DataFrame, DataFrame]:
         """-> (persisted top-k candidates, settled query ids)."""
-        qc = queries.withColumn("cell",
-                                F.explode(ring_cells(rings)("qlon", "qlat")))
+        qc = ring_cells(queries, "qlon", "qlat", cell_depth, rings)
         # target -> one cell, query cells distinct => pairs unique
         cand = (qc.join(t, "cell")
                 .where(F.col("query_id") != F.col("target_id")))
@@ -529,7 +428,7 @@ def raster_vector_join(media: DataFrame, features: DataFrame) -> DataFrame:
     if "tile_cell" in media.columns:
         m = media
     else:
-        m = media.withColumn("tile_cell", tile_cell_udf("z", "x", "y"))
+        m = with_tile_cell(media)
     f = features.select(F.col("id").alias("feature_id"), "quadtree")
 
     # direction 1: feature at-or-below the tile -> feature ancestor == tile

@@ -1,7 +1,6 @@
-"""Parity of the packed J1 collect buffer (SPARK_GRAFT_PACK_J1=1):
-bit-packing lon/lat into one bigint inside the per-way shuffle must be
-invisible in the output, including negative / extreme coordinates and
-the missing-node error branch."""
+"""The packed J1 collect buffer: bit-packing lon/lat into one bigint
+inside the per-way shuffle must be invisible in the output, including
+negative / extreme coordinates and the missing-node error branch."""
 
 from pyspark.sql import functions as F
 
@@ -34,25 +33,20 @@ def _rows(ok, err):
     return okr, errr
 
 
-def test_packed_collect_parity(spark, monkeypatch):
+def test_packed_collect_parity(spark):
     ways, nodes = _scene(spark)
-    monkeypatch.setenv("SPARK_GRAFT_PACK_J1", "0")
-    base = _rows(*collect_way_nodes(ways, nodes))
-    monkeypatch.setenv("SPARK_GRAFT_PACK_J1", "1")
-    packed = _rows(*collect_way_nodes(ways, nodes))
-    assert packed == base
-    ok_rows = dict(base[0])
-    assert ok_rows[10] == ((-1795000000, -890000000),
-                           (1795000000, 890000000),
-                           (-1, 1), (0, -2147483648))
-    assert base[1] == [(12, "missing node 99")]
+    ok, err = _rows(*collect_way_nodes(ways, nodes))
+    sw, ne, sign, low = ((-1795000000, -890000000), (1795000000, 890000000),
+                         (-1, 1), (0, -2147483648))
+    assert ok == [(10, (sw, ne, sign, low)), (11, (low, sign, sw))]
+    assert err == [(12, "missing node 99")]
 
 
-def test_half_null_location_routes_to_errors(spark, monkeypatch, tmp_path):
+def test_half_null_location_routes_to_errors(spark, tmp_path):
     """A corrupt node row with exactly one of lon/lat NULL must hit the
-    error branch identically in both collect variants (the packed
-    bigint nulls out when either half is null), both over the decoded
-    ways and over the prepare_bucketed tables (pre-exploded refs)."""
+    error branch (the packed bigint nulls out when either half is
+    null), both over the decoded ways and over the prepare_bucketed
+    tables (pre-exploded refs)."""
     from osmquadtree_geometry_spark.pipeline import (
         collect_way_nodes_bucketed)
     from osmquadtree_geometry_spark.sinks import write_bucketed
@@ -65,13 +59,11 @@ def test_half_null_location_routes_to_errors(spark, monkeypatch, tmp_path):
     try:
         for name, (df, col) in tables.items():
             write_bucketed(df, f"thn_{name}", col, 2, str(tmp_path / name))
-        for flag in ("0", "1"):
-            monkeypatch.setenv("SPARK_GRAFT_PACK_J1", flag)
-            for ok, err in (collect_way_nodes(ways, nodes),
-                            collect_way_nodes_bucketed(spark, "thn")):
-                assert ok.count() == 0, flag
-                assert [(r.elem_id, r.message) for r in err.collect()] == \
-                    [(20, "missing node 2")], flag
+        for ok, err in (collect_way_nodes(ways, nodes),
+                        collect_way_nodes_bucketed(spark, "thn")):
+            assert ok.count() == 0
+            assert [(r.elem_id, r.message) for r in err.collect()] == \
+                [(20, "missing node 2")]
     finally:
         for name in tables:
             spark.sql(f"DROP TABLE IF EXISTS thn_{name}")

@@ -103,6 +103,37 @@ def test_knn_plan_is_equi_join(spark, docs_path):
     assert "NestedLoop" not in prv and "CartesianProduct" not in prv
 
 
+def test_cell_codec_plans_stay_in_jvm(spark, docs_path, tmp_path):
+    """Every Spark-side quadtree cell comes from the staged SQL codec:
+    no Python evaluation node in the knn (live and stored targets),
+    raster (no stored tile_cell), pip (SQL engine, no side tables) and
+    poly_cover plans."""
+    from osmquadtree_geometry_spark import sinks
+    from osmquadtree_geometry_spark.pipeline import run_pipeline
+    from osmquadtree_geometry_spark.spatial import joins
+    from osmquadtree_geometry_spark.tableio import read_table
+    res = run_pipeline(spark, docs_path, with_tiles=False)
+    paths = sinks.write_spatial_index(res, str(tmp_path))
+    pc = read_table(spark, paths["points_cells"])
+    plans = {
+        "knn live": joins.knn_join(res.points, res.points, k=3,
+                                   cell_depth=8, max_rings=1),
+        "knn stored": joins.knn_join(res.points, res.points, k=3,
+                                     cell_depth=8, max_rings=1,
+                                     target_cells=pc),
+        "raster": joins.raster_vector_join(res.decoded["media"], res.points),
+        "pip sql": joins.point_in_polygon_join(
+            res.points, res.simple_polygons, cell_depth=10, engine="sql"),
+        "poly_cover": joins.polygon_cover(res.simple_polygons,
+                                          sinks.SPATIAL_COVER_DEPTH),
+    }
+    for name, df in plans.items():
+        plan = _plan(df)
+        assert "ArrowEvalPython" not in plan, name
+        assert "BatchEvalPython" not in plan, name
+        assert df.count() > 0, name
+
+
 def test_bucketed_join_no_shuffle(spark, tmp_path):
     """Two tables bucketed on the same (key, count) must join with NO
     Exchange in the plan — the co-location primitive that replaces

@@ -121,14 +121,9 @@ def test_adaptive_cover_hard_bound(spark):
               "named_struct('lon', -1790000000, 'lat', 840000000), "
               "named_struct('lon', -1790000000, 'lat', -840000000))")
     polys = spark.range(0, 1).selectExpr("id", f"{planet} as lonlats")
-    cover = (polys.selectExpr(
-        "array_min(transform(lonlats, p -> p.lon)) as minlon",
-        "array_min(transform(lonlats, p -> p.lat)) as minlat",
-        "array_max(transform(lonlats, p -> p.lon)) as maxlon",
-        "array_max(transform(lonlats, p -> p.lat)) as maxlat")
-        .select(joins.adaptive_cover_udf(10)(
-            "minlon", "minlat", "maxlon", "maxlat").alias("c"))
-        .selectExpr("size(c) as n", "cast(c[0] % 32 as int) as d").first())
+    cover = (joins.polygon_cover(polys, 10)
+             .selectExpr("count(*) as n", "max(cast(cell % 32 as int)) as d")
+             .first())
     assert cover.n <= joins.MAX_COVER, cover
     assert cover.d < 10  # demoted to a coarser menu depth
     # containment still exact through the mixed-depth equi-join
@@ -207,6 +202,12 @@ def test_precomputed_spatial_index_parity(spark, geo, tmp_path):
     pc = read_table(spark, paths["points_cells"])
     cover = read_table(spark, paths["poly_cover"])
     assert {"point_id", "lon", "lat", "cell10", "cell8"} <= set(pc.columns)
+    stored = pc.select("lon", "lat", "cell10", "cell8").collect()
+    lon = np.asarray([r.lon for r in stored], np.int64)
+    lat = np.asarray([r.lat for r in stored], np.int64)
+    for d in (10, 8):
+        assert [r[f"cell{d}"] for r in stored] == \
+            qtk.calculate_point(lon, lat, d).tolist()
 
     base = {(r.point_id, r.polygon_id) for r in joins.point_in_polygon_join(
         geo["points"], geo["polys"], cell_depth=10).collect()}
@@ -259,8 +260,11 @@ def test_precomputed_spatial_index_parity(spark, geo, tmp_path):
                          target_cells=pc).collect())
     assert knn_idx == knn_base and knn_base
 
-    media_idx = geo["media"].withColumn(
-        "tile_cell", joins.tile_cell_udf("z", "x", "y"))
+    media_idx = joins.with_tile_cell(geo["media"])
+    cells = media_idx.select("z", "x", "y", "tile_cell").collect()
+    assert [r.tile_cell for r in cells] == [
+        int(qtk.from_tile(np.asarray([r.x]), np.asarray([r.y]), r.z)[0])
+        for r in cells] and cells
     rv_base = {tuple(r) for r in joins.raster_vector_join(
         geo["media"], geo["points"]).collect()}
     rv_idx = {tuple(r) for r in joins.raster_vector_join(
