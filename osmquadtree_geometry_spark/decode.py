@@ -59,8 +59,10 @@ def decode_tags(spans: DataFrame) -> DataFrame:
     separate groupBys over the tag spans, three passes + three shuffle
     writes).  collect_list skips the NULLs the per-elem CASE produces,
     so each map holds only its kind's tags; keys sorted for
-    deterministic map iteration order.  The id-keyed output is
-    co-partitioned with every downstream (nodes/ways/relations) join.
+    deterministic map iteration order.  Since round 6 the
+    nodes/ways/relations decodes attach their own tags, so nothing in
+    the chain reads this table; it stays in :func:`decode_all` for
+    ``bench.py``'s scaling persist policy.
 
     tag text: elem=..;id=..;k=..;v=..  (v extracted by offset so it
     may contain any characters incl. '=' and ';')"""
@@ -119,8 +121,7 @@ def decode_node_locations(spans: DataFrame) -> DataFrame:
     return with_point_qt(n, "lon", "lat")
 
 
-def decode_nodes(spans: DataFrame,
-                 tags_all: DataFrame | None = None) -> DataFrame:
+def decode_nodes(spans: DataFrame) -> DataFrame:
     """nodes(doc_id, id, lon, lat, tags, quadtree) — quadtree is the
     z18 point cell (`Quadtree::calculate_point`), computed with the
     pure-SQL kernel so it stays inside whole-stage codegen.
@@ -155,8 +156,7 @@ def decode_nodes(spans: DataFrame,
     return with_point_qt(out, "lon", "lat")
 
 
-def decode_ways(spans: DataFrame,
-                tags_all: DataFrame | None = None) -> DataFrame:
+def decode_ways(spans: DataFrame) -> DataFrame:
     """ways(doc_id, id, refs, tags)."""
     w = (spans.where(F.col("kind") == "way_ref")
          .select("doc_id",
@@ -185,8 +185,7 @@ def decode_ways(spans: DataFrame,
     return g.where(F.size("refs") > 0)
 
 
-def decode_relations(spans: DataFrame,
-                     tags_all: DataFrame | None = None) -> DataFrame:
+def decode_relations(spans: DataFrame) -> DataFrame:
     """relations(doc_id, id, members array<struct<mem_type,mem_ref,role>>, tags)."""
     r = (spans.where(F.col("kind") == "rel_member")
          .select("doc_id",
@@ -230,13 +229,12 @@ def decode_media(spans: DataFrame) -> DataFrame:
 
 def decode_all(docs: DataFrame) -> dict[str, DataFrame]:
     spans = explode_spans(docs)
-    tags_all = decode_tags(spans)
     return {
         "spans": spans,
-        "tags_all": tags_all,
-        "nodes": decode_nodes(spans, tags_all),
-        "ways": decode_ways(spans, tags_all),
-        "relations": decode_relations(spans, tags_all),
+        "tags_all": decode_tags(spans),
+        "nodes": decode_nodes(spans),
+        "ways": decode_ways(spans),
+        "relations": decode_relations(spans),
         "media": decode_media(spans),
     }
 

@@ -265,11 +265,6 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
         if persist:
             # one parse of the span stream feeds 8+ downstream groupBys
             t["spans"] = cache.persist(t["spans"])
-            # the fused tag table (ONE shuffle for node/way/rel tags) is
-            # read by three branches — persist so the shuffle runs once
-            # (cache matches by logical plan, so the nodes/ways/relations
-            # built in decode_all hit it)
-            t["tags_all"] = cache.persist(t["tags_all"])
             # the decoded tables feed several downstream branches
             # (points + way join + relation joins + tile dictionary);
             # persisting here stops each output re-running the decode

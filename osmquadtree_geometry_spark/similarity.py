@@ -16,15 +16,15 @@ from pyspark.sql import Window as W
 
 from . import cache
 
-# Unroll width for the codegen'd fast path below.  Higher-order-
-# function folds are interpreted expression eval (no whole-stage
-# codegen) and zip_with additionally allocates a struct array per
-# row; an unrolled element_at sum runs ~5x faster (round-6
-# measurement: 2.33s -> 0.47s on the 20k x 16 IVF assignment).  The
+# Unroll width for the guarded fast path of brute force, LSH and
+# dedup.  Higher-order-function folds are interpreted expression eval
+# (no whole-stage codegen) and zip_with additionally allocates a
+# struct array per row; an unrolled element_at sum ran ~5x faster on
+# round 6's 20k x 16 IVF assignment (2.33s -> 0.47s, 32 cores).  The
 # unrolled branch is guarded by an exact size() check, and any other
 # width takes the original fold — identical values either way (same
 # left-assoc order, same casts), so this is shape-adaptive, not a
-# fixture assumption.
+# fixture assumption.  ivf_topk uses the folds only: see there.
 _UNROLL_DIM = 64
 
 
@@ -60,33 +60,24 @@ def _dot_expr(a: str, b: str, dim: int | None = _UNROLL_DIM) -> str:
             f"then {_dot_unrolled(a, b, dim)} else {_dot_fold(a, b)} end)")
 
 
-def _l2_unrolled(a: str, b: str, dim: int) -> str:
-    """Unguarded unrolled squared-L2 — caller must ensure both arrays
-    are exactly ``dim`` wide (ANSI element_at errors otherwise)."""
-    return " + ".join(
-        f"((cast(element_at({a}, {i}) as double) - "
-        f"cast(element_at({b}, {i}) as double)) * "
-        f"(cast(element_at({a}, {i}) as double) - "
-        f"cast(element_at({b}, {i}) as double)))" for i in range(1, dim + 1))
-
-
-def _cosine_hoisted():
+def _cosine_hoisted(dim: int | None = _UNROLL_DIM):
     """cosine from a pre-staged __nq/__ne norm pair: the same
     dot/(nq*ne) arithmetic, with each side's norm computed once per
     VECTOR instead of once per candidate pair (round-6, guide §1.2)."""
-    return F.round(F.expr(_dot_expr("qe", "embedding"))
+    return F.round(F.expr(_dot_expr("qe", "embedding", dim))
                    / (F.col("__nq") * F.col("__ne")), 6)
 
 
-def _with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
-    return df.withColumn(out, F.expr(f"sqrt({_sqsum_expr(vec_col)})"))
+def _with_norm(df: DataFrame, vec_col: str, out: str,
+               dim: int | None = _UNROLL_DIM) -> DataFrame:
+    return df.withColumn(out, F.expr(f"sqrt({_sqsum_expr(vec_col, dim)})"))
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """(query_id, vec_id, cosine) — exact top-k by cosine.
     ``queries``: (query_id, qe array<float>); broadcast (small side).
-    (A DataFrame-level width dispatch like the IVF assignment was
-    tried here and MEASURED SLOWER — 2.9s vs 0.7s at sf1.0: the
+    (A DataFrame-level width dispatch, a Union of an unrolled and a
+    fold branch, was tried here and MEASURED SLOWER — 2.9s vs 0.7s at sf1.0: the
     duplicated broadcast join + union feeding the top-k window cost
     more than the interpreted guarded dot saves.  Hoisted norms +
     the guarded expression stay.)"""
@@ -244,9 +235,11 @@ def train_centroids_kmeans(emb: DataFrame, n_lists: int = 16,
     return spark.createDataFrame(data, "list_id long, centroid array<float>")
 
 
+# squared L2 distance of two array<float> columns as double: a
+# left-associated fold of the squared differences (zip_with pads a
+# shorter array with nulls, so a width mismatch gives a null distance)
 _L2 = ("aggregate(zip_with(%s, %s, (x, c) -> "
-       "(cast(x as double) - cast(c as double)) * "
-       "(cast(x as double) - cast(c as double))), 0.0d, (a, v) -> a + v)")
+       "cast(x as double) - cast(c as double)), 0.0d, (a, d) -> a + d * d)")
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -267,30 +260,22 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     action anywhere in plan construction.  Size ``n_lists`` ~ sqrt(N)
     (standard IVF practice) so list populations stay balanced.
 
+    Every distance is one fold, whatever the vector width: ``_L2``
+    for the lists, the sum-of-squares and dot folds for the cosine.
+    Both sides of the query share one centroid broadcast.  The
+    width-dispatched form (a Union of a 64-wide unrolled branch and a
+    fold branch per side) gives the same values, but at 2,000 vectors
+    its ~8x larger plan cost more to plan and compile than its codegen
+    saved; round 6 measured it faster at 20k vectors on 32 cores.
+
     ``centroids``: optional (list_id, centroid) DataFrame from a real
     trainer; defaults to :func:`seed_centroids`."""
     cent = centroids if centroids is not None else seed_centroids(emb, n_lists)
 
     def assign(df: DataFrame, id_col: str, vec_col: str,
                keep_n: int) -> DataFrame:
-        # DataFrame-level width dispatch (round-6): a row-level
-        # `case when size=N then <unrolled> else <fold> end` contains
-        # a CodegenFallback child (the higher-order fold), which
-        # forces the WHOLE CaseWhen into interpreted eval — measured
-        # 1.1s vs 0.47s on this 20k x 16 pass.  Splitting at the
-        # DataFrame level keeps the common-width branch pure codegen;
-        # the input is a scan x tiny broadcast, so evaluating it for
-        # two complementary filters costs one extra cheap scan.  The
-        # null-safe complement keeps rows with null vectors on the
-        # fold branch exactly as the single-expression form did.
-        d0 = df.crossJoin(F.broadcast(cent))
-        w = _UNROLL_DIM
-        cond = f"(size({vec_col}) = {w} and size(centroid) = {w})"
-        hit = (d0.where(F.expr(cond))
-               .withColumn("l2", F.expr(_l2_unrolled(vec_col, "centroid", w))))
-        miss = (d0.where(F.expr(f"coalesce(not {cond}, true)"))
-                .withColumn("l2", F.expr(_L2 % (vec_col, "centroid"))))
-        d = hit.unionByName(miss)
+        d = (df.crossJoin(F.broadcast(cent))
+             .withColumn("l2", F.expr(_L2 % (vec_col, "centroid"))))
         if keep_n == 1:
             # argmin via partial-aggregated min(struct): all n_lists
             # rows of a vector sit in ONE task (broadcast side), so
@@ -309,8 +294,9 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     probes = assign(queries, "query_id", "qe", n_probe)
     cand = (assigned.join(F.broadcast(probes), "list_id")
             .where(F.col("vec_id") != F.col("query_id")))
-    scored = _with_norm(_with_norm(cand, "embedding", "__ne"), "qe", "__nq") \
-        .withColumn("cosine", _cosine_hoisted())
+    scored = _with_norm(_with_norm(cand, "embedding", "__ne", None),
+                        "qe", "__nq", None) \
+        .withColumn("cosine", _cosine_hoisted(None))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (scored.select("query_id", "vec_id", "cosine")
             .withColumn("rn", F.row_number().over(w))

@@ -89,3 +89,34 @@ def test_pipeline_persist_validation(spark, docs_path):
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     with pytest.raises(TypeError):
         run_pipeline(spark, docs_path, persist=1)
+
+
+def test_tiling_round_reads_every_persisted_handle(spark, tmp_path):
+    """A tiling round (run_pipeline + write_feature_tables) persists
+    only what it reads: every handle it registers is fully loaded by
+    the time the layout is written.  A persist nothing reads still
+    costs cold driver planning and a cache registration."""
+    from osmquadtree_geometry_spark.config.minzoom import MinZoomSpec
+    from osmquadtree_geometry_spark.datagen import generate_docs_parquet
+    from osmquadtree_geometry_spark.pipeline import run_pipeline
+    from osmquadtree_geometry_spark.sinks import write_feature_tables
+    # own docs file: a table cached by another test over the shared
+    # fixture would match these plans and read as loaded
+    docs = generate_docs_parquet(str(tmp_path / "docs.parquet"), 11)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    with cache.scope() as handles:
+        res = run_pipeline(spark, docs, minzoom=MinZoomSpec.default())
+        write_feature_tables(res, str(tmp_path / "layout"),
+                             media=res.decoded.get("media"))
+    try:
+        assert handles
+        unread = []
+        for df in handles:
+            cached = cm.lookupCachedData(df._jdf)
+            assert cached.isDefined()
+            builder = cached.get().cachedRepresentation().cacheBuilder()
+            if not builder.isCachedColumnBuffersLoaded():
+                unread.append(df.columns)
+        assert not unread, f"persisted but never read: {unread}"
+    finally:
+        cache.release(handles)

@@ -203,6 +203,61 @@ def test_ivf_trained_centroids(spark, emb):
     assert recall >= 0.4, f"trained-IVF recall too low: {recall}"
 
 
+def _ivf_vec(i: int, width: int) -> list[float]:
+    # deterministic, varied, exact in float32 (eighths in [-11/8, 11/8])
+    return [float((i * 37 + j * 11 + i * j) % 23 - 11) / 8
+            for j in range(width)]
+
+
+def _ivf_rows(emb_df, n_queries, **kw):
+    from osmquadtree_geometry_spark.similarity import ivf_topk
+    q = (emb_df.orderBy("vec_id").limit(n_queries)
+         .selectExpr("vec_id as query_id", "embedding as qe"))
+    return sorted(tuple(r) for r in ivf_topk(emb_df, q, **kw)
+                  .select("query_id", "vec_id", "cosine").collect())
+
+
+def test_ivf_width_8_matches_oracle(spark, tmp_path):
+    """ivf_topk on 8-wide vectors equals the DuckDB oracle's rows with
+    exact cosines: the distance folds hold at any width, not just the
+    fixture's 64."""
+    import duckdb
+
+    from osmquadtree_geometry_spark import oracles
+    path = str(tmp_path / "emb8.parquet")
+    spark.createDataFrame([(i, _ivf_vec(i, 8)) for i in range(1, 41)],
+                          "vec_id long, embedding array<float>") \
+        .write.parquet(path)
+    got = _ivf_rows(spark.read.parquet(path), 5, k=3, n_lists=4, n_probe=2)
+    with duckdb.connect() as con:
+        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{path}/*.parquet')")
+        want = sorted(tuple(r) for r in con.sql(oracles.q_ivf_ann(
+            k=3, n_queries=5, n_lists=4, n_probe=2, dim=8)).fetchall())
+    assert len(got) == 15
+    assert got == want
+
+
+def test_ivf_mixed_widths(spark):
+    """64-wide, 8-wide and NULL vectors in one table: a width mismatch
+    makes the distance (and the cosine) NULL, ranked as Spark orders
+    NULLs.  Expected rows are the width-dispatched implementation's
+    output, pinned when the distances became width-independent
+    folds."""
+    data = [(i, None if i % 5 == 0 else
+             _ivf_vec(i, 8) if i % 3 == 0 else _ivf_vec(i, 64))
+            for i in range(1, 25)]
+    emb_df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    got = _ivf_rows(emb_df, 6, k=3, n_lists=4, n_probe=2)
+    assert got == [
+        (1, 4, 0.271919), (1, 17, 0.238549), (1, 23, 0.429171),
+        (2, 4, 0.198115), (2, 11, 0.257704), (2, 22, 0.365397),
+        (3, 6, 0.10362), (3, 18, 0.171797), (3, 21, 0.419925),
+        (4, 1, 0.271919), (4, 2, 0.198115), (4, 14, 0.137308),
+        (5, 3, None), (5, 6, None), (5, 9, None),
+        (6, 3, 0.10362), (6, 18, 0.389137), (6, 21, 0.538593)]
+
+
 def test_lsh_ann_recall(spark, emb):
     from osmquadtree_geometry_spark.similarity import brute_force_topk, lsh_ann_topk
     q = _queries(spark, emb, n=5)
