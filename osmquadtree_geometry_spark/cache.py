@@ -35,6 +35,7 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame
 from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
@@ -84,7 +85,7 @@ def release(handles: list[DataFrame], blocking: bool = False) -> None:
     for df in handles:
         try:
             df.unpersist(blocking)
-        except Exception:  # session already stopped — nothing to free
+        except Py4JJavaError:  # session already stopped — nothing to free
             pass
         with _global_lock:
             # identity-based removal (DataFrame.__eq__ builds a Column,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import cache
+from .similarity import _cosine_hoisted, _lsh_buckets, _with_norm
 
 # NB: this string is spliced into SQL text — Spark SQL unescapes
 # string literals, so the regex needs a double backslash to survive
@@ -92,11 +93,17 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 16,
     collapses each doc's shingles before any shuffle, so only
     ~n_docs x n_hashes digests move.  min() over strings uses the
     same binary ordering as array_min — values are identical."""
-    e = (_staged_shingles(docs, text_col, shingle)
-         .select("doc_id", F.explode("__sh").alias("_s")))
+    return _signatures(_staged_shingles(docs, text_col, shingle)
+                       .select("doc_id", F.explode("__sh").alias("_s")),
+                       n_hashes)
+
+
+def _signatures(shingles: DataFrame, n_hashes: int) -> DataFrame:
+    """(doc_id, sig) from exploded (doc_id, _s) shingle rows: the
+    ``n_hashes`` conditional-min aggregates of minhash_signatures."""
     mins = [F.min(F.expr(f"md5(concat(_s, '#', {i}))")).alias(f"_m{i}")
             for i in range(n_hashes)]
-    return (e.groupBy("doc_id").agg(*mins)
+    return (shingles.groupBy("doc_id").agg(*mins)
             .select("doc_id", F.array(
                 *[F.col(f"_m{i}") for i in range(n_hashes)]).alias("sig")))
 
@@ -292,13 +299,8 @@ def jaccard_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
         "doc_id",
         F.expr("array_distinct(__sh)").alias("sh")
     ))  # feeds the signature pass + both exact-verify join sides
-    e = sh.select("doc_id", F.explode("sh").alias("_s"))
-    mins = [F.min(F.expr(f"md5(concat(_s, '#', {i}))")).alias(f"_m{i}")
-            for i in range(n_hashes)]
-    sig = cache.persist(
-        e.groupBy("doc_id").agg(*mins)
-        .select("doc_id", F.array(
-            *[F.col(f"_m{i}") for i in range(n_hashes)]).alias("sig")))
+    sig = cache.persist(_signatures(
+        sh.select("doc_id", F.explode("sh").alias("_s")), n_hashes))
     cand = (_lsh_band_pairs(sig, bands, n_hashes // bands, max_bucket)
             .select("a", "b"))
     return (cand
@@ -313,27 +315,31 @@ def jaccard_lsh_pairs(docs: DataFrame, threshold: float = 0.5,
             .select("a", "b", "jaccard"))
 
 
+def _pair_side(emb: DataFrame, s: str, *cols) -> DataFrame:
+    """One side of an embedding pair: vec_id as ``s``, ``cols``, the
+    vector as ``e<s>`` and its norm hoisted to ``__n<s>`` (computed
+    once per vector, not once per pair)."""
+    return _with_norm(emb.select(F.col("vec_id").alias(s), *cols,
+                                 F.col("embedding").alias(f"e{s}")),
+                      f"e{s}", f"__n{s}")
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(a, b, cosine) for the joined pair sides with cosine >= threshold."""
+    return (pairs.withColumn("cosine",
+                             _cosine_hoisted("ea", "eb", "__na", "__nb"))
+            .where(F.col("cosine") >= threshold)
+            .select("a", "b", "cosine"))
+
+
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float = 0.95,
                              block_col: str = "label") -> DataFrame:
     """Embedding-cosine near-dup within a blocking key (exact cosine;
-    for the unblocked scale path see similarity.lsh_ann).
-
-    Norms are hoisted to the join inputs (computed once per vector,
-    not once per pair) and dot/norm use the guarded-unrolled codegen
-    expressions from similarity — identical values (round-6)."""
-    from .similarity import _dot_expr, _sqsum_expr
-    a = emb.select(F.col("vec_id").alias("a"), F.col(block_col).alias("blk"),
-                   F.col("embedding").alias("ea")) \
-        .withColumn("__na", F.expr(f"sqrt({_sqsum_expr('ea')})"))
-    b = emb.select(F.col("vec_id").alias("b"), F.col(block_col).alias("blk"),
-                   F.col("embedding").alias("eb")) \
-        .withColumn("__nb", F.expr(f"sqrt({_sqsum_expr('eb')})"))
-    return (a.join(b, "blk").where(F.col("a") < F.col("b"))
-            .withColumn("cosine", F.round(
-                F.expr(_dot_expr("ea", "eb"))
-                / (F.col("__na") * F.col("__nb")), 6))
-            .where(F.col("cosine") >= threshold)
-            .select("a", "b", "cosine"))
+    for the unblocked scale path see embedding_lsh_near_dup)."""
+    a = _pair_side(emb, "a", F.col(block_col).alias("blk"))
+    b = _pair_side(emb, "b", F.col(block_col).alias("blk"))
+    return _cosine_at_least(
+        a.join(b, "blk").where(F.col("a") < F.col("b")), threshold)
 
 
 def embedding_lsh_near_dup(emb: DataFrame, threshold: float = 0.95,
@@ -356,7 +362,6 @@ def embedding_lsh_near_dup(emb: DataFrame, threshold: float = 0.95,
     buckets are dropped like ``minhash_lsh_pairs`` drops theirs (a
     non-discriminative table there contributes no signal anyway, and
     the other tables still vote)."""
-    from .similarity import _bucket_expr, _hyperplanes
     if dim is None:
         # no silent driver-side probe (round-3 verdict What's-wrong
         # #4): the embedding dimension is part of the table contract
@@ -364,16 +369,10 @@ def embedding_lsh_near_dup(emb: DataFrame, threshold: float = 0.95,
             "embedding_lsh_near_dup requires dim (the embedding "
             "dimension): a driver-side probe here would run a "
             "blocking job during plan construction")
-    parts = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed + t)
-        parts.append(emb.select(
-            "vec_id", F.lit(t).alias("tab"),
-            F.expr(_bucket_expr("embedding", planes)).alias("bucket")))
-    e = parts[0]
-    for p in parts[1:]:
-        e = e.unionByName(p)
-    e = cache.persist(e)  # feeds the size agg and both self-join sides
+    # persisted: feeds the size agg and both self-join sides
+    e = cache.persist(_lsh_buckets(
+        emb.select("vec_id", "embedding"), "embedding",
+        dim, n_planes, n_tables, seed).select("vec_id", "tab", "bucket"))
     # bucket-size cap shares the (tab, bucket) partitioning with the
     # self-join — one shuffle, reused
     sizes = (e.groupBy("tab", "bucket")
@@ -386,18 +385,6 @@ def embedding_lsh_near_dup(emb: DataFrame, threshold: float = 0.95,
                   ["tab", "bucket"])
             .where(F.col("a") < F.col("b"))
             .select("a", "b").distinct())
-    from .similarity import _dot_expr, _sqsum_expr
-    return (cand
-            .join(emb.select(F.col("vec_id").alias("a"),
-                             F.col("embedding").alias("ea"))
-                  .withColumn("__na", F.expr(f"sqrt({_sqsum_expr('ea')})")),
-                  "a")
-            .join(emb.select(F.col("vec_id").alias("b"),
-                             F.col("embedding").alias("eb"))
-                  .withColumn("__nb", F.expr(f"sqrt({_sqsum_expr('eb')})")),
-                  "b")
-            .withColumn("cosine", F.round(
-                F.expr(_dot_expr("ea", "eb"))
-                / (F.col("__na") * F.col("__nb")), 6))
-            .where(F.col("cosine") >= threshold)
-            .select("a", "b", "cosine"))
+    return _cosine_at_least(
+        cand.join(_pair_side(emb, "a"), "a").join(_pair_side(emb, "b"), "b"),
+        threshold)

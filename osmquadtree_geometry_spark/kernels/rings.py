@@ -14,7 +14,8 @@ Semantic transcription (order-sensitive!) of the reference algorithms:
     to area<0; part.area = exterior + Σ interiors
     (`complicatedpolygongeometry.rs:389-407`).
 
-These run per-relation inside ``applyInPandas`` groups — member counts
+These run once per packed relation row inside a ``mapInPandas``
+batch kernel (operators/multipolygons.py phase 3) — member counts
 are small (mega-relations are handled by salting the shuffle, not by
 changing this kernel).
 """

@@ -22,7 +22,9 @@ marker becomes an atomic snapshot commit.
 from __future__ import annotations
 
 import os
+import re
 import time
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,44 +60,27 @@ class LineageStore:
         return df.where(F.col("input_fingerprint") == fingerprint).count() > 0
 
     def record(self, stage: str, fingerprint: str, out: DataFrame,
-               out_dir: str | None = None) -> None:
-        """Append per-partition (rows, bytes) metrics for a stage run.
+               out_dir: str) -> None:
+        """Append per-file (rows, bytes) metrics for a stage run.
 
-        With ``out_dir`` (a just-written parquet directory, the normal
-        ``run_stage`` path), bytes are the REAL on-disk file sizes:
-        rows are counted per source file (``input_file_name``) and each
-        file's size is read from the filesystem — one small collect of
-        one row per output file.  Without it (ad-hoc DataFrames), falls
-        back to a documented 64-bytes/row estimate."""
+        ``out`` is read back from ``out_dir``, the just-written parquet
+        directory: rows are counted per source file
+        (``input_file_name``) and bytes are each file's REAL on-disk
+        size — one small collect of one row per output file."""
         now = time.time()
-        if out_dir is not None:
-            import re
-            from urllib.parse import unquote, urlparse
-            counts = (out.withColumn("f", F.input_file_name())
-                      .groupBy("f").agg(F.count("*").alias("rows")).collect())
-            rows = []
-            for r in sorted(counts, key=lambda r: r.f):
-                path = unquote(urlparse(r.f).path)
-                m = re.search(r"part-(\d+)-", os.path.basename(path))
-                pid = int(m.group(1)) if m else len(rows)
-                rows.append((stage, fingerprint, pid, r.rows,
-                             os.path.getsize(path), now))
-            if not rows:  # empty output: one zero-row marker partition
-                rows = [(stage, fingerprint, 0, 0, 0, now)]
-            write_table(self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                        self._dir(stage), mode="append")
-            return
-        counts = (out
-                  .withColumn("partition_id", F.spark_partition_id())
-                  .groupBy("partition_id")
-                  .agg(F.count("*").alias("rows")))
-        est = (counts.select(
-            F.lit(stage).alias("stage"),
-            F.lit(fingerprint).alias("input_fingerprint"),
-            "partition_id", "rows",
-            (F.col("rows") * 64).alias("bytes"),  # estimate (no files yet)
-            F.lit(now).alias("completed_at")))
-        write_table(est, self._dir(stage), mode="append")
+        counts = (out.withColumn("f", F.input_file_name())
+                  .groupBy("f").agg(F.count("*").alias("rows")).collect())
+        rows = []
+        for r in sorted(counts, key=lambda r: r.f):
+            path = unquote(urlparse(r.f).path)
+            m = re.search(r"part-(\d+)-", os.path.basename(path))
+            pid = int(m.group(1)) if m else len(rows)
+            rows.append((stage, fingerprint, pid, r.rows,
+                         os.path.getsize(path), now))
+        if not rows:  # empty output: one zero-row marker partition
+            rows = [(stage, fingerprint, 0, 0, 0, now)]
+        write_table(self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
+                    self._dir(stage), mode="append")
 
     def output_dir(self, stage: str, fingerprint: str) -> str:
         return os.path.join(self.root, f"out_stage={stage}",

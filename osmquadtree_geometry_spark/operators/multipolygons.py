@@ -1,6 +1,6 @@
 """J2 — ProcessMultiPolygons: relation ⋈ member ways, ring assembly
-with winding repair, as a salted two-phase shuffle +
-``applyInPandas`` group kernel.
+with winding repair, as a salted two-phase shuffle + a
+``mapInPandas`` kernel over packed relation rows.
 
 Reference: `/root/reference/src/multipolygons.rs:103-508` (streaming
 state machine keyed on tile order).  Batch rebuild:
@@ -15,7 +15,8 @@ state machine keyed on tile order).  Batch rebuild:
       member structs into compact arrays — this bounds the widest
       shuffle row for mega-relations (coastlines, admin boundaries:
       the skew case called out by the north rule);
-  phase 3 (``groupBy(rel_id).applyInPandas``): pure-Python ring
+  phase 3 (``groupBy(rel_id)`` packs each relation into one row, then
+      ``mapInPandas`` over Arrow batches of them): pure-Python ring
       assembly (kernels.rings — exact transcription of merge order),
       winding repair, area sum, WKB; errors go to a side output
       instead of aborting (`lib.rs:61-66`).

@@ -1,14 +1,10 @@
-"""J6 / S5 / S8 — tile dictionary, ancestor allocation, sorted tiled
-output.
+"""J6 / S5 — tile dictionary and ancestor allocation (the S8 sorted
+tiled output is ``sinks.write_sorted_tiles``).
 
 Reference semantics:
   * ``StoreBlocks`` (`process_geometry.rs:41-155`): each feature goes
     to the DEEPEST registered ancestor of its quadtree; no ancestor ->
     the "rem" bucket (tile = EMPTY = -1); blocks sorted by id.
-  * sorted-PBF writer (`tempfile.rs:196-332`): global regroup by tile
-    then sort — in Spark this is ``repartitionByRange(tile)`` +
-    ``sortWithinPartitions`` and the external shuffle replaces the
-    temp-file spill machinery.
 
 Allocation strategies (both JVM-side):
   * small dictionary (<= ~10k tiles): a literal map + coalesce over
@@ -62,11 +58,3 @@ def allocate_tiles(df: DataFrame, tiles: list[int],
             .agg(F.expr(f"max_by(tile, {sql_qt_depth('tile')})").alias("tile")))
     return df.join(best, key, "left").fillna({"tile": -1})
 
-
-def write_sorted_tiles(df: DataFrame, out_path: str,
-                       tile_col: str = "tile") -> None:
-    """S8: globally tile-sorted output, id-sorted within tile
-    (format-neutral via the tableio seam)."""
-    from ..tableio import write_table
-    write_table(df.repartitionByRange(tile_col, "id")
-                .sortWithinPartitions(tile_col, "id"), out_path)

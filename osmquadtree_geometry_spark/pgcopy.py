@@ -108,6 +108,13 @@ def copy_columns_for(df: DataFrame) -> list[tuple[str, str]]:
     return out
 
 
+# pg kind -> column type, for the staging tables here and
+# write_postgresql's CREATE TABLE
+_PG_TYPES = {"int8": "bigint", "float8": "double precision",
+             "bool": "boolean", "text": "text", "bytea": "bytea",
+             "hstore": "hstore"}
+
+
 def encode_copy_rows(df: DataFrame,
                      columns: list[tuple[str, str]] | None = None) -> DataFrame:
     """One binary COPY row per input row (column ``copy_row``)."""
@@ -315,7 +322,7 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
             yield TRAILER
 
         with PgConnection(dsn) as conn:
-            collist = ", ".join(f'"{c}" {_STG_TYPES[k]}' for c, k in cols)
+            collist = ", ".join(f'"{c}" {_PG_TYPES[k]}' for c, k in cols)
             conn.execute(f"CREATE TABLE {schema}.{stg} ({collist})")
             n = conn.copy_in(copy_sql(stg, cols, schema), payload())
             conn.execute("begin")
@@ -337,11 +344,6 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
 
     enc.foreachPartition(send_part)
     return promoted.value
-
-
-_STG_TYPES = {"int8": "bigint", "float8": "double precision",
-              "bool": "boolean", "text": "text", "bytea": "bytea",
-              "hstore": "hstore"}
 
 
 def sweep_staging(dsn: str, table: str, schema: str = "public") -> list[str]:

@@ -16,15 +16,18 @@ from pyspark.sql import Window as W
 
 from . import cache
 
-# Unroll width for the guarded fast path of brute force, LSH and
-# dedup.  Higher-order-function folds are interpreted expression eval
-# (no whole-stage codegen) and zip_with additionally allocates a
-# struct array per row; an unrolled element_at sum ran ~5x faster on
-# round 6's 20k x 16 IVF assignment (2.33s -> 0.47s, 32 cores).  The
-# unrolled branch is guarded by an exact size() check, and any other
-# width takes the original fold — identical values either way (same
-# left-assoc order, same casts), so this is shape-adaptive, not a
-# fixture assumption.  ivf_topk uses the folds only: see there.
+# Unroll width for the guarded fast path of the pair dot product and
+# sum of squares (brute force, LSH re-rank, dedup cosines).  Higher-
+# order-function folds are interpreted expression eval (no whole-stage
+# codegen) and zip_with additionally allocates a struct array per row;
+# the unrolled element_at sum is guarded by an exact size() check, and
+# any other width takes the original fold — identical values either
+# way (same left-assoc order, same casts).  Measured on the sf0.1
+# embeddings (2,000 x 64, local[4]): fold-only dot and sum of squares
+# took brute_force_topk with 200 queries from 2.76 to 4.62 s and
+# embedding_near_dup_pairs from 2.08 to 2.63 s, so they stay unrolled.
+# The LSH hyperplane projection (_bucket_expr) and ivf_topk use folds
+# only: see there.
 _UNROLL_DIM = 64
 
 
@@ -39,38 +42,41 @@ def _sqsum_expr(col: str, dim: int | None = _UNROLL_DIM) -> str:
     return f"(case when size({col}) = {dim} then {unrolled} else {fold} end)"
 
 
-def _dot_fold(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-            f"cast(x as double) * y), 0.0d, (a9, v9) -> a9 + v9)")
-
-
-def _dot_unrolled(a: str, b: str, dim: int) -> str:
-    """Unguarded unrolled dot — caller must ensure both arrays are
-    exactly ``dim`` wide (ANSI element_at errors otherwise)."""
-    return " + ".join(
-        f"(cast(element_at({a}, {i}) as double) * "
-        f"cast(element_at({b}, {i}) as double))" for i in range(1, dim + 1))
-
-
 def _dot_expr(a: str, b: str, dim: int | None = _UNROLL_DIM) -> str:
     """dot(a, b) as double; zip_with-fold semantics preserved."""
+    fold = (f"aggregate(zip_with({a}, {b}, (x, y) -> "
+            f"cast(x as double) * y), 0.0d, (a9, v9) -> a9 + v9)")
     if not dim:
-        return _dot_fold(a, b)
+        return fold
+    unrolled = " + ".join(
+        f"(cast(element_at({a}, {i}) as double) * "
+        f"cast(element_at({b}, {i}) as double))" for i in range(1, dim + 1))
     return (f"(case when size({a}) = {dim} and size({b}) = {dim} "
-            f"then {_dot_unrolled(a, b, dim)} else {_dot_fold(a, b)} end)")
+            f"then {unrolled} else {fold} end)")
 
 
-def _cosine_hoisted(dim: int | None = _UNROLL_DIM):
-    """cosine from a pre-staged __nq/__ne norm pair: the same
-    dot/(nq*ne) arithmetic, with each side's norm computed once per
-    VECTOR instead of once per candidate pair (round-6, guide §1.2)."""
-    return F.round(F.expr(_dot_expr("qe", "embedding", dim))
-                   / (F.col("__nq") * F.col("__ne")), 6)
+def _cosine_hoisted(a: str = "qe", b: str = "embedding",
+                    na: str = "__nq", nb: str = "__ne",
+                    dim: int | None = _UNROLL_DIM):
+    """cosine of vector columns ``a``/``b`` from their pre-staged norm
+    columns ``na``/``nb``: dot/(na*nb) rounded to 6 places, with each
+    side's norm computed once per VECTOR instead of once per
+    candidate pair."""
+    return F.round(F.expr(_dot_expr(a, b, dim)) / (F.col(na) * F.col(nb)), 6)
 
 
 def _with_norm(df: DataFrame, vec_col: str, out: str,
                dim: int | None = _UNROLL_DIM) -> DataFrame:
     return df.withColumn(out, F.expr(f"sqrt({_sqsum_expr(vec_col, dim)})"))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id, cosine): each query's ``k`` best candidates
+    by cosine desc, ties broken by vec_id."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
+    return (scored.select("query_id", "vec_id", "cosine")
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k).drop("rn"))
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
@@ -83,12 +89,8 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10) -> DataFra
     the guarded expression stay.)"""
     e = _with_norm(emb, "embedding", "__ne")
     q = _with_norm(queries, "qe", "__nq")
-    j = (e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-         .withColumn("cosine", _cosine_hoisted()))
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (j.select("query_id", "vec_id", "cosine")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k).drop("rn"))
+    return _top_k(e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
+                  .withColumn("cosine", _cosine_hoisted()), k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -97,27 +99,31 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
 
 
 def _bucket_expr(vec_col: str, planes: np.ndarray) -> str:
-    """Signed-projection bucket id (JVM-side, per plane).
-
-    The projection is an unrolled literal-coefficient sum (codegen)
-    when the vector width matches the plane — identical left-assoc
-    arithmetic to the old zip_with fold, which stays as the guarded
-    fallback for any other width (a short vector zip_with-padded
-    nulls into the fold, making proj null, i.e. bit 0 — the fallback
-    reproduces that too)."""
+    """Signed-projection bucket id (JVM-side): bit i is set when the
+    projection on plane i is > 0.  Each projection is one left-
+    associated fold over literal coefficients; a vector of another
+    width zip_with-pads nulls into it, making the projection null,
+    i.e. bit 0.  (A size()-guarded unrolled element_at sum gives the
+    same buckets and measured slower: lsh_ann_topk on 2,000 x 64
+    vectors, 200 queries, 3 planes x 8 tables, local[4]: 8.8-9.8 s vs
+    5.5-6.9 s for the fold.)"""
     bits = []
-    dim = planes.shape[1]
     for i, p in enumerate(planes):
         coeffs = ", ".join(f"{float(c)!r}" for c in p)
-        fold = (f"aggregate(zip_with({vec_col}, array({coeffs}), "
+        proj = (f"aggregate(zip_with({vec_col}, array({coeffs}), "
                 f"(x, c) -> cast(x as double) * c), 0.0d, (a, v) -> a + v)")
-        unrolled = " + ".join(
-            f"(cast(element_at({vec_col}, {j + 1}) as double) * {float(c)!r})"
-            for j, c in enumerate(p))
-        proj = (f"(case when size({vec_col}) = {dim} then {unrolled} "
-                f"else {fold} end)")
         bits.append(f"(case when {proj} > 0 then {1 << i}L else 0L end)")
     return " + ".join(bits)
+
+
+def _lsh_buckets(df: DataFrame, vec_col: str, dim: int, n_planes: int,
+                 n_tables: int, seed: int) -> DataFrame:
+    """``df`` + (tab, bucket): one row per hash table, from ONE scan —
+    the ``n_tables`` bucket ids (table t hashes with the planes of
+    seed ``seed + t``) are projected as one array and posexploded."""
+    buckets = [F.expr(_bucket_expr(vec_col, _hyperplanes(dim, n_planes, seed + t)))
+               for t in range(n_tables)]
+    return df.select("*", F.posexplode(F.array(*buckets)).alias("tab", "bucket"))
 
 
 def lsh_ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -142,28 +148,10 @@ def lsh_ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
             "lsh_ann_topk requires dim (the embedding dimension): a "
             "driver-side probe here would run a blocking job during "
             "plan construction")
-    tabs = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed + t)
-        tabs.append((t, planes))
-
-    e_parts = []
-    q_parts = []
-    for t, planes in tabs:
-        e_parts.append(emb.select(
-            "vec_id", "embedding",
-            F.lit(t).alias("tab"),
-            F.expr(_bucket_expr("embedding", planes)).alias("bucket")))
-        q_parts.append(queries.select(
-            "query_id", "qe",
-            F.lit(t).alias("tab"),
-            F.expr(_bucket_expr("qe", planes)).alias("bucket")))
-    e = e_parts[0]
-    for p in e_parts[1:]:
-        e = e.unionByName(p)
-    q = q_parts[0]
-    for p in q_parts[1:]:
-        q = q.unionByName(p)
+    e = _lsh_buckets(emb.select("vec_id", "embedding"), "embedding",
+                     dim, n_planes, n_tables, seed)
+    q = _lsh_buckets(queries.select("query_id", "qe"), "qe",
+                     dim, n_planes, n_tables, seed)
 
     if max_bucket is not None:
         e = cache.persist(e)  # feeds the size agg + the join below
@@ -178,10 +166,7 @@ def lsh_ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
             .select("query_id", "qe", "vec_id", "embedding").distinct())
     scored = _with_norm(_with_norm(cand, "embedding", "__ne"), "qe", "__nq") \
         .withColumn("cosine", _cosine_hoisted())
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (scored.select("query_id", "vec_id", "cosine")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k).drop("rn"))
+    return _top_k(scored, k)
 
 
 def seed_centroids(emb: DataFrame, n_lists: int) -> DataFrame:
@@ -296,8 +281,5 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
             .where(F.col("vec_id") != F.col("query_id")))
     scored = _with_norm(_with_norm(cand, "embedding", "__ne", None),
                         "qe", "__nq", None) \
-        .withColumn("cosine", _cosine_hoisted(None))
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (scored.select("query_id", "vec_id", "cosine")
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= k).drop("rn"))
+        .withColumn("cosine", _cosine_hoisted(dim=None))
+    return _top_k(scored, k)

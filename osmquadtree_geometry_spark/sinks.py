@@ -543,11 +543,6 @@ def generate_ddl(table: str, tag_columns: list[str],
     return stmts
 
 
-_PG_TYPES = {"int8": "bigint", "float8": "double precision",
-             "bool": "boolean", "text": "text", "bytea": "bytea",
-             "hstore": "hstore"}
-
-
 def _table_kind(name: str) -> str:
     return ("point" if "point" in name
             else "line" if ("line" in name or "highway" in name
@@ -558,7 +553,6 @@ def _table_kind(name: str) -> str:
 def write_postgresql(res, dsn: str, style=None, extended: bool = True,
                      lowzoom: list[int] | None = None,
                      schema: str = "public",
-                     exec_after: bool = True,
                      delivery_mode: str = "fast",
                      fingerprint: str = "run") -> dict:
     """LIVE PostgreSQL delivery (round-3 verdict Missing #1) with the
@@ -587,8 +581,9 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
     meaningful across resumed jobs.
     """
     from .config.style import GeometryStyle
-    from .pgcopy import (LEDGER_TABLE, copy_columns_for, deliver_pgcopy,
-                         deliver_pgcopy_exactly_once, ledger_ddl)
+    from .pgcopy import (_PG_TYPES, LEDGER_TABLE, copy_columns_for,
+                         deliver_pgcopy, deliver_pgcopy_exactly_once,
+                         ledger_ddl)
     from .pgwire import PgConnection, PgError
 
     used = style or GeometryStyle()
@@ -649,13 +644,12 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
                                         columns=copy_cols[name],
                                         schema=schema)
     after_errors = []
-    if exec_after:
-        with PgConnection(dsn) as conn:
-            for s in after:
-                try:
-                    conn.execute(s)
-                except PgError as e:
-                    after_errors.append((s, str(e)))
+    with PgConnection(dsn) as conn:
+        for s in after:
+            try:
+                conn.execute(s)
+            except PgError as e:
+                after_errors.append((s, str(e)))
     if after_ext_error is not None:
         after_errors.append(("CREATE EXTENSION IF NOT EXISTS hstore",
                              after_ext_error))

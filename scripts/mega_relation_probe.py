@@ -54,7 +54,7 @@ def main():
         F.col("area").alias("area"), "quadtree").collect()
     n_err = errs.count()
     wall = time.monotonic() - t0
-    cache.release_all(spark)
+    cache.release_all()
 
     # salted phase-2 width bound: widest (rel, salt) group vs unsalted
     mem = (t["relations"].select("id", F.explode("members").alias("m"))
@@ -105,7 +105,7 @@ def main():
             F.expr(f"aggregate(parts, 0L, (a, p) -> a + {a2})")
             .alias("area2_raw")).collect()
         print("engine digest:", [r.asDict() for r in eng])
-        cache.release_all(spark)
+        cache.release_all()
     spark.stop()
 
 

@@ -85,6 +85,22 @@ def test_release_all_resets_session(spark, docs_path):
     assert not (_persistent_ids(spark) - before)
 
 
+def test_release_wrong_argument_raises(spark):
+    """Only a stopped session's error is swallowed: a wrong ``blocking``
+    argument (here the session itself) raises and the handle stays
+    registered, instead of silently keeping the cache while dropping
+    its handle."""
+    before = _persistent_ids(spark)
+    df = cache.persist(spark.range(7))
+    df.count()
+    with pytest.raises(AttributeError):
+        cache.release_all(spark)
+    assert any(h is df for h in cache._global)
+    assert _persistent_ids(spark) - before
+    cache.release_all()
+    assert not (_persistent_ids(spark) - before)
+
+
 def test_pipeline_persist_validation(spark, docs_path):
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     with pytest.raises(TypeError):

@@ -258,6 +258,29 @@ def test_ivf_mixed_widths(spark):
         (6, 3, 0.10362), (6, 18, 0.389137), (6, 21, 0.538593)]
 
 
+def test_lsh_buckets_mixed_widths(spark):
+    """One-scan LSH tables over 64-wide, 8-wide, NULL, all-zero and
+    null-element vectors.  Expected rows are the per-table Union
+    implementation's buckets (guarded unrolled projection), pinned when
+    the projection became a fold: any vector that is not 64 wide, or
+    has a null element, lands in bucket 0 of every table."""
+    from osmquadtree_geometry_spark.similarity import _lsh_buckets
+    data = [(i, None if i % 5 == 0 else
+             _ivf_vec(i, 8) if i % 3 == 0 else _ivf_vec(i, 64))
+            for i in range(1, 13)]
+    data += [(13, [0.0] * 64), (14, [None] + [1.0] * 63)]
+    emb_df = spark.createDataFrame(data, "vec_id long, embedding array<float>")
+    got = sorted(tuple(r) for r in _lsh_buckets(
+        emb_df, "embedding", dim=64, n_planes=3, n_tables=2, seed=42)
+        .select("vec_id", "tab", "bucket").collect())
+    assert got == [
+        (1, 0, 2), (1, 1, 4), (2, 0, 4), (2, 1, 7), (3, 0, 0), (3, 1, 0),
+        (4, 0, 7), (4, 1, 7), (5, 0, 0), (5, 1, 0), (6, 0, 0), (6, 1, 0),
+        (7, 0, 5), (7, 1, 6), (8, 0, 1), (8, 1, 0), (9, 0, 0), (9, 1, 0),
+        (10, 0, 0), (10, 1, 0), (11, 0, 1), (11, 1, 3), (12, 0, 0),
+        (12, 1, 0), (13, 0, 0), (13, 1, 0), (14, 0, 0), (14, 1, 0)]
+
+
 def test_lsh_ann_recall(spark, emb):
     from osmquadtree_geometry_spark.similarity import brute_force_topk, lsh_ann_topk
     q = _queries(spark, emb, n=5)

@@ -54,7 +54,7 @@ def test_mega_relation_assembly_bounded_and_oracle_green(spark, mega_docs):
         F.expr(f"aggregate(parts, 0L, (a, p) -> a + {a2})").alias("area2_raw"),
     ).collect()
     n_err = errs.count()
-    cache.release_all(spark)
+    cache.release_all()
 
     assert n_err == 0
     assert len(rows) == 1

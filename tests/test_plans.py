@@ -246,6 +246,38 @@ def test_ivf_plan_is_compact(spark):
     assert "element_at(" not in plan
 
 
+def test_lsh_tables_from_one_scan(spark):
+    """lsh_ann_topk and embedding_lsh_near_dup build their hash tables
+    from one scan (one posexplode of the per-table bucket ids, no Union
+    of per-table scans), and each hyperplane projection is a fold, not
+    an unrolled element_at sum.  (The cosine re-rank keeps its guarded
+    unrolled dot, so element_at is only ruled out of the bucket
+    projection.)"""
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.dedup import embedding_lsh_near_dup
+    from osmquadtree_geometry_spark.similarity import lsh_ann_topk
+    emb = spark.createDataFrame(
+        [(i, [float((i * j + i) % 7 - 3) for j in range(64)])
+         for i in range(1, 41)],
+        "vec_id long, embedding array<float>")
+    q = (emb.orderBy("vec_id").limit(3)
+         .selectExpr("vec_id as query_id", "embedding as qe"))
+    with cache.scope() as handles:
+        dfs = (lsh_ann_topk(emb, q, k=3, n_planes=2, n_tables=3, dim=64),
+               embedding_lsh_near_dup(emb, threshold=0.5, n_planes=2,
+                                      n_tables=3, dim=64))
+    try:
+        for df in dfs:
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Union" not in plan, plan
+            gen = [ln for ln in plan.splitlines() if "posexplode(" in ln]
+            assert gen, plan
+            assert all("element_at(" not in ln for ln in gen), gen
+    finally:
+        cache.release(handles)
+
+
 def test_bucketed_waynode_join_plan(spark, docs_path, tmp_path):
     """Round-2 verdict Next #7 (bucketed input consumption): after the
     prepare_bucketed ingest prepass, the J1 refs⋈locations join must
