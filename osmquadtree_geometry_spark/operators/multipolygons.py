@@ -184,7 +184,10 @@ def process_multipolygons(relations: DataFrame, ways_ll: DataFrame,
     # shared parent of BOTH outputs (ok rows + error rows): scoped
     # persist so a consumer materializing one output doesn't re-run
     # the whole join+assembly for the other (released by the caller's
-    # cache scope / release_all — see cache.py)
+    # cache scope / release_all — see cache.py).  AQE sizes the cached
+    # plan (session.py: canChangeCachedPlanOutputPartitioning), so the
+    # packed relations reach as few Python tasks as their bytes need:
+    # one at 220 docs instead of one per shuffle partition
     assembled = cache.persist(packed.mapInPandas(_assemble_batch,
                                                  ASSEMBLED_SCHEMA))
 

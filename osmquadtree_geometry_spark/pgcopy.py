@@ -108,11 +108,25 @@ def copy_columns_for(df: DataFrame) -> list[tuple[str, str]]:
     return out
 
 
+def pg_ident(*parts: str) -> str:
+    """A PostgreSQL identifier, schema-qualified when given several
+    parts: each part double-quoted with any embedded ``"`` doubled, so
+    a mixed-case, keyword or quote-bearing name reaches the server
+    verbatim instead of being case-folded or breaking the statement."""
+    return ".".join('"' + str(p).replace('"', '""') + '"' for p in parts)
+
+
 # pg kind -> column type, for the staging tables here and
 # write_postgresql's CREATE TABLE
 _PG_TYPES = {"int8": "bigint", "float8": "double precision",
              "bool": "boolean", "text": "text", "bytea": "bytea",
              "hstore": "hstore"}
+
+
+def column_defs(columns: list[tuple[str, str]]) -> str:
+    """The CREATE TABLE column list for :func:`copy_columns_for`'s
+    (column, pg kind) pairs."""
+    return ", ".join(f"{pg_ident(c)} {_PG_TYPES[k]}" for c, k in columns)
 
 
 def encode_copy_rows(df: DataFrame,
@@ -211,7 +225,7 @@ def ledger_ddl(schema: str = "public", ledger: str = LEDGER_TABLE) -> str:
     """Delivery-ledger DDL: one row per promoted (target, fingerprint,
     partition).  The PRIMARY KEY is the exactly-once gate — a second
     attempt's insert hits unique_violation (23505) and skips promote."""
-    return (f"CREATE TABLE IF NOT EXISTS {schema}.{ledger} ("
+    return (f"CREATE TABLE IF NOT EXISTS {pg_ident(schema, ledger)} ("
             "target text, fingerprint text, part int, rows bigint, "
             "PRIMARY KEY (target, fingerprint, part))")
 
@@ -270,16 +284,17 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
     n_parts = enc.rdd.getNumPartitions()
     tq = _lit(table)
     fq = _lit(fingerprint)
+    lq = pg_ident(schema, ledger)
     with PgConnection(dsn) as conn:  # bootstrap the ledger (idempotent)
         conn.execute(ledger_ddl(schema, ledger))
         try:
-            conn.execute(f"INSERT INTO {schema}.{ledger} VALUES "
+            conn.execute(f"INSERT INTO {lq} VALUES "
                          f"('{tq}', '{fq}', -1, {n_parts})")
         except PgError as e:
             if e.fields.get("C") != "23505":
                 raise
             _tag, rows = conn.execute(
-                f"SELECT rows FROM {schema}.{ledger} WHERE target = "
+                f"SELECT rows FROM {lq} WHERE target = "
                 f"'{tq}' AND fingerprint = '{fq}' AND part = -1")
             prev = int(rows[0][0]) if rows else None
             if prev != n_parts:
@@ -322,25 +337,25 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
             yield TRAILER
 
         with PgConnection(dsn) as conn:
-            collist = ", ".join(f'"{c}" {_PG_TYPES[k]}' for c, k in cols)
-            conn.execute(f"CREATE TABLE {schema}.{stg} ({collist})")
+            conn.execute(f"CREATE TABLE {pg_ident(schema, stg)} "
+                         f"({column_defs(cols)})")
             n = conn.copy_in(copy_sql(stg, cols, schema), payload())
             conn.execute("begin")
             try:
                 conn.execute(
-                    f"INSERT INTO {schema}.{ledger} VALUES "
-                    f"('{_lit(table)}', '{_lit(fingerprint)}', {pid}, {n})")
+                    f"INSERT INTO {lq} VALUES "
+                    f"('{tq}', '{fq}', {pid}, {n})")
             except PgError as e:
                 conn.execute("rollback")
                 if e.fields.get("C") != "23505":
                     raise  # real failure — let Spark retry the task
                 # unique_violation: an earlier attempt already promoted
             else:
-                conn.execute(f"INSERT INTO {schema}.{table} "
-                             f"SELECT * FROM {schema}.{stg}")
+                conn.execute(f"INSERT INTO {pg_ident(schema, table)} "
+                             f"SELECT * FROM {pg_ident(schema, stg)}")
                 conn.execute("commit")
                 promoted.add(n)
-            conn.execute(f"DROP TABLE {schema}.{stg}")
+            conn.execute(f"DROP TABLE {pg_ident(schema, stg)}")
 
     enc.foreachPartition(send_part)
     return promoted.value
@@ -366,9 +381,10 @@ def sweep_staging(dsn: str, table: str, schema: str = "public") -> list[str]:
     with PgConnection(dsn) as conn:
         _tag, rows = conn.execute(
             "SELECT tablename FROM pg_tables WHERE schemaname = "
-            f"'{schema}' AND tablename LIKE '{pat}%' ESCAPE '\\'")
+            f"'{_lit(schema)}' AND tablename LIKE '{_lit(pat)}%' "
+            "ESCAPE '\\'")
         for (name,) in rows:
-            conn.execute(f"DROP TABLE {schema}.{name}")
+            conn.execute(f"DROP TABLE {pg_ident(schema, name)}")
             dropped.append(name)
     return dropped
 
@@ -396,8 +412,8 @@ def stream_to_postgres(sdf: DataFrame, dsn: str, table: str,
 def copy_sql(table: str, columns: list[tuple[str, str]],
              schema: str = "public") -> str:
     """The COPY statement a loader would run against the .copy files."""
-    collist = ", ".join(f'"{c}"' for c, _ in columns)
-    return (f'COPY {schema}.{table} ({collist}) '
+    collist = ", ".join(pg_ident(c) for c, _ in columns)
+    return (f'COPY {pg_ident(schema, table)} ({collist}) '
             f"FROM STDIN WITH (FORMAT binary)")
 
 

@@ -236,9 +236,14 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
                  end_date: int | None = None,
                  bucketed_prefix: str | None = None) -> PipelineResult:
     """The chain as lazy DataFrames.  ``persist`` caches the decode
-    tables and the multi-consumer stage outputs (False = nothing,
-    fastest on a DRAM-bound single box — see BENCH/BASELINE.md
-    levers).  With ``bucketed_prefix`` the decode stage reads the
+    tables and the multi-consumer stage outputs (False = nothing).
+    Which is faster depends on the host and the input: a 220-doc
+    tiling round (run_pipeline + write_feature_tables, local[4], 4
+    cores) took 19.2-19.8 s with True and 20.9-23.4 s with False over
+    3 alternating pairs, while a 440k-doc job on a DRAM-bound 32-core
+    box ran fastest with False (BENCH/BASELINE.md levers), where
+    re-reading the span stream beat caching it.  With
+    ``bucketed_prefix`` the decode stage reads the
     :func:`prepare_bucketed` ingest tables instead of ``docs_path``:
     the decode shuffles were paid once at ingest, and J1's join reads
     both sides bucket-aligned (zero Exchange below the join).

@@ -38,6 +38,20 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark's default (false) plans a cached relation without AQE's
+        # partition coalescing, so every persist keeps
+        # shuffle.partitions partitions whatever its size, and each
+        # becomes a task in every stage that reads it: J2's mapInPandas
+        # ran 8 tasks, and so 4 concurrent ~129 MB Python workers, for
+        # 111 relations.  With true, AQE sizes each persisted stage
+        # output from its data (1 partition at 220 docs, many at
+        # scale).  Measured on a 4-core host, perfbench tile_batch
+        # (medians of 10 runs): peak RSS 2263 -> 1807 MB, J2 8 -> 1
+        # task, 1 Python worker instead of 4; query_serve peak RSS
+        # 2245 -> 1814 MB.  The executed chain plans keep their
+        # Exchanges and joins
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         # write_bucketed leaves exactly ONE file per bucket, so the
         # planning-time file listing this enables is O(n_buckets) and
         # the per-bucket sort order reaches the scan: bucketed merge

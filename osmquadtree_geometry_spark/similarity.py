@@ -148,10 +148,15 @@ def lsh_ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
             "lsh_ann_topk requires dim (the embedding dimension): a "
             "driver-side probe here would run a blocking job during "
             "plan construction")
+    # bucket on ids only: the cache and the candidate shuffle carry
+    # (id, tab, bucket), and each vector joins back once per distinct
+    # candidate, not once per hash table or per matching table
     e = _lsh_buckets(emb.select("vec_id", "embedding"), "embedding",
-                     dim, n_planes, n_tables, seed)
+                     dim, n_planes, n_tables, seed) \
+        .select("vec_id", "tab", "bucket")
     q = _lsh_buckets(queries.select("query_id", "qe"), "qe",
-                     dim, n_planes, n_tables, seed)
+                     dim, n_planes, n_tables, seed) \
+        .select("query_id", "tab", "bucket")
 
     if max_bucket is not None:
         e = cache.persist(e)  # feeds the size agg + the join below
@@ -161,9 +166,11 @@ def lsh_ann_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                  .select("tab", "bucket"))
         e = e.join(sizes, ["tab", "bucket"])
 
-    cand = (q.join(e, ["tab", "bucket"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "qe", "vec_id", "embedding").distinct())
+    pairs = (q.join(e, ["tab", "bucket"])
+             .where(F.col("vec_id") != F.col("query_id"))
+             .select("query_id", "vec_id").distinct())
+    cand = (pairs.join(emb.select("vec_id", "embedding"), "vec_id")
+            .join(queries.select("query_id", "qe"), "query_id"))
     scored = _with_norm(_with_norm(cand, "embedding", "__ne"), "qe", "__nq") \
         .withColumn("cosine", _cosine_hoisted())
     return _top_k(scored, k)

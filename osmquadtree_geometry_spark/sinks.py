@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels.quadtree import sql_qt_depth, sql_qt_xyz
+from .pgcopy import pg_ident
 
 
 def _deg_str(col: str) -> str:
@@ -525,21 +526,22 @@ def generate_ddl(table: str, tag_columns: list[str],
     CREATE TABLE with style-driven tag columns + hstore-like catch-all,
     gist/gin indexes, json view, and lowzoom filtered views with
     simplification hooks."""
-    cols = ", ".join([f'"{c}" text' for c in tag_columns])
+    cols = ", ".join([f"{pg_ident(c)} text" for c in tag_columns])
+    tbl = pg_ident(schema, table)
     stmts = [
-        f'DROP TABLE IF EXISTS {schema}.{table} CASCADE',
-        f'CREATE TABLE {schema}.{table} (osm_id bigint, {cols}, '
+        f'DROP TABLE IF EXISTS {tbl} CASCADE',
+        f'CREATE TABLE {tbl} (osm_id bigint, {cols}, '
         f'tags hstore, layer bigint, z_order bigint, minzoom bigint, '
         f'quadtree bigint, way {geom_type})',
-        f'CREATE INDEX {table}_way_idx ON {schema}.{table} USING gist (way)',
-        f'CREATE INDEX {table}_tags_idx ON {schema}.{table} USING gin (tags)',
-        f'CREATE VIEW {schema}.{table}_json AS SELECT osm_id, '
-        f'hstore_to_json(tags) AS tags, way FROM {schema}.{table}',
+        f'CREATE INDEX {pg_ident(table + "_way_idx")} ON {tbl} USING gist (way)',
+        f'CREATE INDEX {pg_ident(table + "_tags_idx")} ON {tbl} USING gin (tags)',
+        f'CREATE VIEW {pg_ident(schema, table + "_json")} AS SELECT osm_id, '
+        f'hstore_to_json(tags) AS tags, way FROM {tbl}',
     ]
     for z in (lowzoom or []):
         stmts.append(
-            f'CREATE VIEW {schema}.{table}_z{z} AS SELECT * FROM '
-            f'{schema}.{table} WHERE minzoom <= {z}')
+            f'CREATE VIEW {pg_ident(schema, f"{table}_z{z}")} AS SELECT * '
+            f'FROM {tbl} WHERE minzoom <= {z}')
     return stmts
 
 
@@ -581,7 +583,7 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
     meaningful across resumed jobs.
     """
     from .config.style import GeometryStyle
-    from .pgcopy import (_PG_TYPES, LEDGER_TABLE, copy_columns_for,
+    from .pgcopy import (LEDGER_TABLE, _lit, column_defs, copy_columns_for,
                          deliver_pgcopy, deliver_pgcopy_exactly_once,
                          ledger_ddl)
     from .pgwire import PgConnection, PgError
@@ -599,26 +601,24 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
         for name in packed:
             # target tables are dropped+recreated below, so stale
             # ledger rows from a previous run must go too
-            before.append(f"DELETE FROM {schema}.{LEDGER_TABLE} "
-                          f"WHERE target = '{name}'")
+            before.append(f"DELETE FROM {pg_ident(schema, LEDGER_TABLE)} "
+                          f"WHERE target = '{_lit(name)}'")
     copy_cols = {}
     for name, df in packed.items():
         cols = copy_columns_for(df)
         copy_cols[name] = cols
-        collist = ", ".join(f'"{c}" {_PG_TYPES[k]}' for c, k in cols)
-        before.append(f'DROP TABLE IF EXISTS {schema}.{name} CASCADE')
-        before.append(f'CREATE TABLE {schema}.{name} ({collist})')
-        after.append(f'CREATE INDEX {name}_qt_idx ON {schema}.{name} '
+        tbl = pg_ident(schema, name)
+        before.append(f'DROP TABLE IF EXISTS {tbl} CASCADE')
+        before.append(f'CREATE TABLE {tbl} ({column_defs(cols)})')
+        after.append(f'CREATE INDEX {pg_ident(name + "_qt_idx")} ON {tbl} '
                      f'(quadtree)')
-        after.append(f'CREATE INDEX {name}_tags_idx ON {schema}.{name} '
+        after.append(f'CREATE INDEX {pg_ident(name + "_tags_idx")} ON {tbl} '
                      f'USING gin (tags)')
         for z in (lowzoom or []):
-            after.append(f'CREATE VIEW {schema}.{name}_z{z} AS SELECT * '
-                         f'FROM {schema}.{name} WHERE minzoom <= {z}')
-    union = " UNION ALL ".join(
-        f"SELECT osm_id, tags, quadtree, minzoom FROM {schema}.{t}"
-        for t in sorted(packed))
-    after.append(f"CREATE VIEW {schema}.planet_osm_all AS {union}")
+            after.append(f'CREATE VIEW {pg_ident(schema, f"{name}_z{z}")} '
+                         f'AS SELECT * FROM {tbl} WHERE minzoom <= {z}')
+    after.append(union_compat_view(sorted(packed), schema=schema,
+                                   cols="osm_id, tags, quadtree, minzoom"))
     with PgConnection(dsn) as conn:
         # the catch-all tag column is hstore-typed; create the
         # extension when the role may (tolerated failure — a managed
@@ -658,11 +658,13 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
 
 
 def union_compat_view(tables: list[str], view: str = "planet_osm_all",
-                      schema: str = "public") -> str:
-    """UNION ALL compat view (T4, `tablespec.rs:279-284`)."""
+                      schema: str = "public",
+                      cols: str = "osm_id, tags, way") -> str:
+    """UNION ALL compat view (T4, `tablespec.rs:279-284`) over ``cols``
+    of each table."""
     union = " UNION ALL ".join(
-        f"SELECT osm_id, tags, way FROM {schema}.{t}" for t in tables)
-    return f"CREATE VIEW {schema}.{view} AS {union}"
+        f"SELECT {cols} FROM {pg_ident(schema, t)}" for t in tables)
+    return f"CREATE VIEW {pg_ident(schema, view)} AS {union}"
 
 
 def execute_spark_ddl(spark, table_paths: dict[str, str],

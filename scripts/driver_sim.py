@@ -5,6 +5,9 @@ over the same parquet, compares row count, sorted-column schema, and
 a value hash (rounded floats), exactly like the driver at sf0.01.
 
 Usage: python scripts/driver_sim.py [sf_dir] [query ...]
+
+Exits 1 when any compared query fails or errors ("bad" non-empty in
+the summary line), 0 otherwise.
 """
 
 import json
@@ -101,7 +104,8 @@ def main():
     if bad:
         with open("/tmp/driver_sim_bad.json", "w") as f:
             json.dump({k: results[k] for k in bad}, f, indent=2, default=str)
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

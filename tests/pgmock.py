@@ -22,6 +22,14 @@ def _msg(kind: bytes, payload: bytes = b"") -> bytes:
     return kind + struct.pack(">i", len(payload) + 4) + payload
 
 
+def _name(ident: str) -> str:
+    """``schema.table`` of a possibly double-quoted qualified name, as
+    the server resolves it: quotes dropped, doubled quotes undone."""
+    import re
+    return re.sub(r'"((?:[^"]|"")*)"',
+                  lambda m: m.group(1).replace('""', '"'), ident)
+
+
 def _count_copy_rows(data: bytes) -> int:
     pos, n = 19, 0  # skip the 19-byte PGCOPY header
     while pos < len(data):
@@ -268,7 +276,7 @@ class MockPg(threading.Thread):
         import re
         m = re.match(r"INSERT INTO (\S+) VALUES \('([^']*)', '([^']*)',"
                      r" (-?\d+), (-?\d+)\)", sql)
-        if m and "_pg_deliveries" in m.group(1):
+        if m and "_pg_deliveries" in _name(m.group(1)):
             key = (m.group(2), m.group(3), int(m.group(4)))
             with self._lock:
                 dup = key in self.ledger
@@ -286,7 +294,7 @@ class MockPg(threading.Thread):
             return True
         m = re.match(r"SELECT rows FROM (\S+) WHERE target = '([^']*)' "
                      r"AND fingerprint = '([^']*)' AND part = (-?\d+)", sql)
-        if m and "_pg_deliveries" in m.group(1):
+        if m and "_pg_deliveries" in _name(m.group(1)):
             key = (m.group(2), m.group(3), int(m.group(4)))
             with self._lock:
                 val = self.ledger_rows.get(key)
@@ -304,27 +312,27 @@ class MockPg(threading.Thread):
             return True
         m = re.match(r"INSERT INTO (\S+) SELECT \* FROM (\S+)", sql)
         if m:
+            tgt, stg = _name(m.group(1)), _name(m.group(2))
             with self._lock:
-                staged = self.copies.get(m.group(2), b"")
+                staged = self.copies.get(stg, b"")
             if txn["active"]:
-                txn["pending"].append(("promote", m.group(1), staged))
+                txn["pending"].append(("promote", tgt, staged))
             else:
                 with self._lock:
-                    self.copies[m.group(1)] = (
-                        self.copies.get(m.group(1), b"") + staged)
+                    self.copies[tgt] = self.copies.get(tgt, b"") + staged
             conn.sendall(_msg(b"C", b"INSERT 0 0\x00") + _msg(b"Z", b"I"))
             return True
         m = re.match(r"DROP TABLE (\S+)$", sql)
         if m and "__stg_" in m.group(1):
             with self._lock:
-                self.copies.pop(m.group(1), None)
+                self.copies.pop(_name(m.group(1)), None)
             conn.sendall(_msg(b"C", b"DROP TABLE\x00") + _msg(b"Z", b"I"))
             return True
         return False
 
     def _copy_in(self, conn, rd, sql: str) -> None:
         # table name: COPY schema.table (cols...) FROM STDIN ...
-        table = sql.split()[1].split("(")[0]
+        table = _name(sql.split()[1].split("(")[0])
         conn.sendall(_msg(b"G", struct.pack(">bh", 1, 0)))
         chunks = []
         inject_fail = False

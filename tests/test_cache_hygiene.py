@@ -107,32 +107,65 @@ def test_pipeline_persist_validation(spark, docs_path):
         run_pipeline(spark, docs_path, persist=1)
 
 
-def test_tiling_round_reads_every_persisted_handle(spark, tmp_path):
-    """A tiling round (run_pipeline + write_feature_tables) persists
-    only what it reads: every handle it registers is fully loaded by
-    the time the layout is written.  A persist nothing reads still
-    costs cold driver planning and a cache registration."""
+@pytest.fixture(scope="module")
+def tiling_round(spark, tmp_path_factory):
+    """(handles, cacheManager) of one tiling round (run_pipeline +
+    write_feature_tables) run inside ``cache.scope()``; released after
+    the module's tests."""
     from osmquadtree_geometry_spark.config.minzoom import MinZoomSpec
     from osmquadtree_geometry_spark.datagen import generate_docs_parquet
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     from osmquadtree_geometry_spark.sinks import write_feature_tables
+    tmp = tmp_path_factory.mktemp("round")
     # own docs file: a table cached by another test over the shared
     # fixture would match these plans and read as loaded
-    docs = generate_docs_parquet(str(tmp_path / "docs.parquet"), 11)
+    docs = generate_docs_parquet(str(tmp / "docs.parquet"), 11)
     cm = spark._jsparkSession.sharedState().cacheManager()
     with cache.scope() as handles:
         res = run_pipeline(spark, docs, minzoom=MinZoomSpec.default())
-        write_feature_tables(res, str(tmp_path / "layout"),
+        write_feature_tables(res, str(tmp / "layout"),
                              media=res.decoded.get("media"))
     try:
-        assert handles
-        unread = []
-        for df in handles:
-            cached = cm.lookupCachedData(df._jdf)
-            assert cached.isDefined()
-            builder = cached.get().cachedRepresentation().cacheBuilder()
-            if not builder.isCachedColumnBuffersLoaded():
-                unread.append(df.columns)
-        assert not unread, f"persisted but never read: {unread}"
+        yield handles, cm
     finally:
         cache.release(handles)
+
+
+def test_tiling_round_reads_every_persisted_handle(tiling_round):
+    """A tiling round (run_pipeline + write_feature_tables) persists
+    only what it reads: every handle it registers is fully loaded by
+    the time the layout is written.  A persist nothing reads still
+    costs cold driver planning and a cache registration."""
+    handles, cm = tiling_round
+    assert handles
+    unread = []
+    for df in handles:
+        cached = cm.lookupCachedData(df._jdf)
+        assert cached.isDefined()
+        builder = cached.get().cachedRepresentation().cacheBuilder()
+        if not builder.isCachedColumnBuffersLoaded():
+            unread.append(df.columns)
+    assert not unread, f"persisted but never read: {unread}"
+
+
+def test_aqe_sizes_persisted_chain_stages(spark, tiling_round):
+    """AQE coalesces the cached plans of the chain's persisted stage
+    outputs (session.py sets canChangeCachedPlanOutputPartitioning):
+    at test scale each holds fewer partitions than
+    spark.sql.shuffle.partitions, and J2's ``assembled`` exactly one,
+    so ring assembly runs in one Python task.  With Spark's default
+    every one of them keeps all shuffle partitions."""
+    handles, cm = tiling_round
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = {}
+    for df in handles:
+        rel = cm.lookupCachedData(df._jdf).get().cachedRepresentation()
+        if "AdaptiveSparkPlanExec" not in rel.cachedPlan().getClass().getName():
+            continue  # no exchange below the persist: nothing to coalesce
+        n = rel.cacheBuilder().cachedColumnBuffers().getNumPartitions()
+        parts[tuple(df.columns)] = n
+    assert parts
+    assert all(n < n_shuffle for n in parts.values()), parts
+    assembled = [n for cols, n in parts.items()
+                 if "parts" in cols and "error" in cols]
+    assert assembled == [1], parts

@@ -200,12 +200,12 @@ def test_write_postgresql_sequencing(spark, tmp_path):
         assert out["rows"] == expected_rows
         for t, n in expected_rows.items():
             assert (f"public.{t}" in srv.copies) == (n > 0)
-            assert any(s.startswith(f"CREATE TABLE public.{t} ")
+            assert any(s.startswith(f'CREATE TABLE "public"."{t}" ')
                        for s in q)
         # after-DDL: gin indexes failed (mock) but delivery continued
         assert out["after_errors"]
         assert all("USING gin" in s for s, _ in out["after_errors"])
-        assert any("CREATE VIEW public.planet_osm_all" in s for s in q)
+        assert any('CREATE VIEW "public"."planet_osm_all"' in s for s in q)
         # decode the polygon payload with the packed frame's columns:
         # simple polygon keeps its id, complicated polygon is negated
         from osmquadtree_geometry_spark.config.style import GeometryStyle
@@ -313,6 +313,52 @@ def test_write_postgresql_exactly_once_mode(spark):
                                       delivery_mode="exactly_once",
                                       fingerprint="fpA")
         assert sum(out2["rows"].values()) == 4
+
+
+def test_write_postgresql_quotes_identifiers(spark):
+    """A mixed-case schema and a tag key holding '"' reach the server
+    quoted in every generated statement (tables, staging, ledger,
+    indexes, views), and the rows land in the schema as spelled."""
+    from types import SimpleNamespace
+    from osmquadtree_geometry_spark import pgcopy, sinks
+    from osmquadtree_geometry_spark.config.style import GeometryStyle
+    key = 'say "hi"'
+    schema = ("doc_id string, id long, tags map<string,string>, "
+              "z_order long, layer long, minzoom long, quadtree long, "
+              "area double")
+
+    def mk(rows):
+        return spark.createDataFrame(
+            [("d", i, t, None, None, 14, 9, 1.0) for i, t in rows], schema)
+
+    res = SimpleNamespace(
+        points=mk([(1, {"amenity": "pub", key: "yes"})]),
+        linestrings=mk([]), simple_polygons=mk([]),
+        complicated_polygons=mk([]))
+    style = GeometryStyle(other_keys=[key])
+    with MockPg(auth="trust") as srv:
+        out = sinks.write_postgresql(res, srv.dsn(), style=style,
+                                     schema="OsmData", lowzoom=[10],
+                                     delivery_mode="exactly_once",
+                                     fingerprint="fpQ")
+        assert out["rows"]["planet_osm_point"] == 1
+        q = srv.queries
+        assert not any("OsmData." in s for s in q), q
+        create = next(s for s in q if s.startswith(
+            'CREATE TABLE "OsmData"."planet_osm_point" ('))
+        assert '"say ""hi""" text' in create
+        assert any(s.startswith('CREATE TABLE IF NOT EXISTS '
+                                '"OsmData"."_pg_deliveries"') for s in q)
+        assert any(s.startswith('CREATE TABLE "OsmData"."planet_osm_point'
+                                '__stg_') for s in q)
+        assert any(s.startswith('CREATE VIEW "OsmData"."planet_osm_all"')
+                   for s in q)
+        cols = pgcopy.copy_columns_for(sinks.pack_tag_columns(
+            res.points, sinks.table_tag_columns(style)["point"]))
+        rows = pgcopy.parse_copy_payloads(
+            srv.copies["OsmData.planet_osm_point"], cols)
+        assert [dict(zip([c for c, _ in cols], r))[key] for r in rows] \
+            == ["yes"]
 
 
 def test_sweep_staging_drops_orphans():

@@ -313,3 +313,35 @@ def test_bucketed_waynode_join_plan(spark, docs_path, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         for t_ in ("tbw_nodes", "tbw_ways", "tbw_wayrefs", "tbw_relations"):
             spark.sql(f"DROP TABLE IF EXISTS {t_}")
+
+
+def test_lsh_ann_caches_and_shuffles_ids_only(spark):
+    """lsh_ann_topk caches the bucketed corpus as (vec_id, tab, bucket)
+    only, not one embedding copy per hash table, and de-duplicates
+    candidates on (query_id, vec_id) before any vector joins back:
+    the distinct's Exchange hashes no array column."""
+    import re
+
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.similarity import lsh_ann_topk
+    emb = spark.createDataFrame(
+        [(i, [float((i * j + i) % 7 - 3) for j in range(64)])
+         for i in range(1, 41)],
+        "vec_id long, embedding array<float>")
+    q = (emb.orderBy("vec_id").limit(3)
+         .selectExpr("vec_id as query_id", "embedding as qe"))
+    with cache.scope() as handles:
+        df = lsh_ann_topk(emb, q, k=3, n_planes=2, n_tables=3, dim=64)
+    try:
+        assert [h.columns for h in handles] == [["vec_id", "tab", "bucket"]]
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        keys = [re.sub(r"#\d+L?", "", m) for m in
+                re.findall(r"Exchange hashpartitioning\(([^)]*), \d+\)",
+                           plan)]
+        assert "query_id, vec_id" in keys, keys
+        assert not any("embedding" in k or "qe" in k for k in keys), keys
+        aggs = [ln for ln in plan.splitlines() if "HashAggregate(keys=[" in ln]
+        assert not any("embedding" in ln for ln in aggs), aggs
+    finally:
+        cache.release(handles)

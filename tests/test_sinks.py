@@ -266,11 +266,35 @@ def test_ddl():
                                ["amenity", "highway", "name"],
                                lowzoom=[6, 10])
     sql = "\n".join(stmts)
-    assert "CREATE TABLE public.planet_osm_point" in sql
+    assert 'CREATE TABLE "public"."planet_osm_point"' in sql
     assert "USING gist (way)" in sql and "USING gin (tags)" in sql
     assert "planet_osm_point_z6" in sql and "minzoom <= 10" in sql
     v = sinks.union_compat_view(["planet_osm_point", "planet_osm_line"])
     assert "UNION ALL" in v
+
+
+def test_generated_identifiers_are_quoted():
+    """Every generated PostgreSQL name is double-quoted with embedded
+    quotes doubled: a tag key holding '"' cannot end its column name
+    early, and a mixed-case schema is not folded to lower case."""
+    from osmquadtree_geometry_spark import pgcopy
+    key = 'say "hi"'
+    stmts = sinks.generate_ddl("Pts", ["name", key], lowzoom=[6],
+                               schema="OsmData")
+    assert stmts[0] == 'DROP TABLE IF EXISTS "OsmData"."Pts" CASCADE'
+    assert '"say ""hi""" text' in stmts[1]
+    assert stmts[2].startswith('CREATE INDEX "Pts_way_idx" ON "OsmData"."Pts"')
+    assert stmts[4].startswith('CREATE VIEW "OsmData"."Pts_json" AS')
+    assert stmts[5].startswith('CREATE VIEW "OsmData"."Pts_z6" AS')
+    assert sinks.union_compat_view(["a"], view="All", schema="OsmData") == (
+        'CREATE VIEW "OsmData"."All" AS '
+        'SELECT osm_id, tags, way FROM "OsmData"."a"')
+    assert pgcopy.ledger_ddl("OsmData").startswith(
+        'CREATE TABLE IF NOT EXISTS "OsmData"."_pg_deliveries" (')
+    assert pgcopy.copy_sql("Pts", [("osm_id", "int8"), (key, "text")],
+                           "OsmData") == (
+        'COPY "OsmData"."Pts" ("osm_id", "say ""hi""") '
+        "FROM STDIN WITH (FORMAT binary)")
 
 
 def test_executed_spark_ddl(res, spark, tmp_path):
