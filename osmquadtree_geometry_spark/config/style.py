@@ -275,7 +275,3 @@ class GeometryStyle:
     def sql_is_multipolygon_rel(self, tags: str) -> str:
         """`multipolygons.rs:79-99`: type in (multipolygon, boundary)."""
         return f"{tags}['type'] IN ('multipolygon', 'boundary')"
-
-
-def default_style() -> GeometryStyle:
-    return GeometryStyle()

@@ -295,7 +295,7 @@ def sql_qt_xyz(qt_col: str, d: str | None = None,
     """SQL computing ``xyz(qt)`` -> (tile_x, tile_y, zoom) exprs —
     the deinterleave mirror of ``sql_tile_qt``, dialect-neutral
     (Spark + DuckDB).  Pass pre-bound column names as ``d``/``m`` to
-    avoid textual blowup in Spark codegen (see sinks._with_qt_xyz);
+    avoid textual blowup in Spark codegen (see sinks._geojson_staged);
     DuckDB oracles can inline the defaults."""
     d = d or sql_qt_depth(qt_col)
     if m is None:

@@ -44,8 +44,7 @@ def make_points(nodes: DataFrame, style: GeometryStyle) -> DataFrame:
                     "quadtree"))
 
 
-def make_way_features(ways_ll: DataFrame, style: GeometryStyle,
-                      recalc_quadtree: bool = True) -> DataFrame:
+def make_way_features(ways_ll: DataFrame, style: GeometryStyle) -> DataFrame:
     """FUSED way-geometry construction (round-2 verdict Next #7):
     ONE pass over ways_ll produces both linestrings and simple
     polygons, discriminated by ``geom_type`` — instead of two filtered
@@ -89,9 +88,7 @@ def make_way_features(ways_ll: DataFrame, style: GeometryStyle,
                      .alias("z_order"),  # no zorder for polys
                      F.expr(style.sql_layer("tags")).alias("layer"),
                      F.lit(None).cast("long").alias("minzoom")))
-    if recalc_quadtree:
-        fused = with_bbox_quadtree(fused)
-    return fused
+    return with_bbox_quadtree(fused)
 
 
 _LINE_COLS = ["doc_id", "id", "refs", "tags", "lonlats", "length",
@@ -110,16 +107,3 @@ def split_way_features(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
     polys = (fused.where(F.col("geom_type") == "simple_polygon")
              .select(*_POLY_COLS, *qt, *extra))
     return lines, polys
-
-
-def make_ways(ways_ll: DataFrame, style: GeometryStyle,
-              recalc_quadtree: bool = True) -> tuple[DataFrame, DataFrame]:
-    """-> (linestrings, simple_polygons) — the per-type views of
-    :func:`make_way_features`.
-
-    linestrings(doc_id, id, refs, tags, lonlats, length, z_order,
-                layer, minzoom, quadtree)
-    simple_polygons(..., area, reversed, z_order=null, ...)
-    """
-    return split_way_features(
-        make_way_features(ways_ll, style, recalc_quadtree))

@@ -52,6 +52,13 @@ def sql_bbox(lonlats: str) -> dict[str, str]:
     }
 
 
+def sql_parts_bbox(parts: str) -> dict[str, str]:
+    """:func:`sql_bbox` of a complicated polygon: over its parts'
+    exterior rings only (`complicatedpolygongeometry.rs:451-461`)."""
+    return {k: f"array_{k[:3]}(transform({parts}, pt -> {v}))"
+            for k, v in sql_bbox("pt.exterior").items()}
+
+
 def sql_is_ring(refs: str) -> str:
     """`process_geometry.rs:260`: refs[0] == refs[last]."""
     return f"(size({refs}) > 0 AND element_at({refs}, 1) = element_at({refs}, -1))"

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import os
 import struct
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -152,12 +153,33 @@ def encode_copy_rows(df: DataFrame,
     return df.select(*names).mapInPandas(run, "copy_row binary")
 
 
+def copy_payload(rows) -> tuple[bool, Iterator[bytes]]:
+    """Frame one partition of :func:`encode_copy_rows` output as one
+    complete binary COPY payload: (empty, chunks), where the chunks are
+    the header, each row and the trailer.  The first row is read ahead,
+    so a caller can tell an empty partition before it opens a file or
+    a connection."""
+    it = iter(rows)
+    first = next(it, None)
+
+    def chunks():
+        yield HEADER
+        if first is not None:
+            yield first.copy_row
+            for r in it:
+                yield r.copy_row
+        yield TRAILER
+
+    return first is None, chunks()
+
+
 def write_pgcopy(df: DataFrame, out_dir: str,
                  columns: list[tuple[str, str]] | None = None) -> None:
     """COPY-to-file sink (CopyFilePrfx, `writepostgresql.rs:415-420`):
     one ``part-XXXXX.copy`` per partition, each a complete binary COPY
-    payload (header + rows + trailer), written executor-side.
-    ``out_dir`` must be a shared filesystem on a real cluster."""
+    payload (header + rows + trailer; header + trailer only for an
+    empty partition), written executor-side.  ``out_dir`` must be a
+    shared filesystem on a real cluster."""
     os.makedirs(out_dir, exist_ok=True)
     enc = encode_copy_rows(df, columns)
 
@@ -166,10 +188,7 @@ def write_pgcopy(df: DataFrame, out_dir: str,
         pid = TaskContext.get().partitionId()
         path = os.path.join(out_dir, f"part-{pid:05d}.copy")
         with open(path, "wb") as f:
-            f.write(HEADER)
-            for r in rows:
-                f.write(r.copy_row)
-            f.write(TRAILER)
+            f.writelines(copy_payload(rows)[1])
 
     enc.foreachPartition(write_part)
 
@@ -189,24 +208,13 @@ def deliver_pgcopy(df: DataFrame, dsn: str, table: str,
     acked = df.sparkSession.sparkContext.accumulator(0)
 
     def send_part(rows) -> None:
-        from itertools import chain
-
         from .pgwire import PgConnection
 
-        it = iter(rows)
-        try:
-            first = next(it)
-        except StopIteration:
+        empty, payload = copy_payload(rows)
+        if empty:
             return  # empty partition: no wasted server connection
-
-        def payload():
-            yield HEADER
-            for r in chain((first,), it):
-                yield r.copy_row
-            yield TRAILER
-
         with PgConnection(dsn) as conn:
-            acked.add(conn.copy_in(sql, payload()))
+            acked.add(conn.copy_in(sql, payload))
 
     enc.foreachPartition(send_part)
     return acked.value
@@ -308,16 +316,12 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
                     f"count).") from e
 
     def send_part(rows) -> None:
-        from itertools import chain
-
         from pyspark import TaskContext
 
         from .pgwire import PgConnection, PgError
 
-        it = iter(rows)
-        try:
-            first = next(it)
-        except StopIteration:
+        empty, payload = copy_payload(rows)
+        if empty:
             return
         tc = TaskContext.get()
         pid, attempt = tc.partitionId(), tc.taskAttemptId()
@@ -329,17 +333,10 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
         # SparkContext; a cross-application collision would fail
         # loudly at CREATE TABLE, never corrupt a promote.
         stg = f"{table}__stg_{fingerprint[:12]}_p{pid}_a{attempt}"
-
-        def payload():
-            yield HEADER
-            for r in chain((first,), it):
-                yield r.copy_row
-            yield TRAILER
-
         with PgConnection(dsn) as conn:
             conn.execute(f"CREATE TABLE {pg_ident(schema, stg)} "
                          f"({column_defs(cols)})")
-            n = conn.copy_in(copy_sql(stg, cols, schema), payload())
+            n = conn.copy_in(copy_sql(stg, cols, schema), payload)
             conn.execute("begin")
             try:
                 conn.execute(

@@ -44,6 +44,7 @@ from .operators.minzoom import find_minzoom_fused, find_minzoom_table
 from .operators.multipolygons import PARTS_TYPE, process_multipolygons
 from .operators.parenttags import add_parent_tags
 from .operators.relationtags import add_relation_tags
+from .operators.sqlgeom import sql_bbox, sql_parts_bbox
 from .operators.tiles import allocate_tiles, tile_dictionary
 from .operators.waynodes import collect_way_nodes
 
@@ -353,19 +354,13 @@ def filter_features_bbox(res: PipelineResult,
         return df.where((F.col("lon") >= a) & (F.col("lon") <= c)
                         & (F.col("lat") >= b) & (F.col("lat") <= d))
 
-    def ll(df):
-        return df.where(F.expr(
-            f"array_min(transform(lonlats, p -> p.lon)) <= {c} AND "
-            f"array_max(transform(lonlats, p -> p.lon)) >= {a} AND "
-            f"array_min(transform(lonlats, p -> p.lat)) <= {d} AND "
-            f"array_max(transform(lonlats, p -> p.lat)) >= {b}"))
+    def overlapping(g):
+        return lambda df: df.where(F.expr(
+            f"{g['minlon']} <= {c} AND {g['maxlon']} >= {a} AND "
+            f"{g['minlat']} <= {d} AND {g['maxlat']} >= {b}"))
 
-    def parts(df):
-        return df.where(F.expr(
-            f"array_min(transform(parts, pt -> array_min(transform(pt.exterior, p -> p.lon)))) <= {c} AND "
-            f"array_max(transform(parts, pt -> array_max(transform(pt.exterior, p -> p.lon)))) >= {a} AND "
-            f"array_min(transform(parts, pt -> array_min(transform(pt.exterior, p -> p.lat)))) <= {d} AND "
-            f"array_max(transform(parts, pt -> array_max(transform(pt.exterior, p -> p.lat)))) >= {b}"))
+    ll = overlapping(sql_bbox("lonlats"))
+    parts = overlapping(sql_parts_bbox("parts"))
 
     return PipelineResult(
         points=pt(res.points), linestrings=ll(res.linestrings),
@@ -421,30 +416,17 @@ def filter_features_poly(res: PipelineResult, rings) -> PipelineResult:
     def pt(df):
         return df.where(overlaps("lon", "lat", "lon", "lat"))
 
-    def ll(df):
-        g = {k: f"array_{m}(transform(lonlats, p -> p.{c}))"
-             for k, (m, c) in {"_mnlo": ("min", "lon"),
-                               "_mnla": ("min", "lat"),
-                               "_mxlo": ("max", "lon"),
-                               "_mxla": ("max", "lat")}.items()}
-        staged = df
-        for k, e in g.items():
-            staged = staged.withColumn(k, F.expr(e))
-        return (staged.where(overlaps("_mnlo", "_mnla", "_mxlo", "_mxla"))
-                .drop(*g.keys()))
+    def overlapping(g):
+        names = ("_mnlo", "_mnla", "_mxlo", "_mxla")
 
-    def parts(df):
-        g = {k: (f"array_{m}(transform(parts, pt -> array_{m}("
-                 f"transform(pt.exterior, p -> p.{c}))))")
-             for k, (m, c) in {"_mnlo": ("min", "lon"),
-                               "_mnla": ("min", "lat"),
-                               "_mxlo": ("max", "lon"),
-                               "_mxla": ("max", "lat")}.items()}
-        staged = df
-        for k, e in g.items():
-            staged = staged.withColumn(k, F.expr(e))
-        return (staged.where(overlaps("_mnlo", "_mnla", "_mxlo", "_mxla"))
-                .drop(*g.keys()))
+        def keep(df):
+            staged = df.withColumns(
+                {n: F.expr(e) for n, e in zip(names, g.values())})
+            return staged.where(overlaps(*names)).drop(*names)
+        return keep
+
+    ll = overlapping(sql_bbox("lonlats"))
+    parts = overlapping(sql_parts_bbox("parts"))
 
     return PipelineResult(
         points=pt(coarse.points), linestrings=ll(coarse.linestrings),

@@ -7,10 +7,11 @@
     tile-range repartition + in-partition sort; Spark's external
     shuffle/sort replaces the reference's size-tiered temp files.
   * Table routing + DDL/view generation (S9-S11,
-    `postgresql/tablespec.rs:81-391`): osm2pgsql-style point / line /
-    polygon / roads routing, CREATE TABLE / VIEW statements emitted as
-    SQL strings (a Postgres sink would execute them; Spark SQL can
-    `CREATE OR REPLACE VIEW` directly against the written tables).
+    `postgresql/tablespec.rs:81-391`): osm2pgsql-style routing and
+    tag packing in one step (:func:`pg_tables`), one PostgreSQL
+    statement bank built from the COPY columns (:func:`pg_statements`),
+    and one lowzoom/union view builder for both PostgreSQL and Spark
+    SQL (:func:`execute_spark_ddl` runs it against written tables).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels.quadtree import sql_qt_depth, sql_qt_xyz
+from .operators.sqlgeom import sql_bbox, sql_parts_bbox
 from .pgcopy import pg_ident
 
 
@@ -62,35 +64,32 @@ def _opt_field(name: str, col: str) -> str:
             f"else concat(',\"{name}\":', cast({col} as string)) end")
 
 
-def _with_qt_xyz(df: DataFrame) -> DataFrame:
-    """Stage (qt_x, qt_y, qt_z) decode columns for the feature's
-    ``quadtree`` cell — bound intermediates keep Spark codegen small
-    (the inline expr repeats the mantissa 36x)."""
+def _geojson_staged(df: DataFrame) -> DataFrame:
+    """Stage the columns :func:`geojson_feature_expr` reads beyond the
+    feature's own: (qt_x, qt_y, qt_z) decoded from its ``quadtree``
+    cell — bound intermediates keep Spark codegen small (the inline
+    expr repeats the mantissa 36x) — and a null ``layer`` /
+    ``z_order`` / ``minzoom`` where the shape has none."""
     d = sql_qt_depth("quadtree")
     df = (df.withColumn("__qtd", F.expr(d))
           .withColumn("__qtm", F.expr(
               "cast(floor(cast(greatest(cast(quadtree as bigint), 0) "
               "as bigint) / 32 / power(4.0, 18 - __qtd)) as bigint)")))
     tx, ty, _ = sql_qt_xyz("quadtree", d="__qtd", m="__qtm")
-    return (df.withColumn("qt_x", F.expr(tx))
-            .withColumn("qt_y", F.expr(ty))
-            .withColumnRenamed("__qtd", "qt_z").drop("__qtm"))
+    df = (df.withColumn("qt_x", F.expr(tx))
+          .withColumn("qt_y", F.expr(ty))
+          .withColumnRenamed("__qtd", "qt_z").drop("__qtm"))
+    for c in ("layer", "z_order", "minzoom"):
+        if c not in df.columns:
+            df = df.withColumn(c, F.lit(None).cast("long"))
+    return df
 
 
 _GEOM_BBOX = {
     # [minlon, minlat, maxlon, maxlat] source exprs per geometry shape
     "point": ("lon", "lat", "lon", "lat"),
-    "lonlats": ("array_min(transform(lonlats, p -> p.lon))",
-                "array_min(transform(lonlats, p -> p.lat))",
-                "array_max(transform(lonlats, p -> p.lon))",
-                "array_max(transform(lonlats, p -> p.lat))"),
-    # complicated polygons: exterior rings only
-    # (complicatedpolygongeometry.rs:451-461)
-    "parts": tuple(
-        f"array_{mm}(transform(parts, pt -> array_{mm}("
-        f"transform(pt.exterior, p -> p.{c}))))"
-        for mm, c in (("min", "lon"), ("min", "lat"),
-                      ("max", "lon"), ("max", "lat"))),
+    "lonlats": tuple(sql_bbox("lonlats").values()),
+    "parts": tuple(sql_parts_bbox("parts").values()),
 }
 
 
@@ -110,7 +109,7 @@ def geojson_feature_expr(geom_type: str) -> str:
     the reference's insertion order.  bbox coords use our canonical
     fixed-7dp strings (the reference prints shortest-roundtrip
     floats; values identical).  Requires the staged qt_x/qt_y/qt_z
-    columns (``geojson_features`` adds them)."""
+    columns (``_geojson_staged`` adds them)."""
     measure = ""
     bbox_src = _GEOM_BBOX["lonlats"]
     if geom_type == "point":
@@ -162,14 +161,11 @@ def geojson_feature_expr(geom_type: str) -> str:
             f"',\"bbox\":', {bbox}, '}}')")
 
 
-def geojson_features(df: DataFrame, geom_type: str) -> DataFrame:
-    """(id, feature json string) rows."""
-    df = _with_qt_xyz(df)
-    for c in ("layer", "z_order", "minzoom"):
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("long"))
-    return df.select("id",
-                     F.expr(geojson_feature_expr(geom_type)).alias("feature"))
+def geojson_features(df: DataFrame, geom_type: str,
+                     *keys: str) -> DataFrame:
+    """(*keys, id, feature json string) rows."""
+    return _geojson_staged(df).select(
+        *keys, "id", F.expr(geojson_feature_expr(geom_type)).alias("feature"))
 
 
 def geojson_tile_blocks(df: DataFrame, geom_type: str) -> DataFrame:
@@ -178,13 +174,7 @@ def geojson_tile_blocks(df: DataFrame, geom_type: str) -> DataFrame:
     features id-sorted within the block.  One shuffle keyed by tile;
     block size is bounded by the tile dictionary's grouping depth
     (the same bound the reference's per-tile files have)."""
-    df = _with_qt_xyz(df)
-    for c in ("layer", "z_order", "minzoom"):
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("long"))
-    feats = df.select("tile", "id",
-                      F.expr(geojson_feature_expr(geom_type)).alias("feature"))
-    return (feats.groupBy("tile")
+    return (geojson_features(df, geom_type, "tile").groupBy("tile")
             .agg(F.count("*").cast("long").alias("n_features"),
                  F.expr("concat('{\"type\":\"FeatureCollection\",\"features\":[', "
                         "array_join(transform(array_sort(collect_list("
@@ -519,37 +509,86 @@ def pack_tag_columns(df: DataFrame, tag_columns: list[str]) -> DataFrame:
     return df.select(*base)
 
 
-def generate_ddl(table: str, tag_columns: list[str],
-                 geom_type: str = "geometry", lowzoom: list[int] | None = None,
-                 schema: str = "public") -> list[str]:
-    """DDL/index/view statement bank (S11, `tablespec.rs:81-391`):
-    CREATE TABLE with style-driven tag columns + hstore-like catch-all,
-    gist/gin indexes, json view, and lowzoom filtered views with
-    simplification hooks."""
-    cols = ", ".join([f"{pg_ident(c)} text" for c in tag_columns])
-    tbl = pg_ident(schema, table)
-    stmts = [
-        f'DROP TABLE IF EXISTS {tbl} CASCADE',
-        f'CREATE TABLE {tbl} (osm_id bigint, {cols}, '
-        f'tags hstore, layer bigint, z_order bigint, minzoom bigint, '
-        f'quadtree bigint, way {geom_type})',
-        f'CREATE INDEX {pg_ident(table + "_way_idx")} ON {tbl} USING gist (way)',
-        f'CREATE INDEX {pg_ident(table + "_tags_idx")} ON {tbl} USING gin (tags)',
-        f'CREATE VIEW {pg_ident(schema, table + "_json")} AS SELECT osm_id, '
-        f'hstore_to_json(tags) AS tags, way FROM {tbl}',
-    ]
-    for z in (lowzoom or []):
-        stmts.append(
-            f'CREATE VIEW {pg_ident(schema, f"{table}_z{z}")} AS SELECT * '
-            f'FROM {tbl} WHERE minzoom <= {z}')
-    return stmts
+def pg_tables(res, style=None, extended: bool = True) -> dict[str, DataFrame]:
+    """The PostgreSQL outputs, routed and packed: {table: packed
+    DataFrame}.  :func:`route_tables` allocates the features, then each
+    table is packed (:func:`pack_tag_columns`) with its own
+    :func:`table_tag_columns` list, keyed by the table name without
+    its ``planet_osm_`` prefix.  The one route + pack step of both the
+    live delivery (:func:`write_postgresql`) and the COPY-file output."""
+    from .config.style import GeometryStyle
+    tag_cols = table_tag_columns(style or GeometryStyle())
+    routed = route_tables(res.points, res.linestrings, res.simple_polygons,
+                          res.complicated_polygons, extended=extended)
+    return {name: pack_tag_columns(
+                df, tag_cols[name.removeprefix("planet_osm_")])
+            for name, df in routed.items()}
 
 
-def _table_kind(name: str) -> str:
-    return ("point" if "point" in name
-            else "line" if ("line" in name or "highway" in name
-                            or "roads" in name)
-            else "polygon")
+def spark_ident(name: str) -> str:
+    """A Spark SQL identifier: backtick-quoted with any embedded
+    backtick doubled, so a name such as ``osm-point`` parses."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lowzoom_views(table: str, lowzoom: list[int] | None, ident,
+                  create: str = "CREATE VIEW") -> list[str]:
+    """T5 lowzoom views (`tablespec.rs:81-391`): one ``<table>_z<N>``
+    view per zoom N over the rows with ``minzoom <= N``.  The dialect
+    is ``ident``, which quotes a name (a schema-bound
+    :func:`pgcopy.pg_ident` for PostgreSQL, :func:`spark_ident` for
+    Spark SQL), and ``create``, which opens each statement."""
+    return [f"{create} {ident(f'{table}_z{z}')} AS SELECT * "
+            f"FROM {ident(table)} WHERE minzoom <= {z}"
+            for z in (lowzoom or [])]
+
+
+def union_compat_view(tables: list[str], cols: str, ident,
+                      view: str = "planet_osm_all",
+                      create: str = "CREATE VIEW") -> str:
+    """T4 UNION ALL compat view (`tablespec.rs:279-284`) over ``cols``
+    of each table, in the dialect of :func:`lowzoom_views`."""
+    union = " UNION ALL ".join(
+        f"SELECT {cols} FROM {ident(t)}" for t in tables)
+    return f"{create} {ident(view)} AS {union}"
+
+
+def pg_statements(columns: dict[str, list[tuple[str, str]]],
+                  lowzoom: list[int] | None = None,
+                  schema: str = "public",
+                  exactly_once: bool = False) -> tuple[list[str], list[str]]:
+    """The PostgreSQL statement bank (S11, `tablespec.rs:81-391`) for
+    tables with the given COPY columns
+    (:func:`pgcopy.copy_columns_for` of each :func:`pg_tables` frame):
+    (before, after).
+
+    before: with ``exactly_once``, the delivery-ledger bootstrap and
+    the deletion of each table's ledger rows (the tables are recreated,
+    so their old ledger rows must go too); then DROP + CREATE TABLE per
+    table, the column list being the COPY columns themselves, so DDL
+    and payload cannot drift.  after: per table, the quadtree and
+    gin(tags) indexes and the lowzoom views; then the union compat
+    view over the tables in name order."""
+    from .pgcopy import LEDGER_TABLE, _lit, column_defs, ledger_ddl
+
+    ident = functools.partial(pg_ident, schema)
+    before, after = [], []
+    if exactly_once:
+        before.append(ledger_ddl(schema))
+        before += [f"DELETE FROM {ident(LEDGER_TABLE)} "
+                   f"WHERE target = '{_lit(name)}'" for name in columns]
+    for name, cols in columns.items():
+        tbl = ident(name)
+        before.append(f'DROP TABLE IF EXISTS {tbl} CASCADE')
+        before.append(f'CREATE TABLE {tbl} ({column_defs(cols)})')
+        after.append(f'CREATE INDEX {pg_ident(name + "_qt_idx")} ON {tbl} '
+                     f'(quadtree)')
+        after.append(f'CREATE INDEX {pg_ident(name + "_tags_idx")} ON {tbl} '
+                     f'USING gin (tags)')
+        after += lowzoom_views(name, lowzoom, ident)
+    after.append(union_compat_view(sorted(columns),
+                                   "osm_id, tags, quadtree, minzoom", ident))
+    return before, after
 
 
 def write_postgresql(res, dsn: str, style=None, extended: bool = True,
@@ -564,13 +603,13 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
     each table's rows then stream as binary COPY from the EXECUTORS,
     one wire connection per partition (`writepostgresql.rs:506-540``
     septhreads); finally the driver connection applies the after-DDL
-    (indexes, json/lowzoom/union views) with continue-on-error
-    semantics (`writepostgresql.rs:382` tolerates failed statements —
-    e.g. gist/gin when PostGIS/hstore extensions are absent).
+    (indexes, lowzoom/union views) with continue-on-error semantics
+    (`writepostgresql.rs:382` tolerates failed statements — e.g. gin
+    when the hstore extension is absent).
 
-    The CREATE TABLE columns are derived from the packed DataFrames'
-    actual COPY columns, so DDL and payload cannot drift.  Returns
-    {tables, before, after, after_errors, rows} for callers/tests.
+    The tables are :func:`pg_tables`' and the statements
+    :func:`pg_statements`'.  Returns {tables, before, after,
+    after_errors, rows} for callers/tests.
 
     ``delivery_mode``: ``'fast'`` (default) is the reference's plain
     per-partition COPY — at-least-once under Spark task retries.
@@ -582,43 +621,14 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
     fresh.  Pass a LineageStore input fingerprint to make the key
     meaningful across resumed jobs.
     """
-    from .config.style import GeometryStyle
-    from .pgcopy import (LEDGER_TABLE, _lit, column_defs, copy_columns_for,
-                         deliver_pgcopy, deliver_pgcopy_exactly_once,
-                         ledger_ddl)
+    from .pgcopy import (copy_columns_for, deliver_pgcopy,
+                         deliver_pgcopy_exactly_once)
     from .pgwire import PgConnection, PgError
 
-    used = style or GeometryStyle()
-    tag_cols = table_tag_columns(used)
-    routed = route_tables(res.points, res.linestrings,
-                          res.simple_polygons, res.complicated_polygons,
-                          extended=extended)
-    packed = {name: pack_tag_columns(df, tag_cols[_table_kind(name)])
-              for name, df in routed.items()}
-    before, after = [], []
-    if delivery_mode == "exactly_once":
-        before.append(ledger_ddl(schema))
-        for name in packed:
-            # target tables are dropped+recreated below, so stale
-            # ledger rows from a previous run must go too
-            before.append(f"DELETE FROM {pg_ident(schema, LEDGER_TABLE)} "
-                          f"WHERE target = '{_lit(name)}'")
-    copy_cols = {}
-    for name, df in packed.items():
-        cols = copy_columns_for(df)
-        copy_cols[name] = cols
-        tbl = pg_ident(schema, name)
-        before.append(f'DROP TABLE IF EXISTS {tbl} CASCADE')
-        before.append(f'CREATE TABLE {tbl} ({column_defs(cols)})')
-        after.append(f'CREATE INDEX {pg_ident(name + "_qt_idx")} ON {tbl} '
-                     f'(quadtree)')
-        after.append(f'CREATE INDEX {pg_ident(name + "_tags_idx")} ON {tbl} '
-                     f'USING gin (tags)')
-        for z in (lowzoom or []):
-            after.append(f'CREATE VIEW {pg_ident(schema, f"{name}_z{z}")} '
-                         f'AS SELECT * FROM {tbl} WHERE minzoom <= {z}')
-    after.append(union_compat_view(sorted(packed), schema=schema,
-                                   cols="osm_id, tags, quadtree, minzoom"))
+    packed = pg_tables(res, style, extended)
+    copy_cols = {name: copy_columns_for(df) for name, df in packed.items()}
+    exactly_once = delivery_mode == "exactly_once"
+    before, after = pg_statements(copy_cols, lowzoom, schema, exactly_once)
     with PgConnection(dsn) as conn:
         # the catch-all tag column is hstore-typed; create the
         # extension when the role may (tolerated failure — a managed
@@ -635,7 +645,7 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
         conn.execute("commit")
     rows = {}
     for name, df in packed.items():
-        if delivery_mode == "exactly_once":
+        if exactly_once:
             rows[name] = deliver_pgcopy_exactly_once(
                 df, dsn, name, fingerprint,
                 columns=copy_cols[name], schema=schema)
@@ -657,46 +667,31 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
             "after_errors": after_errors, "rows": rows}
 
 
-def union_compat_view(tables: list[str], view: str = "planet_osm_all",
-                      schema: str = "public",
-                      cols: str = "osm_id, tags, way") -> str:
-    """UNION ALL compat view (T4, `tablespec.rs:279-284`) over ``cols``
-    of each table."""
-    union = " UNION ALL ".join(
-        f"SELECT {cols} FROM {pg_ident(schema, t)}" for t in tables)
-    return f"CREATE VIEW {pg_ident(schema, view)} AS {union}"
-
-
 def execute_spark_ddl(spark, table_paths: dict[str, str],
                       lowzoom: list[int] | None = None,
                       union_view: str = "planet_osm_all",
                       union_cols: str = "id, tags, quadtree") -> list[str]:
     """S11 LIVE: register each written parquet table in the Spark
     catalog and EXECUTE the view bank against it — the Spark-dialect
-    sibling of ``generate_ddl``'s PostgreSQL statement bank (the
-    reference executes its statements against the target DB,
-    `writepostgresql.rs:277-408`; round-2 verdict Missing #3 asked for
-    an executed path instead of string-typed SQL).
+    sibling of :func:`pg_statements`' views (the reference executes
+    its statements against the target DB, `writepostgresql.rs:277-408`;
+    round-2 verdict Missing #3 asked for an executed path instead of
+    string-typed SQL).
 
     Creates per-table parquet-backed temp views, ``<t>_z<N>`` lowzoom
     filtered views (T5 view form), and the UNION ALL compat view
-    (T4).  Returns the executed statements so callers/tests can
-    assert the bank."""
+    (T4), every name backtick-quoted.  Returns the executed statements
+    so callers/tests can assert the bank."""
+    create = "CREATE OR REPLACE TEMPORARY VIEW"
     stmts = []
     for t, path in table_paths.items():
         p = str(path).replace("'", "''")
         stmts.append(
-            f"CREATE OR REPLACE TEMPORARY VIEW {t} "
-            f"USING parquet OPTIONS (path '{p}')")
-        for z in (lowzoom or []):
-            stmts.append(
-                f"CREATE OR REPLACE TEMPORARY VIEW {t}_z{z} AS "
-                f"SELECT * FROM {t} WHERE minzoom <= {z}")
+            f"{create} {spark_ident(t)} USING parquet OPTIONS (path '{p}')")
+        stmts += lowzoom_views(t, lowzoom, spark_ident, create)
     if union_view and table_paths:
-        union = " UNION ALL ".join(
-            f"SELECT {union_cols} FROM {t}" for t in table_paths)
-        stmts.append(
-            f"CREATE OR REPLACE TEMPORARY VIEW {union_view} AS {union}")
+        stmts.append(union_compat_view(list(table_paths), union_cols,
+                                       spark_ident, union_view, create))
     for s in stmts:
         spark.sql(s)
     return stmts

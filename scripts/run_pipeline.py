@@ -123,40 +123,26 @@ def main() -> None:
         else:
             res = filter_features_bbox(res, _parse_filter(args.filter))
 
-    tables = {"point": res.points, "line": res.linestrings,
-              "polygon": res.simple_polygons,
-              "complicated_polygon": res.complicated_polygons}
+    # output name -> (geometry shape, features)
+    tables = {"point": ("point", res.points),
+              "line": ("linestring", res.linestrings),
+              "polygon": ("simple_polygon", res.simple_polygons),
+              "complicated_polygon": ("complicated_polygon",
+                                      res.complicated_polygons)}
     if args.output == "geojson":
         from osmquadtree_geometry_spark.sinks import write_geojson_flat
-        gt = {"point": "point", "line": "linestring",
-              "polygon": "simple_polygon",
-              "complicated_polygon": "complicated_polygon"}
-        for name, df in tables.items():
-            write_geojson_flat(df, gt[name],
+        for name, (shape, df) in tables.items():
+            write_geojson_flat(df, shape,
                                os.path.join(args.out, f"{name}.geojson"))
     elif args.output == "tiled-geojson":
         from osmquadtree_geometry_spark.sinks import write_geojson_tiles
-        gt = {"point": "point", "line": "linestring",
-              "polygon": "simple_polygon",
-              "complicated_polygon": "complicated_polygon"}
-        for name, df in tables.items():
-            write_geojson_tiles(df, gt[name],
+        for name, (shape, df) in tables.items():
+            write_geojson_tiles(df, shape,
                                 os.path.join(args.out, f"tiles_{name}"))
     elif args.output == "pgcopy":
         from osmquadtree_geometry_spark.pgcopy import write_pgcopy
-        from osmquadtree_geometry_spark.sinks import (
-            pack_tag_columns, route_tables, table_tag_columns)
-        used_style = style or GeometryStyle()
-        tag_cols = table_tag_columns(used_style)
-        routed = route_tables(res.points, res.linestrings,
-                              res.simple_polygons,
-                              res.complicated_polygons, extended=True)
-        for name, df in routed.items():
-            kind = ("point" if "point" in name
-                    else "line" if ("line" in name or "highway" in name
-                                    or "roads" in name)
-                    else "polygon")
-            packed = pack_tag_columns(df, tag_cols[kind])
+        from osmquadtree_geometry_spark.sinks import pg_tables
+        for name, packed in pg_tables(res, style).items():
             write_pgcopy(packed, os.path.join(args.out, f"{name}.copy.d"))
     elif args.output == "postgres":
         from osmquadtree_geometry_spark.sinks import write_postgresql

@@ -208,15 +208,8 @@ def test_write_postgresql_sequencing(spark, tmp_path):
         assert any('CREATE VIEW "public"."planet_osm_all"' in s for s in q)
         # decode the polygon payload with the packed frame's columns:
         # simple polygon keeps its id, complicated polygon is negated
-        from osmquadtree_geometry_spark.config.style import GeometryStyle
-        routed = sinks.route_tables(res.points, res.linestrings,
-                                    res.simple_polygons,
-                                    res.complicated_polygons,
-                                    extended=True)
-        packed = sinks.pack_tag_columns(
-            routed["planet_osm_polygon"],
-            sinks.table_tag_columns(GeometryStyle())["polygon"])
-        pc = pgcopy.copy_columns_for(packed)
+        pc = pgcopy.copy_columns_for(
+            sinks.pg_tables(res)["planet_osm_polygon"])
         rows = pgcopy.parse_copy_payloads(
             srv.copies["public.planet_osm_polygon"], pc)
         assert sorted(r[0] for r in rows) == [-5]
@@ -353,8 +346,8 @@ def test_write_postgresql_quotes_identifiers(spark):
                                 '__stg_') for s in q)
         assert any(s.startswith('CREATE VIEW "OsmData"."planet_osm_all"')
                    for s in q)
-        cols = pgcopy.copy_columns_for(sinks.pack_tag_columns(
-            res.points, sinks.table_tag_columns(style)["point"]))
+        cols = pgcopy.copy_columns_for(
+            sinks.pg_tables(res, style)["planet_osm_point"])
         rows = pgcopy.parse_copy_payloads(
             srv.copies["OsmData.planet_osm_point"], cols)
         assert [dict(zip([c for c, _ in cols], r))[key] for r in rows] \

@@ -1,4 +1,4 @@
-"""Sinks: GeoJSON, sorted tiled write, table routing, DDL generation."""
+"""Sinks: GeoJSON, sorted tiled write, table routing, DDL statement bank."""
 
 import json
 import os
@@ -262,15 +262,21 @@ def test_pgcopy_all_types(spark):
 
 
 def test_ddl():
-    stmts = sinks.generate_ddl("planet_osm_point",
-                               ["amenity", "highway", "name"],
-                               lowzoom=[6, 10])
-    sql = "\n".join(stmts)
-    assert 'CREATE TABLE "public"."planet_osm_point"' in sql
-    assert "USING gist (way)" in sql and "USING gin (tags)" in sql
+    cols = {"planet_osm_point": [("osm_id", "int8"), ("name", "text"),
+                                 ("tags", "hstore"), ("quadtree", "int8")],
+            "planet_osm_line": [("osm_id", "int8"), ("tags", "hstore")]}
+    before, after = sinks.pg_statements(cols, lowzoom=[6, 10])
+    assert before[1] == ('CREATE TABLE "public"."planet_osm_point" '
+                         '("osm_id" bigint, "name" text, "tags" hstore, '
+                         '"quadtree" bigint)')
+    sql = "\n".join(after)
+    assert "(quadtree)" in sql and "USING gin (tags)" in sql
     assert "planet_osm_point_z6" in sql and "minzoom <= 10" in sql
-    v = sinks.union_compat_view(["planet_osm_point", "planet_osm_line"])
-    assert "UNION ALL" in v
+    assert after[-1] == (
+        'CREATE VIEW "public"."planet_osm_all" AS '
+        'SELECT osm_id, tags, quadtree, minzoom FROM "public"."planet_osm_line"'
+        ' UNION ALL SELECT osm_id, tags, quadtree, minzoom '
+        'FROM "public"."planet_osm_point"')
 
 
 def test_generated_identifiers_are_quoted():
@@ -279,22 +285,63 @@ def test_generated_identifiers_are_quoted():
     early, and a mixed-case schema is not folded to lower case."""
     from osmquadtree_geometry_spark import pgcopy
     key = 'say "hi"'
-    stmts = sinks.generate_ddl("Pts", ["name", key], lowzoom=[6],
-                               schema="OsmData")
-    assert stmts[0] == 'DROP TABLE IF EXISTS "OsmData"."Pts" CASCADE'
-    assert '"say ""hi""" text' in stmts[1]
-    assert stmts[2].startswith('CREATE INDEX "Pts_way_idx" ON "OsmData"."Pts"')
-    assert stmts[4].startswith('CREATE VIEW "OsmData"."Pts_json" AS')
-    assert stmts[5].startswith('CREATE VIEW "OsmData"."Pts_z6" AS')
-    assert sinks.union_compat_view(["a"], view="All", schema="OsmData") == (
-        'CREATE VIEW "OsmData"."All" AS '
-        'SELECT osm_id, tags, way FROM "OsmData"."a"')
-    assert pgcopy.ledger_ddl("OsmData").startswith(
+    before, after = sinks.pg_statements(
+        {"Pts": [("name", "text"), (key, "text")]}, lowzoom=[6],
+        schema="OsmData", exactly_once=True)
+    assert before[0].startswith(
         'CREATE TABLE IF NOT EXISTS "OsmData"."_pg_deliveries" (')
+    assert before[1] == ('DELETE FROM "OsmData"."_pg_deliveries" '
+                         "WHERE target = 'Pts'")
+    assert before[2] == 'DROP TABLE IF EXISTS "OsmData"."Pts" CASCADE'
+    assert '"say ""hi""" text' in before[3]
+    assert after[0].startswith('CREATE INDEX "Pts_qt_idx" ON "OsmData"."Pts"')
+    assert after[2].startswith('CREATE VIEW "OsmData"."Pts_z6" AS')
+    assert after[3] == ('CREATE VIEW "OsmData"."planet_osm_all" AS '
+                        'SELECT osm_id, tags, quadtree, minzoom '
+                        'FROM "OsmData"."Pts"')
     assert pgcopy.copy_sql("Pts", [("osm_id", "int8"), (key, "text")],
                            "OsmData") == (
         'COPY "OsmData"."Pts" ("osm_id", "say ""hi""") '
         "FROM STDIN WITH (FORMAT binary)")
+
+
+@pytest.mark.parametrize("extended", [True, False])
+def test_ddl_declares_the_copy_columns(res, extended):
+    """Each CREATE TABLE of the statement bank declares exactly the
+    columns its COPY payload carries, by name, order and type: the
+    packed frames' ``tile`` column included."""
+    import re
+    from osmquadtree_geometry_spark import pgcopy
+    tables = sinks.pg_tables(res, extended=extended)
+    cols = {name: pgcopy.copy_columns_for(df) for name, df in tables.items()}
+    before, _ = sinks.pg_statements(cols)
+    created = {}
+    for s in before:
+        m = re.fullmatch(r'CREATE TABLE "public"\."(\w+)" \((.*)\)', s)
+        if m:
+            created[m[1]] = re.findall(r'"((?:[^"]|"")*)" ([a-z ]+?)(?:, |$)',
+                                       m[2])
+    assert set(created) == set(tables)
+    pg_type = {"int8": "bigint", "text": "text", "hstore": "hstore",
+               "float8": "double precision", "bool": "boolean",
+               "bytea": "bytea"}
+    for name, df in tables.items():
+        exp = [(c, pg_type[k]) for c, k in pgcopy.copy_columns_for(df)]
+        assert created[name] == exp, name
+    assert ("tile", "bigint") in created["planet_osm_point"]
+
+
+def test_spark_ddl_quotes_names(res, spark, tmp_path):
+    """A table name that is not a bare Spark SQL identifier
+    (``osm-point``) still gets its table, lowzoom and union views."""
+    pp = str(tmp_path / "pts")
+    res.points.write.parquet(pp)
+    sinks.execute_spark_ddl(spark, {"osm-point": pp}, lowzoom=[10],
+                            union_view="osm-all")
+    assert spark.table("`osm-point`").count() == res.points.count()
+    assert spark.sql("SELECT * FROM `osm-point_z10`").count() == \
+        res.points.where(F.col("minzoom") <= 10).count()
+    assert spark.table("`osm-all`").count() == res.points.count()
 
 
 def test_executed_spark_ddl(res, spark, tmp_path):

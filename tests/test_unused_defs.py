@@ -1,11 +1,13 @@
 """Guard against dead code regrowing: every top-level def or class of
-the package must be named somewhere in the repository's Python files
-(``plans/`` excluded) outside its own definition."""
+the package must be referenced by code somewhere in the repository's
+Python files (``plans/`` excluded) outside its own definition.  A
+reference is a name, an attribute or an imported name in the parsed
+code; a word in a docstring, a comment or a string does not count."""
 
 import ast
 import os
-import re
 import subprocess
+from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "osmquadtree_geometry_spark"
@@ -26,24 +28,37 @@ def _python_files() -> list[str]:
             and os.path.exists(os.path.join(ROOT, f))]
 
 
+def _references(trees: dict[str, ast.AST]) -> dict[str, list]:
+    """name -> (file, line) of each name, attribute or imported name
+    spelling it."""
+    refs = defaultdict(list)
+    for f, tree in trees.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs[node.id].append((f, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                refs[node.attr].append((f, node.lineno))
+            elif isinstance(node, ast.alias):
+                for part in node.name.split("."):
+                    refs[part].append((f, node.lineno))
+    return refs
+
+
 def unused_defs() -> list[str]:
-    files = _python_files()
-    texts = {f: open(os.path.join(ROOT, f), encoding="utf-8").read()
-             for f in files}
+    trees = {f: ast.parse(open(os.path.join(ROOT, f), encoding="utf-8")
+                          .read()) for f in _python_files()}
+    refs = _references(trees)
     unused = []
-    for f in files:
+    for f, tree in trees.items():
         if not f.startswith(PACKAGE + "/"):
             continue
-        lines = texts[f].splitlines()
-        for node in ast.parse(texts[f]).body:
+        for node in tree.body:
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
                                      ast.ClassDef)):
                 continue
             start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            rest = lines[:start - 1] + lines[node.end_lineno:]
-            word = re.compile(rf"\b{re.escape(node.name)}\b")
-            others = (t for g, t in texts.items() if g != f)
-            if not any(word.search(t) for t in ["\n".join(rest), *others]):
+            if not any(g != f or not start <= line <= node.end_lineno
+                       for g, line in refs[node.name]):
                 unused.append(f"{f}:{node.lineno} {node.name}")
     return unused
 
