@@ -697,12 +697,6 @@ class MinZoomSpec:
             return v
         return None if v > self.max_minzoom else v
 
-    def find_point(self, tags: dict) -> int | None:
-        return self._cap(self._find(self.points, tags))
-
-    def find_line(self, tags: dict) -> int | None:
-        return self._cap(self._find(self.lines, tags))
-
     def find_polygon(self, tags: dict, area: float) -> int | None:
         v = self._find(self.polygons, tags)
         if v is None:

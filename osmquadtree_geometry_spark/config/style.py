@@ -271,7 +271,3 @@ class GeometryStyle:
                 clauses.append(f"(map_contains_key({tags}, {key}) "
                                f"AND NOT {tags}[{key}] IN ({lst}))")
         return "(" + " OR ".join(clauses) + ")" if clauses else "false"
-
-    def sql_is_multipolygon_rel(self, tags: str) -> str:
-        """`multipolygons.rs:79-99`: type in (multipolygon, boundary)."""
-        return f"{tags}['type'] IN ('multipolygon', 'boundary')"

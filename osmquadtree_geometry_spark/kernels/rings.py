@@ -15,9 +15,8 @@ Semantic transcription (order-sensitive!) of the reference algorithms:
     (`complicatedpolygongeometry.rs:389-407`).
 
 These run once per packed relation row inside a ``mapInPandas``
-batch kernel (operators/multipolygons.py phase 3) — member counts
-are small (mega-relations are handled by salting the shuffle, not by
-changing this kernel).
+batch kernel (operators/multipolygons.py phase 2); a mega-relation is
+one wide row, and its memory grows linearly with its member count.
 """
 
 from __future__ import annotations

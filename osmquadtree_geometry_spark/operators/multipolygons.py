@@ -1,5 +1,5 @@
 """J2 — ProcessMultiPolygons: relation ⋈ member ways, ring assembly
-with winding repair, as a salted two-phase shuffle + a
+with winding repair, as one per-relation aggregation + a
 ``mapInPandas`` kernel over packed relation rows.
 
 Reference: `/root/reference/src/multipolygons.rs:103-508` (streaming
@@ -11,27 +11,24 @@ state machine keyed on tile order).  Batch rebuild:
   phase 1 (SQL): explode Way members, join assembled ways (member ways
       missing from the input are skipped, mirroring the reference's
       ``wnas`` counter path `multipolygons.rs:232-237`);
-  phase 2 (salted partial-agg): ``groupBy(rel_id, salt)`` collects
-      member structs into compact arrays — this bounds the widest
-      shuffle row for mega-relations (coastlines, admin boundaries:
-      the skew case called out by the north rule);
-  phase 3 (``groupBy(rel_id)`` packs each relation into one row, then
-      ``mapInPandas`` over Arrow batches of them): pure-Python ring
-      assembly (kernels.rings — exact transcription of merge order),
-      winding repair, area sum, WKB; errors go to a side output
-      instead of aborting (`lib.rs:61-66`).
+  phase 2 (``groupBy(rel_id)`` packs each relation's member structs
+      into one row, then ``mapInPandas`` over Arrow batches of them):
+      pure-Python ring assembly (kernels.rings — exact transcription
+      of merge order), winding repair, area sum, WKB; errors go to a
+      side output instead of aborting (`lib.rs:61-66`).
 
 Output quadtree = ``calculate(bounds, 18, 0.0)`` over the exterior
 bbox, matching MakeGeometries' recalc (`process_geometry.rs:306-309`).
 
 Measured mega-relation envelope (scripts/mega_relation_probe.py):
-10⁴ member ways -> 17 MB peak task memory; 10⁵ ways (a 400k-point
-coastline ring) -> 549 MiB peak task memory, 23 s wall at local[32],
-digest parity with the DuckDB oracle (BENCH/ROUND5.md §3).  Peak
-memory sits in the phase-3 assembly task (all N_SALT partials + the
-merged ring buffers of ONE relation), so it grows ~linearly with
-member count; a 10⁶-way pathology needs executors with multi-GB task
-headroom or N_SALT raised with it.
+10⁴ member ways -> 104 MiB peak task execution memory and 15-18 s
+wall for decode + J1 + J2 in a fresh local[4] session on a 4-core
+host, digest parity with the DuckDB oracle; 10⁵ ways (a 400k-point
+coastline ring) -> 549 MiB peak task memory, 23 s wall at local[32]
+on an earlier revision (BENCH/ROUND5.md §3).  Peak memory sits in the
+phase-2 assembly task (the packed row + the merged ring buffers of ONE
+relation), so it grows ~linearly with member count; a 10⁶-way
+pathology needs executors with multi-GB task headroom.
 """
 
 from __future__ import annotations
@@ -47,8 +44,6 @@ from ..config.style import GeometryStyle
 from ..kernels import quadtree as qtk
 from ..kernels import rings as ringk
 from ..kernels import wkb as wkbk
-
-N_SALT = 16
 
 PARTS_TYPE = ("array<struct<exterior:array<struct<lon:int,lat:int>>,"
               "interiors:array<array<struct<lon:int,lat:int>>>,area:double>>")
@@ -163,24 +158,16 @@ def process_multipolygons(relations: DataFrame, ways_ll: DataFrame,
     # inner join: missing member ways are skipped (reference wnas path)
     jm = mem.join(w, "way_id")
 
-    # phase 2: salted partial aggregation bounds shuffle-row width for
-    # mega-relations before the final per-relation group
-    salted = (jm.withColumn("salt", F.pmod(F.col("way_id"), F.lit(N_SALT)))
-              .groupBy("id", "salt")
+    # pack each relation into ONE row, then assemble whole Arrow
+    # batches of relations (mapInPandas — per-relation cost is a
+    # python dict, not a per-group pandas DataFrame); the kernel sorts
+    # members by pos, so collect order does not matter
+    packed = (jm.groupBy("id")
               .agg(F.first("doc_id").alias("doc_id"),
                    F.first("ftags").alias("ftags"),
                    F.first("layer").alias("layer"),
                    F.collect_list(F.struct("pos", "way_id", "role", "refs",
                                            "lonlats")).alias("members")))
-
-    # phase 3: pack each relation into ONE row, then assemble whole
-    # Arrow batches of relations (mapInPandas — per-relation cost is a
-    # python dict, not a per-group pandas DataFrame)
-    packed = (salted.groupBy("id")
-              .agg(F.first("doc_id").alias("doc_id"),
-                   F.first("ftags").alias("ftags"),
-                   F.first("layer").alias("layer"),
-                   F.flatten(F.collect_list("members")).alias("members")))
     # shared parent of BOTH outputs (ok rows + error rows): scoped
     # persist so a consumer materializing one output doesn't re-run
     # the whole join+assembly for the other (released by the caller's

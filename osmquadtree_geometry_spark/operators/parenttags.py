@@ -8,14 +8,15 @@ push ``(value, priority)`` onto each referenced node that carries one
 of ``node_keys``; the node keeps the max-priority value and appends it
 as tag ``k``.
 
-Batch rebuild: explode way refs -> join candidate nodes ->
-``max_by(value, priority)`` per (node, spec key) -> left-join back and
-``map_concat``.  Tie-break: the reference keeps the FIRST way seen in
-tile-stream order on equal priority (`addparenttag.rs:108-112`); we
-tie-break ``(priority DESC, way_id ASC)``.  CAVEAT (documented
-divergence): within one quadtree block the stream is sorted by id
-(T1), so first-seen == lowest id and the tie-break reproduces the
-reference exactly — which covers every fixture case.  Across DIFFERENT
+Batch rebuild: explode way refs -> join candidate nodes -> one
+groupBy(node) holding a ``max_by(value, priority)`` per spec key ->
+left-join back and ``map_concat``.  Tie-break: the reference keeps
+the FIRST way seen in tile-stream order on equal priority
+(`addparenttag.rs:108-112`); we tie-break ``(priority DESC, way_id
+ASC)``.  CAVEAT (documented divergence): within one quadtree block
+the stream is sorted by id (T1), so first-seen == lowest id and the
+tie-break reproduces the reference exactly — which covers every
+fixture case.  Across DIFFERENT
 blocks, equal-priority ways stream in tile order, not id order, so a
 cross-tile tie can in principle pick a different (equally-prioritized)
 way than the reference; our pick is deterministic and order-free where
@@ -30,49 +31,14 @@ from pyspark.sql import functions as F
 from ..config.style import GeometryStyle
 
 
-def parent_tag_rows(nodes: DataFrame, ways: DataFrame,
+def parent_tag_maps(nodes: DataFrame, ways: DataFrame,
                     style: GeometryStyle) -> DataFrame:
-    """(node_id, spec_key, val) — the winning parent-tag value per
-    (node, spec)."""
-    contribs = []
-    for spec_key, sp in style.parent_tags.items():
-        w = ways.where(F.col("tags")[sp.way_key].isNotNull())
-        if sp.way_priority:
-            prio_map = F.create_map(
-                *[x for k, p in sp.way_priority.items()
-                  for x in (F.lit(k), F.lit(int(p)))])
-            w = (w.withColumn("prio", prio_map[F.col("tags")[sp.way_key]])
-                 .where(F.col("prio").isNotNull()))
-        else:
-            w = w.withColumn("prio", F.lit(0))
-        c = (w.select(F.explode("refs").alias("node_id"),
-                      F.col("tags")[sp.way_key].alias("val"),
-                      "prio", F.col("id").alias("way_id"))
-             .withColumn("spec_key", F.lit(spec_key))
-             .withColumn("node_keys", F.array(*[F.lit(k) for k in sp.node_keys])))
-        contribs.append(c)
-
-    allc = contribs[0]
-    for c in contribs[1:]:
-        allc = allc.unionByName(c)
-
-    cand = nodes.select(F.col("id").alias("node_id"),
-                        F.map_keys("tags").alias("nkeys"))
-    j = (allc.join(cand, "node_id")
-         .where(F.arrays_overlap("node_keys", "nkeys")))
-    return (j.groupBy("node_id", "spec_key")
-            .agg(F.expr("max_by(val, struct(prio, -way_id))").alias("val")))
-
-
-def _parent_tag_maps(nodes: DataFrame, ways: DataFrame,
-                     style: GeometryStyle) -> DataFrame:
-    """(node_id, parent_tags map) in ONE node-keyed aggregation
-    (round-6, guide §2.4): the per-(node, spec) argmax runs as a
-    conditional ``max_by`` per spec inside a single groupBy(node_id),
-    fusing ``parent_tag_rows``'s groupBy + the map regroup — one
-    exchange instead of two.  The map entries come out in ascending
-    spec_key order, exactly what ``array_sort(collect_list(struct(
-    spec_key, val)))`` produced (one entry per key)."""
+    """(node_id, parent_tags map) in ONE node-keyed aggregation: each
+    (spec, way, referenced node) whose way value has a priority and
+    whose node carries one of the spec's ``node_keys`` contributes, and
+    the per-(node, spec) argmax runs as a conditional ``max_by`` per
+    spec inside a single groupBy(node_id).  The map entries come out in
+    ascending spec_key order, one entry per spec that has a winner."""
     contribs = []
     for spec_key, sp in style.parent_tags.items():
         w = ways.where(F.col("tags")[sp.way_key].isNotNull())
@@ -97,25 +63,35 @@ def _parent_tag_maps(nodes: DataFrame, ways: DataFrame,
                         F.map_keys("tags").alias("nkeys"))
     j = (allc.join(cand, "node_id")
          .where(F.arrays_overlap("node_keys", "nkeys")))
+    keys = sorted(style.parent_tags)
     winners = [
         F.expr(f"max_by(if(spec_key = '{k}', val, null), "
                f"if(spec_key = '{k}', struct(prio, -way_id), null))")
         .alias(f"__w{i}")
-        for i, k in enumerate(sorted(style.parent_tags))]
+        for i, k in enumerate(keys)]
     entries = ", ".join(
         f"struct('{k}' as spec_key, __w{i} as val)"
-        for i, k in enumerate(sorted(style.parent_tags)))
+        for i, k in enumerate(keys))
     return (j.groupBy("node_id").agg(*winners)
             .select("node_id", F.expr(
                 f"map_from_entries(filter(array({entries}), "
                 f"e -> e.val is not null))").alias("parent_tags")))
 
 
+def parent_tag_rows(nodes: DataFrame, ways: DataFrame,
+                    style: GeometryStyle) -> DataFrame:
+    """(node_id, spec_key, val) — the winning parent-tag value per
+    (node, spec): the entries of :func:`parent_tag_maps`."""
+    return (parent_tag_maps(nodes, ways, style)
+            .select("node_id", F.explode("parent_tags")
+                    .alias("spec_key", "val")))
+
+
 def add_parent_tags(nodes: DataFrame, ways: DataFrame,
                     style: GeometryStyle) -> DataFrame:
     if not style.parent_tags:
         return nodes
-    add = _parent_tag_maps(nodes, ways, style)
+    add = parent_tag_maps(nodes, ways, style)
     return (nodes.join(add, nodes["id"] == add["node_id"], "left")
             .withColumn("tags", F.when(F.col("parent_tags").isNotNull(),
                                        F.map_concat("tags", "parent_tags"))

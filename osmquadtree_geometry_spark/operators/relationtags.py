@@ -12,8 +12,8 @@ Reference: `/root/reference/src/relationtags.rs:21-227`.
         joined with '; ' (`:89-110`)
   * the result is appended as tag ``target_key``.
 
-Batch rebuild: explode members -> aggregate per (way, spec) with
-min/max(try_cast) or sorted-distinct array_join -> pivot to a map ->
+Batch rebuild: explode members -> one groupBy(way) holding a
+min/max(try_cast) or sorted-distinct array_join per spec -> a map ->
 left-join + map_concat.  All JVM-side.
 """
 
@@ -25,61 +25,14 @@ from pyspark.sql import functions as F
 from ..config.style import GeometryStyle
 
 
-def relation_tag_rows(relations: DataFrame, style: GeometryStyle) -> DataFrame:
-    """(way_id, target_key, out_val, spec_idx) — the aggregated tag
-    values each member way receives."""
-    contribs = []
-    for i, sp in enumerate(style.relation_tag_spec):
-        cond = F.lit(True)
-        for k, v in sp.source_filter.items():
-            cond = cond & (F.col("tags")[k] == v)
-        cond = cond & F.col("tags")[sp.source_key].isNotNull()
-        c = (relations.where(cond)
-             .select(F.col("tags")[sp.source_key].alias("val"),
-                     F.explode("members").alias("m"))
-             .where(F.col("m.mem_type") == "way")
-             .select(F.col("m.mem_ref").alias("way_id"),
-                     F.lit(i).alias("spec_idx"), "val"))
-        contribs.append(c)
-
-    allc = contribs[0]
-    for c in contribs[1:]:
-        allc = allc.unionByName(c)
-
-    agged = (allc.groupBy("way_id", "spec_idx")
-             .agg(F.min(F.expr("try_cast(val as bigint)")).alias("minv"),
-                  F.max(F.expr("try_cast(val as bigint)")).alias("maxv"),
-                  F.expr("array_join(array_sort(array_distinct(collect_list(val))), '; ')")
-                  .alias("listv")))
-    # resolve per-spec op + target key
-    op_case = F.lit(None).cast("string")
-    key_map = F.create_map(*[x for i, sp in enumerate(style.relation_tag_spec)
-                             for x in (F.lit(i), F.lit(sp.target_key))])
-    for i, sp in enumerate(style.relation_tag_spec):
-        if sp.op_type == "min":
-            v = F.col("minv").cast("string")
-        elif sp.op_type == "max":
-            v = F.col("maxv").cast("string")
-        else:
-            v = F.when(F.col("listv") != "", F.col("listv"))
-        op_case = F.when(F.col("spec_idx") == i, v).otherwise(op_case)
-
-    return (agged.withColumn("out_val", op_case)
-            .where(F.col("out_val").isNotNull())
-            .select("way_id", key_map[F.col("spec_idx")].alias("target_key"),
-                    "out_val", "spec_idx"))
-
-
-def _relation_tag_maps(relations: DataFrame,
-                       style: GeometryStyle) -> DataFrame:
-    """(way_id, rel_tags map) in ONE way-keyed aggregation (round-6,
-    guide §2.4): per-spec conditional min/max/sorted-distinct-list
-    aggregates inside a single groupBy(way_id), fusing
-    ``relation_tag_rows``'s (way, spec) groupBy + the map regroup —
-    one exchange instead of two.  Entries emit in ascending spec_idx
-    order with null ops filtered, exactly the map the old
-    ``array_sort(collect_list(struct(spec_idx, ...)))`` built
-    (duplicate target_keys resolve LAST_WIN by spec order in both)."""
+def relation_tag_maps(relations: DataFrame,
+                      style: GeometryStyle) -> DataFrame:
+    """(way_id, rel_tags map) in ONE way-keyed aggregation: each
+    matching relation pushes (spec index, value) to its member ways,
+    and per-spec conditional min/max/sorted-distinct-list aggregates
+    run inside a single groupBy(way_id).  Entries emit in ascending
+    spec order with null results filtered (duplicate target_keys
+    resolve LAST_WIN by spec order); ways with no entry are dropped."""
     contribs = []
     for i, sp in enumerate(style.relation_tag_spec):
         cond = F.lit(True)
@@ -121,11 +74,19 @@ def _relation_tag_maps(relations: DataFrame,
             .where(F.size("rel_tags") > 0))
 
 
+def relation_tag_rows(relations: DataFrame, style: GeometryStyle) -> DataFrame:
+    """(way_id, target_key, out_val) — the aggregated tag values each
+    member way receives: the entries of :func:`relation_tag_maps`."""
+    return (relation_tag_maps(relations, style)
+            .select("way_id", F.explode("rel_tags")
+                    .alias("target_key", "out_val")))
+
+
 def add_relation_tags(ways: DataFrame, relations: DataFrame,
                       style: GeometryStyle) -> DataFrame:
     if not style.relation_tag_spec:
         return ways
-    add = _relation_tag_maps(relations, style)
+    add = relation_tag_maps(relations, style)
     return (ways.join(add, ways["id"] == add["way_id"], "left")
             .withColumn("tags", F.when(F.col("rel_tags").isNotNull(),
                                        F.map_concat("tags", "rel_tags"))

@@ -491,8 +491,10 @@ def pack_tag_columns(df: DataFrame, tag_columns: list[str]) -> DataFrame:
     """G15 data-side column packing (`prepcopy.rs:238-290`
     pack_common): each tag whose key has a dedicated column is
     projected into that text column; every other tag lands in the
-    ``tags`` catch-all map (hstore analogue).  Pure JVM projection —
-    no shuffle at any scale."""
+    ``tags`` catch-all map (hstore analogue).  Every table ends in the
+    same ``layer, z_order, minzoom, quadtree`` columns (null where the
+    features have none, as points have no z_order).  Pure JVM
+    projection — no shuffle at any scale."""
     seen: set[str] = set()
     cols = []
     for k in tag_columns:
@@ -502,11 +504,11 @@ def pack_tag_columns(df: DataFrame, tag_columns: list[str]) -> DataFrame:
         cols.append(F.col("tags").getItem(k).alias(k))
     keys_lit = ", ".join("'" + k.replace("'", "''") + "'" for k in sorted(seen))
     other = F.expr(f"map_filter(tags, (k, v) -> NOT k IN ({keys_lit}))")
-    base = [F.col("id").alias("osm_id"), *cols, other.alias("tags")]
-    for c in ("layer", "z_order", "minzoom", "quadtree", "tile"):
-        if c in df.columns:
-            base.append(F.col(c))
-    return df.select(*base)
+    trailing = [F.col(c) if c in df.columns
+                else F.lit(None).cast("long").alias(c)
+                for c in ("layer", "z_order", "minzoom", "quadtree")]
+    return df.select(F.col("id").alias("osm_id"), *cols, other.alias("tags"),
+                     *trailing)
 
 
 def pg_tables(res, style=None, extended: bool = True) -> dict[str, DataFrame]:

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""spark-submit entry point for the geometry pipeline.
+"""Command-line entry point for the geometry pipeline.
 
-    spark-submit --py-files osmquadtree_geometry_spark_pkg.zip \
-        scripts/run_pipeline.py --docs <docs.parquet> --out <workdir> \
-        [--resume] [--max-minzoom N]
+    python scripts/run_pipeline.py --docs <docs.parquet> --out <workdir> \
+        [--force] [--max-minzoom N] [--output FORM]
 
+(or the same arguments under ``spark-submit scripts/run_pipeline.py``).
 Runs the full checkpointed pipeline (north rule: resumable
 mid-tiling with per-partition lineage), writes the four geometry
 tables + errors + lineage under --out, and prints a JSON summary.
-Build the zip with:  cd <repo> && \
-    python -c "import shutil; shutil.make_archive('osmquadtree_geometry_spark_pkg','zip','.','osmquadtree_geometry_spark')"
+The package ships itself to the executors (``session.ship_package``).
 """
 
 from __future__ import annotations
@@ -92,6 +91,8 @@ def main() -> None:
     from pyspark.sql import SparkSession
     spark = SparkSession.builder.appName("osmquadtree-geometry-spark").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    from osmquadtree_geometry_spark.session import ship_package
+    ship_package(spark)
 
     from osmquadtree_geometry_spark.config.minzoom import MinZoomSpec
     from osmquadtree_geometry_spark.pipeline import (
@@ -140,10 +141,19 @@ def main() -> None:
             write_geojson_tiles(df, shape,
                                 os.path.join(args.out, f"tiles_{name}"))
     elif args.output == "pgcopy":
-        from osmquadtree_geometry_spark.pgcopy import write_pgcopy
-        from osmquadtree_geometry_spark.sinks import pg_tables
-        for name, packed in pg_tables(res, style).items():
-            write_pgcopy(packed, os.path.join(args.out, f"{name}.copy.d"))
+        from osmquadtree_geometry_spark.pgcopy import (
+            copy_columns_for, write_pgcopy)
+        from osmquadtree_geometry_spark.sinks import pg_statements, pg_tables
+        packed = pg_tables(res, style)
+        for name, df in packed.items():
+            write_pgcopy(df, os.path.join(args.out, f"{name}.copy.d"))
+        # the DDL that loads them: before.sql ahead of the COPYs,
+        # after.sql (indexes, views) once they are in
+        statements = pg_statements({name: copy_columns_for(df)
+                                    for name, df in packed.items()})
+        for fname, stmts in zip(("before.sql", "after.sql"), statements):
+            with open(os.path.join(args.out, fname), "w") as f:
+                f.writelines(f"{st};\n" for st in stmts)
     elif args.output == "postgres":
         from osmquadtree_geometry_spark.sinks import write_postgresql
         if not args.pg_dsn:

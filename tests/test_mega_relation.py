@@ -1,16 +1,14 @@
-"""Coastline-scale mega-relation bound test (round-3 verdict Next #6).
+"""Coastline-scale mega-relation test (round-3 verdict Next #6).
 
-The skew case the salted phase-2 aggregate exists for: ONE relation
-with thousands of member ways (reference: continent coastlines /
-admin boundaries, multipolygons.rs streaming state machine keyed on
-tile order).  Asserts (a) assembly completes and is correct against
-the DuckDB q_multipolygons_full oracle on the same fixture, (b) the
-salted partial aggregation keeps the widest shuffle row at ~1/N_SALT
-of the unsalted width.
+The skew case for J2: ONE relation with thousands of member ways
+(reference: continent coastlines / admin boundaries, multipolygons.rs
+streaming state machine keyed on tile order).  Asserts that assembly
+completes and is correct against the DuckDB q_multipolygons_full
+oracle on the same fixture.
 
-The suite runs at 2_000 member ways for time; the 10^4-way local[32]
-probe (scripts/mega_relation_probe.py) records wall time and peak
-task execution memory in BENCH/ROUND4.md.
+The suite runs at 2_000 member ways for time; the probe
+(scripts/mega_relation_probe.py) records wall time and peak task
+execution memory at 10^4 ways and more.
 """
 
 import duckdb
@@ -34,7 +32,7 @@ def test_mega_relation_assembly_bounded_and_oracle_green(spark, mega_docs):
     from osmquadtree_geometry_spark.config.style import GeometryStyle
     from osmquadtree_geometry_spark.decode import decode_all, read_docs
     from osmquadtree_geometry_spark.operators.multipolygons import (
-        N_SALT, process_multipolygons)
+        process_multipolygons)
     from osmquadtree_geometry_spark.operators.waynodes import collect_way_nodes
 
     style = GeometryStyle()
@@ -70,15 +68,3 @@ def test_mega_relation_assembly_bounded_and_oracle_green(spark, mega_docs):
     o = odf.iloc[0]
     assert int(o["n_parts"]) == 1
     assert int(o["area2_raw"]) == int(r.area2_raw)
-
-    # salted phase-2 bound: the widest (rel, salt) partial group is
-    # ~members/N_SALT — a coastline relation never materializes as one
-    # full-width shuffle row before the final per-relation pack
-    mem = (t["relations"].select("id", F.explode("members").alias("m"))
-           .where(F.col("m.mem_type") == "way"))
-    w = (mem.withColumn("salt", F.pmod(F.col("m.mem_ref"), F.lit(N_SALT)))
-         .groupBy("id", "salt").count()
-         .agg(F.max("count").alias("mx"), F.sum("count").alias("tot"))
-         .collect()[0])
-    assert w["tot"] == N_WAYS
-    assert w["mx"] <= (N_WAYS + N_SALT - 1) // N_SALT + 1

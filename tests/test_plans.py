@@ -345,3 +345,40 @@ def test_lsh_ann_caches_and_shuffles_ids_only(spark):
         assert not any("embedding" in ln for ln in aggs), aggs
     finally:
         cache.release(handles)
+
+
+def test_multipolygon_packs_each_relation_in_one_aggregate(spark, decoded):
+    """J2 joins member ways and packs each relation with ONE
+    aggregation keyed by the relation id alone: between the member
+    join and the MapInPandas assembly, the executed plan holds one
+    final aggregate (plus its partial) and one Exchange, keyed by
+    ``id`` with no salt."""
+    import re
+
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.config.style import GeometryStyle
+    from osmquadtree_geometry_spark.operators.multipolygons import (
+        process_multipolygons)
+    from osmquadtree_geometry_spark.operators.waynodes import collect_way_nodes
+    ways_ll, _ = collect_way_nodes(decoded["ways"], decoded["nodes"])
+    with cache.scope() as handles:
+        ok, _errs = process_multipolygons(decoded["relations"], ways_ll,
+                                          GeometryStyle())
+    try:
+        assert ok.count() > 0
+        (assembled,) = [h for h in handles if "wkb" in h.columns]
+        plan = re.sub(r"#\d+L?", "",
+                      assembled._jdf.queryExecution().executedPlan().toString())
+        lines = plan.splitlines()
+        top = next(i for i, ln in enumerate(lines) if "MapInPandas" in ln)
+        join = next(i for i in range(top, len(lines)) if "Join" in lines[i])
+        between = lines[top + 1:join]
+        aggs = [ln for ln in between if "Aggregate(key=" in ln]
+        final = [ln for ln in aggs if "partial_" not in ln]
+        assert len(final) == 1 and len(aggs) == 2, aggs
+        assert all("Aggregate(key=[id]" in ln for ln in aggs), aggs
+        exchanges = [ln for ln in between if "Exchange " in ln]
+        assert len(exchanges) == 1 and "hashpartitioning(id, " in exchanges[0]
+        assert "salt" not in "\n".join(between)
+    finally:
+        cache.release(handles)

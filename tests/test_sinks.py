@@ -305,30 +305,44 @@ def test_generated_identifiers_are_quoted():
         "FROM STDIN WITH (FORMAT binary)")
 
 
+def _created_columns(statements) -> dict[str, list[tuple[str, str]]]:
+    """{table: [(column, pgcopy kind)]} declared by each CREATE TABLE
+    among ``statements`` (a trailing ``;`` allowed)."""
+    import re
+    kind = {"bigint": "int8", "text": "text", "hstore": "hstore",
+            "double precision": "float8", "boolean": "bool",
+            "bytea": "bytea"}
+    created = {}
+    for s in statements:
+        m = re.fullmatch(r'CREATE TABLE "public"\."(\w+)" \((.*)\);?', s)
+        if m:
+            created[m[1]] = [
+                (c.replace('""', '"'), kind[t]) for c, t in
+                re.findall(r'"((?:[^"]|"")*)" ([a-z ]+?)(?:, |$)', m[2])]
+    return created
+
+
 @pytest.mark.parametrize("extended", [True, False])
 def test_ddl_declares_the_copy_columns(res, extended):
     """Each CREATE TABLE of the statement bank declares exactly the
-    columns its COPY payload carries, by name, order and type: the
-    packed frames' ``tile`` column included."""
-    import re
+    columns its COPY payload carries, by name, order and type."""
     from osmquadtree_geometry_spark import pgcopy
     tables = sinks.pg_tables(res, extended=extended)
     cols = {name: pgcopy.copy_columns_for(df) for name, df in tables.items()}
     before, _ = sinks.pg_statements(cols)
-    created = {}
-    for s in before:
-        m = re.fullmatch(r'CREATE TABLE "public"\."(\w+)" \((.*)\)', s)
-        if m:
-            created[m[1]] = re.findall(r'"((?:[^"]|"")*)" ([a-z ]+?)(?:, |$)',
-                                       m[2])
-    assert set(created) == set(tables)
-    pg_type = {"int8": "bigint", "text": "text", "hstore": "hstore",
-               "float8": "double precision", "bool": "boolean",
-               "bytea": "bytea"}
-    for name, df in tables.items():
-        exp = [(c, pg_type[k]) for c, k in pgcopy.copy_columns_for(df)]
-        assert created[name] == exp, name
-    assert ("tile", "bigint") in created["planet_osm_point"]
+    assert _created_columns(before) == cols
+
+
+@pytest.mark.parametrize("extended", [True, False])
+def test_pg_tables_share_trailing_columns(res, extended):
+    """Every PostgreSQL table ends in the same typed columns, quadtree
+    last; none carries the layout's ``tile``."""
+    from osmquadtree_geometry_spark import pgcopy
+    for name, df in sinks.pg_tables(res, extended=extended).items():
+        cols = pgcopy.copy_columns_for(df)
+        assert cols[-4:] == [("layer", "int8"), ("z_order", "int8"),
+                             ("minzoom", "int8"), ("quadtree", "int8")], name
+        assert "tile" not in dict(cols), name
 
 
 def test_spark_ddl_quotes_names(res, spark, tmp_path):
@@ -488,3 +502,43 @@ def test_write_feature_tables_failure_waits_for_every_write(res, spark,
     for name in ("points", "way_features", "complicated_polygons",
                  "poly_cover", "points_cells"):
         assert (out / name / "_SUCCESS").exists(), name
+
+
+def test_cli_pgcopy_writes_its_ddl(docs_path, tmp_path):
+    """``scripts/run_pipeline.py --output pgcopy`` writes, next to each
+    ``<table>.copy.d``, the statements that create and index its
+    table: ``before.sql`` declares every table, and each table's COPY
+    files parse with the columns its CREATE TABLE declares.  The CLI
+    runs without PYTHONPATH, so its Python stages work only because it
+    ships the package to the executors itself."""
+    import glob
+    import subprocess
+    import sys
+
+    from osmquadtree_geometry_spark import pgcopy
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "pgc"
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_SUBMIT_ARGS"] = "--master local[2] pyspark-shell"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "scripts", "run_pipeline.py"),
+         "--docs", docs_path, "--out", str(out), "--output", "pgcopy"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    counts = json.loads(proc.stdout.strip().splitlines()[-1])["counts"]
+
+    created = _created_columns(
+        (out / "before.sql").read_text().splitlines())
+    dirs = {os.path.basename(d)[:-len(".copy.d")]
+            for d in glob.glob(str(out / "*.copy.d"))}
+    assert set(created) == dirs and len(dirs) == 6
+    rows = {}
+    for name, cols in created.items():
+        data = b"".join(open(p, "rb").read() for p in sorted(
+            glob.glob(str(out / f"{name}.copy.d" / "part-*.copy"))))
+        rows[name] = pgcopy.parse_copy_payloads(data, cols)
+    assert len(rows["planet_osm_point"]) == counts["points"] > 0
+    after = (out / "after.sql").read_text()
+    for name in created:
+        assert f'ON "public"."{name}" (quadtree);' in after
+    assert 'CREATE VIEW "public"."planet_osm_all"' in after
