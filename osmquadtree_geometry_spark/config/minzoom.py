@@ -31,7 +31,7 @@ import csv
 import io
 from dataclasses import dataclass, field
 
-from ..kernels.quadtree import EARTH_WIDTH
+from ..kernels.mercator import EARTH_WIDTH
 
 MAX_MINZOOM = 18
 

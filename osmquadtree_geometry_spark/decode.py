@@ -66,12 +66,7 @@ def decode_tags(spans: DataFrame) -> DataFrame:
 
     tag text: elem=..;id=..;k=..;v=..  (v extracted by offset so it
     may contain any characters incl. '=' and ';')"""
-    t = (spans.where(F.col("kind") == "tag")
-         .select(F.expr(_field(1)).alias("elem"),
-                 F.expr(f"try_cast({_field(2)} as bigint)").alias("id"),
-                 F.expr(_field(3)).alias("k"),
-                 F.expr("substring(text, locate(';v=', text) + 3)").alias("v"))
-         .where(F.col("id").isNotNull()))
+    t = _tag_spans(spans)
 
     def m(elem: str):
         return F.map_from_entries(F.array_sort(F.collect_list(
@@ -82,17 +77,44 @@ def decode_tags(spans: DataFrame) -> DataFrame:
                                m("rel").alias("rel_tags"))
 
 
-def _tag_rows(spans: DataFrame, elem: str) -> DataFrame:
-    """(id, k, v) tag rows for ONE element kind — the union leg the
-    fused per-entity groupBys consume (round-6: one shuffle per entity
-    instead of the shared tag groupBy + three map joins)."""
+def _tag_spans(spans: DataFrame) -> DataFrame:
+    """(elem, id, k, v) of every tag span whose id parses."""
     return (spans.where(F.col("kind") == "tag")
             .select(F.expr(_field(1)).alias("elem"),
                     F.expr(f"try_cast({_field(2)} as bigint)").alias("id"),
                     F.expr(_field(3)).alias("k"),
                     F.expr("substring(text, locate(';v=', text) + 3)").alias("v"))
-            .where(F.col("id").isNotNull() & (F.col("elem") == elem))
-            .drop("elem"))
+            .where(F.col("id").isNotNull()))
+
+
+def _tag_rows(spans: DataFrame, elem: str) -> DataFrame:
+    """(id, k, v) tag rows for ONE element kind — the union leg the
+    fused per-entity groupBys consume (round-6: one shuffle per entity
+    instead of the shared tag groupBy + three map joins)."""
+    return _tag_spans(spans).where(F.col("elem") == elem).drop("elem")
+
+
+# node span text id=..;lon=..;lat=..;ver=..;ts=.. : each field's
+# position, and its type under the column name it decodes to
+_NODE_FIELDS = {"id": (1, "bigint"), "lon": (2, "int"), "lat": (3, "int"),
+                "version": (4, "int"), "timestamp": (5, "bigint")}
+
+
+def _node_rows(spans: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` (``doc_id`` and node span fields, which must include
+    id, lon and lat) of every node span whose id, lon and lat parse.
+    Malformed span text drops here rather than reaching a consumer as
+    a null-location node with a spurious quadtree."""
+    def col(c: str):
+        if c == "doc_id":
+            return F.col(c)
+        n, typ = _NODE_FIELDS[c]
+        return F.expr(f"try_cast({_field(n)} as {typ})").alias(c)
+
+    return (spans.where(F.col("kind") == "node")
+            .select(*map(col, cols))
+            .where(F.col("id").isNotNull() & F.col("lon").isNotNull()
+                   & F.col("lat").isNotNull()))
 
 
 # the sorted-entries map aggregate shared by every fused decode:
@@ -109,15 +131,9 @@ def decode_node_locations(spans: DataFrame) -> DataFrame:
     dictionary): skips the tag groupBy+join entirely, so a dictionary
     pass costs one filtered span parse instead of a full
     decode_nodes."""
-    n = (spans.where(F.col("kind") == "node")
-         .select(F.expr(f"try_cast({_field(1)} as bigint)").alias("id"),
-                 F.expr(f"try_cast({_field(2)} as int)").alias("lon"),
-                 F.expr(f"try_cast({_field(3)} as int)").alias("lat"))
-         # same malformed-row filter as decode_nodes, so the derived
-         # tile set is identical to one built from the full table
-         .where(F.col("id").isNotNull() & F.col("lon").isNotNull()
-                & F.col("lat").isNotNull())
-         .drop("id"))
+    # same rows as decode_nodes, so the derived tile set is identical
+    # to one built from the full table
+    n = _node_rows(spans, "id", "lon", "lat").drop("id")
     return with_point_qt(n, "lon", "lat")
 
 
@@ -135,19 +151,10 @@ def decode_nodes(spans: DataFrame) -> DataFrame:
     forces a SortAggregate over every node row, where the join form
     sorts only the far-smaller tag stream.  Ways/relations stay
     fused — they already paid a groupBy.)"""
-    n = (spans.where(F.col("kind") == "node")
-         .select("doc_id",
-                 F.expr(f"try_cast({_field(1)} as bigint)").alias("id"),
-                 F.expr(f"try_cast({_field(2)} as int)").alias("lon"),
-                 F.expr(f"try_cast({_field(3)} as int)").alias("lat"),
-                 # element Info metadata (`geometry_block.rs:39`,
-                 # SURVEY §1.1 `info:Option<Info>`)
-                 F.expr(f"try_cast({_field(4)} as int)").alias("version"),
-                 F.expr(f"try_cast({_field(5)} as bigint)").alias("timestamp"))
-         # malformed span text -> unparsable row; drop rather than emit
-         # a null-id node with a spurious quadtree
-         .where(F.col("id").isNotNull() & F.col("lon").isNotNull()
-                & F.col("lat").isNotNull()))
+    # version/timestamp: element Info metadata (`geometry_block.rs:39`,
+    # SURVEY §1.1 `info:Option<Info>`)
+    n = _node_rows(spans, "doc_id", "id", "lon", "lat", "version",
+                   "timestamp")
     tags = (_tag_rows(spans, "node")
             .groupBy("id").agg(_tags_agg().alias("tags"))
             .where(F.size("tags") > 0))

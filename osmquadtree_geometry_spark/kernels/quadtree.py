@@ -36,9 +36,6 @@ import numpy as np
 MAX_DEPTH = 18
 EMPTY = -1
 
-# EPSG:3857 half-width in metres (spherical mercator, WGS84 radius).
-EARTH_WIDTH = 20037508.342789244
-
 
 # ---------------------------------------------------------------------------
 # unit-square projection (slippy-map orientation: y grows southward)
@@ -288,6 +285,13 @@ def sql_round_qt(qt_col: str, depth_col: str) -> str:
 
 def sql_qt_depth(qt_col: str) -> str:
     return f"(case when cast({qt_col} as bigint) < 0 then 0 else cast({qt_col} as bigint) % 32 end)"
+
+
+def sql_ancestors(qt_col: str) -> str:
+    """SQL array of ``qt_col``'s ancestor-or-self cells, deepest first
+    (``round_qt(qt, d)`` for d = depth(qt) .. 0): at most 19 entries."""
+    return (f"transform(sequence({sql_qt_depth(qt_col)}, 0, -1), "
+            f"d -> {sql_round_qt(qt_col, 'd')})")
 
 
 def sql_qt_xyz(qt_col: str, d: str | None = None,

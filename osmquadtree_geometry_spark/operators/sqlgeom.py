@@ -11,13 +11,18 @@ from __future__ import annotations
 
 from ..kernels.mercator import EARTH_WIDTH
 
-# 2dp-rounded mercator coords of a struct p(lon,lat)
-_MX = f"round(p.lon * 1e-7 * {EARTH_WIDTH!r} / 180.0, 2)"
-_MY = f"round(ln(tan(pi()/4.0 + radians(p.lat * 1e-7)/2.0)) / pi() * {EARTH_WIDTH!r}, 2)"
+
+def sql_merc_xy(lon: str, lat: str) -> tuple[str, str]:
+    """SQL (x, y): EPSG:3857 metres of fixed-point 1e-7° ``lon``/``lat``,
+    rounded to 2dp (`position.rs:29-33`)."""
+    return (f"round(({lon}) * 1e-7 * {EARTH_WIDTH!r} / 180.0, 2)",
+            f"round(ln(tan(pi()/4.0 + radians(({lat}) * 1e-7)/2.0)) / pi() "
+            f"* {EARTH_WIDTH!r}, 2)")
 
 
 def sql_merc(lonlats: str) -> str:
-    return f"transform({lonlats}, p -> struct({_MX} as x, {_MY} as y))"
+    x, y = sql_merc_xy("p.lon", "p.lat")
+    return f"transform({lonlats}, p -> struct({x} as x, {y} as y))"
 
 
 def sql_line_length(lonlats: str, merc: str | None = None) -> str:

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernels.quadtree import sql_qt_depth, sql_round_qt
+from ..kernels.quadtree import sql_ancestors, sql_qt_depth, sql_round_qt
 
 
 def tile_dictionary(features: DataFrame, group_depth: int = 8,
@@ -47,10 +47,7 @@ def allocate_tiles(df: DataFrame, tiles: list[int],
         return df.withColumn("tile", F.expr(expr))
     spark = df.sparkSession
     tdf = spark.createDataFrame([(t,) for t in tiles], "tile long")
-    anc = df.withColumn(
-        "anc",
-        F.expr(f"transform(sequence({sql_qt_depth(qt_col)}, 0, -1), "
-               f"d -> {sql_round_qt(qt_col, 'd')})"))
+    anc = df.withColumn("anc", F.expr(sql_ancestors(qt_col)))
     e = anc.select("*", F.explode("anc").alias("tile")).drop("anc")
     j = e.join(F.broadcast(tdf), "tile")
     key = [c for c in ("doc_id", "id") if c in df.columns]

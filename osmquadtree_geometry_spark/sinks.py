@@ -253,12 +253,11 @@ def write_spatial_index(res, out_dir: str,
       <= MAX_COVER per feature), exploded so queries scan it directly;
     - ``points_cells``: (point_id, lon, lat, cell10, cell8) — fixed-
       depth quadtree cells via staged SQL (``with_point_qt`` at the
-      first depth, the others rounded from it) —
-      plus one ``n{d}`` count column per depth the cover actually
-      used, so the pip join's per-cell point counts (its bucket-size
-      bound) are a stored lookup instead of an extra agg + join;
-    - ``spatial_index_meta.json``: the cover's used depth list, read
-      driver-side so queries skip the depth-discovery collect job;
+      first depth, the others rounded from it);
+    - ``spatial_index_meta.json``: the stored cover's
+      :func:`~.spatial.joins.cover_stats` (used depth list, widest
+      ring), read driver-side so queries skip that action and pick the
+      pip engine from the ring width;
     - media gains a ``tile_cell`` column (z/x/y -> quadtree value).
 
     The side tables are SEPARATE parquet tables so the main feature
@@ -268,28 +267,15 @@ def write_spatial_index(res, out_dir: str,
     import json
     import os
 
-    from pyspark.sql import Window
-
     from .kernels.quadtree import sql_round_qt, with_point_qt
-    from .spatial.joins import polygon_cover
-    from .tableio import write_table
+    from .spatial.joins import cover_stats, polygon_cover
+    from .tableio import read_table, write_table
 
     out = {}
-    cover = polygon_cover(res.simple_polygons, SPATIAL_COVER_DEPTH)
     p = os.path.join(out_dir, "poly_cover")
-    write_table(cover, p)
+    write_table(polygon_cover(res.simple_polygons, SPATIAL_COVER_DEPTH), p)
     out["poly_cover"] = p
-    # bounded metadata collect (<= len(cover_menu) rows), paid ONCE
-    # per dataset here instead of per query
-    spark = res.points.sparkSession
-    stats = spark.read.parquet(p).agg(
-        F.collect_set(F.expr(sql_qt_depth("cell"))).alias("ds"),
-        F.max(F.size("lonlats")).alias("mx")).first()
-    used = sorted(int(d) for d in (stats.ds or []))
-    # max ring width drives the pip engine auto-dispatch (round-5
-    # verdict Next #3): small everywhere -> pure SQL fold, no
-    # dispatch overhead at query time
-    max_ring_pts = int(stats.mx) if stats.mx is not None else 0
+    used, max_ring_pts = cover_stats(read_table(res.points.sparkSession, p))
     with open(os.path.join(out_dir, "spatial_index_meta.json"), "w") as f:
         json.dump({"cover_depths": used,
                    "max_ring_pts": max_ring_pts,
@@ -301,9 +287,6 @@ def write_spatial_index(res, out_dir: str,
         "lon", "lat", base, SPATIAL_POINT_DEPTHS[0])
     pts = pts.withColumns({f"cell{d}": F.expr(sql_round_qt(base, str(d)))
                            for d in SPATIAL_POINT_DEPTHS[1:]})
-    for d in used:
-        w = Window.partitionBy(F.expr(sql_round_qt(base, str(d))))
-        pts = pts.withColumn(f"n{d}", F.count("*").over(w))
     p = os.path.join(out_dir, "points_cells")
     write_table(pts.repartitionByRange(base, "point_id"), p)
     out["points_cells"] = p

@@ -9,26 +9,34 @@ clipping at tile boundaries as DataFrame stages.
 Scale design: every join is an EQUI-join on a cell id (quadtree cell
 at a chosen depth) so it hash-partitions without a cross product; the
 exact geometry predicate runs only inside matching cells.  Cells come
-from the staged SQL codec in ``kernels.quadtree`` (no Python workers);
-only ``line_cover_udf``'s per-segment walk stays in Python, feeding a
-Python clip anyway.  Cell fan-outs (covering cells, neighbour
-rings, ancestor chains) are bounded (<= 19 for ancestors, ring² for
-kNN) so shuffle volume scales linearly with input.
+from the staged SQL codec in ``kernels.quadtree`` (no Python workers).
+Python runs in two places only: the packed pip engine's numpy pnpoly
+kernel and the line clip, each ONE ``mapInPandas`` stage (the clip
+walks a line's crossed cells and clips it in the same pass).  Cell
+fan-outs (covering cells, neighbour rings, ancestor chains) are
+bounded (<= 19 for ancestors, ring² for kNN) so shuffle volume scales
+linearly with input.
+
+Each step has one definition: pip's point side is one (point_id, lon,
+lat, cell) frame both engines read; ancestor chains are
+``quadtree.sql_ancestors``; mercator metres are
+``sqlgeom.sql_merc_xy``; the spatial-index metadata is
+:func:`cover_stats`.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from .. import cache
 from ..kernels import geomcalc, quadtree as qtk
 from ..kernels.mercator import EARTH_WIDTH
-from ..kernels.quadtree import sql_qt_depth, sql_round_qt
-from ..operators.sqlgeom import sql_bbox, sql_pnpoly
+from ..kernels.quadtree import sql_ancestors, sql_qt_depth, sql_round_qt
+from ..operators.sqlgeom import sql_bbox, sql_merc_xy, sql_pnpoly
 
 # Adaptive covering: a feature picks the DEEPEST depth from this menu
 # (relative steps below the requested depth) whose bbox spans <= MAX_COVER
@@ -117,8 +125,16 @@ def with_tile_cell(media: DataFrame) -> DataFrame:
     return media.withColumn("tile_cell", F.expr(qtk._sql_cell("x", "y", "z")))
 
 
-_MERC_X = f"round((%s) * 1e-7 * {EARTH_WIDTH!r} / 180.0, 2)"
-_MERC_Y = f"round(ln(tan(pi()/4.0 + radians((%s) * 1e-7)/2.0)) / pi() * {EARTH_WIDTH!r}, 2)"
+def cover_stats(cover: DataFrame) -> tuple[list[int], int]:
+    """(depths, max_ring_pts) of a :func:`polygon_cover` frame: the
+    sorted cell depths it uses and its widest ring's vertex count (0
+    when empty).  One bounded action (<= len(cover_menu) depths)."""
+    s = cover.agg(F.collect_set(F.expr(sql_qt_depth("cell"))).alias("ds"),
+                  F.max(F.size("lonlats")).alias("mx")).first()
+    return sorted(int(d) for d in (s.ds or [])), int(s.mx or 0)
+
+
+_PIP_ENGINES = ("sql", "packed", "auto")
 
 
 def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
@@ -133,57 +149,40 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     """(point_id, polygon_id) pairs where the point lies inside the
     polygon's outer ring (pnpoly, `position.rs:284-326`).
 
-    Scale shape: polygons expand to covering cells (bounded fan-out);
-    points pack into (cell, bucket) array rows where the bucket count
-    scales with the cell's point count, so NO row ever holds more than
-    ~``max_points_per_row`` points (round 1 packed a whole city cell
-    into one unbounded collect_list row); equi-join on cell; one
-    vectorized pnpoly kernel per (polygon, bucket) row via
-    ``mapInPandas`` (Arrow batches many kernel rows per invocation —
-    no per-group pandas overhead).  The three point-side stages (count
-    agg, count join, pack agg) share one hash-partitioning on cell.
-    No trailing distinct: a point lives in exactly one bucket and each
-    polygon meets each bucket once.
+    Polygons expand to their adaptive covering cells (bounded fan-out,
+    :func:`polygon_cover`); each point explodes ONCE into its cell at
+    every depth the cover uses (one row per point when, as usual, all
+    polygons are small); the two sides equi-join on ``cell``, whose
+    value encodes its depth, so each (polygon, point) pair meets at
+    most once and needs no trailing distinct.
 
-    ``poly_cover`` / ``point_cells`` / ``cover_depths`` (round-4
-    verdict Next #5): pass the PRECOMPUTED spatial-index side tables
-    written by sinks.write_spatial_index — (polygon_id, lonlats, cell)
-    exploded adaptive cover and (point_id, lon, lat, cell{depth},
-    n{depth}...) fixed-depth cells with per-depth cell counts — plus
-    the stored used-depth list.  The join then starts from stored
-    columns: no cover/cell UDFs, no depth-discovery collect job, and
-    no per-cell count agg + join (the bucket bound reads the stored
-    ``n{d}``).  Stored scans are NOT persisted (re-reading pruned
-    parquet beats caching it at scale).
+    ``poly_cover`` / ``point_cells`` / ``cover_depths`` /
+    ``max_ring_pts``: the stored spatial-index side tables and metadata
+    written by :func:`sinks.write_spatial_index` — the exploded cover
+    (polygon_id, lonlats, cell) and the point cells (point_id, lon,
+    lat, cell{depth}).  Without them the cover is computed and
+    persisted, and one :func:`cover_stats` action reads the used depths
+    and the widest ring.  Stored scans are not persisted.
 
-    ``engine`` (round-5 verdict Next #3): ``'sql'`` streams candidate
-    pairs through the JVM pnpoly fold (re-scans the ring per
-    candidate pair — O(pairs x ring) in the join stage); ``'packed'``
-    buckets points and runs the vectorized numpy kernel once per
-    (polygon, bucket) row — wins when rings are wide enough that
-    vectorizing many points per ring scan amortizes.  ``'auto'``
-    routes EACH polygon by ring width: rings with more than
-    ``ring_split`` vertices take the packed kernel, the rest the SQL
-    fold, results unioned (each pair appears on exactly one side).
-    When ``max_ring_pts`` (stored in the spatial-index metadata at
-    layout-write time) shows no ring exceeds the split, auto
-    collapses to pure SQL with zero dispatch overhead."""
+    ``engine`` picks where each polygon's exact test runs: ``'sql'``
+    streams candidate pairs through the JVM pnpoly fold (re-scans the
+    ring per pair); ``'packed'`` runs the vectorized numpy kernel once
+    per (polygon, point bucket) row (:func:`_packed_pairs`), which
+    amortizes wide rings; ``'auto'`` sends rings of more than
+    ``ring_split`` vertices to the packed kernel and the rest to the
+    SQL fold, and is plain SQL when no ring is that wide."""
+    if engine not in _PIP_ENGINES:
+        raise ValueError(f"unknown pip engine {engine!r}; one of {_PIP_ENGINES}")
     if poly_cover is not None:
         poly = poly_cover.select("polygon_id", "lonlats", "cell")
     else:
         poly = cache.persist(polygon_cover(polygons, cell_depth))
-    # used depths: from the stored index metadata when available,
-    # else a bounded metadata action (<= len(cover_menu(cell_depth))
-    # rows).  In the common all-small-polygons case this collapses the
-    # point side to ONE ancestor row per point — zero extra shuffle vs
-    # a fixed-depth join; coarse depths only materialize when some
-    # polygon actually needed them.  The cell VALUE encodes its depth,
-    # so the join key is the single ``cell`` column.
-    if cover_depths is not None:
-        used = sorted(cover_depths)
-    else:
-        used = sorted(r.d for r in poly.select(
-            F.expr(sql_qt_depth("cell")).alias("d")).distinct().collect())
+    if cover_depths is None or (engine == "auto" and max_ring_pts is None):
+        depths, widest = cover_stats(poly)
+        cover_depths = depths if cover_depths is None else cover_depths
+        max_ring_pts = widest if max_ring_pts is None else max_ring_pts
+    if engine == "auto" and max_ring_pts <= ring_split:
+        engine = "sql"
     if point_cells is not None:
         pts0 = point_cells.select("point_id", "lon", "lat",
                                   F.col(f"cell{cell_depth}").alias("cell0"))
@@ -191,70 +190,46 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
         pts0 = qtk.with_point_qt(
             points.select(F.col("id").alias("point_id"), "lon", "lat"),
             "lon", "lat", "cell0", cell_depth)
+    anc = F.array(*[F.expr(sql_round_qt("cell0", str(d))).cast("long")
+                    for d in sorted(cover_depths)])
+    pts = pts0.select("point_id", "lon", "lat", F.explode(anc).alias("cell"))
 
-    def _sql_engine(po: DataFrame) -> DataFrame:
-        # DEFAULT engine (round-4 verdict Next #5 follow-through):
-        # candidate pairs stream through ONE cell equi-join and the
-        # pnpoly ray-cast runs as a JVM SQL fold inside the join stage
-        # — no point packing shuffle, no count agg/join, no pandas
-        # round-trip.
-        anc = F.array(*[F.expr(sql_round_qt("cell0", str(d))).cast("long")
-                        for d in used])
-        pts_e = pts0.select("point_id", "lon", "lat",
-                            F.explode(anc).alias("cell"))
-        j = po.join(pts_e, "cell")
-        return (j.where(F.expr(sql_pnpoly("lonlats", "lon", "lat")))
+    def sql_pairs(po: DataFrame) -> DataFrame:
+        return (po.join(pts, "cell")
+                .where(F.expr(sql_pnpoly("lonlats", "lon", "lat")))
                 .select("point_id", "polygon_id"))
 
-    if engine == "auto" and max_ring_pts is not None \
-            and max_ring_pts <= ring_split:
-        # stored stats say no ring crosses the split: pure SQL, no
-        # dispatch overhead at all
-        engine = "sql"
     if engine == "sql":
-        return _sql_engine(poly)
-    if engine not in ("packed", "auto"):
-        raise ValueError(f"unknown pip engine {engine!r}")
-    bucket_of = (f"greatest(cast(ceil(n_in_cell / {max_points_per_row}) "
-                 f"as int), 1)")
-    if point_cells is not None and \
-            {f"n{d}" for d in used} <= set(point_cells.columns):
-        # stored per-depth counts: ONE projection+explode replaces the
-        # ancestor explode -> count agg -> count join chain
-        anc = F.array(*[F.struct(
-            F.expr(sql_round_qt(f"cell{cell_depth}", str(d)))
-            .cast("long").alias("cell"),
-            F.col(f"n{d}").alias("n_in_cell")) for d in used])
-        pts_b = (point_cells
-                 .select("point_id", "lon", "lat", F.explode(anc).alias("a"))
-                 .select("point_id", "lon", "lat", "a.cell", "a.n_in_cell"))
-    else:
-        # persist the tiny (id, lon, lat, cell) projection: it feeds
-        # both the per-cell count and the pack agg, and without it
-        # every reference re-runs the upstream plan
-        pts = pts0 if point_cells is not None else cache.persist(pts0)
-        anc = F.array(*[F.expr(sql_round_qt("cell0", str(d))).cast("long")
-                        for d in used])
-        pts_a = (pts.withColumn("cell", F.explode(anc))
-                 .select("point_id", "lon", "lat", "cell"))
-        cnt = pts_a.groupBy("cell").agg(F.count("*").alias("n_in_cell"))
-        pts_b = pts_a.join(cnt, ["cell"])
-    pts_b = pts_b.withColumn(
-        "pbucket", F.pmod(F.hash("point_id"), F.expr(bucket_of)).cast("int"))
-    packed = (pts_b.groupBy("cell", "pbucket")
+        return sql_pairs(poly)
+    if engine == "packed":
+        return _packed_pairs(poly, pts, max_points_per_row)
+    # auto with wide rings present: a polygon routes to exactly one
+    # side, so the union has no duplicates
+    return (sql_pairs(poly.where(F.expr(f"size(lonlats) <= {ring_split}")))
+            .unionByName(_packed_pairs(
+                poly.where(F.expr(f"size(lonlats) > {ring_split}")), pts,
+                max_points_per_row)))
+
+
+def _packed_pairs(poly: DataFrame, pts: DataFrame,
+                  max_points_per_row: int) -> DataFrame:
+    """The packed pip engine: ``pts`` (point_id, lon, lat, cell) packed
+    into (cell, bucket) rows, the bucket count scaled by the cell's
+    point count so no row holds more than ~``max_points_per_row``
+    points; each (polygon, bucket) row meets the numpy pnpoly kernel
+    once, and ``mapInPandas`` hands it many rows per Arrow batch.  The
+    count window and the pack aggregate share one hash-partitioning on
+    cell; a point lives in one bucket per cell, so pairs stay unique."""
+    n_buckets = (f"greatest(cast(ceil(count(1) over (partition by cell) "
+                 f"/ {max_points_per_row}) as int), 1)")
+    packed = (pts.withColumn("pbucket", F.pmod(F.hash("point_id"),
+                                               F.expr(n_buckets)).cast("int"))
+              .groupBy("cell", "pbucket")
               .agg(F.collect_list(F.struct("point_id", "lon", "lat"))
                    .alias("pts")))
-    # a polygon's cells live at exactly ONE depth and cells at a depth
-    # are disjoint (depth-encoded values can't collide across depths),
-    # so each (polygon, point) pair still meets at most once -> no
-    # trailing distinct
-    packed_poly = (poly.where(F.expr(f"size(lonlats) > {ring_split}"))
-                   if engine == "auto" else poly)
-    j = (packed_poly.join(packed, ["cell"])
-         .select("polygon_id", "lonlats", "pts"))
+    j = poly.join(packed, ["cell"]).select("polygon_id", "lonlats", "pts")
 
     def check(batches):
-        import numpy as np
         for pdf in batches:
             out_pt, out_pg = [], []
             for r in pdf.itertuples():
@@ -272,18 +247,12 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
                     "point_id": np.concatenate(out_pt),
                     "polygon_id": np.concatenate(out_pg)})
 
-    packed_pairs = j.mapInPandas(check, "point_id long, polygon_id long")
-    if engine == "packed":
-        return packed_pairs
-    # engine == 'auto' with (possibly) wide rings present: narrow
-    # rings keep the SQL fold, wide rings take the packed kernel; a
-    # polygon routes to exactly one side, so the union has no dups
-    return (_sql_engine(poly.where(F.expr(f"size(lonlats) <= {ring_split}")))
-            .unionByName(packed_pairs))
+    return j.mapInPandas(check, "point_id long, polygon_id long")
 
 
-_KNN_DIST = (f"sqrt(power({_MERC_X % 'qlon'} - {_MERC_X % 'lon'}, 2) + "
-             f"power({_MERC_Y % 'qlat'} - {_MERC_Y % 'lat'}, 2))")
+_QX, _QY = sql_merc_xy("qlon", "qlat")
+_TX, _TY = sql_merc_xy("lon", "lat")
+_KNN_DIST = f"sqrt(power({_QX} - {_TX}, 2) + power({_QY} - {_TY}, 2))"
 
 
 def _knn_topk(cand: DataFrame, k: int) -> DataFrame:
@@ -412,11 +381,6 @@ def knn_join(query_points: DataFrame, target_points: DataFrame, k: int = 5,
     return out.unionByName(res1b) if res1b is not None else out
 
 
-def _ancestors(qt_col: str) -> str:
-    return (f"transform(sequence({sql_qt_depth(qt_col)}, 0, -1), "
-            f"d -> {sql_round_qt(qt_col, 'd')})")
-
-
 def raster_vector_join(media: DataFrame, features: DataFrame) -> DataFrame:
     """media raster tiles (z/x/y) ⋈ vector features whose quadtree
     cell overlaps the tile — i.e. one cell is an ancestor-or-self of
@@ -433,115 +397,93 @@ def raster_vector_join(media: DataFrame, features: DataFrame) -> DataFrame:
 
     # direction 1: feature at-or-below the tile -> feature ancestor == tile
     f_anc = f.select("feature_id", "quadtree",
-                     F.explode(F.expr(_ancestors("quadtree"))).alias("tile_cell"))
+                     F.explode(F.expr(sql_ancestors("quadtree"))).alias("tile_cell"))
     j1 = m.join(f_anc, "tile_cell")
     # direction 2: tile below the feature -> tile ancestor == feature
     m_anc = m.select("doc_id", "tile", "tile_cell",
-                     F.explode(F.expr(_ancestors("tile_cell"))).alias("quadtree"))
+                     F.explode(F.expr(sql_ancestors("tile_cell"))).alias("quadtree"))
     j2 = m_anc.join(f, "quadtree")
 
     cols = ["doc_id", "tile", "feature_id", "quadtree"]
     return j1.select(*cols).unionByName(j2.select(*cols)).distinct()
 
 
-def line_cover_udf(depth: int):
-    """pandas_udf: lonlats -> depth-d cells the polyline ACTUALLY
-    crosses (per-segment column walk), not its bbox cover — a diagonal
-    line's bbox meshgrid is O(span²) cells while the line itself only
-    crosses O(span), which is the true output size of a tile clip.
-    Segments are straight in raw lonlat space (clip_line_bbox clips in
-    int lonlat), so per tile column the lat range is linear in lon;
-    tile rows come from the mercator y of the clamped entry/exit
-    lats."""
-    import numpy as np
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cells(lonlats: pd.Series) -> pd.Series:
-        out = []
-        for pts in lonlats:
-            lon = np.fromiter((p["lon"] for p in pts), np.float64)
-            lat = np.fromiter((p["lat"] for p in pts), np.float64)
-            q = qtk.calculate_point(lon.astype(np.int64),
-                                    lat.astype(np.int64), depth)
-            tx, ty, _ = qtk.xyz(q)
-            acc: set[tuple[int, int]] = set()
-            for i in range(len(lon) - 1):
-                x0, x1 = int(min(tx[i], tx[i + 1])), int(max(tx[i], tx[i + 1]))
-                if x0 == x1:  # vertical in tile space: one column
-                    for y in range(int(min(ty[i], ty[i + 1])),
-                                   int(max(ty[i], ty[i + 1])) + 1):
-                        acc.add((x0, y))
-                    continue
-                # walk tile columns; segment is linear lat(lon)
-                la, lb = (lon[i], lon[i + 1])
-                ta, tb = (lat[i], lat[i + 1])
-                if la > lb:
-                    la, lb, ta, tb = lb, la, tb, ta
-                n = 1 << depth
-                # lon of column boundaries x0+1 .. x1 (tile_x formula
-                # inverse: lon = (x / n * 360 - 180) * 1e7)
-                bx = np.arange(x0 + 1, x1 + 1, dtype=np.float64)
-                blon = (bx / n * 360.0 - 180.0) * 1e7
-                cuts = np.concatenate(([la], blon, [lb]))
-                clat = ta + (tb - ta) * (cuts - la) / (lb - la)
-                _, yy, _ = qtk.xyz(qtk.calculate_point(
-                    np.zeros(len(cuts), np.int64),
-                    clat.astype(np.int64), depth))
-                for c in range(x0, x1 + 1):
-                    ya, yb = int(yy[c - x0]), int(yy[c - x0 + 1])
-                    for y in range(min(ya, yb), max(ya, yb) + 1):
-                        acc.add((c, y))
-            if acc:
-                xs = np.fromiter((a for a, _ in acc), np.int64)
-                ys = np.fromiter((b for _, b in acc), np.int64)
-                out.append(qtk.from_tile(xs, ys, depth).tolist())
-            else:
-                out.append([])
-        return pd.Series(out)
-
-    return cells
+def _line_cells(lon: np.ndarray, lat: np.ndarray, depth: int) -> np.ndarray:
+    """The depth-``depth`` cells a polyline ACTUALLY crosses
+    (per-segment column walk), not its bbox cover: a diagonal line's
+    bbox holds O(span²) cells while the line itself crosses only
+    O(span), which is the true output size of a tile clip.  Segments
+    are straight in raw lonlat space (clip_line_bbox clips in int
+    lonlat), so per tile column the lat range is linear in lon; tile
+    rows come from the mercator y of the clamped entry/exit lats."""
+    lon = np.asarray(lon, np.float64)
+    lat = np.asarray(lat, np.float64)
+    q = qtk.calculate_point(lon.astype(np.int64), lat.astype(np.int64), depth)
+    tx, ty, _ = qtk.xyz(q)
+    acc: set[tuple[int, int]] = set()
+    for i in range(len(lon) - 1):
+        x0, x1 = int(min(tx[i], tx[i + 1])), int(max(tx[i], tx[i + 1]))
+        if x0 == x1:  # vertical in tile space: one column
+            for y in range(int(min(ty[i], ty[i + 1])),
+                           int(max(ty[i], ty[i + 1])) + 1):
+                acc.add((x0, y))
+            continue
+        # walk tile columns; segment is linear lat(lon)
+        la, lb = (lon[i], lon[i + 1])
+        ta, tb = (lat[i], lat[i + 1])
+        if la > lb:
+            la, lb, ta, tb = lb, la, tb, ta
+        n = 1 << depth
+        # lon of column boundaries x0+1 .. x1 (tile_x formula
+        # inverse: lon = (x / n * 360 - 180) * 1e7)
+        bx = np.arange(x0 + 1, x1 + 1, dtype=np.float64)
+        blon = (bx / n * 360.0 - 180.0) * 1e7
+        cuts = np.concatenate(([la], blon, [lb]))
+        clat = ta + (tb - ta) * (cuts - la) / (lb - la)
+        _, yy, _ = qtk.xyz(qtk.calculate_point(
+            np.zeros(len(cuts), np.int64), clat.astype(np.int64), depth))
+        for c in range(x0, x1 + 1):
+            ya, yb = int(yy[c - x0]), int(yy[c - x0 + 1])
+            for y in range(min(ya, yb), max(ya, yb) + 1):
+                acc.add((c, y))
+    xs = np.fromiter((a for a, _ in acc), np.int64, len(acc))
+    ys = np.fromiter((b for _, b in acc), np.int64, len(acc))
+    return qtk.from_tile(xs, ys, depth)
 
 
 def clip_lines_to_tiles(lines: DataFrame, tile_depth: int = 12) -> DataFrame:
     """Clip linestrings at quadtree tile boundaries (north-rule clip
-    cases; the reference only *filters* by bbox overlap, P7/G5).
+    cases; the reference only *filters* by bbox overlap, P7/G5):
+    (id, cell, part, lonlats) rows, one per kept part of a line in a
+    depth-``tile_depth`` cell.
 
-    Scale shape: (line, crossed-cell) rows — per-segment line cover
-    (O(cells actually crossed), NOT the O(span²) bbox meshgrid; round-2
-    verdict What's-wrong #3) — are clipped by ``mapInPandas`` IN PLACE
-    in the scan partitions: no groupBy, so a hot cell never
-    concentrates all its lines in one task (the round-1 per-cell
-    applyInPandas did), and zero shuffle total."""
-    src = (lines.select("id", "lonlats")
-           .withColumn("cell",
-                       F.explode(line_cover_udf(tile_depth)("lonlats"))))
+    Scale shape: each line enters Python once, in ONE ``mapInPandas``
+    over its scan partition, which walks the cells the line crosses
+    (:func:`_line_cells`: O(cells crossed), not the O(span²) bbox
+    meshgrid) and clips the line to each.  No groupBy, so a hot cell
+    never concentrates all its lines in one task, and zero shuffle."""
 
     def clip(batches):
-        import numpy as np
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = pdf["cell"].to_numpy(np.int64)
-            uniq, inv = np.unique(cells, return_inverse=True)
-            b = qtk.tile_bounds(uniq)  # vectorized, once per batch
             rows = []
-            for pos, r in enumerate(pdf.itertuples()):
-                u = inv[pos]
-                bbox = (int(b[0][u]), int(b[1][u]),
-                        int(b[2][u]), int(b[3][u]))
+            for r in pdf.itertuples():
                 lon = np.fromiter((p["lon"] for p in r.lonlats), np.int64)
                 lat = np.fromiter((p["lat"] for p in r.lonlats), np.int64)
-                for part_idx, (plon, plat) in enumerate(
-                        geomcalc.clip_line_bbox(lon, lat, bbox)):
-                    rows.append({
-                        "id": int(r.id), "cell": int(r.cell),
-                        "part": part_idx,
-                        "lonlats": [{"lon": int(a), "lat": int(b_)}
-                                    for a, b_ in zip(plon, plat)],
-                    })
-            yield pd.DataFrame(rows,
-                               columns=["id", "cell", "part", "lonlats"])
+                cells = _line_cells(lon, lat, tile_depth)
+                bounds = qtk.tile_bounds(cells)
+                for i, cell in enumerate(cells.tolist()):
+                    bbox = tuple(int(b[i]) for b in bounds)
+                    for part, (plon, plat) in enumerate(
+                            geomcalc.clip_line_bbox(lon, lat, bbox)):
+                        rows.append({
+                            "id": int(r.id), "cell": cell, "part": part,
+                            "lonlats": [{"lon": int(x), "lat": int(y)}
+                                        for x, y in zip(plon, plat)],
+                        })
+            if rows:
+                yield pd.DataFrame(rows,
+                                   columns=["id", "cell", "part", "lonlats"])
 
     schema = ("id long, cell long, part int, "
               "lonlats array<struct<lon:int,lat:int>>")
-    return src.mapInPandas(clip, schema)
+    return lines.select("id", "lonlats").mapInPandas(clip, schema)

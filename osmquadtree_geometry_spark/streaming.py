@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .datagen import DOCS_SCHEMA  # pyarrow schema (shape reference)
-from .decode import decode_nodes, explode_spans
-from .kernels.quadtree import sql_round_qt
+from .decode import _node_rows, explode_spans
+from .kernels.quadtree import sql_round_qt, with_point_qt
 
 DOCS_DDL = ("doc_id string, spans array<struct<kind:string, text:string, "
             "media_ref:string, offset:int>>")
@@ -34,16 +34,9 @@ def stream_docs(spark: SparkSession, path: str) -> DataFrame:
 def stream_decode_nodes(docs_stream: DataFrame) -> DataFrame:
     """Streaming stage-0: spans -> nodes (stateless, no shuffle).
     Tag enrichment needs a groupBy and belongs to the batch layer;
-    the streaming path emits location/tagless candidates."""
-    from .decode import _field
-    spans = explode_spans(docs_stream)
-    n = (spans.where(F.col("kind") == "node")
-         .select("doc_id",
-                 F.expr(f"try_cast({_field(1)} as bigint)").alias("id"),
-                 F.expr(f"try_cast({_field(2)} as int)").alias("lon"),
-                 F.expr(f"try_cast({_field(3)} as int)").alias("lat"))
-         .where(F.col("id").isNotNull()))
-    from .kernels.quadtree import with_point_qt
+    the streaming path emits location/tagless candidates, parsed and
+    filtered exactly as the batch decode does."""
+    n = _node_rows(explode_spans(docs_stream), "doc_id", "id", "lon", "lat")
     return with_point_qt(n, "lon", "lat")
 
 

@@ -13,7 +13,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
-from osmquadtree_geometry_spark.session import get_spark  # noqa: E402
+from osmquadtree_geometry_spark.session import get_spark, ship_package  # noqa: E402
 from osmquadtree_geometry_spark.similarity import (  # noqa: E402
     brute_force_topk, ivf_topk, train_centroids_kmeans)
 
@@ -23,6 +23,7 @@ def main():
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     n_q = int(sys.argv[3]) if len(sys.argv) > 3 else 64
     spark = get_spark("ivf_recall")
+    ship_package(spark)
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     n = emb.count()
     n_lists = max(16, int(n ** 0.5))

@@ -2,7 +2,10 @@
 """Round-6 (verdict Next #3): pip engine crossover on a wide-ring
 fixture — the SQL pnpoly fold re-scans the ring per candidate pair
 (O(pairs x ring)), the packed kernel vectorizes points per ring.
-Prints seconds per engine for narrow and wide corpora."""
+Prints seconds per engine for narrow and wide corpora and asserts the
+engines agree.  The session is host-sized (``session.get_spark``;
+``SPARK_GRAFT_CPUS`` overrides the core count), and the package is
+shipped to the Python workers, so it runs from any directory."""
 from __future__ import annotations
 
 import math
@@ -13,8 +16,6 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def ring(cx, cy, r, n):
     pts = [{"lon": int(cx + r * math.cos(2 * math.pi * i / n)),
@@ -24,14 +25,14 @@ def ring(cx, cy, r, n):
 
 
 def main():
-    from osmquadtree_geometry_spark.session import get_spark
+    from osmquadtree_geometry_spark.session import get_spark, ship_package
     from osmquadtree_geometry_spark.spatial import joins
     from osmquadtree_geometry_spark import cache
     from pyspark.sql import functions as F
     import random
 
-    spark = get_spark("pipx", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(CPUS, 8))
+    spark = get_spark("pipx")
+    ship_package(spark)
     rng = random.Random(7)
 
     def corpus(n_poly, ring_pts, n_points):

@@ -11,16 +11,15 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main():
-    from osmquadtree_geometry_spark.session import get_spark
+    from osmquadtree_geometry_spark.session import get_spark, ship_package
     from osmquadtree_geometry_spark import cache, dedup, similarity, textops
     from pyspark.sql import functions as F
 
-    spark = get_spark("profllm", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(CPUS, 8))
+    spark = get_spark("profllm")
+    ship_package(spark)
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     docs.count(), emb.count()

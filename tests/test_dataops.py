@@ -533,6 +533,52 @@ def test_streaming_decode_and_tiles(spark, docs_path, decoded):
     assert got == exp
 
 
+def test_streaming_drops_malformed_node(spark, tmp_path):
+    """A node span whose lon or lat does not parse yields no streamed
+    node and no tile count (the batch decode drops it too); before,
+    the stream emitted it with a null lon and a spurious quadtree."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from osmquadtree_geometry_spark.datagen import DOCS_SCHEMA
+    from osmquadtree_geometry_spark.decode import decode_nodes, explode_spans
+    from osmquadtree_geometry_spark.kernels.quadtree import sql_round_qt
+    from osmquadtree_geometry_spark.streaming import (
+        run_stream_to_memory, stream_decode_nodes, stream_docs,
+        streaming_tile_counts)
+    spans = [{"kind": "node", "text": t, "media_ref": "", "offset": i}
+             for i, t in enumerate([
+                 "id=1;lon=100000000;lat=500000000;ver=1;ts=0",
+                 "id=2;lon=abc;lat=500000000;ver=1;ts=0",
+                 "id=3;lon=100000000;lat=;ver=1;ts=0"])]
+    src = tmp_path / "docs"
+    src.mkdir()
+    pq.write_table(pa.Table.from_pylist([{"doc_id": "d", "spans": spans}],
+                                        DOCS_SCHEMA),
+                   str(src / "part-0.parquet"))
+    batch = decode_nodes(explode_spans(spark.read.parquet(str(src))))
+    assert [r.id for r in batch.collect()] == [1]
+
+    nodes = stream_decode_nodes(stream_docs(spark, str(src)))
+    q = run_stream_to_memory(nodes, "malformed_nodes", mode="append")
+    try:
+        got = spark.sql("SELECT id, lon, lat, quadtree FROM malformed_nodes")
+        assert [tuple(r) for r in got.collect()] == [
+            tuple(r) for r in batch.select("id", "lon", "lat",
+                                           "quadtree").collect()]
+    finally:
+        q.stop()
+    q = run_stream_to_memory(
+        streaming_tile_counts(stream_decode_nodes(stream_docs(spark, str(src)))),
+        "malformed_tiles", mode="complete")
+    try:
+        tiles = {r.tile: r.n_nodes for r in spark.sql(
+            "SELECT * FROM malformed_tiles").collect()}
+    finally:
+        q.stop()
+    exp = batch.select(F.expr(sql_round_qt("quadtree", "8"))).first()[0]
+    assert tiles == {exp: 1}
+
+
 def test_streaming_sessionize_stateful(spark):
     """applyInPandasWithState custom stateful operator: per-user
     session state with processing-time timeout."""

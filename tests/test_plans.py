@@ -107,7 +107,8 @@ def test_cell_codec_plans_stay_in_jvm(spark, docs_path, tmp_path):
     """Every Spark-side quadtree cell comes from the staged SQL codec:
     no Python evaluation node in the knn (live and stored targets),
     raster (no stored tile_cell), pip (SQL engine, no side tables) and
-    poly_cover plans."""
+    poly_cover plans.  The line clip is one Python stage: its cell walk
+    runs inside the clip's ``mapInPandas``."""
     from osmquadtree_geometry_spark import sinks
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     from osmquadtree_geometry_spark.spatial import joins
@@ -126,12 +127,16 @@ def test_cell_codec_plans_stay_in_jvm(spark, docs_path, tmp_path):
             res.points, res.simple_polygons, cell_depth=10, engine="sql"),
         "poly_cover": joins.polygon_cover(res.simple_polygons,
                                           sinks.SPATIAL_COVER_DEPTH),
+        "clip lines": joins.clip_lines_to_tiles(res.linestrings,
+                                                tile_depth=12),
     }
     for name, df in plans.items():
         plan = _plan(df)
         assert "ArrowEvalPython" not in plan, name
         assert "BatchEvalPython" not in plan, name
         assert df.count() > 0, name
+    clip = plans["clip lines"]._jdf.queryExecution().executedPlan().toString()
+    assert clip.count("MapInPandas") == 1, clip
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):

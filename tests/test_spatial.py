@@ -41,6 +41,34 @@ def test_point_in_polygon_join(spark, geo):
     assert len(expected) > 0  # fixtures do contain points inside polygons
 
 
+def test_pip_rejects_unknown_engine_before_any_job(spark, geo):
+    """An unknown ``engine`` raises before the cover is built or any
+    job runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("pip-unknown-engine", "pip engine check")
+    try:
+        with pytest.raises(ValueError, match="unknown pip engine"):
+            joins.point_in_polygon_join(geo["points"], geo["polys"],
+                                        cell_depth=10, engine="typo")
+        jobs = sc.statusTracker().getJobIdsForGroup("pip-unknown-engine")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+def test_pip_auto_live_narrow_rings_is_sql(spark, geo):
+    """Live ``engine='auto'`` without a stored ``max_ring_pts`` reads
+    the widest ring from the cover: on narrow rings it returns the sql
+    engine's pairs with no Python stage in the plan."""
+    sql = {tuple(r) for r in joins.point_in_polygon_join(
+        geo["points"], geo["polys"], cell_depth=10).collect()}
+    auto = joins.point_in_polygon_join(geo["points"], geo["polys"],
+                                       cell_depth=10, engine="auto")
+    plan = auto._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert {tuple(r) for r in auto.collect()} == sql and sql
+
+
 def test_knn_join(spark, geo):
     pts = geo["points"]
     got = joins.knn_join(pts, pts, k=3, cell_depth=6, max_rings=2)
