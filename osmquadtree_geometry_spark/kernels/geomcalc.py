@@ -259,60 +259,3 @@ def clip_line_bbox(lon: np.ndarray, lat: np.ndarray, bbox) -> list[tuple[np.ndar
             flush()
     flush()
     return [(np.asarray(a, np.int64), np.asarray(b, np.int64)) for a, b in parts]
-
-
-def clip_ring_bbox(lon: np.ndarray, lat: np.ndarray, bbox) -> tuple[np.ndarray, np.ndarray]:
-    """Sutherland–Hodgman clip of a closed ring against a bbox.
-    Returns a closed ring (first==last) or empty arrays."""
-    minx, miny, maxx, maxy = (float(v) for v in bbox)
-    pts = [(float(a), float(b)) for a, b in zip(lon, lat)]
-    if pts and pts[0] == pts[-1]:
-        pts = pts[:-1]
-
-    def inside(p, edge):
-        if edge == 0:
-            return p[0] >= minx
-        if edge == 1:
-            return p[0] <= maxx
-        if edge == 2:
-            return p[1] >= miny
-        return p[1] <= maxy
-
-    def cross(p, q, edge):
-        x0, y0 = p
-        x1, y1 = q
-        if edge in (0, 1):
-            xe = minx if edge == 0 else maxx
-            t = (xe - x0) / (x1 - x0)
-            return (xe, y0 + t * (y1 - y0))
-        ye = miny if edge == 2 else maxy
-        t = (ye - y0) / (y1 - y0)
-        return (x0 + t * (x1 - x0), ye)
-
-    for edge in range(4):
-        if not pts:
-            break
-        out = []
-        for i, p in enumerate(pts):
-            q = pts[(i + 1) % len(pts)]
-            pin, qin = inside(p, edge), inside(q, edge)
-            if pin:
-                out.append(p)
-                if not qin:
-                    out.append(cross(p, q, edge))
-            elif qin:
-                out.append(cross(p, q, edge))
-        pts = out
-    if len(pts) < 3:
-        return np.asarray([], np.int64), np.asarray([], np.int64)
-    pts = [(round(a), round(b)) for a, b in pts]
-    # drop consecutive duplicates introduced by rounding
-    dedup = [pts[0]]
-    for p in pts[1:]:
-        if p != dedup[-1]:
-            dedup.append(p)
-    if len(dedup) < 3:
-        return np.asarray([], np.int64), np.asarray([], np.int64)
-    dedup.append(dedup[0])
-    arr = np.asarray(dedup, np.int64)
-    return arr[:, 0], arr[:, 1]

@@ -268,8 +268,8 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
     them again.  The target table must already exist (write_postgresql
     before-DDL, or caller DDL).  Staging tables orphaned by a crash
     after COPY but before promote-or-drop are inert (never promoted);
-    sweep them by the ``{table}__stg_`` name prefix (or call
-    :func:`sweep_staging` after the job).  Returns rows promoted BY
+    :func:`sinks.write_postgresql` drops them with :func:`sweep_staging`
+    once its delivery jobs finish.  Returns rows promoted BY
     THIS RUN (already-delivered partitions add 0); note the count is
     accumulator-based, so a task that crashes AFTER its promote
     committed reports its rows only via the retry's ledger row, not
@@ -384,26 +384,6 @@ def sweep_staging(dsn: str, table: str, schema: str = "public") -> list[str]:
             conn.execute(f"DROP TABLE {pg_ident(schema, name)}")
             dropped.append(name)
     return dropped
-
-
-def stream_to_postgres(sdf: DataFrame, dsn: str, table: str,
-                       columns: list[tuple[str, str]] | None = None,
-                       schema: str = "public",
-                       checkpoint: str | None = None):
-    """Structured-Streaming COPY sink: each micro-batch is delivered
-    through :func:`deliver_pgcopy` (per-partition executor-side wire
-    connections).  At-least-once: a batch retried after a failure is
-    COPYed again — point it at an idempotent staging table or dedup on
-    replay keys downstream.  Returns the started StreamingQuery."""
-
-    def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        deliver_pgcopy(batch_df, dsn, table, columns=columns,
-                       schema=schema)
-
-    w = sdf.writeStream.foreachBatch(batch_fn)
-    if checkpoint:
-        w = w.option("checkpointLocation", checkpoint)
-    return w.start()
 
 
 def copy_sql(table: str, columns: list[tuple[str, str]],

@@ -8,10 +8,9 @@
     shuffle/sort replaces the reference's size-tiered temp files.
   * Table routing + DDL/view generation (S9-S11,
     `postgresql/tablespec.rs:81-391`): osm2pgsql-style routing and
-    tag packing in one step (:func:`pg_tables`), one PostgreSQL
-    statement bank built from the COPY columns (:func:`pg_statements`),
-    and one lowzoom/union view builder for both PostgreSQL and Spark
-    SQL (:func:`execute_spark_ddl` runs it against written tables).
+    tag packing in one step (:func:`pg_tables`) and one PostgreSQL
+    statement bank built from the COPY columns (:func:`pg_statements`:
+    tables, indexes, lowzoom and union views).
 """
 
 from __future__ import annotations
@@ -510,34 +509,6 @@ def pg_tables(res, style=None, extended: bool = True) -> dict[str, DataFrame]:
             for name, df in routed.items()}
 
 
-def spark_ident(name: str) -> str:
-    """A Spark SQL identifier: backtick-quoted with any embedded
-    backtick doubled, so a name such as ``osm-point`` parses."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def lowzoom_views(table: str, lowzoom: list[int] | None, ident,
-                  create: str = "CREATE VIEW") -> list[str]:
-    """T5 lowzoom views (`tablespec.rs:81-391`): one ``<table>_z<N>``
-    view per zoom N over the rows with ``minzoom <= N``.  The dialect
-    is ``ident``, which quotes a name (a schema-bound
-    :func:`pgcopy.pg_ident` for PostgreSQL, :func:`spark_ident` for
-    Spark SQL), and ``create``, which opens each statement."""
-    return [f"{create} {ident(f'{table}_z{z}')} AS SELECT * "
-            f"FROM {ident(table)} WHERE minzoom <= {z}"
-            for z in (lowzoom or [])]
-
-
-def union_compat_view(tables: list[str], cols: str, ident,
-                      view: str = "planet_osm_all",
-                      create: str = "CREATE VIEW") -> str:
-    """T4 UNION ALL compat view (`tablespec.rs:279-284`) over ``cols``
-    of each table, in the dialect of :func:`lowzoom_views`."""
-    union = " UNION ALL ".join(
-        f"SELECT {cols} FROM {ident(t)}" for t in tables)
-    return f"{create} {ident(view)} AS {union}"
-
-
 def pg_statements(columns: dict[str, list[tuple[str, str]]],
                   lowzoom: list[int] | None = None,
                   schema: str = "public",
@@ -552,8 +523,10 @@ def pg_statements(columns: dict[str, list[tuple[str, str]]],
     so their old ledger rows must go too); then DROP + CREATE TABLE per
     table, the column list being the COPY columns themselves, so DDL
     and payload cannot drift.  after: per table, the quadtree and
-    gin(tags) indexes and the lowzoom views; then the union compat
-    view over the tables in name order."""
+    gin(tags) indexes and the T5 lowzoom views (one ``<table>_z<N>``
+    view per zoom N over the rows with ``minzoom <= N``); then the T4
+    UNION ALL compat view (`tablespec.rs:279-284`) over the tables in
+    name order."""
     from .pgcopy import LEDGER_TABLE, _lit, column_defs, ledger_ddl
 
     ident = functools.partial(pg_ident, schema)
@@ -570,9 +543,12 @@ def pg_statements(columns: dict[str, list[tuple[str, str]]],
                      f'(quadtree)')
         after.append(f'CREATE INDEX {pg_ident(name + "_tags_idx")} ON {tbl} '
                      f'USING gin (tags)')
-        after += lowzoom_views(name, lowzoom, ident)
-    after.append(union_compat_view(sorted(columns),
-                                   "osm_id, tags, quadtree, minzoom", ident))
+        after += [f"CREATE VIEW {ident(f'{name}_z{z}')} AS SELECT * "
+                  f"FROM {tbl} WHERE minzoom <= {z}" for z in (lowzoom or [])]
+    union = " UNION ALL ".join(
+        f"SELECT osm_id, tags, quadtree, minzoom FROM {ident(t)}"
+        for t in sorted(columns))
+    after.append(f"CREATE VIEW {ident('planet_osm_all')} AS {union}")
     return before, after
 
 
@@ -603,11 +579,13 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
     + ledger-gated transactional promote, keyed on ``fingerprint``);
     the before-DDL then also bootstraps the ledger and clears this
     run's rows for the recreated tables so a full job re-run delivers
-    fresh.  Pass a LineageStore input fingerprint to make the key
-    meaningful across resumed jobs.
+    fresh, and once every table is delivered
+    :func:`pgcopy.sweep_staging` drops the staging tables that crashed
+    attempts left behind.  Pass a LineageStore input fingerprint to
+    make the key meaningful across resumed jobs.
     """
     from .pgcopy import (copy_columns_for, deliver_pgcopy,
-                         deliver_pgcopy_exactly_once)
+                         deliver_pgcopy_exactly_once, sweep_staging)
     from .pgwire import PgConnection, PgError
 
     packed = pg_tables(res, style, extended)
@@ -638,6 +616,9 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
             rows[name] = deliver_pgcopy(df, dsn, name,
                                         columns=copy_cols[name],
                                         schema=schema)
+    if exactly_once:  # every delivery job has finished: no live attempt
+        for name in packed:
+            sweep_staging(dsn, name, schema)
     after_errors = []
     with PgConnection(dsn) as conn:
         for s in after:
@@ -650,33 +631,3 @@ def write_postgresql(res, dsn: str, style=None, extended: bool = True,
                              after_ext_error))
     return {"tables": sorted(packed), "before": before, "after": after,
             "after_errors": after_errors, "rows": rows}
-
-
-def execute_spark_ddl(spark, table_paths: dict[str, str],
-                      lowzoom: list[int] | None = None,
-                      union_view: str = "planet_osm_all",
-                      union_cols: str = "id, tags, quadtree") -> list[str]:
-    """S11 LIVE: register each written parquet table in the Spark
-    catalog and EXECUTE the view bank against it — the Spark-dialect
-    sibling of :func:`pg_statements`' views (the reference executes
-    its statements against the target DB, `writepostgresql.rs:277-408`;
-    round-2 verdict Missing #3 asked for an executed path instead of
-    string-typed SQL).
-
-    Creates per-table parquet-backed temp views, ``<t>_z<N>`` lowzoom
-    filtered views (T5 view form), and the UNION ALL compat view
-    (T4), every name backtick-quoted.  Returns the executed statements
-    so callers/tests can assert the bank."""
-    create = "CREATE OR REPLACE TEMPORARY VIEW"
-    stmts = []
-    for t, path in table_paths.items():
-        p = str(path).replace("'", "''")
-        stmts.append(
-            f"{create} {spark_ident(t)} USING parquet OPTIONS (path '{p}')")
-        stmts += lowzoom_views(t, lowzoom, spark_ident, create)
-    if union_view and table_paths:
-        stmts.append(union_compat_view(list(table_paths), union_cols,
-                                       spark_ident, union_view, create))
-    for s in stmts:
-        spark.sql(s)
-    return stmts

@@ -1,5 +1,4 @@
-"""Training-data ops: dedup, similarity, textops, multimodal, lineage,
-streaming."""
+"""Training-data ops: dedup, similarity, textops, multimodal, lineage."""
 
 import numpy as np
 import pytest
@@ -505,119 +504,6 @@ def test_lineage_resume(spark, tmp_path, docs_path):
                for f in glob.glob(_os.path.join(out_dir, "part-*")))
     rec = lin.agg(F.sum("bytes")).first()[0]
     assert rec == disk and disk > 0
-
-
-# ---------------------------------------------------------------------------
-# streaming
-# ---------------------------------------------------------------------------
-
-def test_streaming_decode_and_tiles(spark, docs_path, decoded):
-    import os
-    from osmquadtree_geometry_spark.streaming import (
-        run_stream_to_memory, stream_decode_nodes, stream_docs,
-        streaming_tile_counts)
-    st = stream_docs(spark, os.path.dirname(docs_path))
-    nodes = stream_decode_nodes(st)
-    agg = streaming_tile_counts(nodes, tile_depth=8)
-    q = run_stream_to_memory(agg, "tile_counts", mode="complete")
-    try:
-        got = {r.tile: r.n_nodes for r in spark.sql(
-            "SELECT * FROM tile_counts").collect()}
-    finally:
-        q.stop()
-    # batch oracle
-    from osmquadtree_geometry_spark.kernels.quadtree import sql_round_qt
-    exp = {r.tile: r.n for r in decoded["nodes"]
-           .withColumn("tile", F.expr(sql_round_qt("quadtree", "8")))
-           .groupBy("tile").agg(F.count("*").alias("n")).collect()}
-    assert got == exp
-
-
-def test_streaming_drops_malformed_node(spark, tmp_path):
-    """A node span whose lon or lat does not parse yields no streamed
-    node and no tile count (the batch decode drops it too); before,
-    the stream emitted it with a null lon and a spurious quadtree."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from osmquadtree_geometry_spark.datagen import DOCS_SCHEMA
-    from osmquadtree_geometry_spark.decode import decode_nodes, explode_spans
-    from osmquadtree_geometry_spark.kernels.quadtree import sql_round_qt
-    from osmquadtree_geometry_spark.streaming import (
-        run_stream_to_memory, stream_decode_nodes, stream_docs,
-        streaming_tile_counts)
-    spans = [{"kind": "node", "text": t, "media_ref": "", "offset": i}
-             for i, t in enumerate([
-                 "id=1;lon=100000000;lat=500000000;ver=1;ts=0",
-                 "id=2;lon=abc;lat=500000000;ver=1;ts=0",
-                 "id=3;lon=100000000;lat=;ver=1;ts=0"])]
-    src = tmp_path / "docs"
-    src.mkdir()
-    pq.write_table(pa.Table.from_pylist([{"doc_id": "d", "spans": spans}],
-                                        DOCS_SCHEMA),
-                   str(src / "part-0.parquet"))
-    batch = decode_nodes(explode_spans(spark.read.parquet(str(src))))
-    assert [r.id for r in batch.collect()] == [1]
-
-    nodes = stream_decode_nodes(stream_docs(spark, str(src)))
-    q = run_stream_to_memory(nodes, "malformed_nodes", mode="append")
-    try:
-        got = spark.sql("SELECT id, lon, lat, quadtree FROM malformed_nodes")
-        assert [tuple(r) for r in got.collect()] == [
-            tuple(r) for r in batch.select("id", "lon", "lat",
-                                           "quadtree").collect()]
-    finally:
-        q.stop()
-    q = run_stream_to_memory(
-        streaming_tile_counts(stream_decode_nodes(stream_docs(spark, str(src)))),
-        "malformed_tiles", mode="complete")
-    try:
-        tiles = {r.tile: r.n_nodes for r in spark.sql(
-            "SELECT * FROM malformed_tiles").collect()}
-    finally:
-        q.stop()
-    exp = batch.select(F.expr(sql_round_qt("quadtree", "8"))).first()[0]
-    assert tiles == {exp: 1}
-
-
-def test_streaming_sessionize_stateful(spark):
-    """applyInPandasWithState custom stateful operator: per-user
-    session state with processing-time timeout."""
-    from osmquadtree_geometry_spark.streaming import (
-        run_stream_to_memory, streaming_sessionize)
-    # NoTimeout mode: deterministic for finite-source replay (a gap
-    # timeout keeps firing microbatches until wall-clock elapses)
-    agg = streaming_sessionize(spark, f"{SF}/events.parquet",
-                               gap_minutes=None)
-    q = run_stream_to_memory(agg, "sessionize_state", mode="append")
-    try:
-        rows = spark.sql("SELECT * FROM sessionize_state").collect()
-    finally:
-        q.stop()
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    exp = {r.user_id: r.n for r in
-           ev.groupBy("user_id").agg(F.count("*").alias("n")).collect()}
-    got = {}
-    for r in rows:
-        assert r.session_start <= r.session_end
-        got[r.user_id] = max(got.get(r.user_id, 0), r.n_events)
-    # one batch -> every user's open-session snapshot counts all events
-    assert got == exp
-
-
-def test_streaming_events_rollup(spark):
-    from osmquadtree_geometry_spark.streaming import (
-        run_stream_to_memory, streaming_events_rollup)
-    agg = streaming_events_rollup(spark, f"{SF}/events.parquet")
-    q = run_stream_to_memory(agg, "ev_rollup", mode="append")
-    try:
-        rows = spark.sql("SELECT * FROM ev_rollup").collect()
-    finally:
-        q.stop()
-    # append mode with watermark may withhold the tail window; just
-    # check the plumbing produced consistent aggregates
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    assert ev.count() > 0
-    assert all(r.n > 0 for r in rows)
 
 
 def test_corpus_prep_plan_and_consistency(spark):

@@ -31,6 +31,23 @@ def test_decode_nodes(decoded):
     assert (got == exp).all()
 
 
+def test_decode_drops_malformed_node(spark, tmp_path):
+    """A node span whose lon or lat does not parse yields no node."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from osmquadtree_geometry_spark.datagen import DOCS_SCHEMA
+    spans = [{"kind": "node", "text": t, "media_ref": "", "offset": i}
+             for i, t in enumerate([
+                 "id=1;lon=100000000;lat=500000000;ver=1;ts=0",
+                 "id=2;lon=abc;lat=500000000;ver=1;ts=0",
+                 "id=3;lon=100000000;lat=;ver=1;ts=0"])]
+    src = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.Table.from_pylist([{"doc_id": "d", "spans": spans}],
+                                        DOCS_SCHEMA), src)
+    nodes = decode.decode_nodes(decode.explode_spans(spark.read.parquet(src)))
+    assert [r.id for r in nodes.collect()] == [1]
+
+
 def test_decode_ways_refs_ordered(decoded):
     ways = decoded["ways"]
     row = ways.where(F.col("id") == 10).first()  # doc 0? scene_points has no way 10

@@ -225,20 +225,6 @@ def test_clip_line_bbox():
     assert len(parts) == 2
 
 
-def test_clip_ring_bbox():
-    bbox = (0, 0, 10, 10)
-    lon = np.asarray([-5, 15, 15, -5, -5])
-    lat = np.asarray([-5, -5, 15, 15, -5])
-    clon, clat = geomcalc.clip_ring_bbox(lon, lat, bbox)
-    assert clon[0] == clon[-1] and clat[0] == clat[-1]
-    assert set(zip(clon.tolist(), clat.tolist())) == {
-        (0, 0), (10, 0), (10, 10), (0, 10)}
-    # disjoint ring clips to nothing
-    clon, clat = geomcalc.clip_ring_bbox(
-        np.asarray([20, 30, 30, 20, 20]), np.asarray([20, 20, 30, 30, 20]), bbox)
-    assert len(clon) == 0
-
-
 # ---------------------------------------------------------------------------
 # ring assembly algebra (SURVEY §5.2)
 # ---------------------------------------------------------------------------

@@ -134,31 +134,6 @@ def test_deliver_pgcopy_skips_empty_partitions(spark):
         assert 1 <= ncopies <= 3
 
 
-def test_stream_to_postgres_microbatches(spark, tmp_path):
-    """foreachBatch COPY sink: a file-source stream delivers every
-    row over the wire; server-side payloads decode back exactly."""
-    from osmquadtree_geometry_spark import pgcopy
-    src = tmp_path / "src"
-    spark.range(0, 40).selectExpr(
-        "id AS osm_id", "concat('d', id) AS name").coalesce(2) \
-        .write.parquet(str(src))
-    sdf = spark.readStream.schema("osm_id long, name string") \
-        .parquet(str(src))
-    with MockPg(auth="md5") as srv:
-        q = pgcopy.stream_to_postgres(
-            sdf, srv.dsn(), "stream_tbl",
-            checkpoint=str(tmp_path / "ckpt"))
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = pgcopy.parse_copy_payloads(
-            srv.copies["public.stream_tbl"],
-            [("osm_id", "int8"), ("name", "text")])
-        assert sorted(r[0] for r in rows) == list(range(40))
-        assert all(r[1] == f"d{r[0]}" for r in rows)
-
-
 def test_write_postgresql_sequencing(spark, tmp_path):
     """Full orchestration on a tiny synthetic pipeline result:
     begin -> drop/create -> commit, then COPY per table, then
@@ -271,7 +246,8 @@ def test_exactly_once_mid_copy_kill_and_rerun(spark):
 
 def test_write_postgresql_exactly_once_mode(spark):
     """delivery_mode='exactly_once' bootstraps + clears the ledger in
-    the before-DDL and still delivers every table's rows once."""
+    the before-DDL, still delivers every table's rows once, and then
+    sweeps the staging tables an earlier crashed attempt left."""
     from types import SimpleNamespace
     from osmquadtree_geometry_spark import sinks
     schema = ("doc_id string, id long, tags map<string,string>, "
@@ -289,10 +265,14 @@ def test_write_postgresql_exactly_once_mode(spark):
         complicated_polygons=mk([(5, {"landuse": "forest"})]),
     )
     with MockPg(auth="trust") as srv:
+        srv.copies["public.planet_osm_point__stg_old_p0_a1"] = b"orphan"
+        srv.copies["public.unrelated"] = b"keep"
         out = sinks.write_postgresql(res, srv.dsn(),
                                      delivery_mode="exactly_once",
                                      fingerprint="fpA")
         assert sum(out["rows"].values()) == 4
+        assert "public.planet_osm_point__stg_old_p0_a1" not in srv.copies
+        assert srv.copies["public.unrelated"] == b"keep"
         assert any("_pg_deliveries" in s and s.startswith("CREATE TABLE")
                    for s in srv.queries)
         # re-run: before-DDL clears the ledger rows, so the recreated

@@ -345,43 +345,6 @@ def test_pg_tables_share_trailing_columns(res, extended):
         assert "tile" not in dict(cols), name
 
 
-def test_spark_ddl_quotes_names(res, spark, tmp_path):
-    """A table name that is not a bare Spark SQL identifier
-    (``osm-point``) still gets its table, lowzoom and union views."""
-    pp = str(tmp_path / "pts")
-    res.points.write.parquet(pp)
-    sinks.execute_spark_ddl(spark, {"osm-point": pp}, lowzoom=[10],
-                            union_view="osm-all")
-    assert spark.table("`osm-point`").count() == res.points.count()
-    assert spark.sql("SELECT * FROM `osm-point_z10`").count() == \
-        res.points.where(F.col("minzoom") <= 10).count()
-    assert spark.table("`osm-all`").count() == res.points.count()
-
-
-def test_executed_spark_ddl(res, spark, tmp_path):
-    """S11 live round-trip (round-2 verdict Missing #3): write two
-    geometry tables to parquet, EXECUTE the Spark view bank over
-    them, and query the lowzoom + union views back from the catalog."""
-    pp = str(tmp_path / "pts")
-    lp = str(tmp_path / "lines")
-    res.points.write.parquet(pp)
-    res.linestrings.write.parquet(lp)
-    n_p = res.points.count()
-    n_l = res.linestrings.count()
-    stmts = sinks.execute_spark_ddl(
-        spark, {"osm_point": pp, "osm_line": lp}, lowzoom=[10])
-    assert any("osm_point_z10" in s for s in stmts)
-    assert spark.table("osm_point").count() == n_p
-    # lowzoom view filters by minzoom
-    z10 = spark.sql("SELECT * FROM osm_line_z10")
-    assert z10.count() == res.linestrings.where(
-        F.col("minzoom") <= 10).count()
-    # union view spans both tables with the compat column set
-    u = spark.table("planet_osm_all")
-    assert u.columns == ["id", "tags", "quadtree"]
-    assert u.count() == n_p + n_l
-
-
 def test_repair_polygons_for_sink(res, spark):
     """prepcopy.rs:511-543 parity: invalid polygons are node-split
     into valid MultiPolygon WKB before the sink; valid ones pass

@@ -1,11 +1,15 @@
 """Guard against dead code regrowing: every top-level def or class of
 the package, and every method of a top-level package class, must be
-referenced by code somewhere in the repository's Python files
-(``plans/`` excluded) outside its own definition.  A reference is a
-name, an attribute or an imported name in the parsed code; a word in a
-docstring, a comment or a string does not count.  Dunder methods and
-overrides of a base-class method are exempt: the language or the base
-class calls them, not a name in this repository."""
+referenced by code outside ``tests/`` somewhere in the repository's
+Python files (``plans/`` excluded), outside its own definition.  A
+reference is a name, an attribute or an imported name in the parsed
+code; a word in a docstring, a comment or a string does not count.
+Dunder methods and overrides of a base-class method are exempt: the
+language or the base class calls them, not a name in this repository.
+
+A reference from ``tests/`` counts only for the defs named in
+``TEST_ONLY``; each of those must still exist, be referenced from
+``tests/`` and from nowhere else, so the list cannot go stale."""
 
 import ast
 import importlib
@@ -48,6 +52,30 @@ def _references(trees: dict[str, ast.AST]) -> dict[str, list]:
     return refs
 
 
+# Package defs that only tests reach, as "<file under the package>
+# <def or Class.method>".
+TEST_ONLY = {
+    # Python/numpy references the tests check the engine against
+    "kernels/quadtree.py neighbours",
+    "kernels/quadtree.py is_parent",
+    "kernels/mercator.py backward",
+    "kernels/geomcalc.py line_length",
+    "kernels/geomcalc.py polygon_contains",
+    "kernels/validity.py make_valid_ring",
+    "kernels/validity.py boundary",
+    "kernels/rings.py Ring.refs_seq",
+    "pgcopy.py parse_copy_payloads",
+    "config/minzoom.py MinZoomSpec.find_polygon",
+    # the north rule's per-row span-sequence check of the decode
+    "decode.py span_invariant_violations",
+    # geometry encoders for the PostgreSQL ``way`` column, which no
+    # output fills yet
+    "kernels/wkb.py point_wkb",
+    "kernels/wkb.py linestring_wkb",
+    "kernels/wkb.py simple_polygon_wkb",
+    "operators/validity.py repair_polygons_for_sink",
+}
+
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
@@ -60,10 +88,15 @@ def _overrides(f: str, cls: str, name: str) -> bool:
 
 
 def unused_defs() -> list[str]:
+    """Each package def that breaks the rule, or the ``TEST_ONLY``
+    entry that does, with the reason."""
     trees = {f: ast.parse(open(os.path.join(ROOT, f), encoding="utf-8")
                           .read()) for f in _python_files()}
-    refs = _references(trees)
-    unused = []
+    code = _references({f: t for f, t in trees.items()
+                        if not f.startswith("tests/")})
+    tests = _references({f: t for f, t in trees.items()
+                         if f.startswith("tests/")})
+    unused, listed = [], set()
     for f, tree in trees.items():
         if not f.startswith(PACKAGE + "/"):
             continue
@@ -74,13 +107,22 @@ def unused_defs() -> list[str]:
                  and not n.name.startswith("__")]
         for cls, node in defs:
             start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            if any(g != f or not start <= line <= node.end_lineno
-                   for g, line in refs[node.name]):
-                continue
-            if cls is None:
-                unused.append(f"{f}:{node.lineno} {node.name}")
-            elif not _overrides(f, cls, node.name):
-                unused.append(f"{f}:{node.lineno} {cls}.{node.name}")
+            used = any(g != f or not start <= line <= node.end_lineno
+                       for g, line in code[node.name])
+            name = node.name if cls is None else f"{cls}.{node.name}"
+            key = f"{f.removeprefix(PACKAGE + '/')} {name}"
+            where = f"{f}:{node.lineno} {name}"
+            if key in TEST_ONLY:
+                listed.add(key)
+                if used:
+                    unused.append(f"{where}: has a caller outside tests/, "
+                                  "so it leaves TEST_ONLY")
+                elif not tests[node.name]:
+                    unused.append(f"{where}: no test reaches it")
+            elif not used and not (cls and _overrides(f, cls, node.name)):
+                unused.append(f"{where}: no caller outside tests/")
+    unused += [f"{key}: listed in TEST_ONLY but not defined"
+               for key in sorted(TEST_ONLY - listed)]
     return unused
 
 
