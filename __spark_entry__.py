@@ -6,7 +6,7 @@ DuckDB oracle where SQL-expressible (CORRECTNESS gate).
 
 The geometry engine's input is the deterministic interleaved-docs
 fixture (BASELINE.json.input_hint shape), generated per sf under
-``/root/repo/.data/geom_sf*/docs.parquet``; TPC-H-ish / training-data
+``.data/geom_sf*/docs.parquet`` next to this file; TPC-H-ish / training-data
 queries read the driver's parquet at the given sf_dir directly.
 """
 
@@ -537,7 +537,7 @@ def q_multimodal_features(spark, sf_dir):
     from osmquadtree_geometry_spark.multimodal import (
         extract_features, synth_media_table)
     media = _decoded(spark, sf_dir)["media"]
-    out = extract_features(synth_media_table(media), dim=8, fake=True)
+    out = extract_features(synth_media_table(media), dim=8)
     return out.select("doc_id", "media_ref", "n_bytes",
                       F.round(F.expr(
                           "aggregate(features, 0.0d, (a, v) -> a + cast(v as double))"),

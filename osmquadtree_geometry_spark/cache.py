@@ -50,10 +50,10 @@ def _stack() -> list[list[DataFrame]]:
     return _local.stack
 
 
-def persist(df: DataFrame, level=None) -> DataFrame:
+def persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` that every active scope (and the global
     registry) can later release."""
-    df = df.persist() if level is None else df.persist(level)
+    df = df.persist()
     with _global_lock:
         _global.append(df)
     for handles in _stack():

@@ -507,8 +507,10 @@ def generate_mega_relation_docs(out_path: str, n_ways: int = 10_000,
     return out_path
 
 
-def fixture_docs_path(sf_dir: str, root: str = "/root/repo/.data") -> str:
-    """Deterministic fixture location for a given testdata sf dir."""
+def fixture_docs_path(sf_dir: str) -> str:
+    """Deterministic fixture location for a given testdata sf dir,
+    under :data:`session.DATA_DIR`."""
+    from .session import DATA_DIR
     name = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(root, f"geom_{name}", "docs.parquet")
+    out = os.path.join(DATA_DIR, f"geom_{name}", "docs.parquet")
     return generate_docs_parquet(out, docs_for_sf(sf_dir))

@@ -165,8 +165,7 @@ def common_ancestor(qa: np.ndarray, qb: np.ndarray) -> np.ndarray:
     return res
 
 
-def calculate_bbox(minlon, minlat, maxlon, maxlat,
-                   max_depth: int = MAX_DEPTH, buffer: float = 0.0) -> np.ndarray:
+def calculate_bbox(minlon, minlat, maxlon, maxlat) -> np.ndarray:
     """Deepest cell whose extent contains the bbox (reference
     ``Quadtree::calculate(&bbox, 18, 0.0)``, `process_geometry.rs:299`).
 
@@ -175,14 +174,9 @@ def calculate_bbox(minlon, minlat, maxlon, maxlat,
     minlat = np.asarray(minlat, dtype=np.int64)
     maxlon = np.asarray(maxlon, dtype=np.int64)
     maxlat = np.asarray(maxlat, dtype=np.int64)
-    if buffer != 0.0:
-        dl = ((maxlon - minlon).astype(np.float64) * buffer).astype(np.int64)
-        dt = ((maxlat - minlat).astype(np.float64) * buffer).astype(np.int64)
-        minlon, maxlon = minlon - dl, maxlon + dl
-        minlat, maxlat = minlat - dt, maxlat + dt
     # note: max-lat corner has the *smaller* tile y
-    qa = calculate_point(minlon, minlat, max_depth)
-    qb = calculate_point(maxlon, maxlat, max_depth)
+    qa = calculate_point(minlon, minlat)
+    qb = calculate_point(maxlon, maxlat)
     res = common_ancestor(qa, qb)
     bad = (minlon > maxlon) | (minlat > maxlat)
     return np.where(bad, EMPTY, res)

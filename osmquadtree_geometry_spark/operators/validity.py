@@ -69,16 +69,13 @@ def simplify_lines(lines: DataFrame, tolerance_m: float) -> DataFrame:
     return lines.mapInPandas(run, schema)
 
 
-def lowzoom_table(lines: DataFrame, zoom: int,
-                  tolerance_m: float | None = None) -> DataFrame:
-    """T5: minzoom-filtered derived table with optional simplification
-    (tolerance defaults to the zoom's pixel resolution, as the
-    reference's lowzoom views use ST_SIMPLIFY at tile resolution)."""
+def lowzoom_table(lines: DataFrame, zoom: int) -> DataFrame:
+    """T5: minzoom-filtered derived table, simplified at the zoom's
+    pixel resolution (the reference's lowzoom views use ST_SIMPLIFY at
+    tile resolution)."""
     from ..kernels.mercator import EARTH_WIDTH
-    if tolerance_m is None:
-        tolerance_m = EARTH_WIDTH * 2.0 / (2 ** zoom) / 256.0
     filtered = lines.where(F.col("minzoom") <= zoom)
-    return simplify_lines(filtered, tolerance_m)
+    return simplify_lines(filtered, EARTH_WIDTH * 2.0 / (2 ** zoom) / 256.0)
 
 
 def make_valid_polygons(polygons: DataFrame) -> DataFrame:

@@ -21,9 +21,6 @@ from pyspark.sql import functions as F
 
 from .. import cache
 
-LONLAT = "array<struct<lon:int,lat:int>>"
-
-
 # The ordered lonlats array from exploded (pos, lon, lat) rows: collect
 # struct(pos, ll) with lon/lat bit-packed into ONE bigint (2 slots =
 # 24 B/element vs 32 B, 25% less traffic on the pipeline's widest

@@ -229,11 +229,11 @@ def _lit(v: str) -> str:
     return str(v).replace("'", "''")
 
 
-def ledger_ddl(schema: str = "public", ledger: str = LEDGER_TABLE) -> str:
+def ledger_ddl(schema: str = "public") -> str:
     """Delivery-ledger DDL: one row per promoted (target, fingerprint,
     partition).  The PRIMARY KEY is the exactly-once gate — a second
     attempt's insert hits unique_violation (23505) and skips promote."""
-    return (f"CREATE TABLE IF NOT EXISTS {pg_ident(schema, ledger)} ("
+    return (f"CREATE TABLE IF NOT EXISTS {pg_ident(schema, LEDGER_TABLE)} ("
             "target text, fingerprint text, part int, rows bigint, "
             "PRIMARY KEY (target, fingerprint, part))")
 
@@ -241,8 +241,7 @@ def ledger_ddl(schema: str = "public", ledger: str = LEDGER_TABLE) -> str:
 def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
                                 fingerprint: str,
                                 columns: list[tuple[str, str]] | None = None,
-                                schema: str = "public",
-                                ledger: str = LEDGER_TABLE) -> int:
+                                schema: str = "public") -> int:
     """EXACTLY-ONCE batch delivery under task retries (round-4 verdict
     Next #3).  :func:`deliver_pgcopy` is at-least-once: a partition
     task that fails after its COPY committed is re-attempted by Spark
@@ -292,9 +291,9 @@ def deliver_pgcopy_exactly_once(df: DataFrame, dsn: str, table: str,
     n_parts = enc.rdd.getNumPartitions()
     tq = _lit(table)
     fq = _lit(fingerprint)
-    lq = pg_ident(schema, ledger)
+    lq = pg_ident(schema, LEDGER_TABLE)
     with PgConnection(dsn) as conn:  # bootstrap the ledger (idempotent)
-        conn.execute(ledger_ddl(schema, ledger))
+        conn.execute(ledger_ddl(schema))
         try:
             conn.execute(f"INSERT INTO {lq} VALUES "
                          f"('{tq}', '{fq}', -1, {n_parts})")

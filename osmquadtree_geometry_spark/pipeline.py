@@ -78,7 +78,6 @@ class _Run:
     spark: SparkSession
     style: GeometryStyle
     minzoom: MinZoomSpec | None
-    with_tiles: bool
     tile_group_depth: int
     # cache the decode tables and J4's output, which several stages read
     persist: bool
@@ -183,12 +182,11 @@ STAGES = (
           ("minzoom_points", "minzoom_way_features",
            "minzoom_complicated_polygons"), _minzoom,
           skip=lambda r: r.minzoom is None),
-    # J6: with_tiles=False -> skipped
+    # J6: tile allocation
     Stage("tiles", ("points", "way_features", "cpolys", "nodes"),
           ("points", "way_features", "cpolys"),
           ("tiles_points", "tiles_way_features",
-           "tiles_complicated_polygons"), _tiles,
-          skip=lambda r: not r.with_tiles),
+           "tiles_complicated_polygons"), _tiles),
 )
 
 
@@ -231,7 +229,6 @@ def _bucketed_refs(spark: SparkSession, prefix: str) -> DataFrame:
 def run_pipeline(spark: SparkSession, docs_path: str | None = None,
                  style: GeometryStyle | None = None,
                  minzoom: MinZoomSpec | None = None,
-                 with_tiles: bool = True,
                  tile_group_depth: int = 8,
                  persist: bool = True,
                  end_date: int | None = None,
@@ -249,11 +246,11 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
     the decode shuffles were paid once at ingest, and J1's join reads
     both sides bucket-aligned (zero Exchange below the join).
 
-    With ``with_tiles`` the tile dictionary (a driver collect) starts
-    on a background thread as soon as its input exists — the
-    location-only projection of the span stream for raw docs, the
-    bucketed nodes table otherwise — and runs while the rest of the
-    chain is planned; the tiles stage waits for it.  Its jobs keep the
+    The tile dictionary (a driver collect) starts on a background
+    thread as soon as its input exists — the location-only projection
+    of the span stream for raw docs, the bucketed nodes table
+    otherwise — and runs while the rest of the chain is planned; the
+    tiles stage waits for it.  Its jobs keep the
     caller's job group, description and tags.  If planning fails
     before the tiles stage, the call waits for the collect to finish
     before raising, so no dictionary job outlives it."""
@@ -280,16 +277,14 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
         # the span stream skips the tag shuffle a full decode_nodes pays
         locations = decode_node_locations(t["spans"])
         wayrefs = None
-    tiles = (submit(spark, tile_dictionary, locations, tile_group_depth)
-             if with_tiles else None)
-    r = _Run(spark, style or GeometryStyle(), minzoom, with_tiles,
-             tile_group_depth, persist=persist, persist_shared=persist,
-             tiles=tiles, wayrefs=wayrefs)
+    tiles = submit(spark, tile_dictionary, locations, tile_group_depth)
+    r = _Run(spark, style or GeometryStyle(), minzoom, tile_group_depth,
+             persist=persist, persist_shared=persist, tiles=tiles,
+             wayrefs=wayrefs)
     try:
         return _run_chain(r, t, lambda stage, build: build(), end_date)
     finally:
-        if tiles is not None:
-            wait([tiles])
+        wait([tiles])
 
 
 def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
@@ -329,8 +324,8 @@ def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
     # branch points that J1 and J2 share between their two outputs are
     # cached, and released on return; the tiles stage collects the tile
     # dictionary itself, since a resumed run may never build that stage
-    r = _Run(spark, style or GeometryStyle(), minzoom, True,
-             tile_group_depth, persist=False, persist_shared=True)
+    r = _Run(spark, style or GeometryStyle(), minzoom, tile_group_depth,
+             persist=False, persist_shared=True)
     with cache.scope() as handles:
         try:
             t = decode_all(read_docs(spark, docs_path))

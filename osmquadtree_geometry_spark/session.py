@@ -11,6 +11,9 @@ from pyspark.sql import SparkSession
 MAX_DRIVER_MEMORY_GB = 24
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+# generated fixtures and the shipped package zip: ``.data/`` next to
+# the package, in whichever checkout runs it
+DATA_DIR = os.path.join(os.path.dirname(_PACKAGE_DIR), ".data")
 _SHIPPED: set[str] = set()
 
 
@@ -121,21 +124,21 @@ def get_spark(app: str = "osmquadtree_geometry_spark",
 def ship_package(spark: SparkSession) -> None:
     """Ship this package to the executors' Python workers as a zip, as
     ``spark-submit --py-files`` would, so a driver started from any
-    directory can run Python stages.  The zip lives under ``.data/``
-    next to the package and is rebuilt when a source file is newer (a
+    directory can run Python stages.  The zip lives under
+    :data:`DATA_DIR` and is rebuilt when a source file is newer (a
     stale zip would ship old code); it is added once per application."""
     sc = spark.sparkContext
     if sc.applicationId in _SHIPPED:
         return
-    root = os.path.dirname(_PACKAGE_DIR)
-    os.makedirs(os.path.join(root, ".data"), exist_ok=True)
-    zip_base = os.path.join(root, ".data", "osmquadtree_geometry_spark_pkg")
+    os.makedirs(DATA_DIR, exist_ok=True)
+    zip_base = os.path.join(DATA_DIR, "osmquadtree_geometry_spark_pkg")
     zip_path = zip_base + ".zip"
     src_mtime = max(os.path.getmtime(os.path.join(r, f))
                     for r, _, fs in os.walk(_PACKAGE_DIR)
                     for f in fs if f.endswith(".py"))
     if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < src_mtime:
-        shutil.make_archive(zip_base, "zip", root_dir=root,
+        shutil.make_archive(zip_base, "zip",
+                            root_dir=os.path.dirname(_PACKAGE_DIR),
                             base_dir=os.path.basename(_PACKAGE_DIR))
     sc.addPyFile(zip_path)
     _SHIPPED.add(sc.applicationId)

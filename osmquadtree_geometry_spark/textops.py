@@ -63,11 +63,6 @@ _PUNCT = ("length(regexp_replace(text, '[^!-/:-@\\\\[-`{{-~]', '')) / "
           "cast(greatest(length(text), 1) as double)")
 _BPE = "size(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\\\s]', 0))"
 
-# inline-composition forms kept for callers that want the standalone
-# SQL text (dialect parity with the DuckDB oracles)
-_N_TOKS = _n_toks()
-_MEAN_TOK = f"length(trim(text)) / cast(greatest({_N_TOKS}, 1) as double)"
-
 
 def _mean_tok(toks: str = _TOKS) -> str:
     return f"length(trim(text)) / cast(greatest({_n_toks(toks)}, 1) as double)"

@@ -77,14 +77,13 @@ def test_pipeline_end_date(spark, docs_path):
     """Historical-extract marker (`geometry_block.rs:39,190-193`):
     end_date stamps every geometry output when requested."""
     from osmquadtree_geometry_spark.pipeline import run_pipeline
-    res = run_pipeline(spark, docs_path, with_tiles=False,
-                       end_date=1_700_000_000)
+    res = run_pipeline(spark, docs_path, end_date=1_700_000_000)
     for df in (res.points, res.linestrings, res.simple_polygons,
                res.complicated_polygons):
         assert "end_date" in df.columns
         vals = {r.end_date for r in df.select("end_date").limit(5).collect()}
         assert vals <= {1_700_000_000}
-    res2 = run_pipeline(spark, docs_path, with_tiles=False)
+    res2 = run_pipeline(spark, docs_path)
     assert "end_date" not in res2.points.columns
 
 

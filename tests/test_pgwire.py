@@ -247,7 +247,8 @@ def test_exactly_once_mid_copy_kill_and_rerun(spark):
 def test_write_postgresql_exactly_once_mode(spark):
     """delivery_mode='exactly_once' bootstraps + clears the ledger in
     the before-DDL, still delivers every table's rows once, and then
-    sweeps the staging tables an earlier crashed attempt left."""
+    sweeps the staging tables an earlier crashed attempt left.  A
+    misspelt mode is refused before any connection opens."""
     from types import SimpleNamespace
     from osmquadtree_geometry_spark import sinks
     schema = ("doc_id string, id long, tags map<string,string>, "
@@ -265,6 +266,10 @@ def test_write_postgresql_exactly_once_mode(spark):
         complicated_polygons=mk([(5, {"landuse": "forest"})]),
     )
     with MockPg(auth="trust") as srv:
+        with pytest.raises(ValueError, match="'fast' or 'exactly_once'"):
+            sinks.write_postgresql(res, srv.dsn(),
+                                   delivery_mode="exactly-once")
+        assert srv.startups == [] and srv.queries == []
         srv.copies["public.planet_osm_point__stg_old_p0_a1"] = b"orphan"
         srv.copies["public.unrelated"] = b"keep"
         out = sinks.write_postgresql(res, srv.dsn(),

@@ -88,7 +88,7 @@ def test_knn_plan_is_equi_join(spark, docs_path):
     CartesianProduct."""
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     from osmquadtree_geometry_spark.spatial.joins import knn_join, raster_vector_join
-    res = run_pipeline(spark, docs_path, with_tiles=False)
+    res = run_pipeline(spark, docs_path)
     k = knn_join(res.points, res.points, k=3, cell_depth=6, max_rings=1)
     pk = _plan(k)
     assert "CartesianProduct" not in pk
@@ -113,7 +113,7 @@ def test_cell_codec_plans_stay_in_jvm(spark, docs_path, tmp_path):
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     from osmquadtree_geometry_spark.spatial import joins
     from osmquadtree_geometry_spark.tableio import read_table
-    res = run_pipeline(spark, docs_path, with_tiles=False)
+    res = run_pipeline(spark, docs_path)
     paths = sinks.write_spatial_index(res, str(tmp_path))
     pc = read_table(spark, paths["points_cells"])
     plans = {

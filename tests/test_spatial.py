@@ -11,7 +11,7 @@ from osmquadtree_geometry_spark.spatial import joins
 @pytest.fixture(scope="module")
 def geo(spark, docs_path):
     from osmquadtree_geometry_spark.pipeline import run_pipeline
-    res = run_pipeline(spark, docs_path, with_tiles=False)
+    res = run_pipeline(spark, docs_path)
     out = {
         "points": res.points.cache(),
         "lines": res.linestrings.cache(),

@@ -1,11 +1,15 @@
-"""Guard against dead code regrowing: every top-level def or class of
-the package, and every method of a top-level package class, must be
-referenced by code outside ``tests/`` somewhere in the repository's
-Python files (``plans/`` excluded), outside its own definition.  A
-reference is a name, an attribute or an imported name in the parsed
-code; a word in a docstring, a comment or a string does not count.
-Dunder methods and overrides of a base-class method are exempt: the
-language or the base class calls them, not a name in this repository.
+"""Guard against dead code regrowing: every top-level def, class or
+assigned name (a module constant) of the package, and every method of
+a top-level package class, must be referenced by code outside
+``tests/`` somewhere in the repository's Python files (``plans/``
+excluded), outside its own definition or assignment statement.  A
+reference is a name or an attribute read (``ast.Load``), or an
+imported name, in the parsed code; a word in a docstring, a comment or
+a string does not count, nor does assigning the name again.  Each name
+of a tuple target (``_QX, _QY = ...``) counts on its own.  Dunder
+methods and names, and overrides of a base-class method, are exempt:
+the language or the base class reads them, not a name in this
+repository.
 
 A reference from ``tests/`` counts only for the defs named in
 ``TEST_ONLY``; each of those must still exist, be referenced from
@@ -37,14 +41,15 @@ def _python_files() -> list[str]:
 
 
 def _references(trees: dict[str, ast.AST]) -> dict[str, list]:
-    """name -> (file, line) of each name, attribute or imported name
-    spelling it."""
+    """name -> (file, line) of each name or attribute read, or
+    imported name, spelling it."""
     refs = defaultdict(list)
     for f, tree in trees.items():
         for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
                 refs[node.id].append((f, node.lineno))
-            elif isinstance(node, ast.Attribute):
+            elif (isinstance(node, ast.Attribute)
+                  and isinstance(node.ctx, ast.Load)):
                 refs[node.attr].append((f, node.lineno))
             elif isinstance(node, ast.alias):
                 for part in node.name.split("."):
@@ -53,7 +58,7 @@ def _references(trees: dict[str, ast.AST]) -> dict[str, list]:
 
 
 # Package defs that only tests reach, as "<file under the package>
-# <def or Class.method>".
+# <def, constant or Class.method>".
 TEST_ONLY = {
     # Python/numpy references the tests check the engine against
     "kernels/quadtree.py neighbours",
@@ -79,6 +84,28 @@ TEST_ONLY = {
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+def _package_names(tree: ast.Module):
+    """(class or None, name, statement) of each top-level def, class
+    and assigned non-dunder name of a module, and of each non-dunder
+    method of its top-level classes."""
+    for node in tree.body:
+        if isinstance(node, (*_FUNCS, ast.ClassDef)):
+            yield None, node.name, node
+        if isinstance(node, ast.ClassDef):
+            yield from ((node.name, m.name, m) for m in node.body
+                        if isinstance(m, _FUNCS)
+                        and not m.name.startswith("__"))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+            yield from ((None, n.id, node) for t in targets
+                        for n in ast.walk(t)
+                        if isinstance(n, ast.Name)
+                        and isinstance(n.ctx, ast.Store)
+                        and not (n.id.startswith("__")
+                                 and n.id.endswith("__")))
+
+
 def _overrides(f: str, cls: str, name: str) -> bool:
     """Whether method ``name`` of class ``cls`` in package file ``f``
     overrides an attribute of one of the class's bases."""
@@ -88,8 +115,8 @@ def _overrides(f: str, cls: str, name: str) -> bool:
 
 
 def unused_defs() -> list[str]:
-    """Each package def that breaks the rule, or the ``TEST_ONLY``
-    entry that does, with the reason."""
+    """Each package def or constant that breaks the rule, or the
+    ``TEST_ONLY`` entry that does, with the reason."""
     trees = {f: ast.parse(open(os.path.join(ROOT, f), encoding="utf-8")
                           .read()) for f in _python_files()}
     code = _references({f: t for f, t in trees.items()
@@ -100,26 +127,22 @@ def unused_defs() -> list[str]:
     for f, tree in trees.items():
         if not f.startswith(PACKAGE + "/"):
             continue
-        defs = [(None, n) for n in tree.body
-                if isinstance(n, (*_FUNCS, ast.ClassDef))]
-        defs += [(c.name, n) for c in tree.body if isinstance(c, ast.ClassDef)
-                 for n in c.body if isinstance(n, _FUNCS)
-                 and not n.name.startswith("__")]
-        for cls, node in defs:
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        for cls, name, node in _package_names(tree):
+            start = min([node.lineno] + [
+                d.lineno for d in getattr(node, "decorator_list", [])])
             used = any(g != f or not start <= line <= node.end_lineno
-                       for g, line in code[node.name])
-            name = node.name if cls is None else f"{cls}.{node.name}"
-            key = f"{f.removeprefix(PACKAGE + '/')} {name}"
-            where = f"{f}:{node.lineno} {name}"
+                       for g, line in code[name])
+            label = name if cls is None else f"{cls}.{name}"
+            key = f"{f.removeprefix(PACKAGE + '/')} {label}"
+            where = f"{f}:{node.lineno} {label}"
             if key in TEST_ONLY:
                 listed.add(key)
                 if used:
                     unused.append(f"{where}: has a caller outside tests/, "
                                   "so it leaves TEST_ONLY")
-                elif not tests[node.name]:
+                elif not tests[name]:
                     unused.append(f"{where}: no test reaches it")
-            elif not used and not (cls and _overrides(f, cls, node.name)):
+            elif not used and not (cls and _overrides(f, cls, name)):
                 unused.append(f"{where}: no caller outside tests/")
     unused += [f"{key}: listed in TEST_ONLY but not defined"
                for key in sorted(TEST_ONLY - listed)]
