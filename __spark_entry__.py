@@ -86,16 +86,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full geometry pipeline (decode -> joins -> assembly ->
     minzoom -> tiles) on the sf0.001 fixture; returns per-tile,
     per-geometry-type feature counts."""
-    res = _pipeline(spark, "/root/testdata/sf0.001")
-    def tag(df, t):
-        return df.select(F.lit(t).alias("geom_type"), "tile", "id")
-    allf = (tag(res.points, "point")
-            .unionByName(tag(res.linestrings, "linestring"))
-            .unionByName(tag(res.simple_polygons, "simple_polygon"))
-            .unionByName(tag(res.complicated_polygons, "complicated_polygon")))
-    return (allf.groupBy("geom_type", "tile")
-            .agg(F.count("*").alias("n_features"),
-                 F.min("id").alias("min_id"), F.max("id").alias("max_id"))
+    return (q_feature_tile_counts(spark, "/root/testdata/sf0.001")
             .orderBy("geom_type", "tile"))
 
 

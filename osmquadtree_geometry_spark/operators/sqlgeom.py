@@ -64,6 +64,17 @@ def sql_parts_bbox(parts: str) -> dict[str, str]:
             for k, v in sql_bbox("pt.exterior").items()}
 
 
+# [minlon, minlat, maxlon, maxlat] SQL of a feature's bbox, by the
+# shape of its geometry column: a point's own lon/lat, a way's
+# ``lonlats``, a complicated polygon's ``parts``.  The GeoJSON bbox
+# member and the feature filter both read it.
+GEOM_BBOX = {
+    "point": ("lon", "lat", "lon", "lat"),
+    "lonlats": tuple(sql_bbox("lonlats").values()),
+    "parts": tuple(sql_parts_bbox("parts").values()),
+}
+
+
 def sql_is_ring(refs: str) -> str:
     """`process_geometry.rs:260`: refs[0] == refs[last]."""
     return f"(size({refs}) > 0 AND element_at({refs}, 1) = element_at({refs}, -1))"

@@ -27,9 +27,6 @@ from concurrent.futures import Future, wait
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
-import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,9 +41,9 @@ from .operators.minzoom import find_minzoom_fused, find_minzoom_table
 from .operators.multipolygons import PARTS_TYPE, process_multipolygons
 from .operators.parenttags import add_parent_tags
 from .operators.relationtags import add_relation_tags
-from .operators.sqlgeom import sql_bbox, sql_parts_bbox
 from .operators.tiles import allocate_tiles, tile_dictionary
 from .operators.waynodes import collect_way_nodes
+from .sources import filter_shape
 
 EMPTY_ERRORS = "elem_type string, elem_id long, message string"
 EMPTY_CPOLYS = (f"doc_id string, id long, tags map<string,string>, "
@@ -336,100 +333,27 @@ def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
     return res, resumed
 
 
-def filter_features_bbox(res: PipelineResult,
-                         bbox: tuple[int, int, int, int]) -> PipelineResult:
-    """Reference `-f/--filter` semantics (bbox in 1e-7-degree ints):
-    keep features whose geometry bbox overlaps the filter box — the
-    reference filters input blocks by bbox (`process_geometry.rs`
-    filter arg); feature-level overlap is the exact output analogue.
-    Pure JVM predicates (array_min/max over the coordinate structs)."""
-    a, b, c, d = (int(v) for v in bbox)
-
-    def pt(df):
-        return df.where((F.col("lon") >= a) & (F.col("lon") <= c)
-                        & (F.col("lat") >= b) & (F.col("lat") <= d))
-
-    def overlapping(g):
-        return lambda df: df.where(F.expr(
-            f"{g['minlon']} <= {c} AND {g['maxlon']} >= {a} AND "
-            f"{g['minlat']} <= {d} AND {g['maxlat']} >= {b}"))
-
-    ll = overlapping(sql_bbox("lonlats"))
-    parts = overlapping(sql_parts_bbox("parts"))
+def filter_features(res: PipelineResult,
+                    bbox: tuple[int, int, int, int] | None = None,
+                    rings=None) -> PipelineResult:
+    """Reference ``-f/--filter`` (`pack_geometry.rs:498-519`
+    GeometryFilter): keep the features whose geometry bbox overlaps
+    ``bbox`` (1e-7-degree ints) or, given ``rings`` (as
+    ``sources.parse_poly_file`` returns them), overlaps the polygon
+    (``Poly::check_box``) — :func:`sources.filter_shape` on each
+    feature table.  The result has no ``spatial_index``: a stored
+    index covers the unfiltered features."""
+    def keep(df: DataFrame, shape: str) -> DataFrame:
+        return filter_shape(df, shape, bbox, rings)
 
     return PipelineResult(
-        points=pt(res.points), linestrings=ll(res.linestrings),
-        simple_polygons=ll(res.simple_polygons),
-        complicated_polygons=parts(res.complicated_polygons),
+        points=keep(res.points, "point"),
+        linestrings=keep(res.linestrings, "lonlats"),
+        simple_polygons=keep(res.simple_polygons, "lonlats"),
+        complicated_polygons=keep(res.complicated_polygons, "parts"),
         errors=res.errors, decoded=res.decoded,
-        way_features=(ll(res.way_features)
+        way_features=(keep(res.way_features, "lonlats")
                       if res.way_features is not None else None))
-
-
-def filter_features_poly(res: PipelineResult, rings) -> PipelineResult:
-    """Reference ``GeometryFilter::Poly`` semantics
-    (`pack_geometry.rs:498-519`, ``Poly::check_box``): keep features
-    whose geometry BBOX overlaps the polygon (any ring).  Two layers,
-    like the reference's tile-prune + per-feature check:
-
-      1. coarse: the rings' common bbox as pure JVM predicates
-         (:func:`filter_features_bbox` — prunable/pushdownable);
-      2. exact: a vectorized pandas UDF running
-         ``geomcalc.poly_overlaps_boxes`` on the staged feature bbox.
-
-    ``rings``: list of (lon int-1e-7 array, lat array) closed rings,
-    e.g. from :func:`osmquadtree_geometry_spark.sources.
-    parse_poly_file`."""
-    from pyspark.sql import types as T
-
-    from .kernels import geomcalc
-
-    rr = [(np.asarray(lon, np.int64), np.asarray(lat, np.int64))
-          for lon, lat in rings]
-    pb = (int(min(r[0].min() for r in rr)),
-          int(min(r[1].min() for r in rr)),
-          int(max(r[0].max() for r in rr)),
-          int(max(r[1].max() for r in rr)))
-    coarse = filter_features_bbox(res, pb)
-
-    @F.pandas_udf(T.BooleanType())
-    def overlaps(minlon: pd.Series, minlat: pd.Series,
-                 maxlon: pd.Series, maxlat: pd.Series) -> pd.Series:
-        a = minlon.to_numpy(np.int64)
-        b = minlat.to_numpy(np.int64)
-        c = maxlon.to_numpy(np.int64)
-        d = maxlat.to_numpy(np.int64)
-        keep = np.zeros(len(a), bool)
-        for rlon, rlat in rr:
-            todo = ~keep
-            if not todo.any():
-                break
-            keep[todo] |= geomcalc.poly_overlaps_boxes(
-                rlon, rlat, a[todo], b[todo], c[todo], d[todo])
-        return pd.Series(keep)
-
-    def pt(df):
-        return df.where(overlaps("lon", "lat", "lon", "lat"))
-
-    def overlapping(g):
-        names = ("_mnlo", "_mnla", "_mxlo", "_mxla")
-
-        def keep(df):
-            staged = df.withColumns(
-                {n: F.expr(e) for n, e in zip(names, g.values())})
-            return staged.where(overlaps(*names)).drop(*names)
-        return keep
-
-    ll = overlapping(sql_bbox("lonlats"))
-    parts = overlapping(sql_parts_bbox("parts"))
-
-    return PipelineResult(
-        points=pt(coarse.points), linestrings=ll(coarse.linestrings),
-        simple_polygons=ll(coarse.simple_polygons),
-        complicated_polygons=parts(coarse.complicated_polygons),
-        errors=coarse.errors, decoded=coarse.decoded,
-        way_features=(ll(coarse.way_features)
-                      if coarse.way_features is not None else None))
 
 
 def prepare_bucketed(spark: SparkSession, docs_path: str,

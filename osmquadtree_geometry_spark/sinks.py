@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernels.quadtree import sql_qt_depth, sql_qt_xyz
-from .operators.sqlgeom import sql_bbox, sql_parts_bbox
+from .operators.sqlgeom import GEOM_BBOX
 from .pgcopy import pg_ident
 
 
@@ -84,14 +84,6 @@ def _geojson_staged(df: DataFrame) -> DataFrame:
     return df
 
 
-_GEOM_BBOX = {
-    # [minlon, minlat, maxlon, maxlat] source exprs per geometry shape
-    "point": ("lon", "lat", "lon", "lat"),
-    "lonlats": tuple(sql_bbox("lonlats").values()),
-    "parts": tuple(sql_parts_bbox("parts").values()),
-}
-
-
 def geojson_feature_expr(geom_type: str) -> str:
     """SQL producing the feature JSON string; geometry per type.
     Coordinates are [lon, lat] degrees at 7dp (1e-7 fixed-point),
@@ -110,9 +102,9 @@ def geojson_feature_expr(geom_type: str) -> str:
     floats; values identical).  Requires the staged qt_x/qt_y/qt_z
     columns (``_geojson_staged`` adds them)."""
     measure = ""
-    bbox_src = _GEOM_BBOX["lonlats"]
+    bbox_src = GEOM_BBOX["lonlats"]
     if geom_type == "point":
-        bbox_src = _GEOM_BBOX["point"]
+        bbox_src = GEOM_BBOX["point"]
         geometry = (f"concat('{{\"type\":\"Point\",\"coordinates\":', "
                     f"{_pt_json('lon', 'lat')}, '}}')")
     elif geom_type == "linestring":
@@ -140,7 +132,7 @@ def geojson_feature_expr(geom_type: str) -> str:
         geometry = (f"concat('{{\"type\":\"MultiPolygon\",\"coordinates\":[', "
                     f"array_join(transform(parts, {part}), ','), ']}}')")
         measure = f"concat(',\"way_area\":', {_num1_str('area')})"
-        bbox_src = _GEOM_BBOX["parts"]
+        bbox_src = GEOM_BBOX["parts"]
     else:
         raise ValueError(geom_type)
     a, b, c, d = bbox_src

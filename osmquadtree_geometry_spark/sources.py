@@ -13,9 +13,11 @@ Spark-first equivalent: all three pruning layers are declarative —
     ``write_sorted_tiles``);
   * depth pruning: ``depth(tile) <= max_minzoom`` as arithmetic SQL
     plus the per-feature ``minzoom`` filter;
-  * feature predicate: bbox bounds pushed to the parquet scan
-    (PushedFilters); the Poly filter adds a vectorized pnpoly refine
-    over the bbox survivors (exact, `position.rs:284-326`).
+  * feature predicate: :func:`filter_shape`, the one GeometryFilter
+    of the package (the CLI's ``--filter`` applies it too, through
+    ``pipeline.filter_features``): bbox overlap as plain predicates,
+    pushed to the parquet scan (PushedFilters); the Poly filter adds
+    the exact ``Poly::check_box`` test over the bbox survivors.
 """
 
 from __future__ import annotations
@@ -29,6 +31,7 @@ from pyspark.sql import types as T
 from .kernels import geomcalc
 from .kernels import quadtree as qtk
 from .kernels.quadtree import sql_qt_depth
+from .operators.sqlgeom import GEOM_BBOX
 
 
 def _bbox_tiles(bbox: tuple[int, int, int, int], max_depth: int) -> list[int]:
@@ -134,38 +137,77 @@ def read_feature_tables(spark: SparkSession, out_dir: str):
         way_features=wf, spatial_index=spatial)
 
 
+def _coarse_bbox(bbox, rings) -> tuple[int, int, int, int] | None:
+    """``bbox``, else the common bbox of ``rings`` (the Poly filter's
+    coarse test), else None."""
+    if bbox is not None or rings is None:
+        return bbox
+    return (int(min(np.min(lon) for lon, _ in rings)),
+            int(min(np.min(lat) for _, lat in rings)),
+            int(max(np.max(lon) for lon, _ in rings)),
+            int(max(np.max(lat) for _, lat in rings)))
+
+
+def filter_shape(df: DataFrame, shape: str,
+                 bbox: tuple[int, int, int, int] | None = None,
+                 rings=None) -> DataFrame:
+    """The reference's ``GeometryFilter`` (Null/Bbox/Poly,
+    `pack_geometry.rs:498-519`) on one feature table: keep the rows
+    whose feature bbox (``sqlgeom.GEOM_BBOX[shape]``, shape ``point``
+    / ``lonlats`` / ``parts``) overlaps ``bbox`` (1e-7-degree ints).
+
+    ``rings`` (closed rings as :func:`parse_poly_file` returns them)
+    add the exact ``Poly::check_box`` test: the feature bbox overlaps
+    some ring (``geomcalc.poly_overlaps_boxes``), so a point on a ring
+    edge or vertex is kept.  Without ``bbox``, the rings' common bbox
+    is the coarse test.  The bbox test is plain JVM predicates (column
+    comparisons for points, pushed to the scan); only the ring test
+    runs in a pandas UDF, over the bbox survivors."""
+    bbox = _coarse_bbox(bbox, rings)
+    if bbox is None:
+        return df
+    a, b, c, d = (int(v) for v in bbox)
+    mnlo, mnla, mxlo, mxla = GEOM_BBOX[shape]
+    df = df.where(F.expr(f"{mxlo} >= {a} AND {mnlo} <= {c} AND "
+                         f"{mxla} >= {b} AND {mnla} <= {d}"))
+    if rings is None:
+        return df
+    rr = [(np.asarray(lon, np.int64), np.asarray(lat, np.int64))
+          for lon, lat in rings]
+
+    @F.pandas_udf(T.BooleanType())
+    def check_box(minlon: pd.Series, minlat: pd.Series,
+                  maxlon: pd.Series, maxlat: pd.Series) -> pd.Series:
+        box = [v.to_numpy(np.int64) for v in (minlon, minlat, maxlon, maxlat)]
+        keep = np.zeros(len(minlon), bool)
+        for rlon, rlat in rr:
+            todo = ~keep
+            if not todo.any():
+                break
+            keep[todo] = geomcalc.poly_overlaps_boxes(
+                rlon, rlat, *(v[todo] for v in box))
+        return pd.Series(keep)
+
+    return df.where(check_box(*(F.expr(e) for e in GEOM_BBOX[shape])))
+
+
 def read_geometry(spark: SparkSession, path: str,
                   bbox: tuple[int, int, int, int] | None = None,
-                  poly: tuple[np.ndarray, np.ndarray] | None = None,
+                  rings=None,
                   max_minzoom: int | None = None,
                   tile_depth: int = 8) -> DataFrame:
     """``read_geometry_blocks`` equivalent over a
-    ``write_sorted_tiles`` output with (lon, lat) point features.
-    ``poly`` implies its bbox as the coarse filter; the exact pnpoly
-    refine runs only on bbox survivors (Arrow-batched)."""
+    ``write_sorted_tiles`` output with (lon, lat) point features: the
+    tile IN-list and depth pruning, then :func:`filter_shape`.
+    ``rings`` (as :func:`parse_poly_file` returns them) imply their
+    common bbox for the tile IN-list when ``bbox`` is not given."""
     from .tableio import read_table
     df = read_table(spark, path)
     if max_minzoom is not None:
         df = df.where(F.expr(sql_qt_depth("tile")) <= max_minzoom)
         if "minzoom" in df.columns:
             df = df.where(F.col("minzoom") <= max_minzoom)
-    if poly is not None and bbox is None:
-        plon, plat = poly
-        bbox = (int(np.min(plon)), int(np.min(plat)),
-                int(np.max(plon)), int(np.max(plat)))
+    bbox = _coarse_bbox(bbox, rings)
     if bbox is not None:
-        tiles = _bbox_tiles(bbox, tile_depth)
-        df = df.where(F.col("tile").isin(tiles))
-        df = df.where((F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
-                      & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3]))
-    if poly is not None:
-        plon = np.asarray(poly[0], np.int64)
-        plat = np.asarray(poly[1], np.int64)
-
-        @F.pandas_udf(T.BooleanType())
-        def inside(lon: pd.Series, lat: pd.Series) -> pd.Series:
-            return pd.Series(geomcalc.points_in_ring(
-                plon, plat, lon.to_numpy(np.int64), lat.to_numpy(np.int64)))
-
-        df = df.where(inside("lon", "lat"))
-    return df
+        df = df.where(F.col("tile").isin(_bbox_tiles(bbox, tile_depth)))
+    return filter_shape(df, "point", bbox, rings)

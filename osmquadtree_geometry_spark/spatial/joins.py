@@ -170,7 +170,8 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     per (polygon, point bucket) row (:func:`_packed_pairs`), which
     amortizes wide rings; ``'auto'`` sends rings of more than
     ``ring_split`` vertices to the packed kernel and the rest to the
-    SQL fold, and is plain SQL when no ring is that wide."""
+    SQL fold (both sides reading one persisted point frame), and is
+    plain SQL when no ring is that wide."""
     if engine not in _PIP_ENGINES:
         raise ValueError(f"unknown pip engine {engine!r}; one of {_PIP_ENGINES}")
     if poly_cover is not None:
@@ -204,7 +205,9 @@ def point_in_polygon_join(points: DataFrame, polygons: DataFrame,
     if engine == "packed":
         return _packed_pairs(poly, pts, max_points_per_row)
     # auto with wide rings present: a polygon routes to exactly one
-    # side, so the union has no duplicates
+    # side, so the union has no duplicates; both sides read the one
+    # persisted point frame
+    pts = cache.persist(pts)
     return (sql_pairs(poly.where(F.expr(f"size(lonlats) <= {ring_split}")))
             .unionByName(_packed_pairs(
                 poly.where(F.expr(f"size(lonlats) > {ring_split}")), pts,

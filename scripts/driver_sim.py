@@ -45,12 +45,8 @@ def main():
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[16]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "24g")
-             .getOrCreate())
+    from osmquadtree_geometry_spark.session import get_spark
+    spark = get_spark("driver_sim")
 
     con = duckdb.connect()
     for t in TABLES:

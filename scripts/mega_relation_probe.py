@@ -42,7 +42,8 @@ def peak_task_memory(log_dir: str) -> int:
 def main():
     n_ways = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 10_000
     from osmquadtree_geometry_spark.datagen import generate_mega_relation_docs
-    fix = os.path.join(ROOT, ".data", f"mega_relation_{n_ways}", "docs.parquet")
+    from osmquadtree_geometry_spark.session import DATA_DIR
+    fix = os.path.join(DATA_DIR, f"mega_relation_{n_ways}", "docs.parquet")
     if not os.path.exists(fix):
         t0 = time.monotonic()
         generate_mega_relation_docs(fix, n_ways=n_ways)

@@ -6,8 +6,10 @@
 
 (or the same arguments under ``spark-submit scripts/run_pipeline.py``).
 Runs the full checkpointed pipeline (north rule: resumable
-mid-tiling with per-partition lineage), writes the four geometry
-tables + errors + lineage under --out, and prints a JSON summary.
+mid-tiling with per-partition lineage, checkpoints under --out),
+applies --filter, writes the output form (``--output parquet``: the
+``sinks.write_feature_tables`` layout under ``<out>/tables``, which
+``sources.read_feature_tables`` opens) and prints a JSON summary.
 The package ships itself to the executors (``session.ship_package``).
 """
 
@@ -96,7 +98,7 @@ def main() -> None:
 
     from osmquadtree_geometry_spark.config.minzoom import MinZoomSpec
     from osmquadtree_geometry_spark.pipeline import (
-        feature_counts, filter_features_bbox, run_pipeline,
+        feature_counts, filter_features, run_pipeline,
         run_pipeline_checkpointed)
 
     style = (GeometryStyle.from_json(open(args.style).read())
@@ -117,12 +119,10 @@ def main() -> None:
 
     if args.filter:
         if args.filter.endswith(".poly") or os.path.exists(args.filter):
-            from osmquadtree_geometry_spark.pipeline import (
-                filter_features_poly)
             from osmquadtree_geometry_spark.sources import parse_poly_file
-            res = filter_features_poly(res, parse_poly_file(args.filter))
+            res = filter_features(res, rings=parse_poly_file(args.filter))
         else:
-            res = filter_features_bbox(res, _parse_filter(args.filter))
+            res = filter_features(res, bbox=_parse_filter(args.filter))
 
     # output name -> (geometry shape, features)
     tables = {"point": ("point", res.points),
@@ -130,7 +130,11 @@ def main() -> None:
               "polygon": ("simple_polygon", res.simple_polygons),
               "complicated_polygon": ("complicated_polygon",
                                       res.complicated_polygons)}
-    if args.output == "geojson":
+    if args.output == "parquet":
+        from osmquadtree_geometry_spark.sinks import write_feature_tables
+        write_feature_tables(res, os.path.join(args.out, "tables"),
+                             media=res.decoded.get("media"))
+    elif args.output == "geojson":
         from osmquadtree_geometry_spark.sinks import write_geojson_flat
         for name, (shape, df) in tables.items():
             write_geojson_flat(df, shape,
@@ -166,7 +170,6 @@ def main() -> None:
         print(json.dumps({"pg_tables": delivered["tables"],
                           "pg_rows": delivered["rows"],
                           "pg_after_errors": len(delivered["after_errors"])}))
-    # parquet: the checkpointed pipeline already wrote the tables;
     # null: counts only
 
     counts = {r.geom_type: r.n for r in feature_counts(res).collect()}

@@ -22,7 +22,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-LOCK = os.path.join(REPO, ".data", "protocol.lock")
+from osmquadtree_geometry_spark.session import DATA_DIR  # noqa: E402
+
+LOCK = os.path.join(DATA_DIR, "protocol.lock")
 
 
 def _assert_idle() -> float:

@@ -209,24 +209,24 @@ def test_filter_features_bbox(spark, docs_path):
     """Reference -f/--filter parity: feature-bbox overlap filter keeps
     exactly the features whose geometry bbox overlaps the box."""
     from osmquadtree_geometry_spark.pipeline import (
-        filter_features_bbox, run_pipeline)
+        filter_features, run_pipeline)
     res = run_pipeline(spark, docs_path)
     # a box covering everything keeps everything
-    world = filter_features_bbox(
-        res, (-1800000000, -900000000, 1800000000, 900000000))
+    world = filter_features(
+        res, bbox=(-1800000000, -900000000, 1800000000, 900000000))
     assert world.points.count() == res.points.count()
     assert world.linestrings.count() == res.linestrings.count()
     # an empty box (mid-pacific sliver) keeps nothing
-    nowhere = filter_features_bbox(
-        res, (-1799999999, -899999999, -1799999998, -899999998))
+    nowhere = filter_features(
+        res, bbox=(-1799999999, -899999999, -1799999998, -899999998))
     assert nowhere.points.count() == 0
     assert nowhere.simple_polygons.count() == 0
     assert nowhere.complicated_polygons.count() == 0
     # a half-plane split partitions the point set
-    left = filter_features_bbox(
-        res, (-1800000000, -900000000, 0, 900000000))
-    right = filter_features_bbox(
-        res, (0, -900000000, 1800000000, 900000000))
+    left = filter_features(
+        res, bbox=(-1800000000, -900000000, 0, 900000000))
+    right = filter_features(
+        res, bbox=(0, -900000000, 1800000000, 900000000))
     n = res.points.count()
     nl, nr = left.points.count(), right.points.count()
     assert nl + nr >= n  # boundary points may land in both
@@ -291,7 +291,7 @@ def test_filter_features_poly_matches_bbox_ground_truth(spark, docs_path,
     from osmquadtree_geometry_spark.kernels.geomcalc import (
         poly_overlaps_boxes)
     from osmquadtree_geometry_spark.pipeline import (
-        filter_features_bbox, filter_features_poly, run_pipeline)
+        filter_features, run_pipeline)
     from osmquadtree_geometry_spark.sources import parse_poly_file
     res = run_pipeline(spark, docs_path)
     # pick a box around the data's midpoint
@@ -309,8 +309,8 @@ def test_filter_features_poly_matches_bbox_ground_truth(spark, docs_path,
                   f" {box[0] / 1e7:.7f} {box[3] / 1e7:.7f}\n"
                   "END\nEND\n")
     rings = parse_poly_file(str(pf))
-    got = filter_features_poly(res, rings)
-    exp = filter_features_bbox(res, (rings[0][0].min(), rings[0][1].min(),
+    got = filter_features(res, rings=rings)
+    exp = filter_features(res, bbox=(rings[0][0].min(), rings[0][1].min(),
                                      rings[0][0].max(), rings[0][1].max()))
     for attr in ("points", "linestrings", "simple_polygons",
                  "complicated_polygons"):
@@ -322,7 +322,7 @@ def test_filter_features_poly_matches_bbox_ground_truth(spark, docs_path,
     # triangle: ground truth from collected line bboxes
     tri_lon = np.asarray([box[0], box[2], box[0], box[0]], np.int64)
     tri_lat = np.asarray([box[1], box[1], box[3], box[1]], np.int64)
-    got_tri = filter_features_poly(res, [(tri_lon, tri_lat)])
+    got_tri = filter_features(res, rings=[(tri_lon, tri_lat)])
     rows = res.linestrings.selectExpr(
         "id",
         "array_min(transform(lonlats, p -> p.lon)) as mnlo",

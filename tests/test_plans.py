@@ -208,6 +208,38 @@ def test_pip_join_bounded_cell_agg(spark):
     assert js.count() == 5000 * 5
 
 
+def test_pip_auto_builds_point_frame_once(spark):
+    """pip ``auto`` with rings on both sides of ``ring_split`` sends
+    each polygon to the SQL fold or the packed kernel; both read one
+    persisted point frame, so the executed plan scans the points once,
+    and the pairs equal the packed engine's."""
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.spatial.joins import point_in_polygon_join
+    pts = spark.range(0, 5000).selectExpr(
+        "id", "cast(id % 7 as int) as lon", "cast(id % 11 as int) as lat")
+
+    def ring(*xy):
+        return "array(" + ", ".join(
+            f"named_struct('lon', {x}, 'lat', {y})" for x, y in xy) + ")"
+    square = ring((-10, -10), (100000, -10), (100000, 100000),
+                  (-10, 100000), (-10, -10))  # 5 points: packed
+    triangle = ring((-10, -10), (100000, -10), (-10, 100000),
+                    (-10, -10))  # 4 points: SQL fold
+    polys = spark.range(0, 4).selectExpr(
+        "id", f"if(id % 2 = 0, {square}, {triangle}) as lonlats")
+    with cache.scope() as handles:
+        j = point_in_polygon_join(pts, polys, cell_depth=10, engine="auto",
+                                  max_ring_pts=5, ring_split=4)
+        got = sorted(j.collect())
+        plan = _plan(j)
+    cache.release(handles)
+    assert "MapInPandas" in plan
+    assert plan.count("Range (0, 5000") == 1
+    exp = sorted(point_in_polygon_join(pts, polys, cell_depth=10,
+                                       engine="packed").collect())
+    assert got == exp and len(got) > 0
+
+
 def test_lsh_pair_generators_no_cartesian(spark):
     """The LSH candidate generators (jaccard, embedding near-dup,
     simhash) must plan as equi-joins on bucket keys — a

@@ -375,10 +375,13 @@ def test_repair_polygons_for_sink(res, spark):
 def test_read_geometry_filters(res, spark, tmp_path):
     """read_geometry_blocks parity (pack_geometry.rs:593-632): bbox /
     poly / max_minzoom filters over the written tiles, checked
-    against a driver-side brute-force over the same rows."""
+    against a driver-side brute-force over the same rows.  The poly
+    test is Poly::check_box on each point's degenerate box, as in
+    filter_features: a point on the ring is kept."""
     import numpy as np
     from osmquadtree_geometry_spark.kernels import geomcalc
     from osmquadtree_geometry_spark.kernels import quadtree as qtk
+    from osmquadtree_geometry_spark.pipeline import filter_features
     from osmquadtree_geometry_spark.sources import read_geometry
     out = str(tmp_path / "geom_tiles")
     sinks.write_sorted_tiles(res.points.select(
@@ -395,11 +398,22 @@ def test_read_geometry_filters(res, spark, tmp_path):
     plon = np.asarray([bbox[0], bbox[2], r0.lon, bbox[0]], np.int64)
     plat = np.asarray([bbox[1], bbox[1], bbox[3], bbox[1]], np.int64)
     gotp = {r.id for r in read_geometry(spark, out,
-                                        poly=(plon, plat)).collect()}
-    expp = {r.id for r in allr if geomcalc.point_in_poly(
-        plon, plat, r.lon, r.lat)}
+                                        rings=[(plon, plat)]).collect()}
+    lon = np.asarray([r.lon for r in allr], np.int64)
+    lat = np.asarray([r.lat for r in allr], np.int64)
+    keep = geomcalc.poly_overlaps_boxes(plon, plat, lon, lat, lon, lat)
+    expp = {r.id for r, k in zip(allr, keep) if k}
     assert gotp == expp
     assert gotp <= got
+    # a triangle whose apex is a stored point keeps that point, in
+    # read_geometry as in filter_features (strict pnpoly drops it)
+    tlon = np.asarray([bbox[0], bbox[2], r0.lon, bbox[0]], np.int64)
+    tlat = np.asarray([bbox[1], bbox[1], r0.lat, bbox[1]], np.int64)
+    assert not geomcalc.points_in_ring(tlon, tlat, lon[:1], lat[:1])[0]
+    tri = [(tlon, tlat)]
+    gott = {r.id for r in read_geometry(spark, out, rings=tri).collect()}
+    kept = {r.id for r in filter_features(res, rings=tri).points.collect()}
+    assert r0.id in gott and gott == kept
     # depth pruning: every surviving tile is at depth <= 6 and the
     # feature minzoom respects the cap
     shallow = read_geometry(spark, out, max_minzoom=6).collect()
@@ -467,13 +481,15 @@ def test_write_feature_tables_failure_waits_for_every_write(res, spark,
         assert (out / name / "_SUCCESS").exists(), name
 
 
-def test_cli_pgcopy_writes_its_ddl(docs_path, tmp_path):
+def test_cli_pgcopy_writes_its_ddl(spark, docs_path, tmp_path):
     """``scripts/run_pipeline.py --output pgcopy`` writes, next to each
     ``<table>.copy.d``, the statements that create and index its
     table: ``before.sql`` declares every table, and each table's COPY
     files parse with the columns its CREATE TABLE declares.  The CLI
     runs without PYTHONPATH, so its Python stages work only because it
-    ships the package to the executors itself."""
+    ships the package to the executors itself.  A second run over the
+    same checkpoints with ``--filter`` and ``--output parquet`` writes
+    the filtered tables it counts under ``<out>/tables``."""
     import glob
     import subprocess
     import sys
@@ -483,12 +499,17 @@ def test_cli_pgcopy_writes_its_ddl(docs_path, tmp_path):
     out = tmp_path / "pgc"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_SUBMIT_ARGS"] = "--master local[2] pyspark-shell"
-    proc = subprocess.run(
-        [sys.executable, os.path.join(root, "scripts", "run_pipeline.py"),
-         "--docs", docs_path, "--out", str(out), "--output", "pgcopy"],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900)
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    counts = json.loads(proc.stdout.strip().splitlines()[-1])["counts"]
+
+    def cli(*args):
+        proc = subprocess.run(
+            [sys.executable, os.path.join(root, "scripts", "run_pipeline.py"),
+             "--docs", docs_path, "--out", str(out), *args],
+            cwd=tmp_path, env=env, capture_output=True, text=True,
+            timeout=900)
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        return json.loads(proc.stdout.strip().splitlines()[-1])["counts"]
+
+    counts = cli("--output", "pgcopy")
 
     created = _created_columns(
         (out / "before.sql").read_text().splitlines())
@@ -505,3 +526,11 @@ def test_cli_pgcopy_writes_its_ddl(docs_path, tmp_path):
     for name in created:
         assert f'ON "public"."{name}" (quadtree);' in after
     assert 'CREATE VIEW "public"."planet_osm_all"' in after
+
+    from osmquadtree_geometry_spark.sources import read_feature_tables
+    east = cli("--filter=0,-90,180,90", "--output", "parquet")
+    assert 0 < east["points"] < counts["points"]
+    tables = read_feature_tables(spark, str(out / "tables"))
+    for name in ("points", "linestrings", "simple_polygons",
+                 "complicated_polygons"):
+        assert getattr(tables, name).count() == east[name], name
