@@ -398,35 +398,21 @@ def generate_docs_parquet(out_path: str, n_docs: int) -> str:
                       and open(marker).read().strip() == str(FIXTURE_VERSION))
             if ok_rows and ok_ver:
                 return out_path
-        except Exception:
+        except (OSError, pa.ArrowInvalid):  # missing or corrupt: rewrite
             pass
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    # chunked writer: constant memory at any n_docs; small row groups
-    # so Spark's parquet scan can split the file into parallel tasks
-    chunk = min(max(256, n_docs // 64), 50000)
-    writer = pq.ParquetWriter(out_path, DOCS_SCHEMA)
-    try:
-        for start in range(0, n_docs, chunk):
-            ids, spans = [], []
-            for i in range(start, min(start + chunk, n_docs)):
-                d, sp = build_doc(i)
-                ids.append(d)
-                spans.append(sp)
-            writer.write_table(pa.Table.from_pydict(
-                {"doc_id": ids, "spans": spans}, schema=DOCS_SCHEMA))
-    finally:
-        writer.close()
+    # small row groups so Spark's parquet scan can split the file into
+    # parallel tasks
+    _write_docs(out_path, 0, n_docs, min(max(256, n_docs // 64), 50000))
     with open(marker, "w") as f:
         f.write(str(FIXTURE_VERSION))
     return out_path
 
 
-def _write_docs_shard(args: tuple[str, int, int]) -> int:
-    """Worker for generate_docs_parquet_dir: one part file for the
-    contiguous doc-index stripe [start, stop)."""
-    part_path, start, stop = args
-    chunk = 50000
-    writer = pq.ParquetWriter(part_path, DOCS_SCHEMA)
+def _write_docs(path: str, start: int, stop: int, chunk: int) -> int:
+    """Write docs [start, stop) to one parquet file, one row group per
+    ``chunk`` docs (constant memory at any size); returns the count."""
+    writer = pq.ParquetWriter(path, DOCS_SCHEMA)
     try:
         for s in range(start, stop, chunk):
             ids, spans = [], []
@@ -461,7 +447,7 @@ def generate_docs_parquet_dir(out_dir: str, n_docs: int,
                       and open(marker).read().strip() == str(FIXTURE_VERSION))
             if rows == n_docs and ok_ver:
                 return out_dir
-        except Exception:
+        except (OSError, pa.ArrowInvalid):  # missing or corrupt: rewrite
             pass
         import shutil
         shutil.rmtree(out_dir)
@@ -470,11 +456,11 @@ def generate_docs_parquet_dir(out_dir: str, n_docs: int,
     n_shards = min(n_workers * 4, max(1, n_docs // 50000) or 1)
     bounds = [n_docs * k // n_shards for k in range(n_shards + 1)]
     jobs = [(os.path.join(out_dir, f"part-{k:05d}.parquet"),
-             bounds[k], bounds[k + 1])
+             bounds[k], bounds[k + 1], 50000)
             for k in range(n_shards) if bounds[k] < bounds[k + 1]]
     import multiprocessing as mp
     with mp.get_context("fork").Pool(n_workers) as pool:
-        written = sum(pool.map(_write_docs_shard, jobs))
+        written = sum(pool.starmap(_write_docs, jobs))
     assert written == n_docs, (written, n_docs)
     with open(marker, "w") as f:
         f.write(str(FIXTURE_VERSION))

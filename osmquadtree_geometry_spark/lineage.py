@@ -1,38 +1,50 @@
-"""Per-stage lineage + metrics table with idempotent resume.
+"""Per-stage lineage + row/byte metrics with idempotent resume
+(north rule; mirrors OtherData/Timings, `lib.rs:61-68`).
 
-North-rule requirement: every stage checkpoints per-partition lineage
-and row/byte metrics to a metadata table so runs resume idempotently
-mid-tiling.  Backing store: parquet directory (Iceberg-ready — the
-schema matches an Iceberg table; the runtime jar is not in this
-container, so writes go through the same DataFrame API against
-parquet, SURVEY §1.6).
-
-Model: a stage run is identified by (stage, input_fingerprint).  A
-completed run writes one `_SUCCESS`-gated lineage row per partition
-plus its output parquet; `run_stage` skips recomputation when lineage
-for the same fingerprint already exists (mirrors OtherData/Timings
-instrumentation, `lib.rs:61-68`).
-
-All reads/writes go through the tableio seam, so with
-SPARK_GRAFT_TABLE_FORMAT=iceberg the lineage store IS an Iceberg
-metadata table (the north rule's `_lineage` table) and the resume
-marker becomes an atomic snapshot commit.
+A stage run, identified by (stage, input_fingerprint), writes a
+parquet checkpoint; the driver then reads each part file's rows from
+its footer and bytes from the file system (no Spark job) and writes
+that list as the run's lineage record, replacing any earlier one.
+``run_stage`` resumes a stage only when the same files, with the same
+rows and bytes, are still on disk; otherwise it recomputes and logs
+why.  Checkpoints and lineage are parquet under the work dir whatever
+``SPARK_GRAFT_TABLE_FORMAT`` says (the check reads footers, and an
+Iceberg catalog takes table names, not paths); Spark reads
+``<workdir>/lineage_stage=<stage>`` as a table.
 """
 
 from __future__ import annotations
 
+import hashlib
+import logging
 import os
-import re
 import time
-from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .tableio import read_table, table_exists, write_table
+log = logging.getLogger(__name__)
 
-LINEAGE_SCHEMA = ("stage string, input_fingerprint string, partition_id int, "
-                  "rows long, bytes long, completed_at double")
+LINEAGE_SCHEMA = pa.schema({
+    "stage": pa.string(), "input_fingerprint": pa.string(),
+    "partition_id": pa.int32(), "part": pa.string(), "rows": pa.int64(),
+    "bytes": pa.int64(), "completed_at": pa.float64()})
+
+
+def _part_files(out_dir: str) -> dict[str, tuple[int, int]]:
+    """{part file name: (rows, bytes)} of a parquet checkpoint; raises
+    OSError, or pyarrow.ArrowInvalid naming a file that does not parse."""
+    parts = {}
+    for name in sorted(os.listdir(out_dir)):
+        if not name.startswith("part-"):
+            continue
+        p = os.path.join(out_dir, name)
+        try:
+            parts[name] = (pq.read_metadata(p).num_rows, os.path.getsize(p))
+        except pa.ArrowInvalid as e:
+            raise pa.ArrowInvalid(f"{name}: {e}") from e
+    return parts
 
 
 class LineageStore:
@@ -41,83 +53,70 @@ class LineageStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _dir(self, stage: str) -> str:
-        return os.path.join(self.root, f"lineage_stage={stage}")
-
-    def read(self, stage: str) -> DataFrame | None:
-        d = self._dir(stage)
-        if not table_exists(self.spark, d):
-            return None
-        try:
-            return read_table(self.spark, d)
-        except Exception:
-            return None
-
-    def is_complete(self, stage: str, fingerprint: str) -> bool:
-        df = self.read(stage)
-        if df is None:
-            return False
-        return df.where(F.col("input_fingerprint") == fingerprint).count() > 0
-
-    def record(self, stage: str, fingerprint: str, out: DataFrame,
-               out_dir: str) -> None:
-        """Append per-file (rows, bytes) metrics for a stage run.
-
-        ``out`` is read back from ``out_dir``, the just-written parquet
-        directory: rows are counted per source file
-        (``input_file_name``) and bytes are each file's REAL on-disk
-        size — one small collect of one row per output file."""
-        now = time.time()
-        counts = (out.withColumn("f", F.input_file_name())
-                  .groupBy("f").agg(F.count("*").alias("rows")).collect())
-        rows = []
-        for r in sorted(counts, key=lambda r: r.f):
-            path = unquote(urlparse(r.f).path)
-            m = re.search(r"part-(\d+)-", os.path.basename(path))
-            pid = int(m.group(1)) if m else len(rows)
-            rows.append((stage, fingerprint, pid, r.rows,
-                         os.path.getsize(path), now))
-        if not rows:  # empty output: one zero-row marker partition
-            rows = [(stage, fingerprint, 0, 0, 0, now)]
-        write_table(self.spark.createDataFrame(rows, LINEAGE_SCHEMA),
-                    self._dir(stage), mode="append")
-
     def output_dir(self, stage: str, fingerprint: str) -> str:
         return os.path.join(self.root, f"out_stage={stage}",
                             f"fp={fingerprint}")
 
+    def record_path(self, stage: str, fingerprint: str) -> str:
+        return os.path.join(self.root, f"lineage_stage={stage}",
+                            f"{fingerprint}.parquet")
+
+    def record(self, stage: str, fingerprint: str) -> None:
+        """Record the (rows, bytes) of each part file of the stage's
+        checkpoint, replacing an earlier record of the same run."""
+        now = time.time()
+        rows = [{"stage": stage, "input_fingerprint": fingerprint,
+                 "partition_id": int(f.split("-")[1]), "part": f,
+                 "rows": n, "bytes": size, "completed_at": now}
+                for f, (n, size) in
+                _part_files(self.output_dir(stage, fingerprint)).items()]
+        path = self.record_path(stage, fingerprint)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(pa.Table.from_pylist(rows, LINEAGE_SCHEMA), path)
+
+    def check(self, stage: str, fingerprint: str) -> str | None:
+        """None when the stage's checkpoint is on disk as recorded,
+        else the reason it is not."""
+        path = self.record_path(stage, fingerprint)
+        if not os.path.exists(path):
+            return "no lineage record"
+        try:
+            rec = pq.read_table(path, columns=["part", "rows", "bytes"])
+            have = _part_files(self.output_dir(stage, fingerprint))
+        except (OSError, pa.ArrowInvalid) as e:
+            return f"unreadable: {e}"
+        want = {r["part"]: (r["rows"], r["bytes"]) for r in rec.to_pylist()}
+        return "; ".join(
+            f"{f} (rows, bytes): recorded {want.get(f)}, on disk {have.get(f)}"
+            for f in sorted(want.keys() | have.keys())
+            if want.get(f) != have.get(f)) or None
+
 
 def fingerprint_input(path: str) -> str:
     """Cheap deterministic input fingerprint: file names + sizes."""
-    import hashlib
     h = hashlib.md5()
-    if os.path.isdir(path):
-        for f in sorted(os.listdir(path)):
-            p = os.path.join(path, f)
-            h.update(f.encode())
-            h.update(str(os.path.getsize(p)).encode())
-    else:
-        h.update(os.path.basename(path).encode())
-        h.update(str(os.path.getsize(path)).encode())
+    for p in ([os.path.join(path, f) for f in sorted(os.listdir(path))]
+              if os.path.isdir(path) else [path]):
+        h.update(os.path.basename(p).encode())
+        h.update(str(os.path.getsize(p)).encode())
     return h.hexdigest()[:16]
 
 
 def run_stage(store: LineageStore, stage: str, fingerprint: str,
               build: "callable", force: bool = False) -> tuple[DataFrame, bool]:
-    """Idempotent stage execution: returns (output_df, resumed).
-
-    If lineage for (stage, fingerprint) exists and the output parquet
-    is readable, the stage is SKIPPED and its output re-read (resume
-    path); otherwise ``build()`` runs, its output is materialized, and
-    lineage is recorded."""
+    """Idempotent stage execution: returns (output_df, resumed).  Unless
+    ``force``, a checkpoint that passes :meth:`LineageStore.check` is
+    re-read; otherwise ``build()`` runs and its output and lineage are
+    written."""
     out_dir = store.output_dir(stage, fingerprint)
-    if not force and store.is_complete(stage, fingerprint):
-        try:
-            return read_table(store.spark, out_dir), True
-        except Exception:
-            pass  # lineage without output -> recompute
-    df = build()
-    write_table(df, out_dir)
-    materialized = read_table(store.spark, out_dir)
-    store.record(stage, fingerprint, materialized, out_dir=out_dir)
-    return materialized, False
+    if not force:
+        why = store.check(stage, fingerprint)
+        if why is None:
+            return store.spark.read.parquet(out_dir), True
+        # a stage that has left nothing behind is simply not run yet
+        fresh = why == "no lineage record" and not os.path.exists(out_dir)
+        log.log(logging.INFO if fresh else logging.WARNING,
+                "recomputing checkpoint %s: %s", out_dir, why)
+    build().write.mode("overwrite").parquet(out_dir)
+    store.record(stage, fingerprint)
+    return store.spark.read.parquet(out_dir), False

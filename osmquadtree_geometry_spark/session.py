@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import shlex
 import shutil
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -25,14 +27,26 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(MAX_DRIVER_MEMORY_GB, phys // 2**31))}g"
 
 
+def _submitted_master() -> str | None:
+    """The master ``spark-submit`` gave this driver's JVM, or the one
+    ``PYSPARK_SUBMIT_ARGS`` gives the JVM the builder launches (parsed:
+    a JVM launched here would miss the builder's driver memory)."""
+    if "PYSPARK_GATEWAY_PORT" in os.environ:  # under spark-submit
+        SparkContext._ensure_initialized()
+        return SparkContext._jvm.java.lang.System.getProperty("spark.master")
+    args = shlex.split(os.environ.get("PYSPARK_SUBMIT_ARGS", ""))
+    return next((v for f, v in zip(args, args[1:]) if f == "--master"), None)
+
+
 def get_spark(app: str = "osmquadtree_geometry_spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    """Local session sized to the host: ``local[<cores>]`` and
-    :func:`_default_driver_memory`, unless ``SPARK_GRAFT_CPUS`` /
-    ``SPARK_DRIVER_MEMORY`` say otherwise."""
+    """Local session sized to the host: ``local[<cores>]`` (unless
+    ``master`` or a submitted master, :func:`_submitted_master`, is
+    given) and :func:`_default_driver_memory`, unless
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEMORY`` say otherwise."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    master = master or f"local[{cpus}]"
+    master = master or _submitted_master() or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     b = (
         SparkSession.builder.master(master).appName(app)

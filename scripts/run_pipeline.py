@@ -90,10 +90,8 @@ def main() -> None:
     if not args.out or not (args.docs or args.bucketed_prefix):
         ap.error("--out and one of --docs/--bucketed-prefix are required")
 
-    from pyspark.sql import SparkSession
-    spark = SparkSession.builder.appName("osmquadtree-geometry-spark").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    from osmquadtree_geometry_spark.session import ship_package
+    from osmquadtree_geometry_spark.session import get_spark, ship_package
+    spark = get_spark("osmquadtree-geometry-spark")
     ship_package(spark)
 
     from osmquadtree_geometry_spark.config.minzoom import MinZoomSpec

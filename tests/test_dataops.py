@@ -1,5 +1,7 @@
 """Training-data ops: dedup, similarity, textops, multimodal, lineage."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -378,9 +380,8 @@ def test_lineage_resume(spark, tmp_path, docs_path):
     out2, resumed2 = run_stage(store, "decode", fp, build)
     assert resumed2 and len(calls) == 1  # build NOT re-invoked
     assert out2.count() == n1
-    # lineage rows recorded per partition
-    lin = store.read("decode")
-    assert lin is not None
+    # lineage rows recorded per partition, readable by Spark
+    lin = spark.read.parquet(os.path.join(store.root, "lineage_stage=decode"))
     assert lin.agg(F.sum("rows")).first()[0] == n1
     # different fingerprint -> recompute
     out3, resumed3 = run_stage(store, "decode", "otherfp", build)
@@ -388,11 +389,11 @@ def test_lineage_resume(spark, tmp_path, docs_path):
     # bytes are REAL on-disk sizes of the stage's parquet output
     # (north rule: per-partition row/byte metrics), not an estimate
     import glob
-    import os as _os
     out_dir = store.output_dir("decode", fp)
-    disk = sum(_os.path.getsize(f)
-               for f in glob.glob(_os.path.join(out_dir, "part-*")))
-    rec = lin.agg(F.sum("bytes")).first()[0]
+    disk = sum(os.path.getsize(f)
+               for f in glob.glob(os.path.join(out_dir, "part-*")))
+    rec = lin.where(F.col("input_fingerprint") == fp) \
+        .agg(F.sum("bytes")).first()[0]
     assert rec == disk and disk > 0
 
 
