@@ -10,7 +10,9 @@ rows and bytes, are still on disk; otherwise it recomputes and logs
 why.  Checkpoints and lineage are parquet under the work dir whatever
 ``SPARK_GRAFT_TABLE_FORMAT`` says (the check reads footers, and an
 Iceberg catalog takes table names, not paths); Spark reads
-``<workdir>/lineage_stage=<stage>`` as a table.
+``<workdir>/lineage_stage=<stage>`` as a table.  A checkpoint reopens
+with the schema Spark wrote into its footers
+(:func:`tableio.read_parquet`), so a resumed stage runs no Spark job.
 """
 
 from __future__ import annotations
@@ -23,6 +25,8 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from .tableio import read_parquet
 
 log = logging.getLogger(__name__)
 
@@ -112,11 +116,11 @@ def run_stage(store: LineageStore, stage: str, fingerprint: str,
     if not force:
         why = store.check(stage, fingerprint)
         if why is None:
-            return store.spark.read.parquet(out_dir), True
+            return read_parquet(store.spark, out_dir), True
         # a stage that has left nothing behind is simply not run yet
         fresh = why == "no lineage record" and not os.path.exists(out_dir)
         log.log(logging.INFO if fresh else logging.WARNING,
                 "recomputing checkpoint %s: %s", out_dir, why)
     build().write.mode("overwrite").parquet(out_dir)
     store.record(stage, fingerprint)
-    return store.spark.read.parquet(out_dir), False
+    return read_parquet(store.spark, out_dir), False

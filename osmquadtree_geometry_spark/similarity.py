@@ -1,18 +1,23 @@
 """Similarity search over an embedding column (``array<float>``).
 
 Baseline: brute-force cosine top-k (broadcast the query set, JVM-side
-``aggregate``/``zip_with`` dot products, window top-k).  Scale path:
+``aggregate``/``zip_with`` dot products, window top-k).  Scale paths:
 random-hyperplane LSH bucketing — candidates share a signed-projection
-bucket, exact cosine re-rank inside buckets.  Hyperplanes are
-deterministic (seeded), so results are reproducible run-to-run.
+bucket, exact cosine re-rank inside buckets — and IVF inverted lists,
+whose assignment, probing and scoring run in one numpy ``mapInArrow``
+pass over the corpus.  Hyperplanes and seed centroids are
+deterministic, so results are reproducible run-to-run.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
+from pyspark.sql.pandas.types import to_arrow_type
 
 from . import cache
 
@@ -26,8 +31,9 @@ from . import cache
 # embeddings (2,000 x 64, local[4]): fold-only dot and sum of squares
 # took brute_force_topk with 200 queries from 2.76 to 4.62 s and
 # embedding_near_dup_pairs from 2.08 to 2.63 s, so they stay unrolled.
-# The LSH hyperplane projection (_bucket_expr) and ivf_topk use folds
-# only: see there.
+# The LSH hyperplane projection (_bucket_expr) uses folds only: see
+# there.  ivf_topk runs no JVM fold: its numpy kernel repeats the
+# folds' (dim=None) operation order.
 _UNROLL_DIM = 64
 
 
@@ -56,18 +62,16 @@ def _dot_expr(a: str, b: str, dim: int | None = _UNROLL_DIM) -> str:
 
 
 def _cosine_hoisted(a: str = "qe", b: str = "embedding",
-                    na: str = "__nq", nb: str = "__ne",
-                    dim: int | None = _UNROLL_DIM):
+                    na: str = "__nq", nb: str = "__ne"):
     """cosine of vector columns ``a``/``b`` from their pre-staged norm
     columns ``na``/``nb``: dot/(na*nb) rounded to 6 places, with each
     side's norm computed once per VECTOR instead of once per
     candidate pair."""
-    return F.round(F.expr(_dot_expr(a, b, dim)) / (F.col(na) * F.col(nb)), 6)
+    return F.round(F.expr(_dot_expr(a, b)) / (F.col(na) * F.col(nb)), 6)
 
 
-def _with_norm(df: DataFrame, vec_col: str, out: str,
-               dim: int | None = _UNROLL_DIM) -> DataFrame:
-    return df.withColumn(out, F.expr(f"sqrt({_sqsum_expr(vec_col, dim)})"))
+def _with_norm(df: DataFrame, vec_col: str, out: str) -> DataFrame:
+    return df.withColumn(out, F.expr(f"sqrt({_sqsum_expr(vec_col)})"))
 
 
 def _top_k(scored: DataFrame, k: int) -> DataFrame:
@@ -205,8 +209,8 @@ def train_centroids_kmeans(emb: DataFrame, n_lists: int = 16,
     deterministic, reproducible sample regardless of partitioning),
     fitted in numpy with a fixed seed; standard IVF practice trains
     the quantizer on a tiny fraction and assigns the full corpus
-    distributedly (the assignment pass in ivf_topk stays broadcast +
-    map-side argmin).  Empty clusters keep their previous centroid —
+    distributedly (ivf_topk's kernel assigns each vector inside its
+    own partition).  Empty clusters keep their previous centroid —
     Lloyd's with fixed init/iterations, so the output is
     bit-reproducible run-to-run."""
     rows = emb.select("vec_id", "embedding").orderBy("vec_id") \
@@ -227,11 +231,150 @@ def train_centroids_kmeans(emb: DataFrame, n_lists: int = 16,
     return spark.createDataFrame(data, "list_id long, centroid array<float>")
 
 
-# squared L2 distance of two array<float> columns as double: a
-# left-associated fold of the squared differences (zip_with pads a
-# shorter array with nulls, so a width mismatch gives a null distance)
-_L2 = ("aggregate(zip_with(%s, %s, (x, c) -> "
-       "cast(x as double) - cast(c as double)), 0.0d, (a, d) -> a + d * d)")
+# The IVF kernel.  Every sum is a left-associated float64 loop over the
+# dimension, one column at a time (acc = acc + t), the operation order
+# of the JVM folds (_sqsum_expr and _dot_expr with dim=None) and of the
+# DuckDB oracle's chains: np.sum, @ and einsum add in another order,
+# and a last-bit difference can flip an argmin or a 6-place round.
+
+def _width_groups(col: pa.Array) -> dict:
+    """An Arrow list column of vectors as {width: (rows, X)}: X is the
+    float64 (len(rows), width) matrix of the rows of that width.  A
+    NULL vector or one with a null element is in no group: every
+    distance, dot and norm of it is NULL, as the folds make it."""
+    off = col.offsets.to_numpy()
+    start, width = off[:-1], np.diff(off)
+    ok = col.is_valid().to_numpy(zero_copy_only=False)
+    vals = col.values
+    if vals.null_count:
+        nulls = np.concatenate(
+            [[0], np.cumsum(vals.is_null().to_numpy(zero_copy_only=False))])
+        ok &= nulls[off[1:]] == nulls[off[:-1]]
+    v = vals.to_numpy(zero_copy_only=False).astype(np.float64)
+    groups = {}
+    for w in np.unique(width[ok]):
+        rows = np.flatnonzero(ok & (width == w))
+        groups[int(w)] = (rows, v[start[rows, None] + np.arange(w)])
+    return groups
+
+
+def _row_slots(groups: dict, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """(width, index in its group) of each of ``n`` rows; width -1 for
+    a row in no group."""
+    width, pos = np.full(n, -1), np.zeros(n, np.int64)
+    for w, (rows, _) in groups.items():
+        width[rows], pos[rows] = w, np.arange(len(rows))
+    return width, pos
+
+
+def _fold_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (n, w) float64 matrices."""
+    acc = np.zeros(len(a))
+    for j in range(a.shape[1]):
+        acc = acc + a[:, j] * b[:, j]
+    return acc
+
+
+def _fold_sq_dists(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """(len(x), len(c)) squared L2 distances of each row of ``x`` to
+    each row of ``c``."""
+    acc = np.zeros((len(x), len(c)))
+    for j in range(x.shape[1]):
+        d = x[:, j, None] - c[None, :, j]
+        acc = acc + d * d
+    return acc
+
+
+def _list_ranks(vecs: dict, n: int, cents: dict, m: int) -> np.ndarray:
+    """(n, m): each vector's centroid positions, nearest first.  Width
+    groups as :func:`_width_groups` gives them, centroids sorted by
+    list_id.  The order is Spark's ascending (l2, list_id): a NULL
+    distance (either side NULL, a null element or a width mismatch)
+    first, NaN after every number, ties to the earlier position."""
+    dist, null = np.zeros((n, m)), np.ones((n, m), bool)
+    for w, (rows, x) in vecs.items():
+        if w in cents:
+            cols, c = cents[w]
+            dist[np.ix_(rows, cols)] = _fold_sq_dists(x, c)
+            null[np.ix_(rows, cols)] = False
+    cls = np.where(null, 0, np.where(np.isnan(dist), 2, 1))
+    return np.lexsort((np.where(cls == 1, dist, 0.0), cls), axis=-1)
+
+
+def _collect_vectors(df: DataFrame, id_col: str,
+                     vec_col: str) -> tuple[list, dict]:
+    """(ids, width groups) of a small vector table, collected on the
+    driver in ``id_col`` order, NULL first as Spark sorts it."""
+    rows = sorted(df.select(id_col, vec_col).collect(),
+                  key=lambda r: (r[0] is not None, r[0]))
+    col = pa.array([r[1] for r in rows], pa.list_(pa.float64()))
+    return [r[0] for r in rows], _width_groups(col)
+
+
+def _ivf_scored(emb: DataFrame, queries: DataFrame, n_lists: int,
+                n_probe: int, centroids: DataFrame | None) -> DataFrame:
+    """(query_id, vec_id, cosine) of every candidate :func:`ivf_topk`
+    ranks: one ``mapInArrow`` over the corpus assigns each vector to
+    its nearest list and pairs it with each query probing that list."""
+    cent = centroids if centroids is not None else seed_centroids(emb, n_lists)
+    lids, cg = _collect_vectors(cent, "list_id", "centroid")
+    qids, qg = _collect_vectors(queries, "query_id", "qe")
+    m, nq = len(lids), len(qids)
+    probed = np.zeros((nq, m), bool)
+    np.put_along_axis(probed, _list_ranks(qg, nq, cg, m)[:, :max(n_probe, 0)],
+                      True, axis=1)
+    # list_id is the join key of a vector and a query: NULL matches none
+    probed[:, [lid is None for lid in lids]] = False
+    probers = [np.flatnonzero(probed[:, p]) for p in range(m)]
+    qwidth, qpos = _row_slots(qg, nq)
+    qnorm, qnull = np.zeros(nq), np.ones(nq, bool)
+    for rows, x in qg.values():
+        qnorm[rows], qnull[rows] = np.sqrt(_fold_dots(x, x)), False
+    qtype = queries.schema["query_id"].dataType
+    qid_arr = pa.array(qids, to_arrow_type(qtype))
+    schema = T.StructType([
+        T.StructField("query_id", qtype),
+        T.StructField("vec_id", emb.schema["vec_id"].dataType),
+        *(T.StructField(c, T.DoubleType()) for c in ("dot", "__nq", "__ne"))])
+    arrow_schema = pa.schema([(f.name, to_arrow_type(f.dataType))
+                              for f in schema.fields])
+
+    def score(batches):
+        for b in batches:
+            n = b.num_rows
+            if not (n and m):
+                continue
+            vg = _width_groups(b.column(1))
+            assigned = _list_ranks(vg, n, cg, m)[:, 0]
+            vi, qi = [], []
+            for p in np.unique(assigned):
+                qs = probers[p]
+                rows = np.flatnonzero(assigned == p)
+                vi.append(np.repeat(rows, len(qs)))
+                qi.append(np.tile(qs, len(rows)))
+            vi, qi = np.concatenate(vi), np.concatenate(qi)
+            if not len(vi):
+                continue
+            vwidth, vpos = _row_slots(vg, n)
+            dot, dnull = np.zeros(len(vi)), np.ones(len(vi), bool)
+            norm, nnull = np.zeros(n), np.ones(n, bool)
+            for w, (rows, x) in vg.items():
+                norm[rows], nnull[rows] = np.sqrt(_fold_dots(x, x)), False
+                if w in qg:
+                    sel = np.flatnonzero((vwidth[vi] == w) & (qwidth[qi] == w))
+                    dot[sel] = _fold_dots(x[vpos[vi[sel]]],
+                                          qg[w][1][qpos[qi[sel]]])
+                    dnull[sel] = False
+            yield pa.RecordBatch.from_arrays([
+                qid_arr.take(qi), b.column(0).take(vi),
+                pa.array(dot, mask=dnull),
+                pa.array(qnorm[qi], mask=qnull[qi]),
+                pa.array(norm[vi], mask=nnull[vi])], schema=arrow_schema)
+
+    return (emb.select("vec_id", "embedding").mapInArrow(score, schema)
+            .where(F.col("vec_id") != F.col("query_id"))
+            .withColumn("cosine", F.round(
+                F.col("dot") / (F.col("__nq") * F.col("__ne")), 6)))
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -242,51 +385,24 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     (the inverted lists); a query probes only its ``n_probe`` nearest
     lists and re-ranks candidates by exact cosine.
 
-    Scale shape (100 TB): the centroid table is tiny and BROADCAST to
-    the assignment pass (one scan of ``emb``, map-side partial-agg
-    argmin — the per-vector candidate rows never shuffle); the probed
-    (query, list) pairs are broadcast to the candidate join, so the
-    assigned table is scanned once with a broadcast hash join on
-    list_id and only the candidate fraction (~n_probe/n_lists of the
-    corpus) shuffles for the per-query top-k window.  No driver
-    action anywhere in plan construction.  Size ``n_lists`` ~ sqrt(N)
-    (standard IVF practice) so list populations stay balanced.
+    Scale shape: two bounded driver collects at plan-build time, the
+    centroids (``n_lists`` rows) and the query set (the side that was
+    broadcast before), rank each query's lists on the driver.  Then ONE
+    ``mapInArrow`` pass over the corpus scan, in numpy per Arrow batch,
+    assigns each vector to its nearest list and emits (query, vector,
+    dot, norms) for the queries probing that list: the corpus never
+    shuffles and is never joined.  Only the candidates (~n_probe/n_lists
+    of the corpus per query) shuffle, once, on query_id for the top-k
+    window, where the JVM forms round(dot / (|q| |v|), 6).  Size
+    ``n_lists`` ~ sqrt(N) (standard IVF practice) so list populations
+    stay balanced.
 
-    Every distance is one fold, whatever the vector width: ``_L2``
-    for the lists, the sum-of-squares and dot folds for the cosine.
-    Both sides of the query share one centroid broadcast.  The
-    width-dispatched form (a Union of a 64-wide unrolled branch and a
-    fold branch per side) gives the same values, but at 2,000 vectors
-    its ~8x larger plan cost more to plan and compile than its codegen
-    saved; round 6 measured it faster at 20k vectors on 32 cores.
+    Values equal the former JVM folds bit for bit, at any width: a
+    NULL vector, a width mismatch or a null element gives a NULL
+    distance (ranked first, as Spark orders NULLs) and a NULL dot.
+    ``vec_id`` and ``query_id`` are keys of their tables; a centroid
+    with a NULL list_id holds no candidates.
 
     ``centroids``: optional (list_id, centroid) DataFrame from a real
     trainer; defaults to :func:`seed_centroids`."""
-    cent = centroids if centroids is not None else seed_centroids(emb, n_lists)
-
-    def assign(df: DataFrame, id_col: str, vec_col: str,
-               keep_n: int) -> DataFrame:
-        d = (df.crossJoin(F.broadcast(cent))
-             .withColumn("l2", F.expr(_L2 % (vec_col, "centroid"))))
-        if keep_n == 1:
-            # argmin via partial-aggregated min(struct): all n_lists
-            # rows of a vector sit in ONE task (broadcast side), so
-            # the map-side combine collapses them before any shuffle
-            return (d.groupBy(id_col)
-                    .agg(F.min(F.struct("l2", "list_id")).alias("m"),
-                         F.first(vec_col).alias(vec_col))
-                    .select(id_col, F.col("m.list_id").alias("list_id"),
-                            vec_col))
-        w = W.partitionBy(id_col).orderBy("l2", "list_id")
-        return (d.withColumn("pr", F.row_number().over(w))
-                .where(F.col("pr") <= keep_n)
-                .select(id_col, "list_id", vec_col))
-
-    assigned = assign(emb, "vec_id", "embedding", 1)
-    probes = assign(queries, "query_id", "qe", n_probe)
-    cand = (assigned.join(F.broadcast(probes), "list_id")
-            .where(F.col("vec_id") != F.col("query_id")))
-    scored = _with_norm(_with_norm(cand, "embedding", "__ne", None),
-                        "qe", "__nq", None) \
-        .withColumn("cosine", _cosine_hoisted(dim=None))
-    return _top_k(scored, k)
+    return _top_k(_ivf_scored(emb, queries, n_lists, n_probe, centroids), k)

@@ -19,13 +19,24 @@ which needs the runtime jars to express.  Documented in COVERAGE.md.
 Nor are ``lineage.run_stage``'s checkpoints and lineage records: they
 are parquet under the run's work dir in every deployment, since resume
 reads their footers.
+
+A parquet table Spark wrote reopens without a Spark job: every part
+file carries its Spark schema in the footer, and :func:`read_parquet`
+reads it on the driver instead of letting Spark infer the schema with
+a job (checkpoint reopens, layout tables, ``read_geometry``).  A file
+without that footer key, such as pyarrow's docs input, is inferred as
+before.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_FORMAT_ENV = "SPARK_GRAFT_TABLE_FORMAT"
 _FORMATS = ("parquet", "iceberg")
@@ -39,12 +50,43 @@ def table_format() -> str:
     return fmt
 
 
+# the footer key under which Spark stores a part file's schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_schema(path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of ``path`` (a parquet
+    file, or the first part file of a directory), or None when there
+    is no such file or key."""
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        if not parts:
+            return None
+        path = os.path.join(path, parts[0])
+    elif not os.path.isfile(path):
+        return None
+    try:
+        meta = pq.read_metadata(path).metadata or {}
+    except (OSError, pa.ArrowInvalid):
+        return None
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else StructType.fromJson(json.loads(raw))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema Spark wrote into
+    the footer when there is one, so opening it runs no Spark job."""
+    schema = _spark_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
 def read_table(spark: SparkSession, target: str) -> DataFrame:
     """Scan a table: ``target`` is a path (parquet) or a catalog table
     name (iceberg).  Filter/column pushdown semantics are identical —
     both are DataSource-v2-pruned scans."""
     if table_format() == "parquet":
-        return spark.read.parquet(target)
+        return read_parquet(spark, target)
     return spark.read.format("iceberg").load(target)
 
 

@@ -12,7 +12,9 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import numpy as np  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from osmquadtree_geometry_spark import similarity as S  # noqa: E402
 from osmquadtree_geometry_spark.session import get_spark, ship_package  # noqa: E402
 from osmquadtree_geometry_spark.similarity import (  # noqa: E402
     brute_force_topk, ivf_topk, train_centroids_kmeans)
@@ -40,32 +42,20 @@ def main():
            "n_queries": n_q, "n_lists": n_lists}
     trained = train_centroids_kmeans(emb, n_lists=n_lists, n_iters=10)
 
+    vg = S._collect_vectors(emb, "vec_id", "embedding")[1]
+    qg = S._collect_vectors(q, "query_id", "qe")[1]
+
     def scanned_fraction(cent, n_probe):
         """Mean fraction of the corpus a query's probed lists hold —
         the ANN selectivity that recall must be judged against (an
-        unbalanced quantizer 'wins' recall by scanning more)."""
-        from osmquadtree_geometry_spark.similarity import seed_centroids
-        from pyspark.sql import functions as F
-        c = cent if cent is not None else seed_centroids(emb, n_lists)
-        from osmquadtree_geometry_spark.similarity import ivf_topk as _  # noqa
-        # re-derive assignment + probes exactly as ivf_topk does
-        import osmquadtree_geometry_spark.similarity as S
-        d = (emb.crossJoin(F.broadcast(c))
-             .withColumn("l2", F.expr(S._L2 % ("embedding", "centroid"))))
-        assigned = (d.groupBy("vec_id")
-                    .agg(F.min(F.struct("l2", "list_id")).alias("m"))
-                    .select("vec_id", F.col("m.list_id").alias("list_id")))
-        sizes = assigned.groupBy("list_id").count()
-        dq = (q.crossJoin(F.broadcast(c))
-              .withColumn("l2", F.expr(S._L2 % ("qe", "centroid"))))
-        from pyspark.sql import Window as W
-        w = W.partitionBy("query_id").orderBy("l2", "list_id")
-        probes = (dq.withColumn("pr", F.row_number().over(w))
-                  .where(F.col("pr") <= n_probe)
-                  .select("query_id", "list_id"))
-        tot = (probes.join(sizes, "list_id")
-               .groupBy().agg(F.sum("count").alias("s")).collect()[0].s)
-        return tot / (n * n_q)
+        unbalanced quantizer 'wins' recall by scanning more).  Lists
+        and probes come from ivf_topk's own kernel."""
+        c = cent if cent is not None else S.seed_centroids(emb, n_lists)
+        lids, cg = S._collect_vectors(c, "list_id", "centroid")
+        m = len(lids)
+        sizes = np.bincount(S._list_ranks(vg, n, cg, m)[:, 0], minlength=m)
+        probes = S._list_ranks(qg, n_q, cg, m)[:, :n_probe]
+        return int(sizes[probes].sum()) / (n * n_q)
 
     for n_probe in (2, 4, 8):
         for name, cent in (("seeded", None), ("trained", trained)):

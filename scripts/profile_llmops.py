@@ -54,18 +54,9 @@ def main():
         "vec_id as query_id", "embedding as qe")
     t("ann_brute_force", similarity.brute_force_topk(emb, q5, k=10))
     t("ivf_ann", similarity.ivf_topk(emb, q5, k=10, n_lists=16, n_probe=4))
-    # ivf pieces
-    cent = similarity.seed_centroids(emb, 16)
-    d = (emb.crossJoin(F.broadcast(cent))
-         .withColumn("l2", F.expr(similarity._L2 % ("embedding", "centroid"))))
-    t("ivf assignment crossjoin+l2", d)
-    from pyspark.sql import Window as W
-    assigned = (d.groupBy("vec_id")
-                .agg(F.min(F.struct("l2", "list_id")).alias("m"),
-                     F.first("embedding").alias("embedding"))
-                .select("vec_id", F.col("m.list_id").alias("list_id"),
-                        "embedding"))
-    t("ivf assigned (argmin)", assigned)
+    # ivf pieces: the kernel stage alone, without the top-k window
+    t("ivf candidates (kernel)", similarity._ivf_scored(
+        emb, q5, n_lists=16, n_probe=4, centroids=None))
 
     # --- textops
     t("corpus_prep", textops.corpus_prep(docs, min_quality=0.05))

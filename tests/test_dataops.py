@@ -144,9 +144,8 @@ def test_brute_force_topk(spark, emb):
 
 def test_ivf_ann_recall_and_plan(spark, emb):
     """IVF inverted-list ANN: recall vs brute force on the fixture,
-    and the 100 TB plan shape — centroid/probe sides broadcast (no
-    CartesianProduct; the corpus-side candidate join is a broadcast
-    hash join on list_id, so the assigned table never shuffles)."""
+    and the 100 TB plan shape — no CartesianProduct, and the corpus
+    never shuffles: no Exchange between its scan and the kernel."""
     from osmquadtree_geometry_spark.similarity import (
         brute_force_topk, ivf_topk, seed_centroids)
     q = _queries(spark, emb, n=5)
@@ -154,7 +153,10 @@ def test_ivf_ann_recall_and_plan(spark, emb):
     approx_df = ivf_topk(emb, q, k=5, n_lists=16, n_probe=8)
     plan = approx_df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "MapInArrow" in ln)
+    scan = next(i for i in range(top, len(lines)) if "Scan " in lines[i])
+    assert not any("Exchange" in ln for ln in lines[top:scan]), plan
     approx = approx_df.collect()
     exact_set = {(r.query_id, r.vec_id) for r in exact}
     approx_set = {(r.query_id, r.vec_id) for r in approx}
@@ -218,25 +220,97 @@ def _ivf_rows(emb_df, n_queries, **kw):
                   .select("query_id", "vec_id", "cosine").collect())
 
 
+def _ivf_oracle_rows(path, **kw):
+    import duckdb
+
+    from osmquadtree_geometry_spark import oracles
+    with duckdb.connect() as con:
+        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{path}/*.parquet')")
+        return sorted(tuple(r) for r in
+                      con.sql(oracles.q_ivf_ann(**kw)).fetchall())
+
+
 def test_ivf_width_8_matches_oracle(spark, tmp_path):
     """ivf_topk on 8-wide vectors equals the DuckDB oracle's rows with
     exact cosines: the distance folds hold at any width, not just the
     fixture's 64."""
-    import duckdb
-
-    from osmquadtree_geometry_spark import oracles
     path = str(tmp_path / "emb8.parquet")
     spark.createDataFrame([(i, _ivf_vec(i, 8)) for i in range(1, 41)],
                           "vec_id long, embedding array<float>") \
         .write.parquet(path)
     got = _ivf_rows(spark.read.parquet(path), 5, k=3, n_lists=4, n_probe=2)
-    with duckdb.connect() as con:
-        con.sql(f"CREATE VIEW embeddings AS SELECT * FROM "
-                f"read_parquet('{path}/*.parquet')")
-        want = sorted(tuple(r) for r in con.sql(oracles.q_ivf_ann(
-            k=3, n_queries=5, n_lists=4, n_probe=2, dim=8)).fetchall())
+    want = _ivf_oracle_rows(path, k=3, n_queries=5, n_lists=4, n_probe=2,
+                            dim=8)
     assert len(got) == 15
     assert got == want
+
+
+def _ivf_tied_vectors() -> dict[int, list[float]]:
+    """8-wide vectors with tied distances: ids 5, 6 and 34 lie midway
+    between two of the seed centroids (ids 1-4), nearer to no other,
+    and ids 31-34 duplicate other vectors."""
+    vec = {i: _ivf_vec(i, 8) for i in range(1, 41)}
+
+    def mid(a, b):
+        return [(x + y) / 2 for x, y in zip(vec[a], vec[b])]
+    vec[5], vec[6] = mid(3, 4), mid(2, 4)
+    vec[31], vec[32], vec[33], vec[34] = vec[1], vec[10], vec[10], vec[5]
+    return vec
+
+
+@pytest.mark.parametrize("case", ["partitions", "ties"])
+def test_ivf_partitions_and_ties_match_oracle(spark, tmp_path, case):
+    """ivf_topk equals the DuckDB oracle over a corpus spread across
+    three partitions (64-wide vectors), and over tied distances: an
+    assignment and a probe order tied between two lists go to the
+    smaller list_id, and duplicate vectors tie on cosine."""
+    if case == "ties":
+        vec, width = _ivf_tied_vectors(), 8
+        c = np.asarray([vec[i] for i in range(1, 5)])
+        for v in (5, 6, 34):
+            d = ((np.asarray(vec[v]) - c) ** 2).sum(1)
+            assert np.sort(d)[0] == np.sort(d)[1], d  # a real tie
+    else:
+        vec, width = {i: _ivf_vec(i, 64) for i in range(1, 61)}, 64
+    path = str(tmp_path / f"emb_{case}.parquet")
+    spark.createDataFrame(sorted(vec.items()),
+                          "vec_id long, embedding array<float>") \
+        .write.parquet(path)
+    emb_df = spark.read.parquet(path)
+    if case == "partitions":
+        emb_df = emb_df.repartition(3)
+        assert emb_df.rdd.getNumPartitions() == 3
+    got = _ivf_rows(emb_df, 5, k=4, n_lists=4, n_probe=2)
+    want = _ivf_oracle_rows(path, k=4, n_queries=5, n_lists=4, n_probe=2,
+                            dim=width)
+    assert len(got) == 20
+    assert got == want
+
+
+def test_ivf_kernel_folds_equal_jvm_folds(spark):
+    """The IVF kernel's dot products and sums of squares equal the JVM
+    folds (``_dot_expr`` / ``_sqsum_expr`` at dim=None) exactly on
+    random float32 vectors, where numpy's pairwise np.sum does not."""
+    from osmquadtree_geometry_spark.similarity import (
+        _dot_expr, _fold_dots, _sqsum_expr)
+    rng = np.random.default_rng(5)
+    a = (rng.standard_normal((200, 64))
+         * rng.uniform(0.01, 100, (200, 1))).astype(np.float32)
+    b = (rng.standard_normal((200, 64))
+         * rng.uniform(0.01, 100, (200, 1))).astype(np.float32)
+    rows = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(200)],
+        "i int, a array<float>, b array<float>") \
+        .select("i", F.expr(_dot_expr("a", "b", None)).alias("dot"),
+                F.expr(_sqsum_expr("a", None)).alias("sq")) \
+        .orderBy("i").collect()
+    a64, b64 = a.astype(np.float64), b.astype(np.float64)
+    dot, sq = _fold_dots(a64, b64), _fold_dots(a64, a64)
+    assert [r.dot for r in rows] == dot.tolist()
+    assert [r.sq for r in rows] == sq.tolist()
+    # the summation order matters on this data
+    assert (np.sum(a64 * b64, axis=1) != dot).any()
 
 
 def test_ivf_mixed_widths(spark):
@@ -257,6 +331,29 @@ def test_ivf_mixed_widths(spark):
         (4, 1, 0.271919), (4, 2, 0.198115), (4, 14, 0.137308),
         (5, 3, None), (5, 6, None), (5, 9, None),
         (6, 3, 0.10362), (6, 18, 0.389137), (6, 21, 0.538593)]
+
+
+def test_ivf_null_elements_and_nan(spark):
+    """A null element makes a vector's distances and dots NULL, as a
+    NULL vector does, while a NaN element makes them NaN: a NaN
+    distance ranks after every number (centroid 3 draws no vector) and
+    a NaN cosine first.  Expected rows are the JVM-fold
+    implementation's output, pinned when the IVF kernel moved to
+    numpy."""
+    vec = {i: _ivf_vec(i, 8) for i in range(1, 17)}
+    vec[3][0] = vec[9][5] = float("nan")
+    vec[5][4] = vec[7][2] = None
+    vec[12], vec[14] = None, _ivf_vec(14, 4)
+    emb_df = spark.createDataFrame(sorted(vec.items()),
+                                   "vec_id long, embedding array<float>")
+    got = [(q, v, "nan" if c is not None and c != c else c)
+           for q, v, c in _ivf_rows(emb_df, 5, k=3, n_lists=4, n_probe=2)]
+    assert got == [
+        (1, 3, "nan"), (1, 9, "nan"), (1, 15, 0.29131),
+        (2, 3, "nan"), (2, 9, "nan"), (2, 15, 0.165971),
+        (3, 1, "nan"), (3, 2, "nan"), (3, 6, "nan"),
+        (4, 3, "nan"), (4, 9, "nan"), (4, 15, 0.309875),
+        (5, 1, None), (5, 2, None), (5, 3, None)]
 
 
 def test_lsh_buckets_mixed_widths(spark):

@@ -266,9 +266,12 @@ def test_lsh_pair_generators_no_cartesian(spark):
 
 
 def test_ivf_plan_is_compact(spark):
-    """ivf_topk computes every distance with one fold whatever the
-    vector width: no Union of per-width branches and no unrolled
-    element_at sums in the executed plan."""
+    """ivf_topk computes every distance in one numpy kernel whatever
+    the vector width: no Union of per-width branches, no unrolled
+    element_at sums and no higher-order folds in the executed plan,
+    and the only Exchange is the top-k window's, keyed by query_id."""
+    import re
+
     from osmquadtree_geometry_spark.similarity import ivf_topk
     emb = spark.createDataFrame(
         [(i, [float((i * j + i) % 7 + 1) for j in range(64)])
@@ -281,6 +284,12 @@ def test_ivf_plan_is_compact(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Union" not in plan
     assert "element_at(" not in plan
+    assert "aggregate(" not in plan and "zip_with(" not in plan
+    final = plan.split("== Initial Plan ==")[0]
+    exchanges = [ln for ln in final.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(r"Exchange hashpartitioning\(query_id#\d+L?, \d+\)",
+                     exchanges[0]), exchanges
 
 
 def test_lsh_tables_from_one_scan(spark):

@@ -79,6 +79,43 @@ def test_first_run_computes_everything(spark, workdir, fresh):
         _lineage_matches_disk(spark, workdir, stage)
 
 
+def test_checkpoints_reopen_with_the_inferred_schema(spark, workdir, fresh):
+    """Each checkpoint reopens with the schema from its footers, equal
+    to the one Spark infers with a job."""
+    from osmquadtree_geometry_spark.tableio import read_parquet
+    for stage in CHECKPOINTS:
+        out = _out_dir(workdir, stage)
+        assert read_parquet(spark, out).schema == \
+            spark.read.parquet(out).schema, stage
+
+
+def _group_jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` runs, counted in job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reopening_checkpoints_runs_no_job(spark, docs_path, tmp_path):
+    """A checkpoint reopens without a schema-inference job.  On the
+    33-doc fixture a fresh run takes at most 39 jobs, the 18 checkpoint
+    writes among them (it took 57 while each reopen inferred its
+    schema; fewer when the session has run the chain before), and a
+    resumed run takes one: the docs input, which pyarrow wrote without
+    a Spark schema, still infers."""
+    def run():
+        _run(spark, docs_path, str(tmp_path))
+    assert 18 <= _group_jobs(spark, "ckpt-fresh", run) <= 39
+    assert _group_jobs(spark, "ckpt-resume", run) == 1
+
+
 def test_second_run_resumes_everything(spark, docs_path, workdir, fresh):
     res, resumed = run_pipeline_checkpointed(
         spark, docs_path, workdir, minzoom=MinZoomSpec.default())

@@ -462,6 +462,19 @@ def test_write_feature_tables_jobs_keep_job_group(res, spark, tmp_path):
     assert os.path.exists(tmp_path / "layout" / "spatial_index_meta.json")
 
 
+def test_layout_tables_reopen_with_the_inferred_schema(res, spark,
+                                                       tmp_path):
+    """Every layout table reopens through ``tableio.read_table`` with
+    the schema from its footers, equal to the one Spark infers."""
+    from osmquadtree_geometry_spark import tableio
+    paths = sinks.write_feature_tables(res, str(tmp_path / "layout"),
+                                       media=res.decoded.get("media"))
+    assert len(paths) >= 7
+    for name, p in paths.items():
+        assert tableio.read_table(spark, p).schema == \
+            spark.read.parquet(p).schema, name
+
+
 def test_write_feature_tables_failure_waits_for_every_write(res, spark,
                                                             tmp_path):
     """One table failing at execution raises its error, but only after

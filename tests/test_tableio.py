@@ -76,3 +76,57 @@ def test_tableio_rejects_unknown_write_mode(fmt, monkeypatch):
     with pytest.raises(ValueError, match="write mode"):
         tableio.write_table(df, "cat.db.docs", mode="error")
     assert df.mock_calls == []
+
+
+def _jobs(spark, group, fn):
+    """(fn(), the number of Spark jobs it ran in job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_takes_spark_schema_from_footer(spark, tmp_path):
+    """A table Spark wrote opens with the schema in its footers and no
+    Spark job; a pyarrow-written file, and a Spark table whose first
+    part file lost the footer key, infer their schema with one job and
+    still read correctly."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(
+        [(1, "a", [1.5, None]), (2, None, [])],
+        "id long, name string, v array<float>").repartition(2)
+    p = str(tmp_path / "spark")
+    df.write.parquet(p)
+    got, jobs = _jobs(spark, "read-spark",
+                      lambda: tableio.read_table(spark, p))
+    assert jobs == 0
+    assert got.schema == spark.read.parquet(p).schema
+    assert sorted(map(tuple, got.collect())) == \
+        [(1, "a", [1.5, None]), (2, None, [])]
+
+    f = str(tmp_path / "arrow.parquet")
+    pq.write_table(pa.table({"id": [3, 4], "name": ["x", "y"]}), f)
+    got, jobs = _jobs(spark, "read-arrow",
+                      lambda: tableio.read_table(spark, f))
+    assert jobs == 1
+    assert got.schema == spark.read.parquet(f).schema
+    assert sorted(map(tuple, got.collect())) == [(3, "x"), (4, "y")]
+
+    first = sorted(glob.glob(os.path.join(p, "part-*")))[0]
+    pq.write_table(pq.read_table(first).replace_schema_metadata(None), first)
+    os.remove(os.path.join(p, "." + os.path.basename(first) + ".crc"))
+    got, jobs = _jobs(spark, "read-no-key",
+                      lambda: tableio.read_table(spark, p))
+    assert jobs == 1
+    assert sorted(map(tuple, got.collect())) == \
+        [(1, "a", [1.5, None]), (2, None, [])]
